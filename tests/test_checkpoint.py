@@ -4,6 +4,8 @@ encoding exactly the missing units (left-anti join), re-encoding nothing."""
 import glob
 import os
 
+import pytest
+
 from xml2arrow_spark.manifest import CodecManifest
 from xml2arrow_spark.operators.checkpoint import (
     completed_units,
@@ -98,6 +100,54 @@ def test_crash_between_blocks_write_and_manifest_append(spark, tmp_path):
     # decoded row multiset equals the input — duplicates would fail this
     assert verify_roundtrip(df, read_encoded_dataset(spark, path))["ok"]
     assert read_encoded_dataset(spark, path).count() == 3000
+    df.unpersist()
+
+
+def test_resume_refuses_unreadable_manifest(spark, tmp_path):
+    """An existing manifest that cannot be read must fail the resume, not
+    read as empty: that would re-encode every unit and append a second
+    manifest row for each."""
+    path = str(tmp_path / "enc_corrupt")
+    df = tokens_dataframe(spark, 1500, variant="low_card", n_partitions=4)
+    man = CodecManifest.auto_for(df.schema, block_rows=512)
+    encode_dataset(df, path, man, n_units=4, only_units=[0, 1])
+    mdir = os.path.join(path, "manifest")
+    # sorts ahead of the manifest-<uuid> files: Spark infers the schema
+    # from this unreadable footer
+    with open(os.path.join(mdir, "a-corrupt.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    spark.catalog.refreshByPath(mdir)
+    before = sorted(os.listdir(mdir))
+    with pytest.raises(Exception):
+        encode_dataset(df, path, man, n_units=4)
+    assert sorted(os.listdir(mdir)) == before  # nothing appended
+
+
+def test_rollup_falls_back_to_spark_when_manifest_unreadable_locally(
+    spark, tmp_path, monkeypatch
+):
+    """The post-write lineage rollup reads the manifest driver-side; if that
+    read fails it must take the distributed anti-join rollup (which reads
+    the manifest through Spark), never treat the manifest as empty."""
+    from xml2arrow_spark.operators import checkpoint, metadata
+
+    path = str(tmp_path / "enc_fallback")
+    df = tokens_dataframe(spark, 1500, variant="low_card", n_partitions=4).cache()
+    man = CodecManifest.auto_for(df.schema, block_rows=512)
+    encode_dataset(df, path, man, n_units=4, only_units=[0, 1])
+
+    def unreadable(mdir):
+        raise OSError(f"cannot read {mdir}")
+
+    def no_local_rollup(*args, **kwargs):
+        raise AssertionError("local rollup must not run")
+
+    monkeypatch.setattr(metadata, "read_unit_ids", unreadable)
+    monkeypatch.setattr(checkpoint, "_unit_rollup_local", no_local_rollup)
+    m = encode_dataset(df, path, man, n_units=4)
+    assert m["units"] == 4 and m["rows"] == 1500
+    ids = [r.unit_id for r in completed_units(spark, path).collect()]
+    assert sorted(ids) == [0, 1, 2, 3]  # one manifest row per unit
     df.unpersist()
 
 

@@ -85,6 +85,23 @@ def test_encode_dataset_noop_resume_fast(spark, token_dir, tmp_path):
     assert m["units"] == 5
 
 
+def test_encode_dataset_refuses_unreadable_manifest(spark, token_dir, tmp_path):
+    """Resume reads the manifest fail-closed: an existing manifest that
+    cannot be read must raise, not read as "no unit done" (which would
+    re-encode every unit and append a duplicate manifest row each)."""
+    import pyarrow as pa
+
+    out = str(tmp_path / "enc_corrupt")
+    encode_parquet_dataset(spark, token_dir, out, n_tasks=2)
+    mdir = os.path.join(out, "manifest")
+    with open(os.path.join(mdir, "part-corrupt.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    before = sorted(os.listdir(mdir))
+    with pytest.raises(pa.ArrowInvalid):
+        encode_parquet_dataset(spark, token_dir, out, n_tasks=2)
+    assert sorted(os.listdir(mdir)) == before  # nothing appended
+
+
 def test_stats_path_matches_blocks_path(spark, token_dir):
     stats = encode_parquet_stats(spark, token_dir, n_tasks=2).agg(
         F.sum("n_values").alias("nv"), F.sum("out_bytes").alias("ob")

@@ -27,7 +27,7 @@ from xml2arrow_spark.sources.files import (
     parquet_file_infos,
     plan_parquet_tasks,
 )
-from xml2arrow_spark.sources.tokens import generate_tokens_arrow
+from xml2arrow_spark.sources.tokens import generate_tokens_arrow, tokens_dataframe
 
 TOKENS_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -60,16 +60,72 @@ def test_parquet_file_infos_lists_sorted(token_dir):
     assert all(s > 0 for _, s in infos)
 
 
+def _python_rdd_free(df) -> bool:
+    """No Python RDD in ``df``'s physical lineage: each one costs every
+    task a second Python worker session before any mapInArrow runs."""
+    return "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def _per_partition(df, *aggs) -> dict[int, tuple]:
+    # JVM-side (df.rdd.glom() would itself add a Python RDD)
+    return {
+        r[0]: tuple(r[1:])
+        for r in df.groupBy(F.spark_partition_id()).agg(*aggs).collect()
+    }
+
+
 def test_plan_parquet_tasks_covers_all_files(spark, token_dir):
-    tasks = plan_parquet_tasks(spark, token_dir, n_tasks=3)
-    rows = tasks.collect()
-    assert len(rows) == 3  # one row per task bin
-    assert sorted(i for r in rows for i in r.file_idx) == list(range(7))
-    assert set(r.task_id for r in rows) == {0, 1, 2}
-    # exactly one bin per Spark partition (the scaling-critical invariant)
-    assert tasks.rdd.getNumPartitions() == 3
-    per_part = tasks.rdd.glom().map(len).collect()
-    assert all(n == 1 for n in per_part)
+    sizes = [s for _, s in parquet_file_infos(token_dir)]
+    # 6 is above the fixture session's local[4] defaultParallelism
+    for n_tasks in (3, 6):
+        tasks = plan_parquet_tasks(spark, token_dir, n_tasks=n_tasks)
+        rows = tasks.collect()
+        assert len(rows) == n_tasks  # one row per task bin
+        assert sorted(i for r in rows for i in r.file_idx) == list(range(7))
+        assert set(r.task_id for r in rows) == set(range(n_tasks))
+        # the bins are exactly the LPT assignment
+        lpt = _lpt_assign(sizes, n_tasks)
+        assert {r.task_id: r.file_idx for r in rows} == {
+            b: [i for i in range(7) if lpt[i] == b] for b in range(n_tasks)
+        }
+        # exactly one bin per Spark partition (the scaling-critical invariant)
+        assert tasks.rdd.getNumPartitions() == n_tasks
+        assert _per_partition(tasks, F.count("*")) == {
+            p: (1,) for p in range(n_tasks)
+        }
+        assert _python_rdd_free(tasks)
+
+
+def test_tokens_dataframe_slices_one_per_partition(spark):
+    import numpy as np
+
+    n_rows, n_parts = 1000, 6
+    df = tokens_dataframe(spark, n_rows, n_partitions=n_parts)
+    assert df.rdd.getNumPartitions() == n_parts
+    bounds = np.linspace(0, n_rows, n_parts + 1).astype(np.int64)
+    # slice p (rows bounds[p]..bounds[p+1]) alone in partition p
+    assert _per_partition(df, F.count("*"), F.min("doc_id")) == {
+        p: (int(bounds[p + 1] - bounds[p]), f"doc-{bounds[p]:08d}")
+        for p in range(n_parts)
+    }
+    assert _python_rdd_free(df)
+
+
+def test_engine_builds_no_python_rdd():
+    """Lint: engine DataFrames are planned JVM-side
+    (sources/files.py::one_row_per_partition), never from a Python RDD."""
+    import xml2arrow_spark
+
+    root = os.path.dirname(xml2arrow_spark.__file__)
+    offenders = []
+    for dirpath, _dirs, names in os.walk(root):
+        for name in names:
+            if name.endswith(".py"):
+                fp = os.path.join(dirpath, name)
+                with open(fp, encoding="utf-8") as f:
+                    if "sparkContext.parallelize(" in f.read():
+                        offenders.append(os.path.relpath(fp, root))
+    assert offenders == []
 
 
 def test_fused_encode_roundtrip_bit_identical(spark, token_dir):

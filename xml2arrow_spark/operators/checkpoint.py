@@ -78,15 +78,18 @@ def plan_units(df: DataFrame, n_units: int, id_col: str = "doc_id") -> DataFrame
 
 
 def completed_units(spark: SparkSession, path: str) -> DataFrame:
-    """Manifest rows of completed units; empty DataFrame if none yet."""
+    """Manifest rows of completed units; empty DataFrame if none yet. An
+    existing manifest is read as-is, so an unreadable one raises (at the
+    read or at the first action) instead of reading as empty."""
+    from xml2arrow_spark.operators.metadata import table_exists
+
     mpath = os.path.join(path, "manifest")
-    try:
+    if table_exists(mpath):
         return spark.read.parquet(mpath)
-    except Exception:
-        return spark.createDataFrame(
-            [], "unit_id int, n_blocks long, n_rows long, n_values long, "
-            "in_bytes long, out_bytes long, checksum long",
-        )
+    return spark.createDataFrame(
+        [], "unit_id int, n_blocks long, n_rows long, n_values long, "
+        "in_bytes long, out_bytes long, checksum long",
+    )
 
 
 def _check_placement(path: str, n_units: int, schema_ddl: str) -> None:
@@ -322,25 +325,25 @@ def encode_dataset(
     # (units on disk minus manifested units == exactly the rows the Spark
     # anti-join rollup reads, orphaned crash leftovers included); above
     # the file threshold the distributed rollup runs unchanged.
-    import pyarrow.parquet as _pq
+    import pyarrow as pa
+
+    from xml2arrow_spark.operators.metadata import read_unit_ids
 
     blocks_root = os.path.join(path, "blocks")
     try:
-        done_ids = set(
-            _pq.read_table(
-                os.path.join(path, "manifest"), columns=["unit_id"]
-            )
-            .column("unit_id")
-            .to_pylist()
-        )
-    except Exception:
-        done_ids = set()
-    on_disk = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(blocks_root)
-        if d.startswith("unit_id=")
-    } if os.path.isdir(blocks_root) else set()
-    local_rows = _unit_rollup_local(blocks_root, on_disk - done_ids)
+        done_ids = read_unit_ids(os.path.join(path, "manifest"))
+    except (OSError, pa.ArrowException):
+        # a manifest the driver cannot read must not read as "no unit
+        # done" (every unit would be re-appended): the distributed
+        # anti-join rollup below re-reads it, and fails if Spark can't
+        local_rows = None
+    else:
+        on_disk = {
+            int(d.split("=", 1)[1])
+            for d in os.listdir(blocks_root)
+            if d.startswith("unit_id=")
+        } if os.path.isdir(blocks_root) else set()
+        local_rows = _unit_rollup_local(blocks_root, on_disk - done_ids)
     if local_rows is not None:
         meta_rows = local_rows
     else:

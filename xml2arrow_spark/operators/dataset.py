@@ -94,19 +94,6 @@ def _refuse_pending_tombstones(out_path: str) -> None:
 PLACEMENT_ID = "file_idx_sorted_v1"
 
 
-def _completed_units(spark, out_path: str) -> set[int]:
-    # driver-side pyarrow read: the manifest is KB-scale metadata; a Spark
-    # job here costs more than the table holds
-    import pyarrow.parquet as pq
-
-    mpath = os.path.join(out_path, "manifest")
-    try:
-        col = pq.read_table(mpath, columns=["unit_id"]).column("unit_id")
-    except Exception:
-        return set()
-    return set(col.to_pylist())
-
-
 @_with_dataset_lease(arg=2, kw="out_path")
 def encode_parquet_dataset(
     spark,
@@ -175,6 +162,12 @@ def encode_parquet_dataset(
         for f in file_schema.fields
         if f.name in resolved.columns
     )
+    from xml2arrow_spark.operators.metadata import read_unit_ids
+
+    # driver-side pyarrow read: the manifest is KB-scale metadata. Raises on
+    # an unreadable manifest (resume must not re-encode and re-append
+    # every unit).
+    done = read_unit_ids(os.path.join(out_path, "manifest"))
     spath = os.path.join(out_path, MANIFEST_SIDECAR)
     if os.path.exists(spath):
         with open(spath) as f:
@@ -207,7 +200,7 @@ def encode_parquet_dataset(
                 f"{(presort, cluster)!r} — resuming would mix block "
                 f"clusterings (zone pruning would silently degrade)"
             )
-    elif _completed_units(spark, out_path):
+    elif done:
         raise ManifestError(
             f"dataset at {out_path!r} has a manifest table but no "
             f"{MANIFEST_SIDECAR} sidecar (pre-placement-tag layout); "
@@ -224,7 +217,6 @@ def encode_parquet_dataset(
         )
     os.replace(spath + ".inprogress", spath)
 
-    done = _completed_units(spark, out_path)
     tasks = plan_parquet_tasks(spark, in_path, n_tasks)
     if done:
         # drop completed units from each task's file arrays (resume)

@@ -16,7 +16,7 @@ import os
 
 import pyarrow as pa
 
-__all__ = ["append_rows", "sum_columns"]
+__all__ = ["append_rows", "read_unit_ids", "sum_columns", "table_exists"]
 
 
 def append_rows(mdir: str, rows: list[dict], schema: pa.Schema, name: str) -> None:
@@ -31,6 +31,30 @@ def append_rows(mdir: str, rows: list[dict], schema: pa.Schema, name: str) -> No
     tmp = os.path.join(mdir, f".{name}.inprogress")
     pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
     os.replace(tmp, os.path.join(mdir, name))
+
+
+def table_exists(mdir: str) -> bool:
+    """Whether metadata table ``mdir`` exists: a directory holding at
+    least one visible file. A crash before the first append's rename
+    leaves at most a hidden tmp file — still no table."""
+    return os.path.isdir(mdir) and any(
+        not n.startswith((".", "_")) for n in os.listdir(mdir)
+    )
+
+
+def read_unit_ids(mdir: str) -> set[int]:
+    """The ``unit_id`` set of manifest directory ``mdir``, driver-side.
+
+    Fails closed: only a manifest that does not exist yet
+    (:func:`table_exists`) reads as empty. A manifest that exists but
+    cannot be read RAISES: treating it as empty would make a resume
+    re-encode every unit and append a duplicate manifest row for each."""
+    import pyarrow.parquet as pq
+
+    if not table_exists(mdir):
+        return set()
+    ids = pq.read_table(mdir, columns=["unit_id"]).column("unit_id")
+    return set(ids.to_pylist())
 
 
 def sum_columns(mdir: str, columns: list[str]) -> tuple[int, dict[str, int]]:

@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
+    "one_row_per_partition",
     "parquet_file_infos",
     "plan_parquet_tasks",
     "scan_map_arrow",
@@ -44,10 +45,48 @@ __all__ = [
 # hash-repartitioned on task_id looks natural but is wrong at low task
 # counts: hashing k distinct ids into k partitions leaves ~1/e of them empty
 # and stacks 2-3 bins on others (measured: capped 4-core scaling at 1.2x).
-# parallelize(rows, n_rows) pins exactly one bin per partition.
+# one_row_per_partition pins exactly one bin per partition, JVM-side.
 TASKS_DDL = (
     "task_id int, file_idx array<int>, path array<string>, bytes array<long>"
 )
+
+
+def one_row_per_partition(
+    spark: SparkSession, rows: list[tuple], ddl: str
+) -> DataFrame:
+    """DataFrame of ``rows`` (schema ``ddl``) with row i alone in Spark
+    partition i — exact placement for per-task work units, built without
+    any Python RDD.
+
+    ``spark.range(0, n, 1, n)`` pins id i to partition i, and each id picks
+    its row out of ONE literal (the rows as a JSON array, base64-wrapped so
+    no path character needs SQL escaping), which Catalyst folds once on the
+    driver. Two shapes that look simpler are wrong:
+
+    - ``createDataFrame`` over ``parallelize(rows, n)`` is a Python RDD:
+      every task then starts a SECOND Python worker session (for
+      PySpark's row conversion) before the real ``mapInArrow`` session,
+      ~0.26 s of worker CPU each (measured on a 4-core host).
+    - ``createDataFrame(pyarrow.Table)`` plans as a LocalRelation, whose
+      partition count is capped at ``defaultParallelism`` (measured: 8 rows
+      landed 2 per partition on 4 partitions).
+
+    A broadcast join of the rows onto ``range`` keeps the placement but
+    adds a Spark job to every consuming action."""
+    import base64
+    import json
+
+    from xml2arrow_spark.operators.encode import split_schema_ddl
+
+    names = list(split_schema_ddl(ddl))
+    payload = base64.b64encode(
+        json.dumps([dict(zip(names, r)) for r in rows]).encode()
+    ).decode()
+    n = len(rows)
+    return spark.range(0, n, 1, n).selectExpr(
+        f"inline(array(element_at(from_json(CAST(unbase64('{payload}') AS "
+        f"STRING), 'array<struct<{ddl}>>'), CAST(id AS INT) + 1)))"
+    )
 
 
 def parquet_file_infos(path: str) -> list[tuple[str, int]]:
@@ -115,8 +154,7 @@ def plan_parquet_tasks(
         for t, files in sorted(per_task.items())
         if files
     ]
-    rdd = spark.sparkContext.parallelize(rows, len(rows))
-    return spark.createDataFrame(rdd, TASKS_DDL)
+    return one_row_per_partition(spark, rows, TASKS_DDL)
 
 
 def scan_map_arrow(

@@ -134,6 +134,8 @@ def tokens_dataframe(spark, n_rows: int, variant: str = "uniform_vocab", seed: i
         StructType,
     )
 
+    from xml2arrow_spark.sources.files import one_row_per_partition
+
     if n_partitions is None:
         n_partitions = max(spark.sparkContext.defaultParallelism, 1)
     bounds = np.linspace(0, n_rows, n_partitions + 1).astype(np.int64)
@@ -150,10 +152,9 @@ def tokens_dataframe(spark, n_rows: int, variant: str = "uniform_vocab", seed: i
     ]
     # one slice row per partition: hash-repartitioning k pids into k
     # partitions would leave ~1/e of them empty (collisions) and stack
-    # doubled slices on others; parallelize pins slice i to partition i.
-    parts = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, len(rows)), "pid int, lo long, hi long"
-    )
+    # doubled slices on others; one_row_per_partition pins slice i to
+    # partition i.
+    parts = one_row_per_partition(spark, rows, "pid int, lo long, hi long")
 
     def gen(batches):
         for batch in batches:

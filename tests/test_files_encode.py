@@ -8,6 +8,7 @@ columnar values out.
 
 from __future__ import annotations
 
+import ast
 import os
 
 import pyarrow.parquet as pq
@@ -125,6 +126,70 @@ def test_engine_builds_no_python_rdd():
                 with open(fp, encoding="utf-8") as f:
                     if "sparkContext.parallelize(" in f.read():
                         offenders.append(os.path.relpath(fp, root))
+    assert offenders == []
+
+
+_WORKER_APIS = {"mapInArrow", "mapInPandas", "applyInPandasWithState"}
+
+
+def _scope_nodes(scope):
+    """Nodes of ``scope`` outside any nested def (nested defs themselves
+    are included, their bodies are not)."""
+    stack = list(scope.body)
+    while stack:
+        node = stack.pop()
+        yield node
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            stack.extend(ast.iter_child_nodes(node))
+
+
+def _calls_prologue_first(fn) -> bool:
+    for stmt in fn.body:
+        if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            continue
+        if (isinstance(stmt, ast.Expr) and isinstance(stmt.value, ast.Constant)
+                and isinstance(stmt.value.value, str)):
+            continue  # docstring
+        call = stmt.value if isinstance(stmt, ast.Expr) else None
+        return (isinstance(call, ast.Call) and isinstance(call.func, ast.Name)
+                and call.func.id == "task_setup")
+    return False
+
+
+def test_every_worker_fn_calls_task_setup_first():
+    """Lint: every function the engine hands to mapInArrow / mapInPandas /
+    applyInPandasWithState runs ``env.task_setup()`` before anything but
+    imports (pinned pyarrow pools, one zip finder per archive)."""
+    import xml2arrow_spark
+
+    root = os.path.dirname(xml2arrow_spark.__file__)
+    n_sites, offenders = 0, []
+    for dirpath, _dirs, names in os.walk(root):
+        for name in (n for n in names if n.endswith(".py")):
+            fp = os.path.join(dirpath, name)
+            with open(fp, encoding="utf-8") as f:
+                tree = ast.parse(f.read())
+            for scope in ast.walk(tree):
+                if not isinstance(scope, (ast.Module, ast.FunctionDef)):
+                    continue
+                nodes = list(_scope_nodes(scope))
+                defs = [n for n in nodes if isinstance(n, ast.FunctionDef)]
+                for call in nodes:
+                    if not (isinstance(call, ast.Call)
+                            and isinstance(call.func, ast.Attribute)
+                            and call.func.attr in _WORKER_APIS):
+                        continue
+                    n_sites += 1
+                    where = f"{os.path.relpath(fp, root)}:{call.lineno}"
+                    arg = call.args[0] if call.args else None
+                    fn = None
+                    if isinstance(arg, ast.Name):
+                        named = [d for d in defs
+                                 if d.name == arg.id and d.lineno < call.lineno]
+                        fn = max(named, key=lambda d: d.lineno, default=None)
+                    if fn is None or not _calls_prologue_first(fn):
+                        offenders.append(where)
+    assert n_sites >= 30  # the lint really found the engine's worker fns
     assert offenders == []
 
 

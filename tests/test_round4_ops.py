@@ -267,6 +267,60 @@ def test_near_dup_local_valves_fall_through(spark, tmp_path):
         spark, str(tmp_path / "v2"), "doc", 800, None, max_local_pairs=10
     )
     assert loc is None
+    # (c) two sig rows for one id in one batch: the local twin declines
+    # and the default call equals the forced-distributed result
+    dup = _docs_df(spark, [(1, BOILER), (1, BOILER + " again"), (2, BOILER),
+                           (3, BOILER + " today again")])
+    got = dedup.lsh_near_dup_pairs(dup, sig_path=str(tmp_path / "v3"))
+    got_rows = sorted(tuple(r) for r in got.collect())
+    loc = dedup._near_dup_pairs_store_local(
+        spark, str(tmp_path / "v3"), "doc", 800, None
+    )
+    assert loc is None
+    want = dedup.lsh_near_dup_pairs(
+        dup, sig_path=str(tmp_path / "v4"), local_threshold_bytes=0
+    )
+    assert got_rows == sorted(tuple(r) for r in want.collect())
+    assert got_rows  # the duplicate id really pairs with its near-dups
+
+
+def test_local_bands_write_crash_exposes_no_partial_batch(spark, tmp_path):
+    """The driver-side bands write stages every band_pos file before it
+    renames any: a crash mid-batch leaves no new visible band rows (a
+    partial batch would generate candidates from only some bands)."""
+    from unittest import mock
+
+    import pyarrow.parquet as pq
+
+    from xml2arrow_spark.pipeline import dedup
+    from xml2arrow_spark.pipeline import sqlgen as G
+
+    sp = str(tmp_path / "sigs")
+    docs = _docs_df(spark, [(i, f"{BOILER} variant {i}") for i in range(6)])
+    dedup.lsh_near_dup_pairs(docs, sig_path=sp)
+    bands_dir = os.path.join(sp, dedup.BANDS_SUBDIR)
+
+    def visible():
+        return sorted(
+            os.path.join(d, n) for d, _ds, names in os.walk(bands_dir)
+            for n in names if not n.startswith((".", "_"))
+        )
+
+    before = visible()
+    real_write, calls = pq.write_table, []
+
+    def crash_on_third(*a, **kw):
+        calls.append(1)
+        if len(calls) == 3:
+            raise OSError("simulated crash")
+        return real_write(*a, **kw)
+
+    band_cols = [f"band{b}" for b in range(G.MINHASH_BANDS)]
+    with mock.patch.object(pq, "write_table", crash_on_third), \
+            pytest.raises(OSError, match="simulated crash"):
+        dedup._write_bands_local(sp, "doc", band_cols, 0, "append", None, 64 << 20)
+    assert len(calls) == 3
+    assert visible() == before
 
 
 def test_max_cell_drop_telemetry(spark, tmp_path):

@@ -157,3 +157,41 @@ def test_late_into_emitted_history_dropped(spark, tmp_path):
     assert rows[(7, 0)].t_end_us == T0_US + 20_000_000
     assert rows[(7, 1)].n_events == 2  # t=10000, 10001
     assert len(rows) == 2  # and no phantom session from the dropped event
+
+
+def test_resume_pins_n_buckets(spark, tmp_path):
+    """n_buckets keys the state (pmod(user_id, n_buckets)): a resume may
+    not remap users. The first run records it in the checkpoint; a
+    different count is refused, an unset one adopts the recorded count."""
+    import pytest
+
+    from xml2arrow_spark.streaming.run import stage_ordered
+
+    b1 = [_ev(1, 10, 1), _ev(2, 20, 2), _ev(3, 500, 1)]
+    b2 = [_ev(4, 30, 2), _ev(5, 560, 1), _ev(6, 900, 3)]
+    src = _stage(spark, tmp_path, "src_pin", [b1])
+    out, cp = str(tmp_path / "out_pin"), str(tmp_path / "cp_pin")
+    kw = dict(gap_seconds=100, watermark_delay="4100 seconds",
+              max_files_per_trigger=1, checkpoint_dir=cp)
+    run_sessionize_stream(spark, src, out, n_buckets=7, **kw).collect()
+
+    stage_ordered(
+        [spark.createDataFrame(b2, EV_DDL),
+         spark.createDataFrame([_sentinel(20_000)], EV_DDL)], src
+    )
+    with pytest.raises(ValueError, match="n_buckets=7"):
+        run_sessionize_stream(spark, src, out, n_buckets=5, **kw)
+    got = sorted(
+        tuple(r) for r in run_sessionize_stream(spark, src, out, **kw).collect()
+    )
+    want = sorted(
+        tuple(r) for r in sessionize(
+            spark.createDataFrame(b1 + b2, EV_DDL), gap_seconds=100
+        ).collect()
+    )
+    assert got == want
+    # a checkpoint with progress but no record cannot be checked: refuse
+    # an unset n_buckets rather than guess the count it was keyed with
+    os.remove(os.path.join(cp, "n_buckets"))
+    with pytest.raises(ValueError, match="no recorded n_buckets"):
+        run_sessionize_stream(spark, src, out, **kw)

@@ -100,8 +100,8 @@ block_rows = resolved.block_rows
 LOG = log_root
 
 def encode_stats(batches):
-    from xml2arrow_spark.env import limit_arrow_threads
-    limit_arrow_threads(1)
+    from xml2arrow_spark.env import task_setup
+    task_setup()
     t_in = time.time()
     compute = 0.0
     nfiles = 0

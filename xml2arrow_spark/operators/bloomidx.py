@@ -176,10 +176,10 @@ def _computed_filters_df(
         blocks = blocks.select("unit_id", "block_id", "cols")
 
     def build_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
         from xml2arrow_spark.operators.blocks import decode_column
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             units_a = b.column(0)
             blocks_a = b.column(1)

@@ -245,9 +245,9 @@ def encode_parquet_dataset(
     def encode_sink(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)  # one Spark task = one parallel unit
+        task_setup()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         for b in batches:
@@ -1236,9 +1236,9 @@ def count_where(
     def count_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         acc = zero
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
@@ -1465,9 +1465,9 @@ def _group_count_composite(
     def count_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
             for fpath in (p for paths in path_lists for p in paths):
@@ -1823,9 +1823,9 @@ def group_count(
     def count_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
             for fpath in (p for paths in path_lists for p in paths):
@@ -2120,9 +2120,9 @@ def _group_aggs_composite(
     def sum_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
             for fpath in (p for paths in path_lists for p in paths):
@@ -2619,9 +2619,9 @@ def group_aggs(
     def sum_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
             for fpath in (p for paths in path_lists for p in paths):
@@ -3147,9 +3147,9 @@ def top_k(
     def topk_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
             for fpath in (p for paths in path_lists for p in paths):
@@ -3706,9 +3706,9 @@ def time_bucket_count(
     def sum_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
             for fpath in (p for paths in path_lists for p in paths):
@@ -3929,9 +3929,9 @@ def compact_dataset(
 
         from pyspark import TaskContext
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         attempt = ctx.attemptNumber() if ctx is not None else 0
@@ -4238,9 +4238,9 @@ def decode_dataset(
     def decode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
             for fpath in (p for paths in path_lists for p in paths):

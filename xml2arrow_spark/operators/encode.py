@@ -466,6 +466,9 @@ def encode_table(
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
+        from xml2arrow_spark.env import task_setup
+
+        task_setup()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         if unit_col is None:
@@ -601,9 +604,9 @@ def encode_parquet_tasks(tasks_df, manifest: CodecManifest):
 
         from pyspark import TaskContext
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)  # one Spark task = one parallel unit
+        task_setup()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         seq = 0
@@ -682,9 +685,9 @@ def encode_parquet_stats(
     def encode_stats(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             idx_lists = b.column(b.schema.get_field_index("file_idx")).to_pylist()
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
@@ -1105,6 +1108,9 @@ def decode_table(blocks_df, schema_ddl: str, zone_filter=None, row_filter=None):
             raise ValueError(f"blocks table lacks columns for {sorted(missing)}")
 
         def decode_wide(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            from xml2arrow_spark.env import task_setup
+
+            task_setup()
             for b in batches:
                 for row in range(b.num_rows):
                     def pair(n):
@@ -1136,6 +1142,9 @@ def decode_table(blocks_df, schema_ddl: str, zone_filter=None, row_filter=None):
     wanted = set(out_names)
 
     def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from xml2arrow_spark.env import task_setup
+
+        task_setup()
         for b in batches:
             cols_col = b.column(b.schema.get_field_index("cols"))
             for row in range(b.num_rows):

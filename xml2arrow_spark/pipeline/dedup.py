@@ -223,6 +223,11 @@ def _write_bands_local(
             pa.field("row_hash", pa.int64()),
         ]
     )
+    # every band_pos file is written as a hidden dotfile first (readers skip
+    # them) and all are renamed in one final loop: a crash mid-write never
+    # exposes a torn parquet file, nor a partial bands batch that would
+    # generate candidates from only some of its bands
+    staged = []
     for b, col in enumerate(band_cols):
         part = pa.table(
             {
@@ -237,12 +242,12 @@ def _write_bands_local(
         )
         pdir = os.path.join(bdir, f"band_pos={b}")
         os.makedirs(pdir, exist_ok=True)
-        # dotfile-then-rename: readers ignore hidden files, so a crash
-        # mid-write never exposes a torn parquet file
         name = f"part-local-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(pdir, "." + name + ".tmp")
         pq.write_table(part, tmp)
-        os.rename(tmp, os.path.join(pdir, name))
+        staged.append((tmp, os.path.join(pdir, name)))
+    for tmp, final in staged:
+        os.rename(tmp, final)
     return True
 
 
@@ -547,14 +552,14 @@ def token_span_dedup(
         narrow = _widen(spark.read.parquet(keys_path))
 
     def p1(batches):
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
         from xml2arrow_spark.pipeline.fast_text import (
             list_column_views,
             null_rows_emptied,
             span_partial_counts,
         )
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             vals, offs, valid = list_column_views(b.column(1))
             if not valid.all():
@@ -588,14 +593,14 @@ def token_span_dedup(
     )
 
     def p2(batches):
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
         from xml2arrow_spark.pipeline.fast_text import (
             list_column_views,
             null_rows_emptied,
             span_clean_segments,
         )
 
-        limit_arrow_threads(1)
+        task_setup()
         fs = bfreq.value
         for b in batches:
             vals, offs, valid = list_column_views(b.column(1))
@@ -1474,9 +1479,9 @@ def minhash_signatures_fast(
     )
 
     def fn(batches):
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             out = minhash_batch(b.column(b.schema.get_field_index(text_col)))
             arrays = [b.column(b.schema.get_field_index(id_col)), out["sig"]]
@@ -1512,9 +1517,9 @@ def minhash_bands_dtoks_fast(
     )
 
     def fn(batches):
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             out = minhash_batch(b.column(1), with_dtoks=True)
             yield pa.RecordBatch.from_arrays(
@@ -1573,9 +1578,9 @@ def simhash_ids_fast(
     id_type = docs.schema[id_col].dataType.simpleString()
 
     def fn(batches):
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             sh = simhash_batch(b.column(b.schema.get_field_index(text_col)))
             yield pa.RecordBatch.from_arrays(

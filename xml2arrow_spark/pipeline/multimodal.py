@@ -172,6 +172,9 @@ def sample_frames(
     k = int(n_frames)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from xml2arrow_spark.env import task_setup
+
+        task_setup()
         for pdf in batches:
             offs, buf, lens, _, _ = _batch_stats(pdf["payload"])
             n = len(pdf)
@@ -219,6 +222,9 @@ def resize_media(
     cells = int(out_w) * int(out_h)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from xml2arrow_spark.env import task_setup
+
+        task_setup()
         for pdf in batches:
             offs, buf, lens, _, _ = _batch_stats(pdf["payload"])
             out_bytes = []
@@ -258,6 +264,9 @@ def extract_features(
     use = decoder
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from xml2arrow_spark.env import task_setup
+
+        task_setup()
         for pdf in batches:
             offs, buf, lens, byte_sum, head_hash = _batch_stats(pdf["payload"])
             feats = np.empty((len(pdf), N_FEATURES), dtype=np.float64)

@@ -255,9 +255,9 @@ def ivf_assign_fast(
     CHUNK = 2048  # bounds the (chunk, n_cells) distance matrix
 
     def fn(batches):
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         scale32 = np.float32(G.IVF_SCALE)
         for b in batches:
             emb = b.column(b.schema.get_field_index(emb_col))

@@ -324,9 +324,9 @@ def group_distinct_est(
     def hash_files(batches: "Iterator[pa.RecordBatch]"):
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
             for fpath in (p for paths in path_lists for p in paths):
@@ -694,9 +694,9 @@ def group_distinct(
     def pair_files(batches: "Iterator[pa.RecordBatch]"):
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
             for fpath in (p for paths in path_lists for p in paths):

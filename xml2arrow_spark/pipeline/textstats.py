@@ -213,10 +213,10 @@ def paragraph_dedup(
     def p1(batches):
         import pyarrow.compute as pc
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
         from xml2arrow_spark.pipeline.fast_text import paragraph_views
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             texts = b.column(1)
             if texts.null_count:
@@ -258,14 +258,14 @@ def paragraph_dedup(
     def p2(batches):
         import pyarrow.compute as pc
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
         from xml2arrow_spark.pipeline.fast_text import (
             fold31_segments,
             paragraph_views,
             word_tokens_batch,
         )
 
-        limit_arrow_threads(1)
+        task_setup()
         freq_set = pa.array(bfreq.value, type=pa.string())
         for b in batches:
             ids, texts = b.column(0), b.column(1)
@@ -418,14 +418,14 @@ def chunk_sequences(
     )
 
     def fn(batches):
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
         from xml2arrow_spark.pipeline.fast_text import (
             chunk_segments,
             list_column_views,
             null_rows_emptied,
         )
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             vals, offs, valid = list_column_views(b.column(1))
             if not valid.all():
@@ -536,10 +536,10 @@ def tfidf_topk(
     def tf_fn(batches):
         import pyarrow.compute as pc
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
         from xml2arrow_spark.pipeline.fast_text import word_tokens_batch
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             ids, texts = b.column(0), b.column(1)
             if isinstance(texts, pa.ChunkedArray):

@@ -179,9 +179,9 @@ def scan_map_arrow(
     def run(batches):
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import limit_arrow_threads
+        from xml2arrow_spark.env import task_setup
 
-        limit_arrow_threads(1)
+        task_setup()
         for b in batches:
             path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
             for fpath in (p for paths in path_lists for p in paths):

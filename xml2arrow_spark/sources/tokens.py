@@ -157,6 +157,9 @@ def tokens_dataframe(spark, n_rows: int, variant: str = "uniform_vocab", seed: i
     parts = one_row_per_partition(spark, rows, "pid int, lo long, hi long")
 
     def gen(batches):
+        from xml2arrow_spark.env import task_setup
+
+        task_setup()
         for batch in batches:
             for pid, lo, hi in zip(
                 batch.column("pid").to_pylist(),

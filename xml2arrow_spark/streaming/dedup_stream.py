@@ -59,6 +59,9 @@ def dedup_stream(
     def fn(key, pdfs, state):
         import pandas as pd
 
+        from xml2arrow_spark.env import task_setup
+
+        task_setup()
         if state.exists:
             return  # digest already won: suppress every later copy
         best = None
@@ -138,6 +141,9 @@ def dedup_stream_tiered(
     def fn(key, pdfs, state):
         import pandas as pd
 
+        from xml2arrow_spark.env import task_setup
+
+        task_setup()
         if state.hasTimedOut:
             state.remove()  # evict from the hot tier; the store remembers
             return

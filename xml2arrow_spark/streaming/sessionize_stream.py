@@ -93,7 +93,9 @@ def sessionize_stream(
     ``n_buckets`` sets the hash-bucket fan-out the per-user state is
     sharded into (default: ``max(128, 4 * defaultParallelism)`` — enough
     groups to spread over every shuffle partition at any core count while
-    keeping the per-group machinery cost amortized over many users).
+    keeping the per-group machinery cost amortized over many users). It is
+    part of the state key: a caller that manages its own checkpoint must
+    keep it fixed across resumes (:func:`run_sessionize_stream` pins it).
     ``events_ddl`` is the staged source schema; a caller that controls the
     staging can pass :data:`EVENTS_NARROW_DDL` after staging only the three
     columns the operator reads."""
@@ -101,7 +103,7 @@ def sessionize_stream(
 
     gap_us = gap_seconds * 1_000_000
     if n_buckets is None:
-        n_buckets = max(128, 4 * spark.sparkContext.defaultParallelism)
+        n_buckets = _default_n_buckets(spark)
 
     def fn(key, pdfs, state):
         # fully vectorized MULTI-USER bucket body (r06): one invocation
@@ -114,6 +116,9 @@ def sessionize_stream(
         import numpy as np
         import pandas as pd
 
+        from xml2arrow_spark.env import task_setup
+
+        task_setup()
         if state.exists:
             su, sn, se, bu0, bt0, be0 = (
                 np.asarray(x, dtype=np.int64) for x in state.get
@@ -265,12 +270,54 @@ def run_sessionize_stream(
     events_ddl: str = EVENTS_DDL,
 ) -> DataFrame:
     """Drain the source with an availableNow query into ``out_dir`` and
-    return the emitted session rows."""
+    return the emitted session rows.
+
+    ``n_buckets`` is recorded in the checkpoint on the first run. On resume
+    an unset ``n_buckets`` adopts the recorded value and a different one is
+    refused: the bucket is the state key, so a new count would silently
+    move users to new, empty state."""
     from xml2arrow_spark.streaming.run import drain_available_now
 
+    checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_stream_checkpoint")
     sessions = sessionize_stream(
         spark, source_dir, gap_seconds, watermark_delay,
-        max_files_per_trigger=max_files_per_trigger, n_buckets=n_buckets,
+        max_files_per_trigger=max_files_per_trigger,
+        n_buckets=_pin_n_buckets(spark, checkpoint_dir, n_buckets),
         events_ddl=events_ddl,
     )
     return drain_available_now(spark, sessions, out_dir, _OUT_DDL, checkpoint_dir)
+
+
+def _default_n_buckets(spark: SparkSession) -> int:
+    return max(128, 4 * spark.sparkContext.defaultParallelism)
+
+
+def _pin_n_buckets(
+    spark: SparkSession, checkpoint_dir: str, n_buckets: int | None
+) -> int:
+    """The bucket count this checkpoint's state was keyed with: recorded
+    on the first run, checked against ``n_buckets`` on resume. A checkpoint
+    with progress but no record (written before the pin existed) needs an
+    explicit ``n_buckets``: its count cannot be recovered."""
+    from xml2arrow_spark import fsutil
+
+    pin = checkpoint_dir.rstrip("/") + "/n_buckets"
+    if fsutil.exists(spark, pin):
+        pinned = int(fsutil.read_text(spark, pin))
+        if n_buckets is not None and int(n_buckets) != pinned:
+            raise ValueError(
+                f"checkpoint {checkpoint_dir} was written with n_buckets="
+                f"{pinned}; resuming with n_buckets={n_buckets} would remap "
+                f"users to new state keys"
+            )
+        return pinned
+    if n_buckets is None:
+        if fsutil.exists(spark, checkpoint_dir.rstrip("/") + "/offsets"):
+            raise ValueError(
+                f"checkpoint {checkpoint_dir} has no recorded n_buckets; "
+                f"pass the n_buckets it was written with"
+            )
+        n_buckets = _default_n_buckets(spark)
+    fsutil.mkdirs(spark, checkpoint_dir)
+    fsutil.write_text_atomic(spark, pin, str(int(n_buckets)))
+    return int(n_buckets)

@@ -159,7 +159,7 @@ def _calls_prologue_first(fn) -> bool:
 def test_every_worker_fn_calls_task_setup_first():
     """Lint: every function the engine hands to mapInArrow / mapInPandas /
     applyInPandasWithState runs ``env.task_setup()`` before anything but
-    imports (pinned pyarrow pools, one zip finder per archive)."""
+    imports (pinned pyarrow pools, frozen import-time heap, no zip finder)."""
     import xml2arrow_spark
 
     root = os.path.dirname(xml2arrow_spark.__file__)

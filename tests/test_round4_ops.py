@@ -284,6 +284,28 @@ def test_near_dup_local_valves_fall_through(spark, tmp_path):
     assert got_rows  # the duplicate id really pairs with its near-dups
 
 
+def test_near_dup_local_valves_fail_closed_on_uri(spark, tmp_path):
+    """A URI sig_path (here ``file://``) is not a local directory: the size
+    probes read 0 bytes, so neither driver-local helper may run. Both go to
+    Spark, and the result equals the plain-path one."""
+    from unittest import mock
+
+    from xml2arrow_spark.pipeline import dedup
+
+    docs = _docs_df(spark, [(i, f"{BOILER} variant {i % 3}") for i in range(9)])
+    want = dedup.lsh_near_dup_pairs(docs, sig_path=str(tmp_path / "plain"))
+    boom = mock.Mock(side_effect=AssertionError("local twin ran on a URI"))
+    with mock.patch.object(dedup, "_write_bands_local", boom), \
+            mock.patch.object(dedup, "_near_dup_pairs_store_local", boom):
+        got = dedup.lsh_near_dup_pairs(
+            docs, sig_path=(tmp_path / "uri").as_uri()
+        )
+        got_rows = sorted(tuple(r) for r in got.collect())
+    assert not boom.called
+    assert got_rows == sorted(tuple(r) for r in want.collect())
+    assert got_rows
+
+
 def test_local_bands_write_crash_exposes_no_partial_batch(spark, tmp_path):
     """The driver-side bands write stages every band_pos file before it
     renames any: a crash mid-batch leaves no new visible band rows (a
@@ -318,7 +340,7 @@ def test_local_bands_write_crash_exposes_no_partial_batch(spark, tmp_path):
     band_cols = [f"band{b}" for b in range(G.MINHASH_BANDS)]
     with mock.patch.object(pq, "write_table", crash_on_third), \
             pytest.raises(OSError, match="simulated crash"):
-        dedup._write_bands_local(sp, "doc", band_cols, 0, "append", None, 64 << 20)
+        dedup._write_bands_local(sp, "doc", band_cols, 0, "append", None)
     assert len(calls) == 3
     assert visible() == before
 

@@ -17,16 +17,28 @@ cluster deployments, ship the same variables with
 :func:`recommended_spark_confs` returns them ready to pass to the builder.
 
 Call :func:`task_setup` first in every function Spark runs in a Python
-worker. Besides pinning pyarrow's pools it removes a per-task cost that
-looks like fixed Spark overhead but is not: PySpark calls
-``importlib.invalidate_caches()`` before every task, and on CPython 3.11
-every cached ``zipimporter`` then re-reads its whole archive directory. A
-reused worker holds one such finder per package imported from a zip — 12
-on ``pyspark.zip`` (~10 ms each), 2 on the spark-core jar (~40 ms each), 2
-on py4j — so each task paid ~0.2 s of worker CPU before any engine code
-ran. Measured on a 4-core host (Spark 4.1, CPython 3.11), an empty 4-task
-``mapInArrow``: worker CPU per task 0.15-0.25 s -> 0.06-0.09 s, op wall
-0.32-0.49 s -> 0.20-0.28 s.
+worker. Besides pinning pyarrow's pools it removes two per-task costs that
+look like fixed Spark overhead but are not. A reused worker runs two PySpark
+steps between any two tasks:
+
+- ``importlib.invalidate_caches()`` before every task. On CPython 3.11 every
+  cached ``zipimporter`` then re-reads its whole archive directory:
+  ``pyspark.zip`` (~10 ms), py4j, and the 15 MB spark-core jar (~40 ms).
+  Workers import from all three, and each package path caches its own
+  finder (12 on ``pyspark.zip`` alone), so a worker re-read them about
+  0.2 s of CPU per task. The prologue drops every zip finder, so the next
+  invalidation reads nothing.
+- the daemon's ``gc.collect()`` after every task. It walks the whole
+  import-time heap (~74K objects once the engine is loaded, ~30 ms). The
+  prologue freezes that heap with ``gc.freeze()``, so the collection scans
+  only objects created since.
+
+Measured on a 4-core host (Spark 4.1, CPython 3.11) with
+``tools/worker_overhead_probe.py`` (warm workers, empty 4-task
+``mapInArrow`` ops, two runs), median worker CPU between two tasks:
+0.15-0.25 s with every finder kept, 76-88 ms with one finder per archive
+and nothing frozen, 30-35 ms with only the finders dropped, 48-49 ms with
+only the heap frozen, and 2 ms with both.
 """
 
 from __future__ import annotations
@@ -61,17 +73,26 @@ def recommended_spark_confs() -> dict[str, str]:
     return {f"spark.executorEnv.{k}": v for k, v in KERNEL_MALLOC_ENV.items()}
 
 
+# len(sys.modules) when this process last froze its heap (-1: never);
+# process-wide on purpose, like the gc state it tracks
+_frozen_at_modules = -1
+
+
 def task_setup() -> None:
     """Worker-task prologue: call it first in every function Spark runs in a
     Python worker (``mapInArrow``, ``mapInPandas``, ``applyInPandasWithState``).
-    Idempotent, cheap (microseconds), worker-reuse-safe. It does two things:
+    Idempotent, cheap (microseconds; ``gc.freeze()`` moves whole generation
+    lists), worker-reuse-safe. It does three things:
 
     - Pins pyarrow's CPU and IO pools to one thread. pyarrow defaults both to
       ``os.cpu_count()``; inside a Spark python worker that means every task
       spawns a machine-wide pool and 'single-task' baselines secretly use
       every core. One Spark task is one unit of parallelism; Spark supplies
       the fan-out.
-    - Drops duplicate zip finders (:func:`_drop_duplicate_zip_finders`).
+    - Freezes the import-time heap, only inside a Python worker
+      (:func:`_freeze_import_heap`).
+    - Drops every cached zip finder (:func:`_drop_zip_finders`), last, so
+      no import made by an earlier step leaves one behind.
     """
     import pyarrow as pa
 
@@ -79,31 +100,57 @@ def task_setup() -> None:
         pa.set_cpu_count(1)
     if pa.io_thread_count() != 1:
         pa.set_io_thread_count(1)
-    _drop_duplicate_zip_finders()
+    _freeze_import_heap()
+    _drop_zip_finders()
 
 
-def _drop_duplicate_zip_finders() -> None:
-    """Keep one cached ``zipimporter`` per archive in ``sys.path_importer_cache``.
+def _drop_zip_finders() -> None:
+    """Hold no ``zipimporter`` in ``sys.path_importer_cache`` across tasks,
+    and forget each such archive's cached directory.
 
-    Every package imported from a zip caches its own ``zipimporter`` (one per
-    ``__path__`` entry), and ``importlib.invalidate_caches()`` — which PySpark
-    calls before every task — makes each of them re-read its WHOLE archive
-    directory. Keeping the archive's root entry (empty ``prefix``; else the
-    first one seen) means the next invalidation reads each archive once.
-    Finders re-created later for a dropped path are built from the refreshed
-    ``zipimport._zip_directory_cache``, so a rewritten archive is still seen
-    after ``invalidate_caches()``. The last finder of an archive is never
-    dropped: then nothing would refresh that cache.
+    PySpark calls ``importlib.invalidate_caches()`` before every task, and
+    that makes every cached ``zipimporter`` re-read its WHOLE archive
+    directory. With none cached, the invalidation reads nothing.
+
+    Freshness: a finder created later for a dropped path (only an import
+    not yet in ``sys.modules`` creates one) finds no entry in
+    ``zipimport._zip_directory_cache`` and reads the archive as it is then.
+    A rewritten archive is therefore never read stale, with or without an
+    ``invalidate_caches()`` call. Modules already imported keep their own
+    loader and its directory.
     """
     import sys
-    from zipimport import zipimporter
+    import zipimport
 
     cache = sys.path_importer_cache
-    zips = [(k, f) for k, f in cache.items() if isinstance(f, zipimporter)]
-    keep: dict[str, str] = {}
-    for key, finder in zips:
-        if finder.archive not in keep or not finder.prefix:
-            keep[finder.archive] = key
-    for key, finder in zips:
-        if keep[finder.archive] != key:
-            cache.pop(key, None)
+    for key, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[key]
+            zipimport._zip_directory_cache.pop(finder.archive, None)
+
+
+def _freeze_import_heap() -> None:
+    """``gc.freeze()`` the heap when a Python worker has imported new modules.
+
+    The PySpark daemon runs ``gc.collect()`` after every task, and a full
+    collection walks every tracked object: mostly the modules, functions
+    and classes the worker imported once. Frozen objects move to the
+    permanent generation, which no collection scans.
+
+    The bound: it freezes only when ``len(sys.modules)`` changed since this
+    worker's last freeze, so in steady state (no new module) nothing more
+    is frozen, and every later task's cyclic garbage is still collected.
+    What a freeze also pins is the few objects of the task that triggered
+    it, once per set of new modules. The driver and any process outside a
+    Spark task (``TaskContext.get()`` is None) are never frozen.
+    """
+    global _frozen_at_modules
+    import gc
+    import sys
+
+    from pyspark import TaskContext
+
+    n = len(sys.modules)
+    if n != _frozen_at_modules and TaskContext.get() is not None:
+        _frozen_at_modules = n
+        gc.freeze()

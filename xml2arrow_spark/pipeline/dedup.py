@@ -172,21 +172,19 @@ def _write_bands_local(
     batch_id: int,
     mode: str,
     band_row_filter_local,
-    local_threshold_bytes: int,
 ) -> bool:
     """Driver-side twin of the bands-table derivation (r06): the Spark
     path launches a full job (re-read the written sigs, 4-way union,
     partitioned write — ~0.4-0.6 s of fixed machinery at local[32]) to
-    move KB-to-MB of metadata. For a sigs table under
-    ``local_threshold_bytes`` this builds the identical band rows with
+    move KB-to-MB of metadata. For a small local sigs table (the caller
+    checks the size) this builds the identical band rows with
     pyarrow and writes them straight into the hive layout
     (``bands/band_pos=<b>/``), byte-compatible with the Spark files: same
     column set/types/nullability (sid, band_key int64 NOT NULL via the
     same null→-1 coalesce, batch_id int32, row_hash int64) so mixed
     Spark/pyarrow batches read as one table. Returns False (caller runs
-    the unchanged Spark derivation) when the sigs table is too big or
-    the filtered batch is empty (the Spark path's empty-write behaviour
-    is then preserved exactly)."""
+    the unchanged Spark derivation) when the filtered batch is empty (the
+    Spark path's empty-write behaviour is then preserved exactly)."""
     import shutil
     import uuid
 
@@ -195,12 +193,11 @@ def _write_bands_local(
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
-    sdir = os.path.join(sig_path, SIGS_SUBDIR)
-    if _store_dir_bytes(sdir) > local_threshold_bytes:
-        return False
     need, mask_fn = band_row_filter_local or ([], None)
     cols = [id_col, *band_cols, "batch_id", "row_hash", *need]
-    t = pads.dataset(sdir).to_table(columns=list(dict.fromkeys(cols)))
+    t = pads.dataset(os.path.join(sig_path, SIGS_SUBDIR)).to_table(
+        columns=list(dict.fromkeys(cols))
+    )
     keep = pc.equal(t.column("batch_id"), pa.scalar(int(batch_id), pa.int32()))
     if mask_fn is not None:
         keep = pc.and_kleene(keep, mask_fn(t))
@@ -252,6 +249,12 @@ def _write_bands_local(
 
 
 def _store_dir_bytes(path: str) -> int:
+    """On-disk bytes under a local directory (driver-side ``os.walk``, no
+    job). 0 when ``path`` is not a local directory — e.g. an ``hdfs://``,
+    ``s3a://`` or ``file://`` URI — so every local valve fails closed:
+    callers go local only on a probe of more than 0 bytes."""
+    if not os.path.isdir(path):
+        return 0
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -300,15 +303,17 @@ def write_signatures(
     ).write.mode(mode).parquet(os.path.join(sig_path, SIGS_SUBDIR))
     # r06 small-batch fast path: derive the bands rows driver-side from the
     # written sigs files (no Spark job) when the caller supplied a local
-    # twin of (or no) band_row_filter — identical rows and file layout,
-    # falls through to the Spark derivation otherwise
+    # twin of (or no) band_row_filter and the sigs table is a local dir of
+    # 1..threshold bytes — identical rows and file layout, falls through to
+    # the Spark derivation otherwise (a URI sig_path probes 0 bytes)
     if (
         local_threshold_bytes
         and (band_row_filter is None or band_row_filter_local is not None)
+        and 0 < _store_dir_bytes(os.path.join(sig_path, SIGS_SUBDIR))
+        <= local_threshold_bytes
         and _write_bands_local(
             sig_path, id_col, band_cols, batch_id, mode,
             band_row_filter_local if band_row_filter is not None else None,
-            local_threshold_bytes,
         )
     ):
         return
@@ -885,11 +890,14 @@ def lsh_near_dup_pairs(
             local_threshold_bytes=local_threshold_bytes,
         )
         # small-store short-circuit (r06): phase 2 runs driver-locally when
-        # the written store is small (bytes checked via os.walk — no job);
+        # the written store is a local dir of 1..threshold bytes (checked
+        # via os.walk — no job; a URI sig_path probes 0 and stays in Spark);
         # the local twin declines (returns None) on candidate blow-up or
         # duplicate ids, falling through to the distributed shape below.
         # local_threshold_bytes=0 disables.
-        if local_threshold_bytes and _store_bytes(sig_path) <= local_threshold_bytes:
+        if local_threshold_bytes and (
+            0 < _store_bytes(sig_path) <= local_threshold_bytes
+        ):
             loc = _near_dup_pairs_store_local(
                 spark, sig_path, "doc", threshold_milli, max_cell
             )

@@ -255,14 +255,18 @@ def test_open_ended_bounds(spark, ds):
 def test_distributed_path_matches_driver_path(spark, ds):
     # local_bytes=0 forces the mapInArrow fan-out; both paths run the same
     # per-file routine, so every tally must agree exactly
+    all_pruned = ("id", 10**9, None)
     for pred, sc in [
         (("id", 150, 749), "qty"),
         ([("tag", "a", "b"), ("qty", 0, 3)], None),
         (("val", 0.0, 100.0), None),
+        (all_pruned, "qty"),
     ]:
         a = _one(count_where(spark, ds, pred, agg_col=sc))
         b = _one(count_where(spark, ds, pred, agg_col=sc, local_bytes=0))
         assert a == b, (pred, a, b)
+        if pred is all_pruned:  # a count, never NULL, on both paths
+            assert a["n_match"] == 0 and a["n_pruned"] == a["n_blocks"], a
 
 
 def test_validation_errors(spark, ds):

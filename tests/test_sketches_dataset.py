@@ -211,11 +211,24 @@ def test_group_distinct_where_or(spark, ds, duck):
         assert got == exact, lb
 
 
-def test_group_distinct_cap_refuses(spark, ds):
+def test_group_distinct_cap_refuses(spark, ds, duck):
     from xml2arrow_spark.pipeline.sketches import group_distinct
 
-    with pytest.raises(ValueError, match="max_pairs"):
-        group_distinct(spark, ds, "src", "tok", max_pairs=100)
+    for lb in (128 << 20, 0):
+        with pytest.raises(Exception, match="max_pairs=100 .* one file's tally"):
+            group_distinct(
+                spark, ds, "src", "tok", local_bytes=lb, max_pairs=100
+            ).collect()
+    # every file's tally fits, the driver's merged tally does not
+    per_file = max(
+        duck.execute(
+            "SELECT count(*) FROM (SELECT DISTINCT src, tok FROM t "
+            f"WHERE tok IS NOT NULL AND id // 3000 = {i})"
+        ).fetchone()[0]
+        for i in range(3)
+    )
+    with pytest.raises(ValueError, match="merged tally across files"):
+        group_distinct(spark, ds, "src", "tok", max_pairs=per_file)
     with pytest.raises(ValueError, match="max_pairs"):
         group_distinct(spark, ds, "src", "tok", max_pairs=0)
 

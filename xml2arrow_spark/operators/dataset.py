@@ -23,6 +23,7 @@ completed work unit instead of one YAML per run.
 
 from __future__ import annotations
 
+import functools
 import os
 from typing import Iterator
 
@@ -46,6 +47,7 @@ from xml2arrow_spark.operators.encode import (
     value_counts_column,
     wide_pa_schema,
 )
+from xml2arrow_spark.sources.files import BlockWalk, local_frame, task_files
 
 __all__ = [
     "encode_parquet_dataset",
@@ -250,71 +252,64 @@ def encode_parquet_dataset(
         task_setup()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
-        for b in batches:
-            idx_lists = b.column(b.schema.get_field_index("file_idx")).to_pylist()
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for file_idx, fpath in (
-                (i, p)
-                for idxs, paths in zip(idx_lists, path_lists)
-                for i, p in zip(idxs, paths)
-            ):
-                pf = pq.ParquetFile(fpath)
-                if presort:
-                    # clustering needs the whole unit in memory (one file
-                    # = one unit, sized for an executor by construction);
-                    # one vectorized sort/take, then the same blockify
-                    from xml2arrow_spark.operators.zorder import presort_table
+        for file_idx, fpath in task_files(batches):
+            pf = pq.ParquetFile(fpath)
+            if presort:
+                # clustering needs the whole unit in memory (one file
+                # = one unit, sized for an executor by construction);
+                # one vectorized sort/take, then the same blockify
+                from xml2arrow_spark.operators.zorder import presort_table
 
-                    unit_tbl = presort_table(
-                        pf.read(columns=cols), list(presort), cluster
-                    )
-                    batch_iter = unit_tbl.to_batches(max_chunksize=block_rows)
-                else:
-                    batch_iter = pf.iter_batches(
-                        batch_size=block_rows, columns=cols
-                    )
-                blocks = [
-                    _encode_block(
-                        block, cols, policies, part_id, file_idx,
-                        (file_idx << 20) | seq, required=required,
-                    )
-                    for seq, block in enumerate(_blockify(batch_iter, block_rows))
-                ]
-                if wide:
-                    blocks = [_widen_block(b, cols) for b in blocks]
-                out_file = os.path.join(blocks_dir, f"blocks-u{file_idx:06d}.parquet")
-                tbl = (
-                    pa.Table.from_batches(blocks, schema=out_schema)
-                    if blocks
-                    else out_schema.empty_table()
+                unit_tbl = presort_table(
+                    pf.read(columns=cols), list(presort), cluster
                 )
-                # deterministic name per unit -> task retries overwrite,
-                # never duplicate (idempotent sink)
-                pq.write_table(tbl, out_file, compression="none")
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "unit_id": [file_idx],
-                        "src_file": [fpath],
-                        "out_file": [out_file],
-                        "n_blocks": [len(blocks)],
-                        "n_rows": [sum(x.column(3)[0].as_py() for x in blocks)],
-                        "n_values": [sum(x.column(4)[0].as_py() for x in blocks)],
-                        "in_bytes": [sum(x.column(5)[0].as_py() for x in blocks)],
-                        "out_bytes": [sum(x.column(6)[0].as_py() for x in blocks)],
-                    },
-                    schema=pa.schema(
-                        [
-                            pa.field("unit_id", pa.int32()),
-                            pa.field("src_file", pa.string()),
-                            pa.field("out_file", pa.string()),
-                            pa.field("n_blocks", pa.int32()),
-                            pa.field("n_rows", pa.int64()),
-                            pa.field("n_values", pa.int64()),
-                            pa.field("in_bytes", pa.int64()),
-                            pa.field("out_bytes", pa.int64()),
-                        ]
-                    ),
+                batch_iter = unit_tbl.to_batches(max_chunksize=block_rows)
+            else:
+                batch_iter = pf.iter_batches(
+                    batch_size=block_rows, columns=cols
                 )
+            blocks = [
+                _encode_block(
+                    block, cols, policies, part_id, file_idx,
+                    (file_idx << 20) | seq, required=required,
+                )
+                for seq, block in enumerate(_blockify(batch_iter, block_rows))
+            ]
+            if wide:
+                blocks = [_widen_block(b, cols) for b in blocks]
+            out_file = os.path.join(blocks_dir, f"blocks-u{file_idx:06d}.parquet")
+            tbl = (
+                pa.Table.from_batches(blocks, schema=out_schema)
+                if blocks
+                else out_schema.empty_table()
+            )
+            # deterministic name per unit -> task retries overwrite,
+            # never duplicate (idempotent sink)
+            pq.write_table(tbl, out_file, compression="none")
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "unit_id": [file_idx],
+                    "src_file": [fpath],
+                    "out_file": [out_file],
+                    "n_blocks": [len(blocks)],
+                    "n_rows": [sum(x.column(3)[0].as_py() for x in blocks)],
+                    "n_values": [sum(x.column(4)[0].as_py() for x in blocks)],
+                    "in_bytes": [sum(x.column(5)[0].as_py() for x in blocks)],
+                    "out_bytes": [sum(x.column(6)[0].as_py() for x in blocks)],
+                },
+                schema=pa.schema(
+                    [
+                        pa.field("unit_id", pa.int32()),
+                        pa.field("src_file", pa.string()),
+                        pa.field("out_file", pa.string()),
+                        pa.field("n_blocks", pa.int32()),
+                        pa.field("n_rows", pa.int64()),
+                        pa.field("n_values", pa.int64()),
+                        pa.field("in_bytes", pa.int64()),
+                        pa.field("out_bytes", pa.int64()),
+                    ]
+                ),
+            )
 
     meta = tasks.mapInArrow(encode_sink, METADATA_DDL).collect()
     if meta:
@@ -737,6 +732,140 @@ def _conj_boundary_mask(conj, pair_of):
     return out if out.any() else None
 
 
+def _fold_blocks_file(fpath, pq_mod, pair_cols, conj, wide, on_block, lacks):
+    """Walk one blocks file, classify blocks against the (possibly DNF)
+    ``conj`` via the shared zone classifier, and call
+    ``on_block(tally, pairs, mask)`` for every surviving block (``pairs``
+    = one (meta, payload) pair per ``pair_cols`` entry; ``mask`` = the
+    boundary row mask, None when every row matches). The block walk of
+    the aggregates that make no metadata claim — the composite-key
+    group_count / group_aggs and the per-group distinct operators
+    (pipeline/sketches.py); ``lacks`` names the columns in the error for
+    a block without one of them. Returns the accumulated tally dict."""
+    tally: dict = {}
+    if wide:
+        avail = set(pq_mod.read_schema(fpath).names)
+        fstat: list[tuple] = []
+        if conj is not None:
+            for col, _values, _lo, _hi, cat in conj:
+                zmin, zmax = _ZONE_SUFFIXES[cat]
+                fstat.append(tuple(
+                    n if n in avail else None
+                    for n in (f"c_{col}__{zmin}", f"c_{col}__{zmax}",
+                              f"c_{col}__n_null")
+                ))
+        kinds = None
+        if conj is not None:
+            stat_cols = [n for trip in fstat for n in trip if n is not None]
+            if stat_cols:
+                st = pq_mod.read_table(fpath, columns=sorted(set(stat_cols)))
+                n_blocks = st.num_rows
+            else:
+                st = None
+                n_blocks = pq_mod.read_metadata(fpath).num_rows
+            kinds = [
+                _classify_where(conj, [
+                    tuple(
+                        st.column(n)[i].as_py()
+                        if (st is not None and n is not None)
+                        else None
+                        for n in trip
+                    )
+                    for trip in fstat
+                ])
+                for i in range(n_blocks)
+            ]
+            if all(kd == "pruned" for kd in kinds):
+                return tally
+        cols = [
+            x for k in pair_cols for x in (f"c_{k}__meta", f"c_{k}__data")
+        ]
+        if conj is not None:
+            cols += [
+                x for col, _v, _l, _h, _c in conj
+                for x in (f"c_{col}__meta", f"c_{col}__data")
+            ]
+        cols = list(dict.fromkeys(cols))
+        pay = pq_mod.read_table(fpath, columns=cols)
+        arrays = {c: pay.column(c).combine_chunks() for c in cols}
+        for i in range(pay.num_rows):
+            mask = None
+            if kinds is not None:
+                if kinds[i] == "pruned":
+                    continue
+                if kinds[i] == "boundary":
+                    mask = _conj_boundary_mask(conj, lambda c, i=i: (
+                        arrays[f"c_{c}__meta"][i].as_py(),
+                        arrays[f"c_{c}__data"][i].as_py(),
+                    ))
+                    if mask is None:
+                        continue
+            on_block(
+                tally,
+                [
+                    (arrays[f"c_{k}__meta"][i].as_py(),
+                     arrays[f"c_{k}__data"][i].as_py())
+                    for k in pair_cols
+                ],
+                mask,
+            )
+    else:
+        tbl = pq_mod.read_table(fpath, columns=["cols"])
+        cols_col = tbl.column("cols").combine_chunks()
+        entry_fields = {
+            f.name for f in tbl.schema.field("cols").type.value_type
+        }
+        for row in range(len(cols_col)):
+            entries = cols_col[row].values
+            names = entries.field("name").to_pylist()
+            try:
+                kis = [names.index(k) for k in pair_cols]
+            except ValueError:
+                raise ValueError(
+                    f"block lacks an entry for {lacks}; the "
+                    f"sidecar schema and the blocks files disagree"
+                ) from None
+            mask = None
+            if conj is not None:
+                stats = []
+                for col, _values, _lo, _hi, cat in conj:
+                    zmin, zmax = _ZONE_SUFFIXES[cat]
+                    try:
+                        fi = names.index(col)
+                    except ValueError:
+                        raise ValueError(
+                            f"block lacks an entry for {col!r}; the "
+                            f"sidecar schema and the blocks files "
+                            f"disagree"
+                        ) from None
+                    stats.append(tuple(
+                        entries.field(f)[fi].as_py()
+                        if f in entry_fields
+                        else None
+                        for f in (zmin, zmax, "n_null")
+                    ))
+                kind = _classify_where(conj, stats)
+                if kind == "pruned":
+                    continue
+                if kind == "boundary":
+                    mask = _conj_boundary_mask(conj, lambda c: (
+                        entries.field("meta")[names.index(c)].as_py(),
+                        entries.field("data")[names.index(c)].as_py(),
+                    ))
+                    if mask is None:
+                        continue
+            on_block(
+                tally,
+                [
+                    (entries.field("meta")[ki].as_py(),
+                     entries.field("data")[ki].as_py())
+                    for ki in kis
+                ],
+                mask,
+            )
+    return tally
+
+
 def count_where(
     spark,
     out_path: str,
@@ -789,13 +918,11 @@ def count_where(
     cannot reproduce a sequential float fold, NaN ordering is
     engine-defined, and these stats never approximate.
 
-    Execution is scale-adaptive: when the blocks tree totals at most
-    ``local_bytes`` (default 128 MiB) the whole query runs DRIVER-SIDE with
-    pyarrow — launching a cluster job to scan kilobytes of block stats
-    costs more than the scan itself (the same rule that keeps manifest
-    writes off Spark jobs). Above the threshold the identical per-file
-    routine fans out over executors via mapInArrow. ``local_bytes=0``
-    forces the distributed path.
+    Execution is scale-adaptive through
+    :class:`~xml2arrow_spark.sources.files.BlockWalk`: a blocks tree of at
+    most ``local_bytes`` (default 128 MiB) answers driver-side, a larger
+    one fans the identical per-file routine out over executors;
+    ``local_bytes=0`` forces the distributed path.
 
     ``predicate`` is one conjunct or a list (conjunction). Each conjunct
     is a 3-tuple ``(column, lo, hi)`` — inclusive bounds, either side may
@@ -820,11 +947,7 @@ def count_where(
 
     from pyspark.sql import functions as F
 
-    from xml2arrow_spark.operators.encode import (
-        match_mask_column,
-        split_schema_ddl,
-    )
-    from xml2arrow_spark.sources.files import plan_parquet_tasks
+    from xml2arrow_spark.operators.encode import split_schema_ddl
 
     _refuse_pending_tombstones(out_path)
     with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
@@ -945,60 +1068,20 @@ def count_where(
         return "boundary", 0, None
 
     def _count_boundary(pair_of):
-        """Vectorized conjunction count (+ masked sum/min/max) over a
-        boundary block; NULL/NaN rows fail, matching SQL WHERE.
-        ``pair_of(col)`` yields the column's (meta_json, payload). Integer
-        and string conjuncts evaluate codec-aware (match_mask_column: on
-        the dictionary/run stream where the codec allows, never
-        materializing the values); float conjuncts decode and compare as
-        float64 (exact widening; the bound stays the double the oracle
-        compares against). The agg column decodes only when a row
-        actually matched. Returns (count, (sum, min, max) or None).
-
-        Under a DNF predicate the row mask is the OR of the per-disjunct
-        conjunction masks (NULL/NaN rows fail every disjunct)."""
+        """Count (+ masked sum/min/max) of one boundary block: the row mask
+        is the shared :func:`_conj_boundary_mask` (NULL/NaN rows fail,
+        matching SQL WHERE); the agg column decodes only when a row
+        actually matched. Returns (count, (sum, min, max) or None)."""
         import pyarrow.compute as pc
 
-        def _mask_of(sub):
-            mask = None
-            for col, values, lo, hi, cat in sub:
-                if cat == "d":
-                    arr = pc.cast(decode_column(*pair_of(col)), pa.float64())
-                    if values is not None:
-                        m = pc.fill_null(pc.is_in(
-                            arr, value_set=pa.array(values, type=pa.float64())
-                        ), False)
-                    else:
-                        m = None
-                        if lo is not None:
-                            m = pc.greater_equal(arr, pa.scalar(lo))
-                        if hi is not None:
-                            mh = pc.less_equal(arr, pa.scalar(hi))
-                            m = mh if m is None else pc.and_kleene(m, mh)
-                else:
-                    m = match_mask_column(*pair_of(col), values, lo, hi)
-                    if m is None:
-                        return None  # a conjunct matched zero rows
-                mask = m if mask is None else pc.and_kleene(mask, m)
-            return mask
-
-        if groups is None:
-            mask = _mask_of(conj)
-        else:
-            mask = None
-            for a, b in groups:
-                m = _mask_of(list(conj[a:b]))
-                if m is not None:
-                    m = pc.fill_null(m, False)
-                    mask = m if mask is None else pc.or_(mask, m)
+        mask = _conj_boundary_mask(conj, pair_of)
         if mask is None:
-            return 0, None  # no disjunct matched any row
-        s = pc.sum(mask)
-        cnt = int(s.as_py() or 0)
-        if agg_col is None or cnt == 0:
+            return 0, None  # no row matched
+        cnt = int(mask.sum())
+        if agg_col is None:
             return cnt, None
         agg_arr = decode_column(*pair_of(agg_col))
-        vals = agg_arr.filter(pc.fill_null(mask, False)).drop_null()
+        vals = agg_arr.filter(pa.array(mask)).drop_null()
         if len(vals) == 0:
             return cnt, None
         # unbounded python-int sum: Arrow's int64 sum kernel WRAPS on
@@ -1190,18 +1273,6 @@ def count_where(
             a[8] = True
         return tuple(a)
 
-    # Metadata-scale datasets answer DRIVER-SIDE with pyarrow: launching a
-    # cluster job to scan kilobytes of block stats costs more than the job
-    # setup (the repo's KB-metadata ground rule). Above the threshold the
-    # same per-file routine fans out over executors. local_bytes compares
-    # against the blocks files' TOTAL size -- a conservative stand-in for
-    # what the stat read could touch.
-    from xml2arrow_spark.sources.files import parquet_file_infos
-
-    infos = parquet_file_infos(os.path.join(out_path, "blocks"))
-    total_bytes = sum(s for _p, s in infos)
-    names = ["n_match", "n_blocks", "n_pruned", "n_interior",
-             "n_boundary", "n_sum", "n_min", "n_max"]
     zero = (0, 0, 0, 0, 0, 0, None, None, False)
 
     def _finish(acc):
@@ -1217,53 +1288,27 @@ def count_where(
             )
         return acc[:8]
 
-    if total_bytes <= local_bytes:
-        from xml2arrow_spark.sources.files import map_local_files
-
-        acc = zero
-        for res in map_local_files(infos, _process_file):
-            acc = _fold(acc, res)
-        # one-row ARROW-backed LocalRelation (LocalTableScan): collects in
-        # ~30 ms; a python-list createDataFrame is RDD-backed (~0.3 s per
-        # action) and even range(1).select(lit...) pays a 1-task job
-        # (~0.15 s measured)
-        df = spark.createDataFrame(pa.table(
-            {n: pa.array([v], type=pa.int64())
-             for v, n in zip(_finish(acc), names)}
-        ))
-        return df if agg_col is not None else df.drop("n_sum", "n_min", "n_max")
-
-    def count_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        acc = zero
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                acc = _fold(acc, _process_file(fpath, pq))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([v], type=pa.int64()) for v in _finish(acc)],
-            names=names,
+    walk = BlockWalk(out_path, local_bytes)
+    if walk.local:
+        acc = functools.reduce(_fold, walk.on_driver(_process_file), zero)
+        df = local_frame(spark, out_ddl, [_finish(acc)])
+    else:
+        df = walk.fan_out(
+            spark, _process_file, lambda t: [_finish(t)], out_ddl, n_tasks
+        ).agg(
+            F.sum("n_match").alias("n_match"),
+            F.sum("n_blocks").alias("n_blocks"),
+            F.sum("n_pruned").alias("n_pruned"),
+            F.sum("n_interior").alias("n_interior"),
+            F.sum("n_boundary").alias("n_boundary"),
+            # SQL aggregates: files with no non-null contribution yield
+            # NULL, and sum/min/max skip them; all-NULL -> NULL, the empty
+            # result
+            F.sum("n_sum").alias("n_sum"),
+            F.min("n_min").alias("n_min"),
+            F.max("n_max").alias("n_max"),
         )
-
-    tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
-    per_task = tasks.mapInArrow(count_files, out_ddl)
-    agg = per_task.agg(
-        F.sum("n_match").alias("n_match"),
-        F.sum("n_blocks").alias("n_blocks"),
-        F.sum("n_pruned").alias("n_pruned"),
-        F.sum("n_interior").alias("n_interior"),
-        F.sum("n_boundary").alias("n_boundary"),
-        # SQL aggregates: tasks with no non-null contribution yield NULL,
-        # and sum/min/max skip them; all-NULL -> NULL, the empty result
-        F.sum("n_sum").alias("n_sum"),
-        F.min("n_min").alias("n_min"),
-        F.max("n_max").alias("n_max"),
-    )
-    return agg if agg_col is not None else agg.drop("n_sum", "n_min", "n_max")
+    return df if agg_col is not None else df.drop("n_sum", "n_min", "n_max")
 
 
 def _group_count_composite(
@@ -1283,7 +1328,6 @@ def _group_count_composite(
     from pyspark.sql import functions as F
 
     from xml2arrow_spark.operators.blocks import composite_value_counts
-    from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
 
     if len(columns) < 2:
         raise ValueError("composite group_count needs at least two key columns")
@@ -1306,191 +1350,28 @@ def _group_count_composite(
         else None
     )
 
+    def _block_counts(tally, pairs, mask):
+        for kt, c in composite_value_counts(pairs, mask=mask).items():
+            tally[kt] = tally.get(kt, 0) + c
+
     def _file_counts(fpath, pq_mod):
-        tally: dict = {}
-        if wide:
-            avail = set(pq_mod.read_schema(fpath).names)
-            fstat: list[tuple] = []
-            if conj is not None:
-                for col, _values, _lo, _hi, cat in conj:
-                    zmin, zmax = _ZONE_SUFFIXES[cat]
-                    fstat.append(tuple(
-                        n if n in avail else None
-                        for n in (f"c_{col}__{zmin}", f"c_{col}__{zmax}",
-                                  f"c_{col}__n_null")
-                    ))
-            kinds = None
-            if conj is not None:
-                stat_cols = [n for trip in fstat for n in trip if n is not None]
-                if stat_cols:
-                    st = pq_mod.read_table(fpath, columns=sorted(set(stat_cols)))
-                    n_blocks = st.num_rows
-                else:
-                    st = None
-                    n_blocks = pq_mod.read_metadata(fpath).num_rows
-                kinds = [
-                    _classify_where(conj, [
-                        tuple(
-                            st.column(n)[i].as_py()
-                            if (st is not None and n is not None)
-                            else None
-                            for n in trip
-                        )
-                        for trip in fstat
-                    ])
-                    for i in range(n_blocks)
-                ]
-                if all(kd == "pruned" for kd in kinds):
-                    return tally
-            cols = [
-                x for c in columns for x in (f"c_{c}__meta", f"c_{c}__data")
-            ]
-            if conj is not None:
-                cols += [
-                    x for col, _v, _l, _h, _c in conj
-                    for x in (f"c_{col}__meta", f"c_{col}__data")
-                ]
-            cols = list(dict.fromkeys(cols))
-            pay = pq_mod.read_table(fpath, columns=cols)
-            arrays = {c: pay.column(c).combine_chunks() for c in cols}
-            for i in range(pay.num_rows):
-                mask = None
-                if kinds is not None:
-                    if kinds[i] == "pruned":
-                        continue
-                    if kinds[i] == "boundary":
-                        mask = _conj_boundary_mask(conj, lambda c, i=i: (
-                            arrays[f"c_{c}__meta"][i].as_py(),
-                            arrays[f"c_{c}__data"][i].as_py(),
-                        ))
-                        if mask is None:
-                            continue
-                for kt, c in composite_value_counts(
-                    [
-                        (arrays[f"c_{kc}__meta"][i].as_py(),
-                         arrays[f"c_{kc}__data"][i].as_py())
-                        for kc in columns
-                    ],
-                    mask=mask,
-                ).items():
-                    tally[kt] = tally.get(kt, 0) + c
-        else:
-            tbl = pq_mod.read_table(fpath, columns=["cols"])
-            cols_col = tbl.column("cols").combine_chunks()
-            entry_fields = {
-                f.name for f in tbl.schema.field("cols").type.value_type
-            }
-            for row in range(len(cols_col)):
-                entries = cols_col[row].values
-                names = entries.field("name").to_pylist()
-                try:
-                    kis = [names.index(kc) for kc in columns]
-                except ValueError:
-                    raise ValueError(
-                        f"block lacks an entry for {columns!r}; the "
-                        f"sidecar schema and the blocks files disagree"
-                    ) from None
-                mask = None
-                if conj is not None:
-                    stats = []
-                    for col, _values, _lo, _hi, cat in conj:
-                        zmin, zmax = _ZONE_SUFFIXES[cat]
-                        try:
-                            fi = names.index(col)
-                        except ValueError:
-                            raise ValueError(
-                                f"block lacks an entry for {col!r}; the "
-                                f"sidecar schema and the blocks files "
-                                f"disagree"
-                            ) from None
-                        stats.append(tuple(
-                            entries.field(f)[fi].as_py()
-                            if f in entry_fields
-                            else None
-                            for f in (zmin, zmax, "n_null")
-                        ))
-                    kind = _classify_where(conj, stats)
-                    if kind == "pruned":
-                        continue
-                    if kind == "boundary":
-                        mask = _conj_boundary_mask(conj, lambda c: (
-                            entries.field("meta")[names.index(c)].as_py(),
-                            entries.field("data")[names.index(c)].as_py(),
-                        ))
-                        if mask is None:
-                            continue
-                for kt, c in composite_value_counts(
-                    [
-                        (entries.field("meta")[ki].as_py(),
-                         entries.field("data")[ki].as_py())
-                        for ki in kis
-                    ],
-                    mask=mask,
-                ).items():
-                    tally[kt] = tally.get(kt, 0) + c
-        return tally
+        return _fold_blocks_file(
+            fpath, pq_mod, columns, conj, wide, _block_counts, f"{columns!r}"
+        )
 
-    infos = parquet_file_infos(os.path.join(out_path, "blocks"))
-    if sum(sz for _p, sz in infos) <= local_bytes:
-        from xml2arrow_spark.sources.files import map_local_files
+    def _rows(tally):
+        return [(*kt, c) for kt, c in tally.items()]
 
+    walk = BlockWalk(out_path, local_bytes)
+    if walk.local:
         total: dict = {}
-        for fc in map_local_files(infos, _file_counts):
+        for fc in walk.on_driver(_file_counts):
             for kt, c in fc.items():
                 total[kt] = total.get(kt, 0) + c
-        items = list(total.items())
-        # arrow-backed LocalRelation — see the single-key local finish
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        lsch = to_arrow_schema(StructType.fromDDL(out_ddl))
-        return spark.createDataFrame(pa.table(
-            {
-                lsch.field(j).name: pa.array(
-                    [
-                        (kt[j] if j < len(columns) else c)
-                        for kt, c in items
-                    ],
-                    type=lsch.field(j).type,
-                )
-                for j in range(len(lsch))
-            }
-        ), schema=out_ddl)
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    out_schema = to_arrow_schema(StructType.fromDDL(out_ddl))
-
-    def count_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                tally = _file_counts(fpath, pq)
-                if not tally:
-                    continue
-                items = list(tally.items())
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            [kt[j] for kt, _c in items],
-                            type=out_schema.field(j).type,
-                        )
-                        for j in range(len(columns))
-                    ] + [
-                        pa.array([c for _kt, c in items], type=pa.int64()),
-                    ],
-                    names=list(columns) + ["cnt"],
-                )
-
-    tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
-    per_file = tasks.mapInArrow(count_files, out_ddl)
-    return per_file.groupBy(*columns).agg(F.sum("cnt").alias("cnt"))
+        return local_frame(spark, out_ddl, _rows(total))
+    return walk.fan_out(spark, _file_counts, _rows, out_ddl, n_tasks).groupBy(
+        *columns
+    ).agg(F.sum("cnt").alias("cnt"))
 
 
 def group_count(
@@ -1542,11 +1423,10 @@ def group_count(
     with zero matching rows are absent, exactly as SQL's WHERE-before-
     GROUP-BY.
 
-    Scale-adaptive like :func:`count_where`: a blocks tree at most
-    ``local_bytes`` answers driver-side with pyarrow (a cluster job costs
-    more than the scan); larger trees fan the identical per-file routine
-    out via mapInArrow. ``local_bytes=0`` forces the distributed path.
-    Both paths pinned equal in tests/test_dataset.py.
+    Scale-adaptive through
+    :class:`~xml2arrow_spark.sources.files.BlockWalk` (``local_bytes``
+    sizes the driver-local path); both paths pinned equal in
+    tests/test_dataset.py.
 
     Returns a DataFrame ``(column, cnt)`` with the column's original type.
     """
@@ -1555,7 +1435,6 @@ def group_count(
     from pyspark.sql import functions as F
 
     from xml2arrow_spark.operators.encode import split_schema_ddl
-    from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
 
     _refuse_pending_tombstones(out_path)
     with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
@@ -1787,63 +1666,116 @@ def group_count(
                     )
         return tally
 
-    infos = parquet_file_infos(os.path.join(out_path, "blocks"))
-    if sum(s for _p, s in infos) <= local_bytes:
-        from xml2arrow_spark.sources.files import map_local_files
-
+    walk = BlockWalk(out_path, local_bytes)
+    if walk.local:
         total: dict = {}
-        for fc in map_local_files(infos, _file_counts):
+        for fc in walk.on_driver(_file_counts):
             for v, c in fc.items():
                 total[v] = total.get(v, 0) + c
-        # arrow-backed LocalRelation (LocalTableScan), NOT a python-list
-        # createDataFrame: the latter is RDD-backed and every action runs
-        # a real Spark job (~0.3 s measured for 3 rows; arrow collects in
-        # ~30 ms)
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+        return local_frame(spark, out_ddl, total.items())
+    return walk.fan_out(
+        spark, _file_counts, dict.items, out_ddl, n_tasks
+    ).groupBy(column).agg(F.sum("cnt").alias("cnt"))
 
-        lsch = to_arrow_schema(StructType.fromDDL(
-            f"{by_name[column]}, cnt bigint"))
-        items = list(total.items())
-        return spark.createDataFrame(pa.table(
-            {
-                column: pa.array([v for v, _c in items],
-                                 type=lsch.field(0).type),
-                "cnt": pa.array([c for _v, c in items], type=pa.int64()),
-            }
-        ), schema=f"{by_name[column]}, cnt bigint")
 
-    # resolved DRIVER-side: DDL parsing needs an active SparkContext,
-    # which executor-side Python workers do not have; pa.Schema pickles
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
+def _merge_aggs(tally, kt, c, trips):
+    """Fold one group's ``(cnt, [(nn, sum, min, max[, sumsq]) per agg])``
+    partial into a group_aggs tally keyed by ``kt``."""
+    prev = tally.get(kt)
+    if prev is None:
+        tally[kt] = [c, list(trips)]
+        return
+    prev[0] += c
+    for i, t in enumerate(trips):
+        nng, sm, mn, mx = t[:4]
+        p = prev[1][i]
+        pn, ps, pm, px = p[:4]
+        pn += nng
+        ps += sm
+        if mn is not None:
+            pm = mn if pm is None else min(pm, mn)
+            px = mx if px is None else max(px, mx)
+        merged = (pn, ps, pm, px)
+        if len(t) > 4:
+            merged += (p[4] + t[4],)
+        prev[1][i] = merged
 
-    out_schema = to_arrow_schema(StructType.fromDDL(out_ddl))
 
-    def count_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
+def _group_aggs_walk(
+    spark, out_path, keys, agg_cols, by_name, file_sums, n_tasks,
+    local_bytes, with_sum_sq,
+):
+    """The dispatch, driver finish and Spark combine :func:`group_aggs`
+    shares between its single- and composite-key forms. ``file_sums`` is
+    the form's per-file routine: {key (a tuple for a composite key):
+    [cnt, [(nn, sum, min, max[, sumsq]) per agg]]}."""
+    from pyspark.sql import functions as F
 
-        from xml2arrow_spark.env import task_setup
+    width = 5 if with_sum_sq else 4
+    key_ddl = ", ".join(by_name[c] for c in keys)
 
-        task_setup()
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                tally = _file_counts(fpath, pq)
-                if not tally:
-                    continue
-                items = list(tally.items())
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([v for v, _c in items], type=out_schema.field(0).type),
-                        pa.array([c for _v, c in items], type=pa.int64()),
-                    ],
-                    names=[column, "cnt"],
-                )
+    def key_of(kt):
+        return kt if len(keys) > 1 else (kt,)
 
-    tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
-    per_file = tasks.mapInArrow(count_files, out_ddl)
-    return per_file.groupBy(column).agg(F.sum("cnt").alias("cnt"))
+    walk = BlockWalk(out_path, local_bytes)
+    if walk.local:
+        total: dict = {}
+        for fs_ in walk.on_driver(file_sums):
+            for kt, (c, trips) in fs_.items():
+                _merge_aggs(total, kt, c, trips)
+        rows = []
+        for kt, (c, trips) in total.items():
+            flat = [*key_of(kt), c]
+            for t, a in zip(trips, agg_cols):
+                nng, sm, mn, mx = t[:4]
+                for tot in t[1:2] + t[4:5]:
+                    if not (-(1 << 63) <= tot < (1 << 63)):
+                        raise ArithmeticError(
+                            f"group_aggs total of {a!r} for key {kt!r} is "
+                            f"outside int64 ({tot}); refusing rather than "
+                            f"wrapping (ANSI contract)"
+                        )
+                flat += [nng, sm if nng else None, mn, mx]
+                if with_sum_sq:
+                    flat.append(t[4] if nng else None)
+            rows.append(flat)
+        return local_frame(spark, f"{key_ddl}, cnt bigint, " + ", ".join(
+            f"nn_{a} bigint, sum_{a} bigint, min_{a} bigint, max_{a} bigint"
+            + (f", sumsq_{a} bigint" if with_sum_sq else "")
+            for a in agg_cols
+        ), rows)
+
+    def part_rows(tally):
+        # nn==0 partials carry sum 0 (never NULL) so the roll-up's F.sum
+        # stays total-order deterministic; the final when() restores SQL's
+        # NULL (min/max partials carry NULL — F.min/F.max skip them)
+        return [
+            (*key_of(kt), c, *(x for t in trips for x in t[:width]))
+            for kt, (c, trips) in tally.items()
+        ]
+
+    part_ddl = f"{key_ddl}, cnt bigint, " + ", ".join(
+        f"{x}{i} bigint"
+        for i in range(len(agg_cols))
+        for x in ("nn", "s", "mn", "mx", "ssq")[:width]
+    )
+    aggs = [F.sum("cnt").alias("cnt")]
+    for i, a in enumerate(agg_cols):
+        aggs += [
+            F.sum(f"nn{i}").alias(f"nn_{a}"),
+            F.when(F.sum(f"nn{i}") > 0, F.sum(f"s{i}"))
+            .otherwise(F.lit(None)).alias(f"sum_{a}"),
+            F.min(f"mn{i}").alias(f"min_{a}"),
+            F.max(f"mx{i}").alias(f"max_{a}"),
+        ]
+        if with_sum_sq:
+            aggs.append(
+                F.when(F.sum(f"nn{i}") > 0, F.sum(f"ssq{i}"))
+                .otherwise(F.lit(None)).alias(f"sumsq_{a}")
+            )
+    return walk.fan_out(
+        spark, file_sums, part_rows, part_ddl, n_tasks
+    ).groupBy(*keys).agg(*aggs)
 
 
 def _group_aggs_composite(
@@ -1858,10 +1790,7 @@ def _group_aggs_composite(
     semantics and ANSI refusal as the single-key path; where= composes
     (prune / unmasked / masked); composite keys make no metadata claim (a
     block would need EVERY key column single-valued)."""
-    from pyspark.sql import functions as F
-
     from xml2arrow_spark.operators.blocks import composite_group_aggs
-    from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
 
     if len(keys) < 2:
         raise ValueError("composite group_aggs needs at least two key columns")
@@ -1887,181 +1816,24 @@ def _group_aggs_composite(
                 f"group_aggs needs integer agg columns, got {a} {styp}"
             )
     wide = side.get("layout", "nested") == "wide"
-    m = len(agg_cols)
-    key_ddl = ", ".join(by_name[c] for c in keys)
-    ssq_p = ", ssq{i} bigint" if with_sum_sq else ""
-    part_ddl = f"{key_ddl}, cnt bigint, " + ", ".join(
-        f"nn{i} bigint, s{i} bigint, mn{i} bigint, mx{i} bigint"
-        + ssq_p.format(i=i)
-        for i in range(m)
-    )
-    out_sql_ddl = f"{key_ddl}, cnt bigint, " + ", ".join(
-        f"nn_{a} bigint, sum_{a} bigint, min_{a} bigint, max_{a} bigint"
-        + (f", sumsq_{a} bigint" if with_sum_sq else "")
-        for a in agg_cols
-    )
     conj = (
         _resolve_conjuncts(by_name, where, "group_aggs")
         if where is not None
         else None
     )
 
-    def _merge(tally, kt, c, trips):
-        prev = tally.get(kt)
-        if prev is None:
-            tally[kt] = [c, list(trips)]
-        else:
-            prev[0] += c
-            for i, t in enumerate(trips):
-                nng, sm, mn, mx = t[:4]
-                p = prev[1][i]
-                pn, ps, pm, px = p[:4]
-                pn += nng
-                ps += sm
-                if mn is not None:
-                    pm = mn if pm is None else min(pm, mn)
-                    px = mx if px is None else max(px, mx)
-                merged = (pn, ps, pm, px)
-                if len(t) > 4:
-                    merged += (p[4] + t[4],)
-                prev[1][i] = merged
+    def _block_sums(tally, pairs, mask):
+        for kt, row in composite_group_aggs(
+            pairs[:len(keys)], pairs[len(keys):],
+            mask=mask, with_sq=with_sum_sq,
+        ).items():
+            _merge_aggs(tally, kt, row[0], row[1:])
 
     def _file_sums(fpath, pq_mod):
-        tally: dict = {}
-        if wide:
-            avail = set(pq_mod.read_schema(fpath).names)
-            fstat: list[tuple] = []
-            if conj is not None:
-                for col, _values, _lo, _hi, cat in conj:
-                    zmin, zmax = _ZONE_SUFFIXES[cat]
-                    fstat.append(tuple(
-                        n if n in avail else None
-                        for n in (f"c_{col}__{zmin}", f"c_{col}__{zmax}",
-                                  f"c_{col}__n_null")
-                    ))
-            kinds = None
-            if conj is not None:
-                stat_cols = [n for trip in fstat for n in trip if n is not None]
-                if stat_cols:
-                    st = pq_mod.read_table(fpath, columns=sorted(set(stat_cols)))
-                    n_blocks = st.num_rows
-                else:
-                    st = None
-                    n_blocks = pq_mod.read_metadata(fpath).num_rows
-                kinds = [
-                    _classify_where(conj, [
-                        tuple(
-                            st.column(n)[i].as_py()
-                            if (st is not None and n is not None)
-                            else None
-                            for n in trip
-                        )
-                        for trip in fstat
-                    ])
-                    for i in range(n_blocks)
-                ]
-                if all(kd == "pruned" for kd in kinds):
-                    return tally
-            cols = [
-                x for c in keys + agg_cols
-                for x in (f"c_{c}__meta", f"c_{c}__data")
-            ]
-            if conj is not None:
-                cols += [
-                    x for col, _v, _l, _h, _c in conj
-                    for x in (f"c_{col}__meta", f"c_{col}__data")
-                ]
-            cols = list(dict.fromkeys(cols))
-            pay = pq_mod.read_table(fpath, columns=cols)
-            arrays = {c: pay.column(c).combine_chunks() for c in cols}
-            for i in range(pay.num_rows):
-                mask = None
-                if kinds is not None:
-                    if kinds[i] == "pruned":
-                        continue
-                    if kinds[i] == "boundary":
-                        mask = _conj_boundary_mask(conj, lambda c, i=i: (
-                            arrays[f"c_{c}__meta"][i].as_py(),
-                            arrays[f"c_{c}__data"][i].as_py(),
-                        ))
-                        if mask is None:
-                            continue
-                for kt, row in composite_group_aggs(
-                    [
-                        (arrays[f"c_{kc}__meta"][i].as_py(),
-                         arrays[f"c_{kc}__data"][i].as_py())
-                        for kc in keys
-                    ],
-                    [
-                        (arrays[f"c_{a}__meta"][i].as_py(),
-                         arrays[f"c_{a}__data"][i].as_py())
-                        for a in agg_cols
-                    ],
-                    mask=mask,
-                    with_sq=with_sum_sq,
-                ).items():
-                    _merge(tally, kt, row[0], row[1:])
-        else:
-            tbl = pq_mod.read_table(fpath, columns=["cols"])
-            cols_col = tbl.column("cols").combine_chunks()
-            entry_fields = {
-                f.name for f in tbl.schema.field("cols").type.value_type
-            }
-            for row_i in range(len(cols_col)):
-                entries = cols_col[row_i].values
-                names = entries.field("name").to_pylist()
-                try:
-                    kis = [names.index(kc) for kc in keys]
-                    ais = [names.index(a) for a in agg_cols]
-                except ValueError:
-                    raise ValueError(
-                        f"block lacks an entry for {keys!r}/{agg_cols!r}; "
-                        f"the sidecar schema and the blocks files disagree"
-                    ) from None
-                mask = None
-                if conj is not None:
-                    stats = []
-                    for col, _values, _lo, _hi, cat in conj:
-                        zmin, zmax = _ZONE_SUFFIXES[cat]
-                        try:
-                            fi = names.index(col)
-                        except ValueError:
-                            raise ValueError(
-                                f"block lacks an entry for {col!r}; the "
-                                f"sidecar schema and the blocks files "
-                                f"disagree"
-                            ) from None
-                        stats.append(tuple(
-                            entries.field(f)[fi].as_py()
-                            if f in entry_fields
-                            else None
-                            for f in (zmin, zmax, "n_null")
-                        ))
-                    kind = _classify_where(conj, stats)
-                    if kind == "pruned":
-                        continue
-                    if kind == "boundary":
-                        mask = _conj_boundary_mask(conj, lambda c: (
-                            entries.field("meta")[names.index(c)].as_py(),
-                            entries.field("data")[names.index(c)].as_py(),
-                        ))
-                        if mask is None:
-                            continue
-                for kt, rrow in composite_group_aggs(
-                    [
-                        (entries.field("meta")[ki].as_py(),
-                         entries.field("data")[ki].as_py())
-                        for ki in kis
-                    ],
-                    [
-                        (entries.field("meta")[ai].as_py(),
-                         entries.field("data")[ai].as_py())
-                        for ai in ais
-                    ],
-                    mask=mask,
-                    with_sq=with_sum_sq,
-                ).items():
-                    _merge(tally, kt, rrow[0], rrow[1:])
+        tally = _fold_blocks_file(
+            fpath, pq_mod, keys + agg_cols, conj, wide, _block_sums,
+            f"{keys!r}/{agg_cols!r}",
+        )
         for kt, (_c, trips) in tally.items():
             for t, a in zip(trips, agg_cols):
                 sm = t[1] if len(t) == 4 else max(t[1], t[4], key=abs)
@@ -2073,109 +1845,10 @@ def _group_aggs_composite(
                     )
         return tally
 
-    nk = len(keys)
-    infos = parquet_file_infos(os.path.join(out_path, "blocks"))
-    if sum(sz for _p, sz in infos) <= local_bytes:
-        from xml2arrow_spark.sources.files import map_local_files
-
-        total: dict = {}
-        for fs_ in map_local_files(infos, _file_sums):
-            for kt, (c, trips) in fs_.items():
-                _merge(total, kt, c, trips)
-        rows = []
-        for kt, (c, trips) in total.items():
-            flat = list(kt) + [c]
-            for t, a in zip(trips, agg_cols):
-                nng, sm, mn, mx = t[:4]
-                for tot in t[1:2] + t[4:5]:
-                    if not (-(1 << 63) <= tot < (1 << 63)):
-                        raise ArithmeticError(
-                            f"group_aggs total of {a!r} for key {kt!r} is "
-                            f"outside int64 ({tot}); refusing rather than "
-                            f"wrapping (ANSI contract)"
-                        )
-                flat += [nng, sm if nng else None, mn, mx]
-                if with_sum_sq:
-                    flat.append(t[4] if nng else None)
-            rows.append(flat)
-        # arrow-backed LocalRelation — see group_count's local finish
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        lsch = to_arrow_schema(StructType.fromDDL(out_sql_ddl))
-        return spark.createDataFrame(pa.table(
-            {
-                lsch.field(i).name: pa.array(
-                    [r[i] for r in rows], type=lsch.field(i).type
-                )
-                for i in range(len(lsch))
-            }
-        ), schema=out_sql_ddl)
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    out_schema = to_arrow_schema(StructType.fromDDL(part_ddl))
-
-    def sum_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                tally = _file_sums(fpath, pq)
-                if not tally:
-                    continue
-                items = list(tally.items())
-                arrays = [
-                    pa.array(
-                        [kt[j] for kt, _t in items],
-                        type=out_schema.field(j).type,
-                    )
-                    for j in range(nk)
-                ] + [
-                    pa.array([t[0] for _kt, t in items], type=pa.int64()),
-                ]
-                width = 5 if with_sum_sq else 4
-                for i in range(m):
-                    # nn==0 partials carry sum 0 (never NULL): see the
-                    # single-key path's roll-up comment
-                    for j in range(width):
-                        arrays.append(pa.array(
-                            [t[1][i][j] for _kt, t in items], type=pa.int64()
-                        ))
-                yield pa.RecordBatch.from_arrays(
-                    arrays,
-                    names=list(keys) + ["cnt"] + [
-                        x for i in range(m)
-                        for x in (
-                            (f"nn{i}", f"s{i}", f"mn{i}", f"mx{i}", f"ssq{i}")
-                            if with_sum_sq
-                            else (f"nn{i}", f"s{i}", f"mn{i}", f"mx{i}")
-                        )
-                    ],
-                )
-
-    tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
-    per_file = tasks.mapInArrow(sum_files, part_ddl)
-    aggs = [F.sum("cnt").alias("cnt")]
-    for i, a in enumerate(agg_cols):
-        aggs += [
-            F.sum(f"nn{i}").alias(f"nn_{a}"),
-            F.when(F.sum(f"nn{i}") > 0, F.sum(f"s{i}"))
-            .otherwise(F.lit(None)).alias(f"sum_{a}"),
-            F.min(f"mn{i}").alias(f"min_{a}"),
-            F.max(f"mx{i}").alias(f"max_{a}"),
-        ]
-        if with_sum_sq:
-            aggs.append(
-                F.when(F.sum(f"nn{i}") > 0, F.sum(f"ssq{i}"))
-                .otherwise(F.lit(None)).alias(f"sumsq_{a}")
-            )
-    return per_file.groupBy(*keys).agg(*aggs)
+    return _group_aggs_walk(
+        spark, out_path, keys, agg_cols, by_name, _file_sums, n_tasks,
+        local_bytes, with_sum_sq,
+    )
 
 
 def group_aggs(
@@ -2223,16 +1896,14 @@ def group_aggs(
     squares, so metadata claims are disabled under the flag: claimable
     blocks downgrade to the kernel, results exact either way.
 
-    Scale-adaptive dispatch like :func:`count_where`. Returns a DataFrame
-    ``(key, cnt, nn_<c>, sum_<c>, min_<c>, max_<c> [, sumsq_<c>] ...)``
+    Scale-adaptive through
+    :class:`~xml2arrow_spark.sources.files.BlockWalk`. Returns a
+    DataFrame ``(key, cnt, nn_<c>, sum_<c>, min_<c>, max_<c> [, sumsq_<c>] ...)``
     with the key's original type.
     """
     import yaml
 
-    from pyspark.sql import functions as F
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
-    from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
 
     if not agg_cols:
         raise ValueError("group_aggs needs at least one agg column")
@@ -2270,13 +1941,6 @@ def group_aggs(
                 f"aggregates never approximate (count_where's rule)"
             )
     wide = side.get("layout", "nested") == "wide"
-    m = len(agg_cols)
-    ssq_p = ", ssq{i} bigint" if with_sum_sq else ""
-    part_ddl = f"{by_name[key]}, cnt bigint, " + ", ".join(
-        f"nn{i} bigint, s{i} bigint, mn{i} bigint, mx{i} bigint"
-        + ssq_p.format(i=i)
-        for i in range(m)
-    )
     key_cat = (
         "i" if key_type in _CW_INT_TYPES
         else "s" if key_type == "string"
@@ -2318,26 +1982,6 @@ def group_aggs(
             trips.append((nng, zsum, amin if nng else None,
                           amax if nng else None))
         return (kmin, br, trips)
-
-    def _merge(tally, v, c, trips):
-        prev = tally.get(v)
-        if prev is None:
-            tally[v] = [c, list(trips)]
-        else:
-            prev[0] += c
-            for i, t in enumerate(trips):
-                nng, sm, mn, mx = t[:4]
-                p = prev[1][i]
-                pn, ps, pm, px = p[:4]
-                pn += nng
-                ps += sm
-                if mn is not None:
-                    pm = mn if pm is None else min(pm, mn)
-                    px = mx if px is None else max(px, mx)
-                merged = (pn, ps, pm, px)
-                if len(t) > 4:
-                    merged += (p[4] + t[4],)
-                prev[1][i] = merged
 
     def _file_sums(fpath, pq_mod):
         """One file's {key_or_None: [cnt, [(nn, sum, mn, mx) per agg]]};
@@ -2412,7 +2056,7 @@ def group_aggs(
                         ],
                     ) if have_claim else None
                     if claim is not None:
-                        _merge(tally, claim[0], claim[1], claim[2])
+                        _merge_aggs(tally, claim[0], claim[1], claim[2])
                     else:
                         kernel_idx.append(i)
             elif conj is not None:
@@ -2452,7 +2096,7 @@ def group_aggs(
                     for v, row in group_aggs_column(
                         *_kargs(i), with_sq=with_sum_sq
                     ).items():
-                        _merge(tally, v, row[0], row[1:])
+                        _merge_aggs(tally, v, row[0], row[1:])
                 for i in boundary_idx:
                     mask = _conj_boundary_mask(conj, lambda c, i=i: (
                         arrays[f"c_{c}__meta"][i].as_py(),
@@ -2463,7 +2107,7 @@ def group_aggs(
                     for v, row in group_aggs_column(
                         *_kargs(i), mask=mask, with_sq=with_sum_sq
                     ).items():
-                        _merge(tally, v, row[0], row[1:])
+                        _merge_aggs(tally, v, row[0], row[1:])
         else:
             tbl = pq_mod.read_table(fpath, columns=["n_rows", "cols"])
             cols_col = tbl.column("cols").combine_chunks()
@@ -2534,7 +2178,7 @@ def group_aggs(
                         ],
                     )
                 if claim is not None:
-                    _merge(tally, claim[0], claim[1], claim[2])
+                    _merge_aggs(tally, claim[0], claim[1], claim[2])
                 else:
                     from xml2arrow_spark.operators.blocks import (
                         group_aggs_column as _gac,
@@ -2553,7 +2197,7 @@ def group_aggs(
                         mask=mask,
                         with_sq=with_sum_sq,
                     ).items():
-                        _merge(tally, v, rrow[0], rrow[1:])
+                        _merge_aggs(tally, v, rrow[0], rrow[1:])
         for v, (_c, trips) in tally.items():
             for t, a in zip(trips, agg_cols):
                 for tot in t[1:2] + t[4:5]:
@@ -2565,114 +2209,10 @@ def group_aggs(
                         )
         return tally
 
-    out_sql_ddl = f"{by_name[key]}, cnt bigint, " + ", ".join(
-        f"nn_{a} bigint, sum_{a} bigint, min_{a} bigint, max_{a} bigint"
-        + (f", sumsq_{a} bigint" if with_sum_sq else "")
-        for a in agg_cols
+    return _group_aggs_walk(
+        spark, out_path, [key], agg_cols, by_name, _file_sums, n_tasks,
+        local_bytes, with_sum_sq,
     )
-
-    infos = parquet_file_infos(os.path.join(out_path, "blocks"))
-    if sum(s for _p, s in infos) <= local_bytes:
-        from xml2arrow_spark.sources.files import map_local_files
-
-        total: dict = {}
-        for fs_ in map_local_files(infos, _file_sums):
-            for v, (c, trips) in fs_.items():
-                _merge(total, v, c, trips)
-        rows = []
-        for v, (c, trips) in total.items():
-            flat = [v, c]
-            for t, a in zip(trips, agg_cols):
-                nng, sm, mn, mx = t[:4]
-                for tot in t[1:2] + t[4:5]:
-                    if not (-(1 << 63) <= tot < (1 << 63)):
-                        raise ArithmeticError(
-                            f"group_aggs total of {a!r} for key {v!r} is "
-                            f"outside int64 ({tot}); refusing rather than "
-                            f"wrapping (ANSI contract)"
-                        )
-                flat += [nng, sm if nng else None, mn, mx]
-                if with_sum_sq:
-                    flat.append(t[4] if nng else None)
-            rows.append(flat)
-        # arrow-backed LocalRelation — see group_count's local finish
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        lsch = to_arrow_schema(StructType.fromDDL(out_sql_ddl))
-        return spark.createDataFrame(pa.table(
-            {
-                lsch.field(i).name: pa.array(
-                    [r[i] for r in rows], type=lsch.field(i).type
-                )
-                for i in range(len(lsch))
-            }
-        ), schema=out_sql_ddl)
-
-    # resolved DRIVER-side: DDL parsing needs an active SparkContext,
-    # which executor-side Python workers do not have; pa.Schema pickles
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    out_schema = to_arrow_schema(StructType.fromDDL(part_ddl))
-
-    def sum_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                tally = _file_sums(fpath, pq)
-                if not tally:
-                    continue
-                items = list(tally.items())
-                arrays = [
-                    pa.array([v for v, _t in items],
-                             type=out_schema.field(0).type),
-                    pa.array([t[0] for _v, t in items], type=pa.int64()),
-                ]
-                width = 5 if with_sum_sq else 4
-                for i in range(m):
-                    # nn==0 partials carry sum 0 (never NULL) so the
-                    # roll-up's F.sum stays total-order deterministic; the
-                    # final when() restores SQL's NULL (min/max partials
-                    # carry NULL — F.min/F.max skip them)
-                    for j in range(width):
-                        arrays.append(pa.array(
-                            [t[1][i][j] for _v, t in items], type=pa.int64()
-                        ))
-                yield pa.RecordBatch.from_arrays(
-                    arrays,
-                    names=[key, "cnt"] + [
-                        x for i in range(m)
-                        for x in (
-                            (f"nn{i}", f"s{i}", f"mn{i}", f"mx{i}", f"ssq{i}")
-                            if with_sum_sq
-                            else (f"nn{i}", f"s{i}", f"mn{i}", f"mx{i}")
-                        )
-                    ],
-                )
-
-    tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
-    per_file = tasks.mapInArrow(sum_files, part_ddl)
-    aggs = [F.sum("cnt").alias("cnt")]
-    for i, a in enumerate(agg_cols):
-        aggs += [
-            F.sum(f"nn{i}").alias(f"nn_{a}"),
-            F.when(F.sum(f"nn{i}") > 0, F.sum(f"s{i}"))
-            .otherwise(F.lit(None)).alias(f"sum_{a}"),
-            F.min(f"mn{i}").alias(f"min_{a}"),
-            F.max(f"mx{i}").alias(f"max_{a}"),
-        ]
-        if with_sum_sq:
-            aggs.append(
-                F.when(F.sum(f"nn{i}") > 0, F.sum(f"ssq{i}"))
-                .otherwise(F.lit(None)).alias(f"sumsq_{a}")
-            )
-    return per_file.groupBy(key).agg(*aggs)
 
 
 def group_sum(
@@ -2769,9 +2309,10 @@ def top_k(
     largest/smallest NON-NULL values, with multiplicity; fewer than k
     rows come back when the dataset has fewer non-null values.
 
-    Scale-adaptive like :func:`count_where`. At most ``local_bytes`` of
-    blocks answers driver-side: one pass collects every block's rank
-    bound (wide layout: a zone stats column, payload untouched), then one
+    Scale-adaptive through
+    :class:`~xml2arrow_spark.sources.files.BlockWalk`, with one routine
+    per path. Driver-side: one pass collects every block's rank bound
+    (wide layout: a zone stats column, payload untouched), then one
     GLOBALLY rank-ordered visit folds blocks until the threshold closes —
     payload is read per file only when some block of it is actually
     visited. Above the threshold, a driver pre-pass computes the
@@ -2782,8 +2323,8 @@ def top_k(
     blocks seeded with that global threshold — a task whose best block
     cannot beat it skips the whole file after a single stats read, and
     only (value, count) partials bounded by k per file return to the
-    driver. ``local_bytes=0`` forces the distributed path. Both paths
-    pinned equal — and pinned to SKIP, via payload tampering — in tests.
+    driver. Both paths pinned equal — and pinned to SKIP, via payload
+    tampering — in tests.
 
     ``where`` (the same range / IN-list conjunctions as
     :func:`count_where`) restricts the ranking to the matching rows:
@@ -2801,7 +2342,6 @@ def top_k(
     import yaml
 
     from xml2arrow_spark.operators.encode import split_schema_ddl
-    from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
 
     if k < 1:
         raise ValueError(f"top_k needs k >= 1, got {k}")
@@ -3047,30 +2587,18 @@ def top_k(
             out.extend([v] * total[v])
             if len(out) >= k:
                 break
-        out = out[:k]
-        # arrow-backed LocalRelation — see group_count's local finish
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+        return local_frame(spark, by_name[column], [(v,) for v in out[:k]])
 
-        lsch = to_arrow_schema(StructType.fromDDL(by_name[column]))
-        return spark.createDataFrame(
-            pa.table({column: pa.array(out, type=lsch.field(0).type)}),
-            schema=by_name[column],
-        )
-
-    infos = parquet_file_infos(os.path.join(out_path, "blocks"))
-    if sum(s for _p, s in infos) <= local_bytes:
-        from xml2arrow_spark.sources.files import map_local_files
-
-        # pass 1: every block's rank bound (wide: stats columns only),
-        # per-file scans overlapped on the driver pool; pass 2: ONE
-        # globally rank-ordered visit — payload IO happens per file only
-        # when some block of it is actually folded
+    walk = BlockWalk(out_path, local_bytes)
+    if walk.local:
+        # pass 1: every block's rank bound (wide: stats columns only);
+        # pass 2: ONE globally rank-ordered visit — payload IO happens per
+        # file only when some block of it is actually folded
         getters = {}
         fpairs = {}
         items = []
         for fi, (bounds, kinds, getter, fpair) in enumerate(
-            map_local_files(infos, _scan_blocks)
+            walk.on_driver(_scan_blocks)
         ):
             getters[fi] = getter
             fpairs[fi] = fpair
@@ -3138,47 +2666,24 @@ def top_k(
                     tau = r["g"]
                     break
 
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
+    def _walk_file(fpath, pq_mod):
+        """One file's rank-ordered walk seeded with the global ``tau``."""
+        bounds, kinds, getter, fpair = _scan_blocks(fpath, pq_mod)
+        tally: dict = {}
+        _visit(
+            _rank_order([
+                (bb, kd, 0, i) for i, (bb, kd) in enumerate(zip(bounds, kinds))
+            ]),
+            lambda _key: getter,
+            lambda _key: fpair,
+            tally,
+            kth0=tau,
+        )
+        return tally
 
-    out_ddl = f"{by_name[column]}, cnt bigint"
-    out_schema = to_arrow_schema(StructType.fromDDL(out_ddl))
-
-    def topk_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                bounds, kinds, getter, fpair = _scan_blocks(fpath, pq)
-                tally: dict = {}
-                _visit(
-                    _rank_order([
-                        (bb, kd, 0, i)
-                        for i, (bb, kd) in enumerate(zip(bounds, kinds))
-                    ]),
-                    lambda _key: getter,
-                    lambda _key: fpair,
-                    tally,
-                    kth0=tau,
-                )
-                if not tally:
-                    continue
-                items = list(tally.items())
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([v for v, _c in items],
-                                 type=out_schema.field(0).type),
-                        pa.array([c for _v, c in items], type=pa.int64()),
-                    ],
-                    names=[column, "cnt"],
-                )
-
-    tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
-    per_file = tasks.mapInArrow(topk_files, out_ddl)
+    per_file = walk.fan_out(
+        spark, _walk_file, dict.items, f"{by_name[column]}, cnt bigint", n_tasks
+    )
     # per-file partials are bounded by k+1 distinct values each — KB-scale
     # metadata, collected and merged driver-side (the repo's KB-metadata
     # ground rule: a second Spark job would cost more than the merge)
@@ -3187,7 +2692,6 @@ def top_k(
         v, c = row[0], row[1]
         total[v] = total.get(v, 0) + c
     return _finish(total)
-
 
 
 def exact_quantiles(
@@ -3250,8 +2754,7 @@ def exact_quantiles(
         ((r[0], r[1]) for r in counts if r[0] is not None), key=lambda t: t[0]
     )
     n = sum(c for _v, c in pairs)
-    out_q: list[int] = []
-    out_v: list = []
+    rows: list[tuple] = []
     if n:
         values = [v for v, _c in pairs]
         cums = []
@@ -3264,25 +2767,13 @@ def exact_quantiles(
         for q in qs:
             # ceil(q*n/1000), floored at rank 1 so q=0 returns the min
             rank = max(1, (q * n + 999) // 1000)
-            out_q.append(q)
-            out_v.append(values[bisect.bisect_left(cums, rank)])
+            rows.append((q, values[bisect.bisect_left(cums, rank)]))
     _refuse_pending_tombstones(out_path)
     with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
         side = yaml.safe_load(f.read())
     by_name = split_schema_ddl(side["schema_ddl"])
     vtype = by_name[column].split(None, 1)[1]
-    # arrow-backed LocalRelation — see group_count's local finish
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    lsch = to_arrow_schema(StructType.fromDDL(f"q_milli bigint, value {vtype}"))
-    return spark.createDataFrame(
-        pa.table({
-            "q_milli": pa.array(out_q, type=pa.int64()),
-            "value": pa.array(out_v, type=lsch.field(1).type),
-        }),
-        schema=f"q_milli bigint, value {vtype}",
-    )
+    return local_frame(spark, f"q_milli bigint, value {vtype}", rows)
 
 
 def value_histogram(
@@ -3364,15 +2855,7 @@ def value_histogram(
                 if dlo <= v <= dhi:
                     b = (v - dlo) * n_bins // width_slots
                     bins[b] = bins.get(b, 0) + c
-    items = sorted(bins.items())
-    # arrow-backed LocalRelation — see group_count's local finish
-    return spark.createDataFrame(
-        pa.table({
-            "bin": pa.array([b for b, _c in items], type=pa.int64()),
-            "cnt": pa.array([c for _b, c in items], type=pa.int64()),
-        }),
-        schema="bin bigint, cnt bigint",
-    )
+    return local_frame(spark, "bin bigint, cnt bigint", sorted(bins.items()))
 
 
 def time_bucket_count(
@@ -3409,8 +2892,9 @@ def time_bucket_count(
     composes with :func:`count_where`'s classification (pruned blocks
     skip, interior blocks take the unmasked path, straddlers mask).
 
-    Scale-adaptive dispatch like :func:`count_where`. Returns a DataFrame
-    ``(bucket bigint, bucket_start bigint, cnt bigint)`` — non-empty
+    Scale-adaptive through
+    :class:`~xml2arrow_spark.sources.files.BlockWalk`. Returns a
+    DataFrame ``(bucket bigint, bucket_start bigint, cnt bigint)`` — non-empty
     buckets only, ordered by bucket; ``bucket_start = origin +
     bucket * width`` (ticks) for direct rendering.
     """
@@ -3420,7 +2904,6 @@ def time_bucket_count(
 
     from xml2arrow_spark.operators.blocks import value_counts_column
     from xml2arrow_spark.operators.encode import split_schema_ddl
-    from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
 
     if not isinstance(width, int) or isinstance(width, bool) or width < 1:
         raise ValueError(f"width must be a positive tick int, got {width!r}")
@@ -3681,51 +3164,21 @@ def time_bucket_count(
         return tally
 
     def _finish(total: dict):
-        items = sorted(total.items())
-        return spark.createDataFrame(
-            pa.table({
-                "bucket": pa.array([b for b, _c in items], type=pa.int64()),
-                "bucket_start": pa.array(
-                    [origin + b * width for b, _c in items], type=pa.int64()
-                ),
-                "cnt": pa.array([c for _b, c in items], type=pa.int64()),
-            }),
-            schema="bucket bigint, bucket_start bigint, cnt bigint",
+        return local_frame(
+            spark, "bucket bigint, bucket_start bigint, cnt bigint",
+            [(b, origin + b * width, c) for b, c in sorted(total.items())],
         )
 
-    infos = parquet_file_infos(os.path.join(out_path, "blocks"))
-    if sum(sz for _p, sz in infos) <= local_bytes:
-        from xml2arrow_spark.sources.files import map_local_files
-
+    walk = BlockWalk(out_path, local_bytes)
+    if walk.local:
         total: dict = {}
-        for fb in map_local_files(infos, _file_buckets):
+        for fb in walk.on_driver(_file_buckets):
             for b, c in fb.items():
                 total[b] = total.get(b, 0) + c
         return _finish(total)
-
-    def sum_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                tally = _file_buckets(fpath, pq)
-                if not tally:
-                    continue
-                items = list(tally.items())
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([x for x, _c in items], type=pa.int64()),
-                        pa.array([c for _x, c in items], type=pa.int64()),
-                    ],
-                    names=["bucket", "cnt"],
-                )
-
-    tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
-    per_file = tasks.mapInArrow(sum_files, "bucket bigint, cnt bigint")
+    per_file = walk.fan_out(
+        spark, _file_buckets, dict.items, "bucket bigint, cnt bigint", n_tasks
+    )
     # KB-scale finish (one row per bucket): collect and label driver-side
     # in unbounded python ints — a Spark-side origin + bucket*width would
     # ANSI-overflow on the bucket*width INTERMEDIATE for extreme origins
@@ -3943,63 +3396,62 @@ def compact_dataset(
                 pa.field("sources", pa.string()),
             ]
         )
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            out_file = os.path.join(
-                blocks_dir, f"compact-g{gen:04d}-{part_id:06d}.parquet"
-            )
-            # gen is fresh, so out_file is never among the inputs; a group
-            # file can only vanish if an earlier attempt of THIS task
-            # already merged and removed it (rows live in out_file).
-            group = [p for paths in path_lists for p in paths if os.path.exists(p)]
-            covered: set[str] = set()
-            if os.path.exists(out_file):  # earlier attempt finished the rename
-                covered = _coverage(out_file)
-            to_merge = (
-                [out_file] if covered else []
-            ) + [p for p in group if os.path.basename(p) not in covered]
-            if not to_merge:
+        out_file = os.path.join(
+            blocks_dir, f"compact-g{gen:04d}-{part_id:06d}.parquet"
+        )
+        # the task's one row is its LPT group; gen is fresh, so out_file
+        # is never among the inputs; a group file can only vanish if an
+        # earlier attempt of THIS task already merged and removed it (rows
+        # live in out_file).
+        group = [p for _i, p in task_files(batches) if os.path.exists(p)]
+        covered: set[str] = set()
+        if os.path.exists(out_file):  # earlier attempt finished the rename
+            covered = _coverage(out_file)
+        to_merge = (
+            [out_file] if covered else []
+        ) + [p for p in group if os.path.basename(p) not in covered]
+        if not to_merge:
+            return
+        # transitive coverage: inputs that are themselves compact files
+        # contribute the basenames THEY cover, so a crash leftover from
+        # any earlier generation stays detectable by the driver sweep
+        sources = set(covered)
+        for p in to_merge:
+            if p == out_file:
                 continue
-            # transitive coverage: inputs that are themselves compact files
-            # contribute the basenames THEY cover, so a crash leftover from
-            # any earlier generation stays detectable by the driver sweep
-            sources = set(covered)
-            for p in to_merge:
-                if p == out_file:
-                    continue
-                sources.add(os.path.basename(p))
-                if os.path.basename(p).startswith("compact-"):
-                    sources |= _coverage(p)
-            # attempt-unique tmp: concurrent speculative attempts never
-            # clobber each other's in-flight writes; rename commits once
-            tmp_file = os.path.join(
-                blocks_dir,
-                f".compact-g{gen:04d}-{part_id:06d}-a{attempt}.parquet.inprogress",
-            )
-            schema = pq.read_schema(to_merge[0]).with_metadata(
-                {b"compact_sources": ",".join(sorted(sources)).encode()}
-            )
-            nbytes = 0
-            with pq.ParquetWriter(tmp_file, schema, compression="none") as w:
-                for fpath in to_merge:
-                    t = pq.read_table(fpath)
-                    w.write_table(t.replace_schema_metadata(schema.metadata))
-                    nbytes += t.nbytes
-            os.replace(tmp_file, out_file)
-            for fpath in group:  # originals removed AFTER the merged write
-                try:
-                    os.remove(fpath)
-                except FileNotFoundError:
-                    pass  # a concurrent attempt already removed it
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "out_file": [out_file],
-                    "n_src": [len(group)],
-                    "nbytes": [nbytes],
-                    "sources": [",".join(sorted(sources))],
-                },
-                schema=out_schema,
-            )
+            sources.add(os.path.basename(p))
+            if os.path.basename(p).startswith("compact-"):
+                sources |= _coverage(p)
+        # attempt-unique tmp: concurrent speculative attempts never
+        # clobber each other's in-flight writes; rename commits once
+        tmp_file = os.path.join(
+            blocks_dir,
+            f".compact-g{gen:04d}-{part_id:06d}-a{attempt}.parquet.inprogress",
+        )
+        schema = pq.read_schema(to_merge[0]).with_metadata(
+            {b"compact_sources": ",".join(sorted(sources)).encode()}
+        )
+        nbytes = 0
+        with pq.ParquetWriter(tmp_file, schema, compression="none") as w:
+            for fpath in to_merge:
+                t = pq.read_table(fpath)
+                w.write_table(t.replace_schema_metadata(schema.metadata))
+                nbytes += t.nbytes
+        os.replace(tmp_file, out_file)
+        for fpath in group:  # originals removed AFTER the merged write
+            try:
+                os.remove(fpath)
+            except FileNotFoundError:
+                pass  # a concurrent attempt already removed it
+        yield pa.RecordBatch.from_pydict(
+            {
+                "out_file": [out_file],
+                "n_src": [len(group)],
+                "nbytes": [nbytes],
+                "sources": [",".join(sorted(sources))],
+            },
+            schema=out_schema,
+        )
 
     merged = tasks.mapInArrow(
         merge, "out_file string, n_src int, nbytes long, sources string"
@@ -4241,137 +3693,135 @@ def decode_dataset(
         from xml2arrow_spark.env import task_setup
 
         task_setup()
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                if wide:
-                    read_names = list(dict.fromkeys(
-                        out_names + [c for c, _v, _l, _h in rfs]
-                    ))
-                    need = [
-                        x for n in read_names
-                        for x in (f"c_{n}__meta", f"c_{n}__data")
-                    ]
-                    kwargs = {}
-                    if zfs:
-                        import pyarrow.dataset as pads
+        for _i, fpath in task_files(batches):
+            if wide:
+                read_names = list(dict.fromkeys(
+                    out_names + [c for c, _v, _l, _h in rfs]
+                ))
+                need = [
+                    x for n in read_names
+                    for x in (f"c_{n}__meta", f"c_{n}__data")
+                ]
+                kwargs = {}
+                if zfs:
+                    import pyarrow.dataset as pads
 
-                        def _one(zf):
-                            zf_col, zf_lo, zf_hi, zf_min, zf_max = zf
-                            fmin = pads.field(f"c_{zf_col}__{zf_min}")
-                            fmax = pads.field(f"c_{zf_col}__{zf_max}")
-                            # expression filter over top-level zone columns:
-                            # parquet row-group statistics prune the IO, then
-                            # the row-level (= block-level) filter applies
-                            # exactly; conjuncts AND together, disjuncts OR;
-                            # a None bound is one-sided
-                            cond = None
-                            if zf_lo is not None:
-                                cond = fmax >= zf_lo
-                            if zf_hi is not None:
-                                c2 = fmin <= zf_hi
-                                cond = c2 if cond is None else (cond & c2)
-                            if cond is None:
-                                return ~fmin.is_null() | fmin.is_null()
-                            return fmin.is_null() | fmax.is_null() | cond
-
-                        if zf_groups is None:
-                            expr = None
-                            for zf in zfs:
-                                one = _one(zf)
-                                expr = one if expr is None else (expr & one)
-                        else:
-                            expr = None
-                            for ga, gb in zf_groups:
-                                g = None
-                                for zf in zfs[ga:gb]:
-                                    one = _one(zf)
-                                    g = one if g is None else (g & one)
-                                expr = g if expr is None else (expr | g)
-                        kwargs["filters"] = expr
-                    tbl = pq.read_table(fpath, columns=need, **kwargs)  # pruned IO
-                    metas = {n: tbl.column(f"c_{n}__meta").combine_chunks()
-                             for n in read_names}
-                    datas = {n: tbl.column(f"c_{n}__data").combine_chunks()
-                             for n in read_names}
-                    for row in range(tbl.num_rows):
-                        fr = apply_row_filters(
-                            rfs,
-                            lambda c: (
-                                metas[c][row].as_py(), datas[c][row].as_py()
-                            ),
-                            out_names,
-                        )
-                        if fr is None:
-                            continue  # zero matches: skip other kernels
-                        mask, selected = fr
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                selected[n] if n in selected else (
-                                    decode_column(
-                                        metas[n][row].as_py(),
-                                        datas[n][row].as_py(),
-                                    ).filter(mask)
-                                    if mask is not None
-                                    else decode_column(
-                                        metas[n][row].as_py(),
-                                        datas[n][row].as_py(),
-                                    )
-                                )
-                                for n in out_names
-                            ],
-                            names=out_names,
-                        )
-                    continue
-                tbl = pq.read_table(fpath, columns=["cols"])
-                cols_col = tbl.column("cols").combine_chunks()
-                wanted = set(out_names)
-                for row in range(len(cols_col)):
-                    entries = cols_col[row].values  # zero-copy struct view
-                    names = entries.field("name").to_pylist()
-                    def _conj_keeps(sub):
-                        for zf_col, zf_lo, zf_hi, zf_min, zf_max in sub:
-                            try:
-                                zi = names.index(zf_col)
-                            except ValueError:
-                                continue  # no stats entry: keep
-                            if not _zone_keep(
-                                entries.field(zf_min)[zi].as_py(),
-                                entries.field(zf_max)[zi].as_py(),
-                                zf_lo, zf_hi,
-                            ):
-                                return False  # a failing conjunct drops it
-                        return True
+                    def _one(zf):
+                        zf_col, zf_lo, zf_hi, zf_min, zf_max = zf
+                        fmin = pads.field(f"c_{zf_col}__{zf_min}")
+                        fmax = pads.field(f"c_{zf_col}__{zf_max}")
+                        # expression filter over top-level zone columns:
+                        # parquet row-group statistics prune the IO, then
+                        # the row-level (= block-level) filter applies
+                        # exactly; conjuncts AND together, disjuncts OR;
+                        # a None bound is one-sided
+                        cond = None
+                        if zf_lo is not None:
+                            cond = fmax >= zf_lo
+                        if zf_hi is not None:
+                            c2 = fmin <= zf_hi
+                            cond = c2 if cond is None else (cond & c2)
+                        if cond is None:
+                            return ~fmin.is_null() | fmin.is_null()
+                        return fmin.is_null() | fmax.is_null() | cond
 
                     if zf_groups is None:
-                        pruned = zfs and not _conj_keeps(zfs)
+                        expr = None
+                        for zf in zfs:
+                            one = _one(zf)
+                            expr = one if expr is None else (expr & one)
                     else:
-                        # DNF: kept when ANY disjunct's ranges all keep
-                        pruned = not any(
-                            _conj_keeps(zfs[ga:gb]) for ga, gb in zf_groups
-                        )
-                    if pruned:
-                        continue  # whole block pruned before any kernel
-                    metas = entries.field("meta")
-                    datas = entries.field("data")
+                        expr = None
+                        for ga, gb in zf_groups:
+                            g = None
+                            for zf in zfs[ga:gb]:
+                                one = _one(zf)
+                                g = one if g is None else (g & one)
+                            expr = g if expr is None else (expr | g)
+                    kwargs["filters"] = expr
+                tbl = pq.read_table(fpath, columns=need, **kwargs)  # pruned IO
+                metas = {n: tbl.column(f"c_{n}__meta").combine_chunks()
+                         for n in read_names}
+                datas = {n: tbl.column(f"c_{n}__data").combine_chunks()
+                         for n in read_names}
+                for row in range(tbl.num_rows):
                     fr = apply_row_filters(
                         rfs,
                         lambda c: (
-                            metas[names.index(c)].as_py(),
-                            datas[names.index(c)].as_py(),
+                            metas[c][row].as_py(), datas[c][row].as_py()
                         ),
                         out_names,
                     )
                     if fr is None:
                         continue  # zero matches: skip other kernels
-                    mask, decoded = fr
-                    for i, nm in enumerate(names):
-                        if nm in wanted and nm not in decoded:
-                            arr = decode_column(metas[i].as_py(), datas[i].as_py())
-                            decoded[nm] = arr.filter(mask) if mask is not None else arr
+                    mask, selected = fr
                     yield pa.RecordBatch.from_arrays(
-                        [decoded[n] for n in out_names], names=out_names
+                        [
+                            selected[n] if n in selected else (
+                                decode_column(
+                                    metas[n][row].as_py(),
+                                    datas[n][row].as_py(),
+                                ).filter(mask)
+                                if mask is not None
+                                else decode_column(
+                                    metas[n][row].as_py(),
+                                    datas[n][row].as_py(),
+                                )
+                            )
+                            for n in out_names
+                        ],
+                        names=out_names,
                     )
+                continue
+            tbl = pq.read_table(fpath, columns=["cols"])
+            cols_col = tbl.column("cols").combine_chunks()
+            wanted = set(out_names)
+            for row in range(len(cols_col)):
+                entries = cols_col[row].values  # zero-copy struct view
+                names = entries.field("name").to_pylist()
+                def _conj_keeps(sub):
+                    for zf_col, zf_lo, zf_hi, zf_min, zf_max in sub:
+                        try:
+                            zi = names.index(zf_col)
+                        except ValueError:
+                            continue  # no stats entry: keep
+                        if not _zone_keep(
+                            entries.field(zf_min)[zi].as_py(),
+                            entries.field(zf_max)[zi].as_py(),
+                            zf_lo, zf_hi,
+                        ):
+                            return False  # a failing conjunct drops it
+                    return True
+
+                if zf_groups is None:
+                    pruned = zfs and not _conj_keeps(zfs)
+                else:
+                    # DNF: kept when ANY disjunct's ranges all keep
+                    pruned = not any(
+                        _conj_keeps(zfs[ga:gb]) for ga, gb in zf_groups
+                    )
+                if pruned:
+                    continue  # whole block pruned before any kernel
+                metas = entries.field("meta")
+                datas = entries.field("data")
+                fr = apply_row_filters(
+                    rfs,
+                    lambda c: (
+                        metas[names.index(c)].as_py(),
+                        datas[names.index(c)].as_py(),
+                    ),
+                    out_names,
+                )
+                if fr is None:
+                    continue  # zero matches: skip other kernels
+                mask, decoded = fr
+                for i, nm in enumerate(names):
+                    if nm in wanted and nm not in decoded:
+                        arr = decode_column(metas[i].as_py(), datas[i].as_py())
+                        decoded[nm] = arr.filter(mask) if mask is not None else arr
+                yield pa.RecordBatch.from_arrays(
+                    [decoded[n] for n in out_names], names=out_names
+                )
 
     tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
     return tasks.mapInArrow(decode_files, ddl)

@@ -605,29 +605,23 @@ def encode_parquet_tasks(tasks_df, manifest: CodecManifest):
         from pyspark import TaskContext
 
         from xml2arrow_spark.env import task_setup
+        from xml2arrow_spark.sources.files import task_files
 
         task_setup()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         seq = 0
-        for b in batches:
-            idx_lists = b.column(b.schema.get_field_index("file_idx")).to_pylist()
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for file_idx, fpath in (
-                (i, p)
-                for idxs, paths in zip(idx_lists, path_lists)
-                for i, p in zip(idxs, paths)
+        for file_idx, fpath in task_files(batches):
+            pf = pq.ParquetFile(fpath)
+            for block in _blockify(
+                pf.iter_batches(batch_size=block_rows, columns=cols), block_rows
             ):
-                pf = pq.ParquetFile(fpath)
-                for block in _blockify(
-                    pf.iter_batches(batch_size=block_rows, columns=cols), block_rows
-                ):
-                    yield _encode_block(
-                        block, cols, policies, part_id, file_idx,
-                        (part_id << 32) | seq, zone_maps=zone_maps_on,
-                        required=required,
-                    )
-                    seq += 1
+                yield _encode_block(
+                    block, cols, policies, part_id, file_idx,
+                    (part_id << 32) | seq, zone_maps=zone_maps_on,
+                    required=required,
+                )
+                seq += 1
 
     return tasks_df.mapInArrow(encode_files, BLOCKS_SCHEMA_DDL)
 
@@ -686,44 +680,38 @@ def encode_parquet_stats(
         import pyarrow.parquet as pq
 
         from xml2arrow_spark.env import task_setup
+        from xml2arrow_spark.sources.files import task_files
 
         task_setup()
-        for b in batches:
-            idx_lists = b.column(b.schema.get_field_index("file_idx")).to_pylist()
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for file_idx, fpath in (
-                (i, p)
-                for idxs, paths in zip(idx_lists, path_lists)
-                for i, p in zip(idxs, paths)
-            ):
-                pf = pq.ParquetFile(fpath)
-                nb = nr = nv = ib = ob = 0
-                for seq, block in enumerate(
-                    _blockify(
-                        pf.iter_batches(batch_size=block_rows, columns=cols),
-                        block_rows,
-                    )
-                ):
-                    enc = _encode_block(
-                        block, cols, policies, 0, file_idx, seq,
-                        required=required,
-                    )
-                    nb += 1
-                    nr += enc.column(3)[0].as_py()
-                    nv += enc.column(4)[0].as_py()
-                    ib += enc.column(5)[0].as_py()
-                    ob += enc.column(6)[0].as_py()
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "unit_id": [file_idx],
-                        "n_blocks": [nb],
-                        "n_rows": [nr],
-                        "n_values": [nv],
-                        "in_bytes": [ib],
-                        "out_bytes": [ob],
-                    },
-                    schema=_STATS_PA_SCHEMA,
+        for file_idx, fpath in task_files(batches):
+            pf = pq.ParquetFile(fpath)
+            nb = nr = nv = ib = ob = 0
+            for seq, block in enumerate(
+                _blockify(
+                    pf.iter_batches(batch_size=block_rows, columns=cols),
+                    block_rows,
                 )
+            ):
+                enc = _encode_block(
+                    block, cols, policies, 0, file_idx, seq,
+                    required=required,
+                )
+                nb += 1
+                nr += enc.column(3)[0].as_py()
+                nv += enc.column(4)[0].as_py()
+                ib += enc.column(5)[0].as_py()
+                ob += enc.column(6)[0].as_py()
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "unit_id": [file_idx],
+                    "n_blocks": [nb],
+                    "n_rows": [nr],
+                    "n_values": [nv],
+                    "in_bytes": [ib],
+                    "out_bytes": [ob],
+                },
+                schema=_STATS_PA_SCHEMA,
+            )
 
     return tasks.mapInArrow(encode_stats, ENCODE_STATS_DDL)
 

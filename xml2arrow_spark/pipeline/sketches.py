@@ -145,6 +145,11 @@ def _normalize_key_cols(key, by_name, caller):
     return key_cols
 
 
+def _key_tuple(kv) -> tuple:
+    """A tally key as its key-column values (composite keys already are)."""
+    return kv if isinstance(kv, tuple) else (kv,)
+
+
 def _kmv_merge(acc: list, hashes, k: int) -> list:
     """Merge sorted distinct hash lists, keep the k smallest distinct."""
     if not acc:
@@ -195,28 +200,26 @@ def group_distinct_est(
     straddling blocks mask first — there is no metadata claim (distinct
     hashes need the values), so interior just means "no mask".
 
-    Scale-adaptive dispatch like the exact aggregates; the distributed
+    Scale-adaptive through
+    :class:`~xml2arrow_spark.sources.files.BlockWalk`; the distributed
     roll-up is one KB-scale (key, hash) shuffle + per-key window, no
     collect_set. Returns ``(key, n_distinct_est bigint)``.
     """
     import os
 
     import numpy as np
-    import pyarrow as pa
     import yaml
 
     from xml2arrow_spark.operators.blocks import decode_column
     from xml2arrow_spark.operators.dataset import (
         _CW_INT_TYPES,
+        _fold_blocks_file,
         _refuse_pending_tombstones,
         _resolve_conjuncts,
         MANIFEST_SIDECAR,
     )
     from xml2arrow_spark.operators.encode import split_schema_ddl
-    from xml2arrow_spark.sources.files import (
-        parquet_file_infos,
-        plan_parquet_tasks,
-    )
+    from xml2arrow_spark.sources.files import BlockWalk, local_frame
 
     if k < 1:
         raise ValueError(f"group_distinct_est needs k >= 1, got {k}")
@@ -246,9 +249,9 @@ def group_distinct_est(
         else None
     )
 
-    def _block_hashes(tally, key_pairs, val_pair, mask):
-        keys, codes = _block_group_keys(key_pairs)
-        arr = decode_column(*val_pair)
+    def _block_hashes(tally, pairs, mask):
+        keys, codes = _block_group_keys(pairs[:-1])
+        arr = decode_column(*pairs[-1])
         valid = np.asarray(arr.is_valid()) if arr.null_count else None
         if mask is not None:
             valid = mask if valid is None else (valid & mask)
@@ -275,7 +278,8 @@ def group_distinct_est(
     def _file_hashes(fpath, pq_mod):
         """One file's {key_or_None: sorted <=k smallest distinct hashes}."""
         return _fold_blocks_file(
-            fpath, pq_mod, key_cols, column, conj, wide, _block_hashes
+            fpath, pq_mod, key_cols + [column], conj, wide, _block_hashes,
+            f"{key_cols!r}/{column!r}",
         )
 
     def _estimate(hashes: list) -> int:
@@ -284,216 +288,26 @@ def group_distinct_est(
             return n_h
         return (int(k) - 1) * G.KMV_MOD // max(int(hashes[-1]), 1)
 
-    infos = parquet_file_infos(os.path.join(out_path, "blocks"))
-    if sum(s for _p, s in infos) <= local_bytes:
-        from xml2arrow_spark.sources.files import map_local_files
-
+    key_ddl = ", ".join(by_name[kc] for kc in key_cols)
+    walk = BlockWalk(out_path, local_bytes)
+    if walk.local:
         total: dict = {}
-        for fh in map_local_files(infos, _file_hashes):
+        for fh in walk.on_driver(_file_hashes):
             for kv, hs in fh.items():
                 total[kv] = _kmv_merge(total.get(kv, []), hs, k)
-        items = list(total.items())
-        # arrow-backed LocalRelation — the KB-metadata finish rule
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+        return local_frame(spark, f"{key_ddl}, n_distinct_est bigint", [
+            (*_key_tuple(kv), _estimate(hs)) for kv, hs in total.items()
+        ])
 
-        key_ddl = ", ".join(by_name[kc] for kc in key_cols)
-        lsch = to_arrow_schema(
-            StructType.fromDDL(f"{key_ddl}, n_distinct_est bigint")
-        )
-        krows = [kv if isinstance(kv, tuple) else (kv,) for kv, _h in items]
-        cols = {
-            kc: pa.array([r[i] for r in krows], type=lsch.field(i).type)
-            for i, kc in enumerate(key_cols)
-        }
-        cols["n_distinct_est"] = pa.array(
-            [_estimate(hs) for _kv, hs in items], type=pa.int64()
-        )
-        return spark.createDataFrame(
-            pa.table(cols), schema=f"{key_ddl}, n_distinct_est bigint"
-        )
+    def _hash_rows(tally):
+        return [
+            (*_key_tuple(kv), h) for kv, hh in tally.items() for h in hh
+        ]
 
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-    from typing import Iterator
-
-    key_ddl = ", ".join(by_name[kc] for kc in key_cols)
-    part_ddl = f"{key_ddl}, h bigint"
-    out_schema = to_arrow_schema(StructType.fromDDL(part_ddl))
-
-    def hash_files(batches: "Iterator[pa.RecordBatch]"):
-        import pyarrow.parquet as pq
-
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                tally = _file_hashes(fpath, pq)
-                if not tally:
-                    continue
-                ks: list = [[] for _ in key_cols]
-                hs: list = []
-                for kv, hh in tally.items():
-                    t = kv if isinstance(kv, tuple) else (kv,)
-                    for i in range(len(key_cols)):
-                        ks[i] += [t[i]] * len(hh)
-                    hs += hh
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ks[i], type=out_schema.field(i).type)
-                        for i in range(len(key_cols))
-                    ] + [pa.array(hs, type=pa.int64())],
-                    names=list(key_cols) + ["h"],
-                )
-
-    tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
-    pairs = tasks.mapInArrow(hash_files, part_ddl).distinct()
+    pairs = walk.fan_out(
+        spark, _file_hashes, _hash_rows, f"{key_ddl}, h bigint", n_tasks
+    ).distinct()
     return _kmv_agg(pairs, key_cols, k)
-
-
-def _fold_blocks_file(fpath, pq_mod, key_cols, column, conj, wide, on_block):
-    """Walk one blocks file, classify blocks against the (possibly DNF)
-    ``conj`` via the shared zone classifier, and call
-    ``on_block(tally, key_pairs, val_pair, mask)`` for every surviving
-    block (``key_pairs`` = one (meta, payload) pair per key column — the
-    COMPOSITE-key generalization). The block walk shared by the per-group
-    distinct operators (:func:`group_distinct_est`,
-    :func:`group_distinct`); returns the accumulated tally dict."""
-    from xml2arrow_spark.operators.dataset import (
-        _ZONE_SUFFIXES,
-        _classify_where,
-        _conj_boundary_mask,
-    )
-
-    tally: dict = {}
-    if wide:
-        avail = set(pq_mod.read_schema(fpath).names)
-        fstat: list[tuple] = []
-        if conj is not None:
-            for col, _values, _lo, _hi, cat in conj:
-                zmin, zmax = _ZONE_SUFFIXES[cat]
-                fstat.append(tuple(
-                    n if n in avail else None
-                    for n in (f"c_{col}__{zmin}", f"c_{col}__{zmax}",
-                              f"c_{col}__n_null")
-                ))
-        kinds = None
-        if conj is not None:
-            stat_cols = [n for trip in fstat for n in trip if n is not None]
-            if stat_cols:
-                st = pq_mod.read_table(fpath, columns=sorted(set(stat_cols)))
-                n_blocks = st.num_rows
-            else:
-                st = None
-                n_blocks = pq_mod.read_metadata(fpath).num_rows
-            kinds = [
-                _classify_where(conj, [
-                    tuple(
-                        st.column(n)[i].as_py()
-                        if (st is not None and n is not None)
-                        else None
-                        for n in trip
-                    )
-                    for trip in fstat
-                ])
-                for i in range(n_blocks)
-            ]
-            if all(kd == "pruned" for kd in kinds):
-                return tally
-        cols = [
-            x for k in key_cols for x in (f"c_{k}__meta", f"c_{k}__data")
-        ] + [f"c_{column}__meta", f"c_{column}__data"]
-        if conj is not None:
-            cols += [
-                x for col, _v, _l, _h, _c in conj
-                for x in (f"c_{col}__meta", f"c_{col}__data")
-            ]
-        cols = list(dict.fromkeys(cols))
-        pay = pq_mod.read_table(fpath, columns=cols)
-        arrays = {c: pay.column(c).combine_chunks() for c in cols}
-        for i in range(pay.num_rows):
-            mask = None
-            if kinds is not None:
-                if kinds[i] == "pruned":
-                    continue
-                if kinds[i] == "boundary":
-                    mask = _conj_boundary_mask(conj, lambda c, i=i: (
-                        arrays[f"c_{c}__meta"][i].as_py(),
-                        arrays[f"c_{c}__data"][i].as_py(),
-                    ))
-                    if mask is None:
-                        continue
-            on_block(
-                tally,
-                [
-                    (arrays[f"c_{k}__meta"][i].as_py(),
-                     arrays[f"c_{k}__data"][i].as_py())
-                    for k in key_cols
-                ],
-                (arrays[f"c_{column}__meta"][i].as_py(),
-                 arrays[f"c_{column}__data"][i].as_py()),
-                mask,
-            )
-    else:
-        tbl = pq_mod.read_table(fpath, columns=["cols"])
-        cols_col = tbl.column("cols").combine_chunks()
-        entry_fields = {
-            f.name for f in tbl.schema.field("cols").type.value_type
-        }
-        for row in range(len(cols_col)):
-            entries = cols_col[row].values
-            names = entries.field("name").to_pylist()
-            try:
-                kis = [names.index(k) for k in key_cols]
-                vi = names.index(column)
-            except ValueError:
-                raise ValueError(
-                    f"block lacks an entry for {key_cols!r}/{column!r}; the "
-                    f"sidecar schema and the blocks files disagree"
-                ) from None
-            mask = None
-            if conj is not None:
-                stats = []
-                for col, _values, _lo, _hi, cat in conj:
-                    zmin, zmax = _ZONE_SUFFIXES[cat]
-                    try:
-                        fi = names.index(col)
-                    except ValueError:
-                        raise ValueError(
-                            f"block lacks an entry for {col!r}; the "
-                            f"sidecar schema and the blocks files "
-                            f"disagree"
-                        ) from None
-                    stats.append(tuple(
-                        entries.field(f)[fi].as_py()
-                        if f in entry_fields
-                        else None
-                        for f in (zmin, zmax, "n_null")
-                    ))
-                kind = _classify_where(conj, stats)
-                if kind == "pruned":
-                    continue
-                if kind == "boundary":
-                    mask = _conj_boundary_mask(conj, lambda c: (
-                        entries.field("meta")[names.index(c)].as_py(),
-                        entries.field("data")[names.index(c)].as_py(),
-                    ))
-                    if mask is None:
-                        continue
-            on_block(
-                tally,
-                [
-                    (entries.field("meta")[ki].as_py(),
-                     entries.field("data")[ki].as_py())
-                    for ki in kis
-                ],
-                (entries.field("meta")[vi].as_py(),
-                 entries.field("data")[vi].as_py()),
-                mask,
-            )
-    return tally
 
 
 def group_distinct(
@@ -537,27 +351,25 @@ def group_distinct(
     COMPOSITE key on the mixed-radix code stream — 'distinct X per
     (source, day)'). ``where`` takes count_where's range /
     IN-list conjunctions or an ``any_of`` DNF: zone-pruned blocks skip
-    unread, straddling blocks mask first. Scale-adaptive dispatch like
-    the exact aggregates. Returns ``(key, n_distinct bigint)``.
+    unread, straddling blocks mask first. Scale-adaptive through
+    :class:`~xml2arrow_spark.sources.files.BlockWalk`. Returns
+    ``(key, n_distinct bigint)``.
     """
     import os
 
     import numpy as np
-    import pyarrow as pa
     import yaml
 
     from xml2arrow_spark.operators.blocks import decode_column
     from xml2arrow_spark.operators.dataset import (
         _CW_INT_TYPES,
+        _fold_blocks_file,
         _refuse_pending_tombstones,
         _resolve_conjuncts,
         MANIFEST_SIDECAR,
     )
     from xml2arrow_spark.operators.encode import split_schema_ddl
-    from xml2arrow_spark.sources.files import (
-        parquet_file_infos,
-        plan_parquet_tasks,
-    )
+    from xml2arrow_spark.sources.files import BlockWalk, local_frame
 
     if max_pairs < 1:
         raise ValueError(f"group_distinct needs max_pairs >= 1, got {max_pairs}")
@@ -585,18 +397,19 @@ def group_distinct(
         else None
     )
 
-    def _cap_check(tally):
+    def _cap_check(tally, which):
         if sum(len(s) for s in tally.values()) > max_pairs:
             raise ValueError(
                 f"group_distinct exceeded max_pairs={max_pairs} distinct "
-                f"(key, value) pairs in one file's tally: exact distinct "
+                f"(key, value) pairs in {which}: exact distinct "
                 f"counting must materialize every distinct pair — for "
                 f"high-cardinality columns use group_distinct_est (KMV, "
                 f"bounded at k hashes per group) or raise max_pairs"
             )
 
-    def _block_pairs(tally, key_pairs, val_pair, mask):
-        keys, codes = _block_group_keys(key_pairs)
+    def _block_pairs(tally, pairs, mask):
+        keys, codes = _block_group_keys(pairs[:-1])
+        val_pair = pairs[-1]
         if val_is_str:
             # string values stay on the CODE stream (dict_str never
             # materializes per-row strings): distinct (group, value-code)
@@ -644,85 +457,37 @@ def group_distinct(
             if val_is_str:
                 vv = [vals_list[c] for c in vv]
             tally.setdefault(kv, set()).update(vv)
-        _cap_check(tally)
+        _cap_check(tally, "one file's tally")
 
     def _file_pairs(fpath, pq_mod):
         """One file's {key_or_None: set of distinct values}."""
         return _fold_blocks_file(
-            fpath, pq_mod, key_cols, column, conj, wide, _block_pairs
+            fpath, pq_mod, key_cols + [column], conj, wide, _block_pairs,
+            f"{key_cols!r}/{column!r}",
         )
-
-    infos = parquet_file_infos(os.path.join(out_path, "blocks"))
-    if sum(s for _p, s in infos) <= local_bytes:
-        from xml2arrow_spark.sources.files import map_local_files
-
-        total: dict = {}
-        for fps in map_local_files(infos, _file_pairs):
-            for kv, vs in fps.items():
-                total.setdefault(kv, set()).update(vs)
-                _cap_check(total)
-        items = list(total.items())
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        key_ddl = ", ".join(by_name[kc] for kc in key_cols)
-        lsch = to_arrow_schema(
-            StructType.fromDDL(f"{key_ddl}, n_distinct bigint")
-        )
-        krows = [kv if isinstance(kv, tuple) else (kv,) for kv, _v in items]
-        cols = {
-            kc: pa.array([r[i] for r in krows], type=lsch.field(i).type)
-            for i, kc in enumerate(key_cols)
-        }
-        cols["n_distinct"] = pa.array(
-            [len(vs) for _kv, vs in items], type=pa.int64()
-        )
-        # arrow-backed LocalRelation — the KB-metadata finish rule
-        return spark.createDataFrame(
-            pa.table(cols), schema=f"{key_ddl}, n_distinct bigint"
-        )
-
-    from typing import Iterator
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     key_ddl = ", ".join(by_name[kc] for kc in key_cols)
-    part_ddl = f"{key_ddl}, v " + ("string" if val_is_str else "bigint")
-    out_schema = to_arrow_schema(StructType.fromDDL(part_ddl))
+    walk = BlockWalk(out_path, local_bytes)
+    if walk.local:
+        total: dict = {}
+        for fps in walk.on_driver(_file_pairs):
+            for kv, vs in fps.items():
+                total.setdefault(kv, set()).update(vs)
+            _cap_check(total, "the merged tally across files")
+        return local_frame(spark, f"{key_ddl}, n_distinct bigint", [
+            (*_key_tuple(kv), len(vs)) for kv, vs in total.items()
+        ])
 
-    def pair_files(batches: "Iterator[pa.RecordBatch]"):
-        import pyarrow.parquet as pq
+    def _pair_rows(tally):
+        return [(*_key_tuple(kv), v) for kv, vv in tally.items() for v in vv]
 
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                tally = _file_pairs(fpath, pq)
-                if not tally:
-                    continue
-                ks: list = [[] for _ in key_cols]
-                vs: list = []
-                for kv, vv in tally.items():
-                    t = kv if isinstance(kv, tuple) else (kv,)
-                    for i in range(len(key_cols)):
-                        ks[i] += [t[i]] * len(vv)
-                    vs += list(vv)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ks[i], type=out_schema.field(i).type)
-                        for i in range(len(key_cols))
-                    ] + [pa.array(vs, type=out_schema.field(len(key_cols)).type)],
-                    names=list(key_cols) + ["v"],
-                )
-
-    tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
     # per-file partials are already distinct; the global dedup is ONE
     # (key, value) shuffle bounded by files x true_distinct, then a
     # KB-scale grouped count
-    pairs = tasks.mapInArrow(pair_files, part_ddl).distinct()
+    pairs = walk.fan_out(
+        spark, _file_pairs, _pair_rows,
+        f"{key_ddl}, v " + ("string" if val_is_str else "bigint"), n_tasks,
+    ).distinct()
     return pairs.groupBy(*key_cols).agg(
         F.count(F.lit(1)).cast("long").alias("n_distinct")
     )

@@ -31,13 +31,17 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
+    "BlockWalk",
+    "local_frame",
     "one_row_per_partition",
     "parquet_file_infos",
     "plan_parquet_tasks",
     "scan_map_arrow",
+    "task_files",
     "TASKS_DDL",
 ]
 
@@ -136,9 +140,13 @@ def plan_parquet_tasks(
     ``file_idx`` values are the stable per-file unit ids used for checkpoint
     lineage.
     """
+    return _plan_tasks(spark, parquet_file_infos(path), n_tasks)
+
+
+def _plan_tasks(spark: SparkSession, infos, n_tasks: int | None) -> DataFrame:
+    """:func:`plan_parquet_tasks` over an already-listed ``infos``."""
     if n_tasks is None:
         n_tasks = max(spark.sparkContext.defaultParallelism, 1)
-    infos = parquet_file_infos(path)
     n_tasks = min(n_tasks, len(infos))
     bins = _lpt_assign([s for _, s in infos], n_tasks)
     per_task: dict[int, list[tuple[int, str, int]]] = {b: [] for b in range(n_tasks)}
@@ -155,6 +163,16 @@ def plan_parquet_tasks(
         if files
     ]
     return one_row_per_partition(spark, rows, TASKS_DDL)
+
+
+def task_files(batches):
+    """``(file_idx, path)`` of every file in a worker's TASKS_DDL batches,
+    in task order — the one reader of the task format's file columns."""
+    for b in batches:
+        idx_lists = b.column(b.schema.get_field_index("file_idx")).to_pylist()
+        path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
+        for idxs, paths in zip(idx_lists, path_lists):
+            yield from zip(idxs, paths)
 
 
 def scan_map_arrow(
@@ -182,28 +200,106 @@ def scan_map_arrow(
         from xml2arrow_spark.env import task_setup
 
         task_setup()
-        for b in batches:
-            path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-            for fpath in (p for paths in path_lists for p in paths):
-                pf = pq.ParquetFile(fpath)
-                for batch in pf.iter_batches(batch_size=65536, columns=columns):
-                    yield from fn(batch)
+        for _i, fpath in task_files(batches):
+            pf = pq.ParquetFile(fpath)
+            for batch in pf.iter_batches(batch_size=65536, columns=columns):
+                yield from fn(batch)
 
     return tasks.mapInArrow(run, output_ddl)
 
 
-def map_local_files(infos, fn):
-    """Evaluate ``fn(path, pyarrow.parquet)`` for every ``(path, size)`` in
-    ``infos`` IN ORDER, returning the per-file results (callers merge
-    sequentially, so their folds stay bit-deterministic).
+def _arrow_schema(ddl: str):
+    """(Spark StructType, pyarrow Schema) of a DDL string. Needs an active
+    SparkContext, so resolve it driver-side; the pa.Schema pickles."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    Deliberately SEQUENTIAL: an r06 ThreadPoolExecutor variant was
-    measured at sf1.0/local[32] and made every metadata-aggregate local
-    dispatch ~2x SLOWER (group_sum 0.63 s -> 1.63 s, count_where[str]
-    0.37 s -> 1.37 s, group_aggs 1.5 s -> 2.4 s): the per-file work is
-    dominated by many SMALL per-block numpy/python steps that hold the
-    GIL, so threads only add contention. Kept as the single chokepoint so
-    a future free-threaded/pool experiment edits one place."""
-    import pyarrow.parquet as pq_local
+    struct = StructType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
 
-    return [fn(fp, pq_local) for fp, _s in infos]
+
+def _arrow_batch(schema, rows) -> pa.RecordBatch:
+    """Row tuples (one value per field of ``schema``) as one RecordBatch."""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
+def local_frame(spark: SparkSession, ddl: str, rows) -> DataFrame:
+    """Row tuples under ``ddl`` as an Arrow-backed LocalRelation — the
+    driver-local finish of every metadata aggregate. It plans as a
+    LocalTableScan and collects in ~30 ms; a python-list
+    ``createDataFrame`` is RDD-backed (~0.3 s Spark job per action) and
+    even ``range(1).select(lit(...))`` pays a 1-task job (~0.15 s)."""
+    struct, schema = _arrow_schema(ddl)
+    return spark.createDataFrame(
+        pa.Table.from_batches([_arrow_batch(schema, rows)]), schema=struct
+    )
+
+
+class BlockWalk:
+    """The one executor of the metadata aggregates over a stored dataset's
+    ``blocks/`` tree (count_where, group_count, group_aggs, top_k,
+    time_bucket_count and the sketches walks). An operator supplies only
+    its own logic — a per-file routine ``per_file(path, pyarrow.parquet)``
+    that classifies blocks pruned / interior / boundary and folds what
+    survives, its driver fold and finish, and its Spark combine — and the
+    walk supplies the rest:
+
+    - **One size decision.** ``local`` is True when the tree's files total
+      at most ``local_bytes`` (a conservative stand-in for what the stat
+      reads could touch). A metadata-scale dataset then answers
+      DRIVER-SIDE: a cluster job to scan kilobytes of block stats costs
+      more than the scan (the KB-metadata ground rule). ``local_bytes=0``
+      forces the distributed path.
+    - **The driver loop** (:meth:`on_driver`) runs ``per_file`` over the
+      files in order, so the caller's fold stays bit-deterministic.
+    - **One fan-out** (:meth:`fan_out`) plans file tasks from the same
+      listing (one tree walk per op) and runs the identical ``per_file``
+      in one ``mapInArrow`` worker fn.
+    """
+
+    def __init__(self, out_path: str, local_bytes: int):
+        self.infos = parquet_file_infos(os.path.join(out_path, "blocks"))
+        self.local = sum(s for _p, s in self.infos) <= local_bytes
+
+    def on_driver(self, per_file):
+        """``per_file(path, pyarrow.parquet)`` for every file IN ORDER,
+        lazily, on the driver.
+
+        Deliberately SEQUENTIAL: a ThreadPoolExecutor variant was
+        measured at sf1.0/local[32] and made every metadata-aggregate local
+        dispatch ~2x SLOWER (group_sum 0.63 s -> 1.63 s, count_where[str]
+        0.37 s -> 1.37 s, group_aggs 1.5 s -> 2.4 s): the per-file work is
+        dominated by many SMALL per-block numpy/python steps that hold the
+        GIL, so threads only add contention."""
+        import pyarrow.parquet as pq
+
+        return (per_file(fp, pq) for fp, _s in self.infos)
+
+    def fan_out(
+        self, spark: SparkSession, per_file, to_rows, ddl: str,
+        n_tasks: int | None = None,
+    ) -> DataFrame:
+        """DataFrame (schema ``ddl``) of every file's partial: each file
+        task runs ``per_file(path, pyarrow.parquet)`` on its files and
+        ships ``to_rows(partial)`` — row tuples under ``ddl``; an empty
+        result ships nothing. The caller combines the rows in Spark.
+        ``per_file`` and ``to_rows`` must pickle."""
+        struct, schema = _arrow_schema(ddl)
+
+        def walk_files(batches):
+            import pyarrow.parquet as pq
+
+            from xml2arrow_spark.env import task_setup
+
+            task_setup()
+            for _i, fpath in task_files(batches):
+                rows = to_rows(per_file(fpath, pq))
+                if rows:
+                    yield _arrow_batch(schema, rows)
+
+        return _plan_tasks(spark, self.infos, n_tasks).mapInArrow(
+            walk_files, struct
+        )

@@ -214,6 +214,60 @@ def test_only_the_task_format_module_reads_task_paths():
     assert readers == [os.path.join("sources", "files.py")]
 
 
+_LAYOUT_BLIND = (
+    "_fold_blocks_file", "count_where", "group_count",
+    "_group_count_composite", "group_aggs", "_group_aggs_composite",
+    "top_k", "time_bucket_count",
+)
+
+
+def _layout_knowledge(tree) -> list[str]:
+    """What in ``tree`` reads a blocks layout directly: a ``c_{...}__``
+    f-string (a wide column name), the ``"cols"`` literal (the nested
+    struct), ``entries.field`` (a nested entry read) or a ``wide`` name."""
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.JoinedStr):
+            shape = "".join(
+                v.value if isinstance(v, ast.Constant) else "{}"
+                for v in node.values
+            )
+            if "c_{}__" in shape:
+                found.append(f"{node.lineno}: f-string {shape!r}")
+        elif isinstance(node, ast.Constant) and node.value == "cols":
+            found.append(f"{node.lineno}: literal 'cols'")
+        elif (isinstance(node, ast.Attribute) and node.attr == "field"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "entries"):
+            found.append(f"{node.lineno}: entries.field")
+        elif (isinstance(node, ast.Name) and node.id == "wide") or (
+                isinstance(node, ast.arg) and node.arg == "wide"):
+            found.append(f"{node.lineno}: name 'wide'")
+    return found
+
+
+def test_claiming_walks_do_not_know_the_blocks_layout():
+    """Lint: the metadata-aggregate walks read the blocks format only
+    through operators/encode.py (``BlockStats`` on pyarrow, ``zone_col``
+    on Spark), never by naming a layout's columns themselves."""
+    import xml2arrow_spark
+
+    root = os.path.dirname(xml2arrow_spark.__file__)
+    with open(os.path.join(root, "operators", "dataset.py"), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    fns = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    assert set(_LAYOUT_BLIND) <= set(fns)  # the lint really found the walks
+    offenders = {
+        name: hits for name in _LAYOUT_BLIND
+        if (hits := _layout_knowledge(fns[name]))
+    }
+    with open(os.path.join(root, "pipeline", "sketches.py"), encoding="utf-8") as f:
+        hits = _layout_knowledge(ast.parse(f.read()))
+    if hits:
+        offenders["pipeline/sketches.py"] = hits
+    assert offenders == {}
+
+
 def test_fused_encode_roundtrip_bit_identical(spark, token_dir):
     blocks = encode_parquet(spark, token_dir, n_tasks=3)
     decoded = decode_table(blocks, TOKENS_DDL)

@@ -38,14 +38,17 @@ from xml2arrow_spark.operators.predicates import (  # noqa: F401 (re-export)
 )
 from xml2arrow_spark.operators.encode import (
     BLOCKS_SCHEMA_DDL,
+    BlockStats,
     _blockify,
     _BLOCKS_PA_SCHEMA,
     _encode_block,
     _widen_block,
+    _ZONE_SUFFIXES,
     decode_column,
     resolve_manifest_parquet,
     value_counts_column,
     wide_pa_schema,
+    zone_col,
 )
 from xml2arrow_spark.sources.files import BlockWalk, local_frame, task_files
 
@@ -494,8 +497,6 @@ def dataset_column_stats(spark, out_path: str):
 
 
 _CW_INT_TYPES = ("tinyint", "smallint", "int", "integer", "bigint", "long")
-_ZONE_SUFFIXES = {"i": ("vmin_i", "vmax_i"), "d": ("vmin_d", "vmax_d"),
-                  "s": ("vmin_s", "vmax_s")}
 
 
 def _resolve_conjuncts(by_name: dict, predicate, caller: str):
@@ -732,137 +733,46 @@ def _conj_boundary_mask(conj, pair_of):
     return out if out.any() else None
 
 
-def _fold_blocks_file(fpath, pq_mod, pair_cols, conj, wide, on_block, lacks):
-    """Walk one blocks file, classify blocks against the (possibly DNF)
-    ``conj`` via the shared zone classifier, and call
-    ``on_block(tally, pairs, mask)`` for every surviving block (``pairs``
-    = one (meta, payload) pair per ``pair_cols`` entry; ``mask`` = the
-    boundary row mask, None when every row matches). The block walk of
-    the aggregates that make no metadata claim — the composite-key
-    group_count / group_aggs and the per-group distinct operators
-    (pipeline/sketches.py); ``lacks`` names the columns in the error for
-    a block without one of them. Returns the accumulated tally dict."""
+def _zones(conj, view, i):
+    """Block ``i``'s zone triple per conjunct, read off a
+    :class:`~xml2arrow_spark.operators.encode.BlockStats` view."""
+    return [view.zone(col, i, cat) for col, _v, _l, _h, cat in conj]
+
+
+def _fold_blocks_file(fpath, pq_mod, cols, conj, on_block, claim=None):
+    """The one per-file block loop of the aggregates that fold blocks
+    into a tally dict — group_count, group_aggs, time_bucket_count (with
+    a metadata ``claim``) and the composite-key forms and per-group
+    distinct operators (pipeline/sketches.py, without one). Opens one
+    :class:`~xml2arrow_spark.operators.encode.BlockStats` view over
+    ``cols`` and the ``conj`` columns, skips empty blocks, classifies the
+    rest against the (possibly DNF) ``conj`` through the shared zone
+    classifier, drops pruned blocks and masks boundary ones. A block
+    whose every row matches goes to ``claim(tally, view, i)`` first,
+    which folds it from metadata alone and returns True, or returns
+    False; every other survivor calls ``on_block(tally, pairs, mask)``
+    with one (meta, payload) pair per ``cols`` entry (``mask`` = the
+    boundary row mask, None when every row matches). Returns the
+    tally."""
+    view = BlockStats(fpath, pq_mod, cols + [c[0] for c in conj or ()])
     tally: dict = {}
-    if wide:
-        avail = set(pq_mod.read_schema(fpath).names)
-        fstat: list[tuple] = []
+    for i in range(len(view)):
+        if not view.n_rows(i):
+            continue
+        mask = None
         if conj is not None:
-            for col, _values, _lo, _hi, cat in conj:
-                zmin, zmax = _ZONE_SUFFIXES[cat]
-                fstat.append(tuple(
-                    n if n in avail else None
-                    for n in (f"c_{col}__{zmin}", f"c_{col}__{zmax}",
-                              f"c_{col}__n_null")
-                ))
-        kinds = None
-        if conj is not None:
-            stat_cols = [n for trip in fstat for n in trip if n is not None]
-            if stat_cols:
-                st = pq_mod.read_table(fpath, columns=sorted(set(stat_cols)))
-                n_blocks = st.num_rows
-            else:
-                st = None
-                n_blocks = pq_mod.read_metadata(fpath).num_rows
-            kinds = [
-                _classify_where(conj, [
-                    tuple(
-                        st.column(n)[i].as_py()
-                        if (st is not None and n is not None)
-                        else None
-                        for n in trip
-                    )
-                    for trip in fstat
-                ])
-                for i in range(n_blocks)
-            ]
-            if all(kd == "pruned" for kd in kinds):
-                return tally
-        cols = [
-            x for k in pair_cols for x in (f"c_{k}__meta", f"c_{k}__data")
-        ]
-        if conj is not None:
-            cols += [
-                x for col, _v, _l, _h, _c in conj
-                for x in (f"c_{col}__meta", f"c_{col}__data")
-            ]
-        cols = list(dict.fromkeys(cols))
-        pay = pq_mod.read_table(fpath, columns=cols)
-        arrays = {c: pay.column(c).combine_chunks() for c in cols}
-        for i in range(pay.num_rows):
-            mask = None
-            if kinds is not None:
-                if kinds[i] == "pruned":
+            kind = _classify_where(conj, _zones(conj, view, i))
+            if kind == "pruned":
+                continue
+            if kind == "boundary":
+                mask = _conj_boundary_mask(
+                    conj, lambda c, i=i: view.payload(c, i)
+                )
+                if mask is None:
                     continue
-                if kinds[i] == "boundary":
-                    mask = _conj_boundary_mask(conj, lambda c, i=i: (
-                        arrays[f"c_{c}__meta"][i].as_py(),
-                        arrays[f"c_{c}__data"][i].as_py(),
-                    ))
-                    if mask is None:
-                        continue
-            on_block(
-                tally,
-                [
-                    (arrays[f"c_{k}__meta"][i].as_py(),
-                     arrays[f"c_{k}__data"][i].as_py())
-                    for k in pair_cols
-                ],
-                mask,
-            )
-    else:
-        tbl = pq_mod.read_table(fpath, columns=["cols"])
-        cols_col = tbl.column("cols").combine_chunks()
-        entry_fields = {
-            f.name for f in tbl.schema.field("cols").type.value_type
-        }
-        for row in range(len(cols_col)):
-            entries = cols_col[row].values
-            names = entries.field("name").to_pylist()
-            try:
-                kis = [names.index(k) for k in pair_cols]
-            except ValueError:
-                raise ValueError(
-                    f"block lacks an entry for {lacks}; the "
-                    f"sidecar schema and the blocks files disagree"
-                ) from None
-            mask = None
-            if conj is not None:
-                stats = []
-                for col, _values, _lo, _hi, cat in conj:
-                    zmin, zmax = _ZONE_SUFFIXES[cat]
-                    try:
-                        fi = names.index(col)
-                    except ValueError:
-                        raise ValueError(
-                            f"block lacks an entry for {col!r}; the "
-                            f"sidecar schema and the blocks files "
-                            f"disagree"
-                        ) from None
-                    stats.append(tuple(
-                        entries.field(f)[fi].as_py()
-                        if f in entry_fields
-                        else None
-                        for f in (zmin, zmax, "n_null")
-                    ))
-                kind = _classify_where(conj, stats)
-                if kind == "pruned":
-                    continue
-                if kind == "boundary":
-                    mask = _conj_boundary_mask(conj, lambda c: (
-                        entries.field("meta")[names.index(c)].as_py(),
-                        entries.field("data")[names.index(c)].as_py(),
-                    ))
-                    if mask is None:
-                        continue
-            on_block(
-                tally,
-                [
-                    (entries.field("meta")[ki].as_py(),
-                     entries.field("data")[ki].as_py())
-                    for ki in kis
-                ],
-                mask,
-            )
+        if mask is None and claim is not None and claim(tally, view, i):
+            continue
+        on_block(tally, [view.payload(c, i) for c in cols], mask)
     return tally
 
 
@@ -953,7 +863,6 @@ def count_where(
     with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
         side = yaml.safe_load(f.read())
     by_name = split_schema_ddl(side["schema_ddl"])
-    wide = side.get("layout", "nested") == "wide"
 
     conj = _resolve_conjuncts(by_name, predicate, "count_where")
     if agg_col is not None:
@@ -967,7 +876,6 @@ def count_where(
             raise ValueError(
                 f"agg_col must be an integer column; {agg_col!r} is {styp}"
             )
-    suffixes = _ZONE_SUFFIXES
     groups = getattr(conj, "groups", None)
     single = groups is None and len(conj) == 1
 
@@ -1107,160 +1015,35 @@ def count_where(
         acc[2] = mx if acc[2] is None else max(acc[2], mx)
         acc[3] = True
 
+    view_cols = [c[0] for c in conj] + ([agg_col] if agg_col else [])
+
     def _process_file(fpath: str, pq) -> tuple:
         """Per-file tallies (n_match, n_blocks, n_pruned, n_interior,
         n_boundary, sum, min, max, present). Runs identically on an
         executor (distributed mode) or on the driver (metadata-scale
         mode)."""
-        n_match = n_blocks = n_pruned = n_interior = n_boundary = 0
+        n_match = n_pruned = n_interior = n_boundary = 0
         agg_acc = [0, None, None, False]
-        if wide:
-            avail = set(pq.read_schema(fpath).names)
-            want = {"n_rows"}
-            for col, _values, _lo, _hi, cat in conj:
-                zmin, zmax = suffixes[cat]
-                want |= {f"c_{col}__{zmin}", f"c_{col}__{zmax}",
-                         f"c_{col}__n_null"}
-            if agg_col is not None:
-                want |= {f"c_{agg_col}__zsum_i", f"c_{agg_col}__n_null",
-                         f"c_{agg_col}__vmin_i", f"c_{agg_col}__vmax_i"}
-            stat_tbl = pq.read_table(fpath, columns=sorted(want & avail))
-
-            def _field(name, i, tbl=None, av=None):
-                t = stat_tbl if tbl is None else tbl
-                a = avail if av is None else av
-                return t.column(name)[i].as_py() if name in a else None
-
-            rows_col = stat_tbl.column("n_rows")
-            kinds = []
-            for i in range(stat_tbl.num_rows):
-                br = rows_col[i].as_py()
-                stats = []
-                for col, _values, _lo, _hi, cat in conj:
-                    zmin, zmax = suffixes[cat]
-                    stats.append((
-                        _field(f"c_{col}__{zmin}", i),
-                        _field(f"c_{col}__{zmax}", i),
-                        _field(f"c_{col}__n_null", i),
-                        br,
-                    ))
-                if agg_col is None:
-                    kinds.append(_classify(stats, None, None, None, None))
-                else:
-                    kinds.append(_classify(
-                        stats,
-                        _field(f"c_{agg_col}__zsum_i", i),
-                        _field(f"c_{agg_col}__n_null", i),
-                        _field(f"c_{agg_col}__vmin_i", i),
-                        _field(f"c_{agg_col}__vmax_i", i),
-                    ))
-            n_blocks += len(kinds)
-            boundary_idx = [i for i, k in enumerate(kinds)
-                            if k[0] == "boundary"]
-            for k, c, trip in kinds:
-                if k == "interior":
-                    n_interior += 1
-                    n_match += c
-                    _merge_trip(agg_acc, trip)
-                elif k == "pruned":
-                    n_pruned += 1
-            n_boundary += len(boundary_idx)
-            if boundary_idx:
-                # only now touch payload, and only the filter cols
-                # (+ the sum column)
-                pay_cols = list(dict.fromkeys(c for c, _v, _l, _h, _c2 in conj))
-                if agg_col is not None and agg_col not in pay_cols:
-                    pay_cols.append(agg_col)
-                need = [x for col in pay_cols
-                        for x in (f"c_{col}__meta", f"c_{col}__data")]
-                pay = pq.read_table(fpath, columns=need)
-
-                for i in boundary_idx:
-                    def _pair(col, i=i):
-                        return (
-                            pay.column(f"c_{col}__meta")[i].as_py(),
-                            pay.column(f"c_{col}__data")[i].as_py(),
-                        )
-
-                    cnt, trip = _count_boundary(_pair)
-                    n_match += cnt
-                    _merge_trip(agg_acc, trip)
-            return (n_match, n_blocks, n_pruned, n_interior, n_boundary,
-                    agg_acc[0], agg_acc[1], agg_acc[2], agg_acc[3])
-        tbl = pq.read_table(fpath, columns=["n_rows", "cols"])
-        cols_col = tbl.column("cols").combine_chunks()
-        rows_col = tbl.column("n_rows")
-        entry_fields = {
-            f.name for f in tbl.schema.field("cols").type.value_type
-        }
-        has_agg = "n_null" in entry_fields
-        for row in range(len(cols_col)):
-            entries = cols_col[row].values
-            names = entries.field("name").to_pylist()
-            br = rows_col[row].as_py()
-            stats = []
-            idxs = []
-            for col, _values, _lo, _hi, cat in conj:
-                zmin, zmax = suffixes[cat]
-                try:
-                    zi = names.index(col)
-                except ValueError:
-                    zi = None
-                idxs.append(zi)
-                if zi is None:
-                    stats.append((None, None, None, br))
-                else:
-                    stats.append((
-                        entries.field(zmin)[zi].as_py(),
-                        entries.field(zmax)[zi].as_py(),
-                        entries.field("n_null")[zi].as_py()
-                        if has_agg else None,
-                        br,
-                    ))
-            zsum = s_nnull = avmin = avmax = None
-            si = None
-            if agg_col is not None:
-                try:
-                    si = names.index(agg_col)
-                except ValueError:
-                    si = None
-                if si is not None and "zsum_i" in entry_fields:
-                    zsum = entries.field("zsum_i")[si].as_py()
-                    s_nnull = entries.field("n_null")[si].as_py()
-                    avmin = entries.field("vmin_i")[si].as_py()
-                    avmax = entries.field("vmax_i")[si].as_py()
-            kind, c, trip = _classify(stats, zsum, s_nnull, avmin, avmax)
-            n_blocks += 1
+        view = BlockStats(fpath, pq, view_cols)
+        for i in range(len(view)):
+            br = view.n_rows(i)
+            stats = [(*z, br) for z in _zones(conj, view, i)]
+            aggs = [
+                None if agg_col is None else view.stat(agg_col, f, i)
+                for f in ("zsum_i", "n_null", "vmin_i", "vmax_i")
+            ]
+            kind, c, trip = _classify(stats, *aggs)
             if kind == "pruned":
                 n_pruned += 1
-            elif kind == "interior":
+                continue
+            if kind == "interior":
                 n_interior += 1
-                n_match += c
-                _merge_trip(agg_acc, trip)
             else:
                 n_boundary += 1
-                if any(zi is None for zi in idxs) or (
-                    agg_col is not None and si is None
-                ):
-                    raise ValueError(
-                        "block is missing an entry for a filter "
-                        "or sum column; the sidecar schema and the "
-                        "blocks files disagree"
-                    )
-                metas = entries.field("meta")
-                datas = entries.field("data")
-                by_col = {c[0]: zi for c, zi in zip(conj, idxs)}
-                if agg_col is not None:
-                    by_col[agg_col] = si
-
-                def _pair(col, metas=metas, datas=datas, by_col=by_col):
-                    zi = by_col[col]
-                    return metas[zi].as_py(), datas[zi].as_py()
-
-                cnt, trip = _count_boundary(_pair)
-                n_match += cnt
-                _merge_trip(agg_acc, trip)
-        return (n_match, n_blocks, n_pruned, n_interior, n_boundary,
+                c, trip = _count_boundary(lambda col, i=i: view.payload(col, i))
+            n_match += c
+            _merge_trip(agg_acc, trip)
+        return (n_match, len(view), n_pruned, n_interior, n_boundary,
                 agg_acc[0], agg_acc[1], agg_acc[2], agg_acc[3])
 
     def _fold(acc, t):
@@ -1312,7 +1095,7 @@ def count_where(
 
 
 def _group_count_composite(
-    spark, out_path, columns, by_name, side, n_tasks, local_bytes, where
+    spark, out_path, columns, by_name, n_tasks, local_bytes, where
 ):
     """COMPOSITE-key GROUP BY COUNT (``group_count(column=[k1, k2, ...])``):
     every key column's group codes come off its codec stream and combine
@@ -1342,7 +1125,6 @@ def _group_count_composite(
                 f"group_count needs scalar int/string/bool/decimal keys, "
                 f"got {col} {typ}"
             )
-    wide = side.get("layout", "nested") == "wide"
     out_ddl = ", ".join(by_name[c] for c in columns) + ", cnt bigint"
     conj = (
         _resolve_conjuncts(by_name, where, "group_count")
@@ -1355,9 +1137,7 @@ def _group_count_composite(
             tally[kt] = tally.get(kt, 0) + c
 
     def _file_counts(fpath, pq_mod):
-        return _fold_blocks_file(
-            fpath, pq_mod, columns, conj, wide, _block_counts, f"{columns!r}"
-        )
+        return _fold_blocks_file(fpath, pq_mod, columns, conj, _block_counts)
 
     def _rows(tally):
         return [(*kt, c) for kt, c in tally.items()]
@@ -1446,7 +1226,7 @@ def group_count(
             column = cols[0]
         else:
             return _group_count_composite(
-                spark, out_path, cols, by_name, side, n_tasks, local_bytes,
+                spark, out_path, cols, by_name, n_tasks, local_bytes,
                 where,
             )
     if column not in by_name:
@@ -1460,7 +1240,6 @@ def group_count(
             f"{column} {col_type} (SQL groups NaNs together, IEEE equality "
             f"does not — a float group-by is not portable)"
         )
-    wide = side.get("layout", "nested") == "wide"
     out_ddl = f"{by_name[column]}, cnt bigint"
     # key category for the metadata fast path (group_sum's rule: bool and
     # decimal keys carry no usable zone pair and never claim)
@@ -1469,30 +1248,33 @@ def group_count(
         else "s" if col_type == "string"
         else None
     )
-    kz = ("vmin_i", "vmax_i") if key_cat == "i" else ("vmin_s", "vmax_s")
     conj = (
         _resolve_conjuncts(by_name, where, "group_count")
         if where is not None
         else None
     )
 
-    def _claim(kmin, kmax, k_nnull, br):
-        """One block's (key, cnt) from zone metadata alone, or None when
-        metadata cannot prove it. Sound exactly when the key is provably
-        SINGLE-VALUED (null count 0, vmin == vmax — truncation-safe for
-        strings: stored bounds are only equal when neither was truncated
-        and true min == true max, see group_sum._claim) or provably
-        ALL-NULL (stated null count == block rows)."""
-        if key_cat is None or k_nnull is None:
-            return None
+    def _claim(tally, view, i):
+        """Fold one block's (key, n_rows) from zone metadata alone, or
+        return False when metadata cannot prove it. Sound exactly when the
+        key is provably SINGLE-VALUED (null count 0, vmin == vmax —
+        truncation-safe for strings: stored bounds are only equal when
+        neither was truncated and true min == true max, see
+        group_sum._claim) or provably ALL-NULL (stated null count == block
+        rows)."""
+        kmin, kmax, k_nnull = view.zone(column, i, key_cat)
+        br = view.n_rows(i)
         if k_nnull == br:
-            return (None, br)
-        if k_nnull == 0 and kmin is not None and kmin == kmax:
-            return (kmin, br)
-        return None
+            kv = None
+        elif k_nnull == 0 and kmin is not None and kmin == kmax:
+            kv = kmin
+        else:
+            return False
+        tally[kv] = tally.get(kv, 0) + br
+        return True
 
-    def _tally_counts(tally, meta_json, data, mask=None):
-        vals, counts, n_null = value_counts_column(meta_json, data, mask=mask)
+    def _block_counts(tally, pairs, mask):
+        vals, counts, n_null = value_counts_column(*pairs[0], mask=mask)
         if n_null:
             tally[None] = tally.get(None, 0) + n_null
         for v, c in zip(vals.to_pylist(), counts.tolist()):
@@ -1500,171 +1282,12 @@ def group_count(
 
     def _file_counts(fpath, pq_mod):
         """One file's (value -> count) dict; None key = the NULL group.
-        Metadata-claimable blocks never touch payload bytes (wide layout:
-        their payload columns are read only when SOME block of the file
-        needs a kernel); predicate-straddling blocks mask first."""
-        tally: dict = {}
-        if wide:
-            avail = set(pq_mod.read_schema(fpath).names)
-            claim_want = [
-                "n_rows",
-                f"c_{column}__{kz[0]}", f"c_{column}__{kz[1]}",
-                f"c_{column}__n_null",
-            ]
-            have_claim = key_cat is not None and set(claim_want) <= avail
-            # per-conjunct zone-stat columns; an absent name reads as None
-            # (unstated) and that side of the classification degrades to
-            # boundary, never to a wrong skip
-            fstat: list[tuple] = []
-            if conj is not None:
-                for col, _values, _lo, _hi, cat in conj:
-                    zmin, zmax = _ZONE_SUFFIXES[cat]
-                    fstat.append(tuple(
-                        n if n in avail else None
-                        for n in (f"c_{col}__{zmin}", f"c_{col}__{zmax}",
-                                  f"c_{col}__n_null")
-                    ))
-            read_cols = (claim_want if have_claim else ["n_rows"]) + [
-                n for trip in fstat for n in trip if n is not None
-            ]
-            kernel_idx: list[int] = []    # unfiltered / all-rows-match blocks
-            boundary_idx: list[int] = []  # predicate-straddling blocks (mask)
-            if (have_claim or conj is not None) and "n_rows" in avail:
-                st = pq_mod.read_table(fpath, columns=sorted(set(read_cols)))
-                rows_col = st.column("n_rows")
-                for i in range(st.num_rows):
-                    br = rows_col[i].as_py()
-                    if not br:
-                        continue
-                    if conj is not None:
-                        kind = _classify_where(conj, [
-                            tuple(
-                                st.column(n)[i].as_py()
-                                if n is not None
-                                else None
-                                for n in trip
-                            )
-                            for trip in fstat
-                        ])
-                        if kind == "pruned":
-                            continue
-                        if kind == "boundary":
-                            boundary_idx.append(i)
-                            continue
-                    claim = _claim(
-                        st.column(f"c_{column}__{kz[0]}")[i].as_py(),
-                        st.column(f"c_{column}__{kz[1]}")[i].as_py(),
-                        st.column(f"c_{column}__n_null")[i].as_py(),
-                        br,
-                    ) if have_claim else None
-                    if claim is not None:
-                        v, c = claim
-                        tally[v] = tally.get(v, 0) + c
-                    else:
-                        kernel_idx.append(i)
-            elif conj is not None:
-                # no usable stats at all: every block must evaluate the
-                # predicate — masked, never silently unfiltered
-                boundary_idx = list(range(pq_mod.read_metadata(fpath).num_rows))
-            else:  # stats columns absent (older blocks): all kernel
-                kernel_idx = list(range(pq_mod.read_metadata(fpath).num_rows))
-            if kernel_idx or boundary_idx:
-                cols = [f"c_{column}__meta", f"c_{column}__data"]
-                if boundary_idx:
-                    cols += [
-                        x for col, _v, _l, _h, _c in conj
-                        for x in (f"c_{col}__meta", f"c_{col}__data")
-                    ]
-                cols = list(dict.fromkeys(cols))
-                pay = pq_mod.read_table(fpath, columns=cols)
-                arrays = {c: pay.column(c).combine_chunks() for c in cols}
-                for i in kernel_idx:
-                    _tally_counts(
-                        tally,
-                        arrays[f"c_{column}__meta"][i].as_py(),
-                        arrays[f"c_{column}__data"][i].as_py(),
-                    )
-                for i in boundary_idx:
-                    mask = _conj_boundary_mask(conj, lambda c, i=i: (
-                        arrays[f"c_{c}__meta"][i].as_py(),
-                        arrays[f"c_{c}__data"][i].as_py(),
-                    ))
-                    if mask is None:
-                        continue
-                    _tally_counts(
-                        tally,
-                        arrays[f"c_{column}__meta"][i].as_py(),
-                        arrays[f"c_{column}__data"][i].as_py(),
-                        mask=mask,
-                    )
-        else:
-            tbl = pq_mod.read_table(fpath, columns=["n_rows", "cols"])
-            cols_col = tbl.column("cols").combine_chunks()
-            rows_col = tbl.column("n_rows")
-            entry_fields = {
-                f.name for f in tbl.schema.field("cols").type.value_type
-            }
-            has_stats = {"n_null", kz[0], kz[1]} <= entry_fields
-            for row in range(len(cols_col)):
-                entries = cols_col[row].values
-                names = entries.field("name").to_pylist()
-                try:
-                    zi = names.index(column)
-                except ValueError:
-                    raise ValueError(
-                        f"block lacks an entry for {column!r}; the "
-                        f"sidecar schema and the blocks files disagree"
-                    ) from None
-                br = rows_col[row].as_py()
-                if not br:
-                    continue
-                mask = None
-                if conj is not None:
-                    stats = []
-                    for col, _values, _lo, _hi, cat in conj:
-                        zmin, zmax = _ZONE_SUFFIXES[cat]
-                        try:
-                            fi = names.index(col)
-                        except ValueError:
-                            raise ValueError(
-                                f"block lacks an entry for {col!r}; the "
-                                f"sidecar schema and the blocks files disagree"
-                            ) from None
-                        stats.append(tuple(
-                            entries.field(f)[fi].as_py()
-                            if f in entry_fields
-                            else None
-                            for f in (zmin, zmax, "n_null")
-                        ))
-                    kind = _classify_where(conj, stats)
-                    if kind == "pruned":
-                        continue
-                    if kind == "boundary":
-                        mask = _conj_boundary_mask(conj, lambda c: (
-                            entries.field("meta")[names.index(c)].as_py(),
-                            entries.field("data")[names.index(c)].as_py(),
-                        ))
-                        if mask is None:
-                            continue
-                claim = None
-                if has_stats and mask is None:
-                    claim = _claim(
-                        entries.field(kz[0])[zi].as_py(),
-                        entries.field(kz[1])[zi].as_py(),
-                        entries.field("n_null")[zi].as_py(),
-                        br,
-                    )
-                if claim is not None:
-                    v, c = claim
-                    tally[v] = tally.get(v, 0) + c
-                else:
-                    _tally_counts(
-                        tally,
-                        entries.field("meta")[zi].as_py(),
-                        entries.field("data")[zi].as_py(),
-                        mask=mask,
-                    )
-        return tally
+        Metadata-claimable blocks never touch payload bytes;
+        predicate-straddling blocks mask first."""
+        return _fold_blocks_file(
+            fpath, pq_mod, [column], conj, _block_counts,
+            _claim if key_cat is not None else None,
+        )
 
     walk = BlockWalk(out_path, local_bytes)
     if walk.local:
@@ -1701,6 +1324,22 @@ def _merge_aggs(tally, kt, c, trips):
         prev[1][i] = merged
 
 
+def _refuse_outside_int64(tally, agg_cols):
+    """Refuse a group_aggs tally whose sum (or sum of squares) of some agg
+    column leaves int64 — the ANSI contract, checked per file so a task
+    fails before its partial is shipped. Returns the tally."""
+    for kt, (_c, trips) in tally.items():
+        for t, a in zip(trips, agg_cols):
+            for tot in t[1:2] + t[4:5]:
+                if not (-(1 << 63) <= tot < (1 << 63)):
+                    raise ArithmeticError(
+                        f"group_aggs total of {a!r} for key {kt!r} is "
+                        f"outside int64 ({tot}); refusing rather than "
+                        f"wrapping (ANSI contract)"
+                    )
+    return tally
+
+
 def _group_aggs_walk(
     spark, out_path, keys, agg_cols, by_name, file_sums, n_tasks,
     local_bytes, with_sum_sq,
@@ -1724,17 +1363,10 @@ def _group_aggs_walk(
             for kt, (c, trips) in fs_.items():
                 _merge_aggs(total, kt, c, trips)
         rows = []
-        for kt, (c, trips) in total.items():
+        for kt, (c, trips) in _refuse_outside_int64(total, agg_cols).items():
             flat = [*key_of(kt), c]
-            for t, a in zip(trips, agg_cols):
+            for t in trips:
                 nng, sm, mn, mx = t[:4]
-                for tot in t[1:2] + t[4:5]:
-                    if not (-(1 << 63) <= tot < (1 << 63)):
-                        raise ArithmeticError(
-                            f"group_aggs total of {a!r} for key {kt!r} is "
-                            f"outside int64 ({tot}); refusing rather than "
-                            f"wrapping (ANSI contract)"
-                        )
                 flat += [nng, sm if nng else None, mn, mx]
                 if with_sum_sq:
                     flat.append(t[4] if nng else None)
@@ -1779,7 +1411,7 @@ def _group_aggs_walk(
 
 
 def _group_aggs_composite(
-    spark, out_path, keys, agg_cols, by_name, side, n_tasks, local_bytes,
+    spark, out_path, keys, agg_cols, by_name, n_tasks, local_bytes,
     where, with_sum_sq=False,
 ):
     """COMPOSITE-key :func:`group_aggs` (``key=[k1, k2, ...]``): the key
@@ -1815,7 +1447,6 @@ def _group_aggs_composite(
             raise ValueError(
                 f"group_aggs needs integer agg columns, got {a} {styp}"
             )
-    wide = side.get("layout", "nested") == "wide"
     conj = (
         _resolve_conjuncts(by_name, where, "group_aggs")
         if where is not None
@@ -1830,20 +1461,9 @@ def _group_aggs_composite(
             _merge_aggs(tally, kt, row[0], row[1:])
 
     def _file_sums(fpath, pq_mod):
-        tally = _fold_blocks_file(
-            fpath, pq_mod, keys + agg_cols, conj, wide, _block_sums,
-            f"{keys!r}/{agg_cols!r}",
-        )
-        for kt, (_c, trips) in tally.items():
-            for t, a in zip(trips, agg_cols):
-                sm = t[1] if len(t) == 4 else max(t[1], t[4], key=abs)
-                if not (-(1 << 63) <= sm < (1 << 63)):
-                    raise ArithmeticError(
-                        f"group_aggs total of {a!r} for key {kt!r} is "
-                        f"outside int64 ({sm}); refusing rather than "
-                        f"wrapping (ANSI contract)"
-                    )
-        return tally
+        return _refuse_outside_int64(_fold_blocks_file(
+            fpath, pq_mod, keys + agg_cols, conj, _block_sums
+        ), agg_cols)
 
     return _group_aggs_walk(
         spark, out_path, keys, agg_cols, by_name, _file_sums, n_tasks,
@@ -1903,6 +1523,7 @@ def group_aggs(
     """
     import yaml
 
+    from xml2arrow_spark.operators.blocks import group_aggs_column
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     if not agg_cols:
@@ -1917,7 +1538,7 @@ def group_aggs(
             key = keys[0]
         else:
             return _group_aggs_composite(
-                spark, out_path, keys, list(agg_cols), by_name, side,
+                spark, out_path, keys, list(agg_cols), by_name,
                 n_tasks, local_bytes, where, with_sum_sq,
             )
     for col in [key, *agg_cols]:
@@ -1940,274 +1561,58 @@ def group_aggs(
                 f"{styp}: float folds are order-dependent and these "
                 f"aggregates never approximate (count_where's rule)"
             )
-    wide = side.get("layout", "nested") == "wide"
     key_cat = (
         "i" if key_type in _CW_INT_TYPES
         else "s" if key_type == "string"
         else None
     )
-    kz = ("vmin_i", "vmax_i") if key_cat == "i" else ("vmin_s", "vmax_s")
     conj = (
         _resolve_conjuncts(by_name, where, "group_aggs")
         if where is not None
         else None
     )
 
-    def _claim(kmin, kmax, k_nnull, br, agg_stats):
-        """One block's (key, cnt, trips) from zone metadata alone, or None
-        — group_sum's claim rule per agg column: the key provably
-        single-valued (null-free, truncation-safe vmin == vmax) and EVERY
-        agg column carrying its exact block sum + stated null count (and
-        stated extrema whenever a non-null value exists). No block
-        stat stores a sum of squares, so the claim is disabled
-        entirely under with_sum_sq (kernel instead; exact either
-        way)."""
-        if with_sum_sq:
-            return None
-        if (
-            key_cat is None
-            or k_nnull != 0
-            or kmin is None
-            or kmax is None
-            or kmin != kmax
-        ):
-            return None
+    def _claim(tally, view, i):
+        """Fold one block's (key, cnt, trips) from zone metadata alone, or
+        return False — group_sum's claim rule per agg column: the key
+        provably single-valued (null-free, truncation-safe vmin == vmax)
+        and EVERY agg column carrying its exact block sum + stated null
+        count (and stated extrema whenever a non-null value exists). No
+        block stat stores a sum of squares, so the claim is disabled
+        entirely under with_sum_sq (kernel instead; exact either way)."""
+        kmin, kmax, k_nnull = view.zone(key, i, key_cat)
+        if k_nnull != 0 or kmin is None or kmax is None or kmin != kmax:
+            return False
+        br = view.n_rows(i)
         trips = []
-        for zsum, a_nnull, amin, amax in agg_stats:
+        for a in agg_cols:
+            zsum, a_nnull, amin, amax = (
+                view.stat(a, f, i)
+                for f in ("zsum_i", "n_null", "vmin_i", "vmax_i")
+            )
             if zsum is None or a_nnull is None:
-                return None
+                return False
             nng = br - a_nnull
             if nng and (amin is None or amax is None):
-                return None  # extrema unstated: downgrade to the kernel
+                return False  # extrema unstated: downgrade to the kernel
             trips.append((nng, zsum, amin if nng else None,
                           amax if nng else None))
-        return (kmin, br, trips)
+        _merge_aggs(tally, kmin, br, trips)
+        return True
+
+    def _block_sums(tally, pairs, mask):
+        for v, row in group_aggs_column(
+            *pairs[0], pairs[1:], mask=mask, with_sq=with_sum_sq
+        ).items():
+            _merge_aggs(tally, v, row[0], row[1:])
 
     def _file_sums(fpath, pq_mod):
         """One file's {key_or_None: [cnt, [(nn, sum, mn, mx) per agg]]};
         metadata-claimable blocks never touch payload bytes."""
-        from xml2arrow_spark.operators.blocks import group_aggs_column
-
-        tally: dict = {}
-        if wide:
-            avail = set(pq_mod.read_schema(fpath).names)
-            claim_want = [
-                "n_rows",
-                f"c_{key}__{kz[0]}", f"c_{key}__{kz[1]}",
-                f"c_{key}__n_null",
-            ] + [
-                x for a in agg_cols
-                for x in (f"c_{a}__zsum_i", f"c_{a}__n_null",
-                          f"c_{a}__vmin_i", f"c_{a}__vmax_i")
-            ]
-            have_claim = set(claim_want) <= avail
-            # per-conjunct zone-stat columns; an absent name reads as None
-            # (unstated) and that side of the classification degrades to
-            # boundary, never to a wrong skip
-            fstat: list[tuple] = []
-            if conj is not None:
-                for col, _values, _lo, _hi, cat in conj:
-                    zmin, zmax = _ZONE_SUFFIXES[cat]
-                    fstat.append(tuple(
-                        n if n in avail else None
-                        for n in (f"c_{col}__{zmin}", f"c_{col}__{zmax}",
-                                  f"c_{col}__n_null")
-                    ))
-            read_cols = (claim_want if have_claim else ["n_rows"]) + [
-                n for trip in fstat for n in trip if n is not None
-            ]
-            kernel_idx: list[int] = []    # unfiltered / all-rows-match blocks
-            boundary_idx: list[int] = []  # predicate-straddling blocks (mask)
-            if (have_claim or conj is not None) and "n_rows" in avail:
-                st = pq_mod.read_table(fpath, columns=sorted(set(read_cols)))
-                rows_col = st.column("n_rows")
-                for i in range(st.num_rows):
-                    br = rows_col[i].as_py()
-                    if not br:
-                        continue
-                    if conj is not None:
-                        kind = _classify_where(conj, [
-                            tuple(
-                                st.column(n)[i].as_py()
-                                if n is not None
-                                else None
-                                for n in trip
-                            )
-                            for trip in fstat
-                        ])
-                        if kind == "pruned":
-                            continue
-                        if kind == "boundary":
-                            boundary_idx.append(i)
-                            continue
-                    claim = _claim(
-                        st.column(f"c_{key}__{kz[0]}")[i].as_py(),
-                        st.column(f"c_{key}__{kz[1]}")[i].as_py(),
-                        st.column(f"c_{key}__n_null")[i].as_py(),
-                        br,
-                        [
-                            (
-                                st.column(f"c_{a}__zsum_i")[i].as_py(),
-                                st.column(f"c_{a}__n_null")[i].as_py(),
-                                st.column(f"c_{a}__vmin_i")[i].as_py(),
-                                st.column(f"c_{a}__vmax_i")[i].as_py(),
-                            )
-                            for a in agg_cols
-                        ],
-                    ) if have_claim else None
-                    if claim is not None:
-                        _merge_aggs(tally, claim[0], claim[1], claim[2])
-                    else:
-                        kernel_idx.append(i)
-            elif conj is not None:
-                # no usable stats at all: every block must evaluate the
-                # predicate — masked, never silently unfiltered
-                boundary_idx = list(range(pq_mod.read_metadata(fpath).num_rows))
-            else:  # stats columns absent (older blocks): all kernel
-                kernel_idx = list(range(pq_mod.read_metadata(fpath).num_rows))
-            if kernel_idx or boundary_idx:
-                cols = [f"c_{key}__meta", f"c_{key}__data"] + [
-                    x for a in agg_cols
-                    for x in (f"c_{a}__meta", f"c_{a}__data")
-                ]
-                if boundary_idx:
-                    cols += [
-                        x for col, _v, _l, _h, _c in conj
-                        for x in (f"c_{col}__meta", f"c_{col}__data")
-                    ]
-                cols = list(dict.fromkeys(cols))
-                pay = pq_mod.read_table(fpath, columns=cols)
-                arrays = {c: pay.column(c).combine_chunks() for c in cols}
-
-                def _kargs(i):
-                    return (
-                        arrays[f"c_{key}__meta"][i].as_py(),
-                        arrays[f"c_{key}__data"][i].as_py(),
-                        [
-                            (
-                                arrays[f"c_{a}__meta"][i].as_py(),
-                                arrays[f"c_{a}__data"][i].as_py(),
-                            )
-                            for a in agg_cols
-                        ],
-                    )
-
-                for i in kernel_idx:
-                    for v, row in group_aggs_column(
-                        *_kargs(i), with_sq=with_sum_sq
-                    ).items():
-                        _merge_aggs(tally, v, row[0], row[1:])
-                for i in boundary_idx:
-                    mask = _conj_boundary_mask(conj, lambda c, i=i: (
-                        arrays[f"c_{c}__meta"][i].as_py(),
-                        arrays[f"c_{c}__data"][i].as_py(),
-                    ))
-                    if mask is None:
-                        continue
-                    for v, row in group_aggs_column(
-                        *_kargs(i), mask=mask, with_sq=with_sum_sq
-                    ).items():
-                        _merge_aggs(tally, v, row[0], row[1:])
-        else:
-            tbl = pq_mod.read_table(fpath, columns=["n_rows", "cols"])
-            cols_col = tbl.column("cols").combine_chunks()
-            rows_col = tbl.column("n_rows")
-            entry_fields = {
-                f.name for f in tbl.schema.field("cols").type.value_type
-            }
-            has_stats = {
-                "n_null", "zsum_i", "vmin_i", "vmax_i", kz[0], kz[1]
-            } <= entry_fields
-            for row in range(len(cols_col)):
-                entries = cols_col[row].values
-                names = entries.field("name").to_pylist()
-                try:
-                    ki = names.index(key)
-                    ais = [names.index(a) for a in agg_cols]
-                except ValueError:
-                    raise ValueError(
-                        f"block lacks an entry for {key!r}/{agg_cols!r}; "
-                        f"the sidecar schema and the blocks files disagree"
-                    ) from None
-                br = rows_col[row].as_py()
-                if not br:
-                    continue
-                mask = None
-                if conj is not None:
-                    stats = []
-                    for col, _values, _lo, _hi, cat in conj:
-                        zmin, zmax = _ZONE_SUFFIXES[cat]
-                        try:
-                            fi = names.index(col)
-                        except ValueError:
-                            raise ValueError(
-                                f"block lacks an entry for {col!r}; the "
-                                f"sidecar schema and the blocks files disagree"
-                            ) from None
-                        stats.append(tuple(
-                            entries.field(f)[fi].as_py()
-                            if f in entry_fields
-                            else None
-                            for f in (zmin, zmax, "n_null")
-                        ))
-                    kind = _classify_where(conj, stats)
-                    if kind == "pruned":
-                        continue
-                    if kind == "boundary":
-                        mask = _conj_boundary_mask(conj, lambda c: (
-                            entries.field("meta")[names.index(c)].as_py(),
-                            entries.field("data")[names.index(c)].as_py(),
-                        ))
-                        if mask is None:
-                            continue
-                claim = None
-                if has_stats and mask is None:
-                    claim = _claim(
-                        entries.field(kz[0])[ki].as_py(),
-                        entries.field(kz[1])[ki].as_py(),
-                        entries.field("n_null")[ki].as_py(),
-                        br,
-                        [
-                            (
-                                entries.field("zsum_i")[ai].as_py(),
-                                entries.field("n_null")[ai].as_py(),
-                                entries.field("vmin_i")[ai].as_py(),
-                                entries.field("vmax_i")[ai].as_py(),
-                            )
-                            for ai in ais
-                        ],
-                    )
-                if claim is not None:
-                    _merge_aggs(tally, claim[0], claim[1], claim[2])
-                else:
-                    from xml2arrow_spark.operators.blocks import (
-                        group_aggs_column as _gac,
-                    )
-
-                    for v, rrow in _gac(
-                        entries.field("meta")[ki].as_py(),
-                        entries.field("data")[ki].as_py(),
-                        [
-                            (
-                                entries.field("meta")[ai].as_py(),
-                                entries.field("data")[ai].as_py(),
-                            )
-                            for ai in ais
-                        ],
-                        mask=mask,
-                        with_sq=with_sum_sq,
-                    ).items():
-                        _merge_aggs(tally, v, rrow[0], rrow[1:])
-        for v, (_c, trips) in tally.items():
-            for t, a in zip(trips, agg_cols):
-                for tot in t[1:2] + t[4:5]:
-                    if not (-(1 << 63) <= tot < (1 << 63)):
-                        raise ArithmeticError(
-                            f"group_aggs total of {a!r} for key {v!r} is "
-                            f"outside int64 ({tot}); refusing rather than "
-                            f"wrapping (ANSI contract)"
-                        )
-        return tally
+        return _refuse_outside_int64(_fold_blocks_file(
+            fpath, pq_mod, [key, *agg_cols], conj, _block_sums,
+            None if with_sum_sq or key_cat is None else _claim,
+        ), agg_cols)
 
     return _group_aggs_walk(
         spark, out_path, [key], agg_cols, by_name, _file_sums, n_tasks,
@@ -2367,7 +1772,6 @@ def top_k(
         )
     if col_type.startswith(("array", "map", "struct")):
         raise ValueError(f"top_k needs a scalar column; {column!r} is {col_type}")
-    wide = side.get("layout", "nested") == "wide"
     cat = (
         "i" if col_type in _CW_INT_TYPES
         else "s" if col_type == "string"
@@ -2392,143 +1796,27 @@ def top_k(
         return t < b if descending else b < t
 
     def _scan_blocks(fpath, pq_mod):
-        """One file's (bounds, getter): per-block rank bound (None =
-        unknown, never skippable) and a lazy (meta, data) accessor. Wide
-        layout reads ONLY the stats column up front; payload is read on
-        the first actual access."""
-        if wide:
-            avail = set(pq_mod.read_schema(fpath).names)
-            bcol = f"c_{column}__{bound_field}" if bound_field else None
-            stat_cols = [bcol] if bcol is not None and bcol in avail else []
-            fstat: list[tuple] = []
-            if conj is not None:
-                for col, _values, _lo, _hi, fcat in conj:
-                    zmin, zmax = _ZONE_SUFFIXES[fcat]
-                    trip = tuple(
-                        n if n in avail else None
-                        for n in (f"c_{col}__{zmin}", f"c_{col}__{zmax}",
-                                  f"c_{col}__n_null")
-                    )
-                    fstat.append(trip)
-                    stat_cols += [n for n in trip if n is not None]
-            if stat_cols:
-                st = pq_mod.read_table(fpath, columns=sorted(set(stat_cols)))
-                n_blocks = st.num_rows
-            else:
-                st = None
-                n_blocks = pq_mod.read_metadata(fpath).num_rows
-            if bcol is not None and bcol in avail:
-                bounds = st.column(bcol).to_pylist()
-            else:
-                bounds = [None] * n_blocks
-            kinds = [None] * n_blocks
-            if conj is not None:
-                for i in range(n_blocks):
-                    kinds[i] = _classify_where(conj, [
-                        tuple(
-                            st.column(n)[i].as_py() if n is not None else None
-                            for n in trip
-                        )
-                        for trip in fstat
-                    ])
-            state = {}
-
-            def getter(i):
-                if "m" not in state:
-                    pay = pq_mod.read_table(
-                        fpath,
-                        columns=[f"c_{column}__meta", f"c_{column}__data"],
-                    )
-                    state["m"] = pay.column(f"c_{column}__meta").combine_chunks()
-                    state["d"] = pay.column(f"c_{column}__data").combine_chunks()
-                return state["m"][i].as_py(), state["d"][i].as_py()
-
-            def fpair(i):
-                # lazy filter-column payload, read once per file and only
-                # when some boundary block actually needs the mask
-                def pair(col):
-                    kk = f"f_{col}"
-                    if kk not in state:
-                        pay = pq_mod.read_table(
-                            fpath,
-                            columns=[f"c_{col}__meta", f"c_{col}__data"],
-                        )
-                        state[kk] = (
-                            pay.column(f"c_{col}__meta").combine_chunks(),
-                            pay.column(f"c_{col}__data").combine_chunks(),
-                        )
-                    m, d = state[kk]
-                    return m[i].as_py(), d[i].as_py()
-
-                return pair
-
-            return bounds, kinds, getter, fpair
-        tbl = pq_mod.read_table(fpath, columns=["cols"])
-        cols_col = tbl.column("cols").combine_chunks()
-        entry_fields = {f.name for f in tbl.schema.field("cols").type.value_type}
-        have_bound = bound_field is not None and bound_field in entry_fields
-        handles = []
-        bounds = []
-        kinds = []
-        for row in range(len(cols_col)):
-            entries = cols_col[row].values
-            names = entries.field("name").to_pylist()
-            try:
-                zi = names.index(column)
-            except ValueError:
-                raise ValueError(
-                    f"block lacks an entry for {column!r}; the "
-                    f"sidecar schema and the blocks files disagree"
-                ) from None
-            handles.append((entries, zi, names))
-            bounds.append(
-                entries.field(bound_field)[zi].as_py() if have_bound else None
+        """One file's blocks as [(rank bound, kind, view, i)]: the bound
+        (None = unknown, never skippable) and the predicate kind come off
+        the file's BlockStats view; payload is read only on the first
+        block the walk actually folds."""
+        view = BlockStats(
+            fpath, pq_mod, [column] + [c[0] for c in conj or ()]
+        )
+        return [
+            (
+                view.stat(column, bound_field, i) if bound_field else None,
+                None if conj is None
+                else _classify_where(conj, _zones(conj, view, i)),
+                view,
+                i,
             )
-            if conj is None:
-                kinds.append(None)
-            else:
-                stats = []
-                for col, _values, _lo, _hi, fcat in conj:
-                    zmin, zmax = _ZONE_SUFFIXES[fcat]
-                    try:
-                        fi = names.index(col)
-                    except ValueError:
-                        raise ValueError(
-                            f"block lacks an entry for {col!r}; the "
-                            f"sidecar schema and the blocks files disagree"
-                        ) from None
-                    stats.append(tuple(
-                        entries.field(f)[fi].as_py()
-                        if f in entry_fields
-                        else None
-                        for f in (zmin, zmax, "n_null")
-                    ))
-                kinds.append(_classify_where(conj, stats))
+            for i in range(len(view))
+        ]
 
-        def getter(i):
-            entries, zi, _names = handles[i]
-            return (
-                entries.field("meta")[zi].as_py(),
-                entries.field("data")[zi].as_py(),
-            )
-
-        def fpair(i):
-            entries, _zi, names = handles[i]
-
-            def pair(col):
-                fi = names.index(col)
-                return (
-                    entries.field("meta")[fi].as_py(),
-                    entries.field("data")[fi].as_py(),
-                )
-
-            return pair
-
-        return bounds, kinds, getter, fpair
-
-    def _visit(order, getter_of, fpair_of, tally, kth0=None):
+    def _visit(order, tally, kth0=None):
         """Fold blocks in rank order into ``tally`` until the threshold
-        closes; ``order`` is [(bound, kind, key, i)] with unknown bounds
+        closes; ``order`` is [(bound, kind, view, i)] with unknown bounds
         first. Returns the final k-th value. Predicate-pruned blocks
         ``continue`` (the predicate skip is not rank-ordered); boundary
         blocks evaluate the conjunction codec-aware and fold MASKED
@@ -2546,7 +1834,7 @@ def top_k(
         block bounded exactly at it may hold the very copies the global
         top k needs."""
         kth = None
-        for b, kind, key, i in order:
+        for b, kind, view, i in order:
             if b is not None and (
                 (kth is not None and not _beats(b, kth))
                 or (kth0 is not None and _beats(kth0, b))
@@ -2556,11 +1844,13 @@ def top_k(
                 continue  # predicate skip: NOT rank-ordered, keep walking
             mask = None
             if kind == "boundary":
-                mask = _conj_boundary_mask(conj, fpair_of(key)(i))
+                mask = _conj_boundary_mask(
+                    conj, lambda c, view=view, i=i: view.payload(c, i)
+                )
                 if mask is None:
                     continue  # no row matched the predicate
             vals, counts, _n_null = value_counts_column(
-                *getter_of(key)(i), mask=mask
+                *view.payload(column, i), mask=mask
             )
             for v, c in zip(vals.to_pylist(), counts.tolist()):
                 tally[v] = tally.get(v, 0) + c
@@ -2591,27 +1881,13 @@ def top_k(
 
     walk = BlockWalk(out_path, local_bytes)
     if walk.local:
-        # pass 1: every block's rank bound (wide: stats columns only);
+        # pass 1: every block's rank bound (off the stats alone);
         # pass 2: ONE globally rank-ordered visit — payload IO happens per
         # file only when some block of it is actually folded
-        getters = {}
-        fpairs = {}
-        items = []
-        for fi, (bounds, kinds, getter, fpair) in enumerate(
-            walk.on_driver(_scan_blocks)
-        ):
-            getters[fi] = getter
-            fpairs[fi] = fpair
-            items += [
-                (b, kd, fi, i) for i, (b, kd) in enumerate(zip(bounds, kinds))
-            ]
         total: dict = {}
-        _visit(
-            _rank_order(items),
-            lambda key: getters[key],
-            lambda key: fpairs[key],
-            total,
-        )
+        _visit(_rank_order([
+            e for blocks in walk.on_driver(_scan_blocks) for e in blocks
+        ]), total)
         return _finish(total)
 
     # distributed: one column-pruned Spark scan over the blocks METADATA
@@ -2630,31 +1906,13 @@ def top_k(
     tau = None
     if guaranteed_field is not None and conj is None:
         blocks_df = spark.read.parquet(os.path.join(out_path, "blocks"))
-        gcol = ncol = None
-        if wide:
-            if (
-                f"c_{column}__{guaranteed_field}" in blocks_df.columns
-                and f"c_{column}__n_null" in blocks_df.columns
-                and "n_rows" in blocks_df.columns
-            ):
-                gcol = F.col(f"c_{column}__{guaranteed_field}")
-                ncol = F.col("n_rows") - F.col(f"c_{column}__n_null")
-        else:
-            efields = set(
-                blocks_df.schema["cols"].dataType.elementType.fieldNames()
-            )
-            if {guaranteed_field, "n_null"} <= efields and (
-                "n_rows" in blocks_df.columns
-            ):
-                entry = F.element_at(
-                    F.filter(F.col("cols"), lambda c: c["name"] == F.lit(column)),
-                    1,
-                )
-                gcol = entry[guaranteed_field]
-                ncol = F.col("n_rows") - entry["n_null"]
-        if gcol is not None:
+        gcol = zone_col(blocks_df, column, guaranteed_field)
+        nncol = zone_col(blocks_df, column, "n_null")
+        if gcol is not None and nncol is not None and (
+            "n_rows" in blocks_df.columns
+        ):
             g = blocks_df.select(
-                gcol.alias("g"), ncol.alias("cnt")
+                gcol.alias("g"), (F.col("n_rows") - nncol).alias("cnt")
             ).where(F.col("g").isNotNull() & (F.col("cnt") > 0))
             rows = g.orderBy(
                 F.desc("g") if descending else F.asc("g")
@@ -2668,17 +1926,8 @@ def top_k(
 
     def _walk_file(fpath, pq_mod):
         """One file's rank-ordered walk seeded with the global ``tau``."""
-        bounds, kinds, getter, fpair = _scan_blocks(fpath, pq_mod)
         tally: dict = {}
-        _visit(
-            _rank_order([
-                (bb, kd, 0, i) for i, (bb, kd) in enumerate(zip(bounds, kinds))
-            ]),
-            lambda _key: getter,
-            lambda _key: fpair,
-            tally,
-            kth0=tau,
-        )
+        _visit(_rank_order(_scan_blocks(fpath, pq_mod)), tally, kth0=tau)
         return tally
 
     per_file = walk.fan_out(
@@ -2925,7 +2174,6 @@ def time_bucket_count(
             f"time_bucket_count needs a timestamp/date/int column, got "
             f"{column} {col_type}"
         )
-    wide = side.get("layout", "nested") == "wide"
     conj = (
         _resolve_conjuncts(by_name, where, "time_bucket_count")
         if where is not None
@@ -2949,24 +2197,28 @@ def time_bucket_count(
             )
         return b
 
-    def _claim(vmin, vmax, n_null, br):
-        """(bucket, count) from zone metadata alone, or None: sound when
-        the stated tick bounds land in the SAME bucket (every non-null
-        row is between them, hence in that bucket); all-null blocks
-        contribute nothing (NULLs never count)."""
+    def _claim(tally, view, i):
+        """Fold one block's (bucket, count) from zone metadata alone, or
+        return False: sound when the stated tick bounds land in the SAME
+        bucket (every non-null row is between them, hence in that
+        bucket); all-null blocks contribute nothing (NULLs never
+        count)."""
+        vmin, vmax, n_null = view.zone(column, i, "i")
+        br = view.n_rows(i)
         if n_null is None:
-            return None
+            return False
         if n_null == br:
-            return ()  # provably empty contribution
+            return True  # provably empty contribution
         if vmin is None or vmax is None:
-            return None
+            return False
         b = _bucket(vmin)
         if b != _bucket(vmax):
-            return None
-        return (b, br - n_null)
+            return False
+        tally[b] = tally.get(b, 0) + br - n_null
+        return True
 
-    def _tally(tally, meta_json, data, mask=None):
-        vals, counts, _n_null = value_counts_column(meta_json, data, mask=mask)
+    def _tally(tally, pairs, mask):
+        vals, counts, _n_null = value_counts_column(*pairs[0], mask=mask)
         if not len(vals):
             return
         if pa.types.is_timestamp(vals.type):
@@ -3000,168 +2252,8 @@ def time_bucket_count(
 
     def _file_buckets(fpath, pq_mod):
         """One file's {bucket: count}; claimable blocks never touch
-        payload (wide layout: payload columns read only when some block
-        of the file needs the kernel)."""
-        tally: dict = {}
-        if wide:
-            avail = set(pq_mod.read_schema(fpath).names)
-            claim_want = [
-                "n_rows",
-                f"c_{column}__vmin_i", f"c_{column}__vmax_i",
-                f"c_{column}__n_null",
-            ]
-            have_claim = set(claim_want) <= avail
-            fstat: list[tuple] = []
-            if conj is not None:
-                for col, _values, _lo, _hi, cat in conj:
-                    zmin, zmax = _ZONE_SUFFIXES[cat]
-                    fstat.append(tuple(
-                        n if n in avail else None
-                        for n in (f"c_{col}__{zmin}", f"c_{col}__{zmax}",
-                                  f"c_{col}__n_null")
-                    ))
-            read_cols = (claim_want if have_claim else ["n_rows"]) + [
-                n for trip in fstat for n in trip if n is not None
-            ]
-            kernel_idx: list[int] = []
-            boundary_idx: list[int] = []
-            if (have_claim or conj is not None) and "n_rows" in avail:
-                st = pq_mod.read_table(fpath, columns=sorted(set(read_cols)))
-                rows_col = st.column("n_rows")
-                for i in range(st.num_rows):
-                    br = rows_col[i].as_py()
-                    if not br:
-                        continue
-                    if conj is not None:
-                        kind = _classify_where(conj, [
-                            tuple(
-                                st.column(n)[i].as_py()
-                                if n is not None
-                                else None
-                                for n in trip
-                            )
-                            for trip in fstat
-                        ])
-                        if kind == "pruned":
-                            continue
-                        if kind == "boundary":
-                            boundary_idx.append(i)
-                            continue
-                    claim = _claim(
-                        st.column(f"c_{column}__vmin_i")[i].as_py(),
-                        st.column(f"c_{column}__vmax_i")[i].as_py(),
-                        st.column(f"c_{column}__n_null")[i].as_py(),
-                        br,
-                    ) if have_claim else None
-                    if claim is not None:
-                        if claim:
-                            b, c = claim
-                            tally[b] = tally.get(b, 0) + c
-                    else:
-                        kernel_idx.append(i)
-            elif conj is not None:
-                boundary_idx = list(range(pq_mod.read_metadata(fpath).num_rows))
-            else:
-                kernel_idx = list(range(pq_mod.read_metadata(fpath).num_rows))
-            if kernel_idx or boundary_idx:
-                cols = [f"c_{column}__meta", f"c_{column}__data"]
-                if boundary_idx:
-                    cols += [
-                        x for col, _v, _l, _h, _c in conj
-                        for x in (f"c_{col}__meta", f"c_{col}__data")
-                    ]
-                cols = list(dict.fromkeys(cols))
-                pay = pq_mod.read_table(fpath, columns=cols)
-                arrays = {c: pay.column(c).combine_chunks() for c in cols}
-                for i in kernel_idx:
-                    _tally(
-                        tally,
-                        arrays[f"c_{column}__meta"][i].as_py(),
-                        arrays[f"c_{column}__data"][i].as_py(),
-                    )
-                for i in boundary_idx:
-                    mask = _conj_boundary_mask(conj, lambda c, i=i: (
-                        arrays[f"c_{c}__meta"][i].as_py(),
-                        arrays[f"c_{c}__data"][i].as_py(),
-                    ))
-                    if mask is None:
-                        continue
-                    _tally(
-                        tally,
-                        arrays[f"c_{column}__meta"][i].as_py(),
-                        arrays[f"c_{column}__data"][i].as_py(),
-                        mask=mask,
-                    )
-        else:
-            tbl = pq_mod.read_table(fpath, columns=["n_rows", "cols"])
-            cols_col = tbl.column("cols").combine_chunks()
-            rows_col = tbl.column("n_rows")
-            entry_fields = {
-                f.name for f in tbl.schema.field("cols").type.value_type
-            }
-            has_stats = {"n_null", "vmin_i", "vmax_i"} <= entry_fields
-            for row in range(len(cols_col)):
-                entries = cols_col[row].values
-                names = entries.field("name").to_pylist()
-                try:
-                    zi = names.index(column)
-                except ValueError:
-                    raise ValueError(
-                        f"block lacks an entry for {column!r}; the "
-                        f"sidecar schema and the blocks files disagree"
-                    ) from None
-                br = rows_col[row].as_py()
-                if not br:
-                    continue
-                mask = None
-                if conj is not None:
-                    stats = []
-                    for col, _values, _lo, _hi, cat in conj:
-                        zmin, zmax = _ZONE_SUFFIXES[cat]
-                        try:
-                            fi = names.index(col)
-                        except ValueError:
-                            raise ValueError(
-                                f"block lacks an entry for {col!r}; the "
-                                f"sidecar schema and the blocks files "
-                                f"disagree"
-                            ) from None
-                        stats.append(tuple(
-                            entries.field(f)[fi].as_py()
-                            if f in entry_fields
-                            else None
-                            for f in (zmin, zmax, "n_null")
-                        ))
-                    kind = _classify_where(conj, stats)
-                    if kind == "pruned":
-                        continue
-                    if kind == "boundary":
-                        mask = _conj_boundary_mask(conj, lambda c: (
-                            entries.field("meta")[names.index(c)].as_py(),
-                            entries.field("data")[names.index(c)].as_py(),
-                        ))
-                        if mask is None:
-                            continue
-                claim = None
-                if has_stats and mask is None:
-                    claim = _claim(
-                        entries.field("vmin_i")[zi].as_py(),
-                        entries.field("vmax_i")[zi].as_py(),
-                        entries.field("n_null")[zi].as_py(),
-                        br,
-                    )
-                if claim is not None:
-                    if claim:
-                        b, c = claim
-                        tally[b] = tally.get(b, 0) + c
-                else:
-                    _tally(
-                        tally,
-                        entries.field("meta")[zi].as_py(),
-                        entries.field("data")[zi].as_py(),
-                        mask=mask,
-                    )
-        return tally
+        payload."""
+        return _fold_blocks_file(fpath, pq_mod, [column], conj, _tally, _claim)
 
     def _finish(total: dict):
         return local_frame(

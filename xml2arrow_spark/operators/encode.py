@@ -49,6 +49,8 @@ __all__ = [
     "BLOCKS_SCHEMA_DDL",
     "blocks_metadata",
     "wide_blocks_ddl",
+    "BlockStats",
+    "zone_col",
 ]
 
 BLOCKS_SCHEMA_DDL = (
@@ -405,6 +407,155 @@ def _widen_block(row_batch: pa.RecordBatch, cols: list[str]) -> pa.RecordBatch:
             f"c_{name}__n_null", f"c_{name}__zsum_i",
         ]
     return pa.RecordBatch.from_arrays(arrays, names=names)
+
+
+# the zone-bound stat pair per predicate category (int, double, string)
+_ZONE_SUFFIXES = {"i": ("vmin_i", "vmax_i"), "d": ("vmin_d", "vmax_d"),
+                  "s": ("vmin_s", "vmax_s")}
+_STAT_FIELDS = ("vmin_i", "vmax_i", "vmin_d", "vmax_d", "vmin_s", "vmax_s",
+                "n_null", "zsum_i")
+
+
+def _lacks(col: str) -> ValueError:
+    return ValueError(
+        f"block lacks an entry for {col!r}; the sidecar schema and the "
+        f"blocks files disagree"
+    )
+
+
+class BlockStats:
+    """Read-side view of one blocks file, the same on both layouts: the
+    nested ``cols`` array<struct> (``_BLOCKS_PA_SCHEMA``) and the wide
+    top-level ``c_<col>__<field>`` columns (:func:`wide_pa_schema`).
+
+    Opened with the columns whose stats or payload a walk may need; block
+    ``i`` then offers ``n_rows(i)``, ``zone(col, i, cat)`` (the
+    ``(zmin, zmax, n_null)`` triple of a predicate category),
+    ``stat(col, field, i)`` (one stat: ``zsum_i``, the int extrema, ...)
+    and ``payload(col, i)`` (the ``(meta, data)`` pair). A stat field the
+    file does not store reads as None (older blocks, ``zone_maps=False``);
+    a column the file or any of its blocks lacks raises.
+
+    IO: the file is opened once and read once up front — ``n_rows`` and
+    ``cols`` on the nested layout; ``n_rows`` and the opened columns' stats
+    on the wide layout, whose payload columns come in one further
+    ``read_table`` on the first ``payload`` call, so a walk that prunes or
+    claims every block reads no payload bytes."""
+
+    def __init__(self, fpath: str, pq_mod, cols: list[str]):
+        self._fpath, self._pq = fpath, pq_mod
+        self._cols = list(dict.fromkeys(cols))
+        self._cache: dict = {}  # (col, field) -> per-block values or None
+        with pq_mod.ParquetFile(fpath) as pf:
+            names = pf.schema_arrow.names
+            nested = "cols" in names
+            if nested:
+                want = ["n_rows", "cols"]
+            else:
+                for c in self._cols:
+                    if f"c_{c}__meta" not in names or f"c_{c}__data" not in names:
+                        raise _lacks(c)
+                want = ["n_rows"] + [
+                    n for c in self._cols for f in _STAT_FIELDS
+                    if (n := f"c_{c}__{f}") in names
+                ]
+            tbl = pf.read(columns=want)
+        self._rows = tbl.column("n_rows").to_pylist()
+        if nested:
+            lists = tbl.column("cols").combine_chunks()
+            self._entries = lists.values  # every block's entries, flat
+            self._fields: dict = {}  # field -> values over all entries
+            offs = lists.offsets.to_pylist()
+            ent_names = self._entries.field("name").to_pylist()
+            # per column: the index of each block's entry for it
+            self._at = {}
+            for c in self._cols:
+                try:
+                    self._at[c] = [
+                        ent_names.index(c, offs[b], offs[b + 1])
+                        for b in range(len(self._rows))
+                    ]
+                except ValueError:
+                    raise _lacks(c) from None
+            pair = (self._entries.field("meta"), self._entries.field("data"))
+            self._pay = dict.fromkeys(self._cols, pair)
+        else:
+            self._entries = None
+            self._stats = tbl
+            self._at = dict.fromkeys(self._cols, range(len(self._rows)))
+            self._pay = None  # read on the first payload() call
+
+    def __len__(self) -> int:
+        return len(self._rows)
+
+    def n_rows(self, i: int) -> int:
+        return self._rows[i]
+
+    def _per_block(self, col: str, field: str):
+        """``field`` of ``col`` for every block, or None when unstored."""
+        key = (col, field)
+        if key not in self._cache:
+            at = self._at[col]
+            if self._entries is None:
+                name = f"c_{col}__{field}"
+                vals = (
+                    self._stats.column(name).to_pylist()
+                    if name in self._stats.column_names
+                    else None
+                )
+            else:
+                if field not in self._fields:
+                    self._fields[field] = (
+                        self._entries.field(field).to_pylist()
+                        if self._entries.type.get_field_index(field) >= 0
+                        else None
+                    )
+                vals = self._fields[field]
+                vals = None if vals is None else [vals[j] for j in at]
+            self._cache[key] = vals
+        return self._cache[key]
+
+    def stat(self, col: str, field: str, i: int):
+        vals = self._per_block(col, field)
+        return None if vals is None else vals[i]
+
+    def zone(self, col: str, i: int, cat: str) -> tuple:
+        zmin, zmax = _ZONE_SUFFIXES[cat]
+        return (self.stat(col, zmin, i), self.stat(col, zmax, i),
+                self.stat(col, "n_null", i))
+
+    def payload(self, col: str, i: int) -> tuple:
+        if self._pay is None:
+            tbl = self._pq.read_table(self._fpath, columns=[
+                x for c in self._cols for x in (f"c_{c}__meta", f"c_{c}__data")
+            ])
+            self._pay = {
+                c: (tbl.column(f"c_{c}__meta").combine_chunks(),
+                    tbl.column(f"c_{c}__data").combine_chunks())
+                for c in self._cols
+            }
+        meta, data = self._pay[col]
+        j = self._at[col][i]
+        return meta[j].as_py(), data[j].as_py()
+
+
+def zone_col(blocks_df, column: str, field: str):
+    """The Spark Column of one per-block stat of ``column`` (``field``:
+    one of vmin_i .. zsum_i) on either blocks layout — the Spark-side
+    twin of :class:`BlockStats`. None when the table does not store that
+    stat; on the nested layout a block without an entry for ``column``
+    reads NULL."""
+    from pyspark.sql import functions as F
+
+    if "cols" in blocks_df.columns:
+        entry_type = blocks_df.schema["cols"].dataType.elementType
+        if field not in entry_type.fieldNames():
+            return None
+        return F.element_at(
+            F.filter(F.col("cols"), lambda c: c["name"] == F.lit(column)), 1
+        )[field]
+    name = f"c_{column}__{field}"
+    return F.col(name) if name in blocks_df.columns else None
 
 
 def encode_table(
@@ -842,16 +993,11 @@ def _prune_keep_cond(blocks_df, column: str, lo, hi):
     always keep), composable into conjunctions and disjunctions."""
     from pyspark.sql import functions as F
 
-    suffix_min, suffix_max = _zone_suffixes(lo, hi)
-    if "cols" not in blocks_df.columns:  # wide layout
-        vmin = F.col(f"c_{column}__{suffix_min}")
-        vmax = F.col(f"c_{column}__{suffix_max}")
-    else:
-        entry = F.element_at(
-            F.filter(F.col("cols"), lambda c: c["name"] == F.lit(column)), 1
-        )
-        vmin = entry[suffix_min]
-        vmax = entry[suffix_max]
+    vmin, vmax = (
+        zone_col(blocks_df, column, f) for f in _zone_suffixes(lo, hi)
+    )
+    if vmin is None or vmax is None:  # stats not stored: nothing to prune on
+        return F.lit(True)
     cond = None
     if lo is not None:
         cond = F.lit(lo) <= vmax
@@ -898,16 +1044,12 @@ def prune_blocks_any(blocks_df, column: str, values: list):
 
     if not values:
         return blocks_df
-    suffix_min, suffix_max = _zone_suffixes(values[0], values[0])
-    if "cols" not in blocks_df.columns:  # wide layout
-        vmin = F.col(f"c_{column}__{suffix_min}")
-        vmax = F.col(f"c_{column}__{suffix_max}")
-    else:
-        entry = F.element_at(
-            F.filter(F.col("cols"), lambda c: c["name"] == F.lit(column)), 1
-        )
-        vmin = entry[suffix_min]
-        vmax = entry[suffix_max]
+    vmin, vmax = (
+        zone_col(blocks_df, column, f)
+        for f in _zone_suffixes(values[0], values[0])
+    )
+    if vmin is None or vmax is None:  # stats not stored: nothing to prune on
+        return blocks_df
     arr = F.array(*[F.lit(v) for v in values])
     keep = (
         vmin.isNull()

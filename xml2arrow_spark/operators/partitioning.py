@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["with_work_bucket", "repartition_by_work", "salt_skewed", "explain_partitioning", "widen_scan"]
+__all__ = ["with_work_bucket", "repartition_by_work", "salt_skewed", "widen_scan"]
 
 
 def widen_scan(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
@@ -109,19 +109,3 @@ def salt_skewed(
         ),
     )
 
-
-def detect_skewed_keys(df: DataFrame, key_col: str, threshold: float = 0.2) -> list[str]:
-    """Keys holding more than ``threshold`` of rows (one small agg job)."""
-    total = df.count()
-    if total == 0:
-        return []
-    counts = df.groupBy(key_col).count()
-    rows = counts.filter(F.col("count") > threshold * total).collect()
-    return [r[key_col] for r in rows]
-
-
-def explain_partitioning(df: DataFrame) -> str:
-    """Formatted physical plan — for plan audits in tests/benchmarks."""
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )

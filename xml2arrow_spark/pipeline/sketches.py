@@ -242,7 +242,6 @@ def group_distinct_est(
             f"{column} {val_type}: the portable KMV hash is integer "
             f"arithmetic (fingerprint strings first)"
         )
-    wide = side.get("layout", "nested") == "wide"
     conj = (
         _resolve_conjuncts(by_name, where, "group_distinct_est")
         if where is not None
@@ -278,8 +277,7 @@ def group_distinct_est(
     def _file_hashes(fpath, pq_mod):
         """One file's {key_or_None: sorted <=k smallest distinct hashes}."""
         return _fold_blocks_file(
-            fpath, pq_mod, key_cols + [column], conj, wide, _block_hashes,
-            f"{key_cols!r}/{column!r}",
+            fpath, pq_mod, key_cols + [column], conj, _block_hashes
         )
 
     def _estimate(hashes: list) -> int:
@@ -390,7 +388,6 @@ def group_distinct(
             f"{column} {val_type}: float DISTINCT is not portable (SQL "
             f"treats NaNs as equal, IEEE does not)"
         )
-    wide = side.get("layout", "nested") == "wide"
     conj = (
         _resolve_conjuncts(by_name, where, "group_distinct")
         if where is not None
@@ -462,8 +459,7 @@ def group_distinct(
     def _file_pairs(fpath, pq_mod):
         """One file's {key_or_None: set of distinct values}."""
         return _fold_blocks_file(
-            fpath, pq_mod, key_cols + [column], conj, wide, _block_pairs,
-            f"{key_cols!r}/{column!r}",
+            fpath, pq_mod, key_cols + [column], conj, _block_pairs
         )
 
     key_ddl = ", ".join(by_name[kc] for kc in key_cols)

@@ -217,6 +217,46 @@ def test_sum_overflow_refuses_not_wraps(spark, tmp_path):
     with pytest.raises(Exception, match="int64"):
         count_where(spark, out, ("id", 1, 7), agg_col="big").collect()
 
+    # ONE int64 rule, on the TOTAL, on both paths: per-file sums that
+    # leave int64 but cancel across files answer; per-file sums that fit
+    # but overflow in total refuse with the engine's own text
+    cancel = _files_store(spark, tmp_path / "cancel", [[2**62] * 4, [-(2**62)] * 4])
+    local, dist = _both_paths(spark, cancel, ("id", 0, 7), agg_col="big")
+    assert local == dist
+    assert local[0]["n_sum"] == 0 and local[0]["n_match"] == 8
+    over = _files_store(spark, tmp_path / "over", [[2**60] * 4] * 3)
+    local, dist = _both_paths(spark, over, ("id", 0, 11), agg_col="big")
+    assert local == dist and "outside int64" in local
+
+
+def _files_store(spark, base, files) -> str:
+    """A dataset encoded from one source file per ``files`` entry (one
+    blocks file each): ``id`` counts up across files, ``big`` holds the
+    entry's int64 values."""
+    src, out = str(base / "src"), str(base / "ds")
+    os.makedirs(src)
+    lo = 0
+    for j, vals in enumerate(files):
+        ids = pa.array(np.arange(lo, lo + len(vals), dtype=np.int64))
+        pq.write_table(pa.table({"id": ids, "big": pa.array(vals, type=pa.int64())}),
+                       os.path.join(src, f"part-{j}.parquet"))
+        lo += len(vals)
+    encode_parquet_dataset(spark, src, out)
+    return out
+
+
+def _both_paths(spark, out, predicate, **kw) -> list:
+    """count_where's rows, or its int64 refusal text, on the driver path
+    and then the distributed path."""
+    got = []
+    for lb in (128 << 20, 0):
+        try:
+            got.append(count_where(spark, out, predicate, local_bytes=lb, **kw)
+                       .collect())
+        except ArithmeticError as e:
+            got.append(str(e))
+    return got
+
 
 def test_sum_validation(spark, ds):
     with pytest.raises(ValueError, match="integer column"):

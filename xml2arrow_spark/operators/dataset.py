@@ -831,8 +831,11 @@ def count_where(
     Execution is scale-adaptive through
     :class:`~xml2arrow_spark.sources.files.BlockWalk`: a blocks tree of at
     most ``local_bytes`` (default 128 MiB) answers driver-side, a larger
-    one fans the identical per-file routine out over executors;
-    ``local_bytes=0`` forces the distributed path.
+    one fans the identical per-file routine out over executors in one
+    job; ``local_bytes=0`` forces the distributed path. Either way the
+    per-file tallies fold on the driver and the int64 refusal applies to
+    the TOTAL sum, so both paths answer (or refuse) alike; the call is
+    eager and the returned frame is driver-local.
 
     ``predicate`` is one conjunct or a list (conjunction). Each conjunct
     is a 3-tuple ``(column, lo, hi)`` — inclusive bounds, either side may
@@ -854,8 +857,6 @@ def count_where(
     no-silent-caps rule).
     """
     import yaml
-
-    from pyspark.sql import functions as F
 
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
@@ -1072,25 +1073,10 @@ def count_where(
         return acc[:8]
 
     walk = BlockWalk(out_path, local_bytes)
-    if walk.local:
-        acc = functools.reduce(_fold, walk.on_driver(_process_file), zero)
-        df = local_frame(spark, out_ddl, [_finish(acc)])
-    else:
-        df = walk.fan_out(
-            spark, _process_file, lambda t: [_finish(t)], out_ddl, n_tasks
-        ).agg(
-            F.sum("n_match").alias("n_match"),
-            F.sum("n_blocks").alias("n_blocks"),
-            F.sum("n_pruned").alias("n_pruned"),
-            F.sum("n_interior").alias("n_interior"),
-            F.sum("n_boundary").alias("n_boundary"),
-            # SQL aggregates: files with no non-null contribution yield
-            # NULL, and sum/min/max skip them; all-NULL -> NULL, the empty
-            # result
-            F.sum("n_sum").alias("n_sum"),
-            F.min("n_min").alias("n_min"),
-            F.max("n_max").alias("n_max"),
-        )
+    acc = functools.reduce(
+        _fold, walk.partials(spark, _process_file, n_tasks), zero
+    )
+    df = local_frame(spark, out_ddl, [_finish(acc)])
     return df if agg_col is not None else df.drop("n_sum", "n_min", "n_max")
 
 
@@ -1145,7 +1131,7 @@ def _group_count_composite(
     walk = BlockWalk(out_path, local_bytes)
     if walk.local:
         total: dict = {}
-        for fc in walk.on_driver(_file_counts):
+        for fc in walk.partials(spark, _file_counts):
             for kt, c in fc.items():
                 total[kt] = total.get(kt, 0) + c
         return local_frame(spark, out_ddl, _rows(total))
@@ -1292,7 +1278,7 @@ def group_count(
     walk = BlockWalk(out_path, local_bytes)
     if walk.local:
         total: dict = {}
-        for fc in walk.on_driver(_file_counts):
+        for fc in walk.partials(spark, _file_counts):
             for v, c in fc.items():
                 total[v] = total.get(v, 0) + c
         return local_frame(spark, out_ddl, total.items())
@@ -1359,7 +1345,7 @@ def _group_aggs_walk(
     walk = BlockWalk(out_path, local_bytes)
     if walk.local:
         total: dict = {}
-        for fs_ in walk.on_driver(file_sums):
+        for fs_ in walk.partials(spark, file_sums):
             for kt, (c, trips) in fs_.items():
                 _merge_aggs(total, kt, c, trips)
         rows = []
@@ -1726,10 +1712,11 @@ def top_k(
     vmax may not be) with one column-pruned Spark scan over the blocks
     metadata, then each file task runs the rank-ordered routine over ITS
     blocks seeded with that global threshold — a task whose best block
-    cannot beat it skips the whole file after a single stats read, and
-    only (value, count) partials bounded by k per file return to the
-    driver. Both paths pinned equal — and pinned to SKIP, via payload
-    tampering — in tests.
+    cannot beat it skips the whole file after a single stats read. Each
+    file's (value -> count) tally, bounded by k per file, comes back
+    through :meth:`~xml2arrow_spark.sources.files.BlockWalk.partials` and
+    merges on the driver, so the call is eager on both paths. Both paths
+    pinned equal — and pinned to SKIP, via payload tampering — in tests.
 
     ``where`` (the same range / IN-list conjunctions as
     :func:`count_where`) restricts the ranking to the matching rows:
@@ -1886,7 +1873,7 @@ def top_k(
         # file only when some block of it is actually folded
         total: dict = {}
         _visit(_rank_order([
-            e for blocks in walk.on_driver(_scan_blocks) for e in blocks
+            e for blocks in walk.partials(spark, _scan_blocks) for e in blocks
         ]), total)
         return _finish(total)
 
@@ -1930,16 +1917,13 @@ def top_k(
         _visit(_rank_order(_scan_blocks(fpath, pq_mod)), tally, kth0=tau)
         return tally
 
-    per_file = walk.fan_out(
-        spark, _walk_file, dict.items, f"{by_name[column]}, cnt bigint", n_tasks
-    )
     # per-file partials are bounded by k+1 distinct values each — KB-scale
-    # metadata, collected and merged driver-side (the repo's KB-metadata
-    # ground rule: a second Spark job would cost more than the merge)
+    # metadata, merged driver-side (the repo's KB-metadata ground rule: a
+    # second Spark job would cost more than the merge)
     total: dict = {}
-    for row in per_file.collect():
-        v, c = row[0], row[1]
-        total[v] = total.get(v, 0) + c
+    for tally in walk.partials(spark, _walk_file, n_tasks):
+        for v, c in tally.items():
+            total[v] = total.get(v, 0) + c
     return _finish(total)
 
 
@@ -2120,12 +2104,12 @@ def time_bucket_count(
     """Exact fixed-width time-bucket rollup — ``SELECT floor((ticks -
     origin) / width) AS bucket, COUNT(*) GROUP BY bucket`` over a stored
     dataset's timestamp/date (or integer) column, with the bucketing done
-    INSIDE the per-block walk so the shuffle carries (bucket, count)
-    pairs, never per-value tallies: unlike :func:`group_count` /
+    INSIDE the per-block walk so each file's partial is a {bucket: count}
+    tally, never per-value tallies: unlike :func:`group_count` /
     :func:`value_histogram`, whose envelope is the column's cardinality,
     this stays KB-scale on a NEAR-UNIQUE column — exactly the shape of
     event timestamps, where "rows per day over 10^12 events" must not
-    ship 10^12 distinct micros through a shuffle.
+    ship 10^12 distinct micros off the executors.
 
     ``width``/``origin`` are storage-unit ticks (epoch micros for Spark
     timestamps, days for date32 — the unit the zone stats share, same
@@ -2142,14 +2126,14 @@ def time_bucket_count(
     skip, interior blocks take the unmasked path, straddlers mask).
 
     Scale-adaptive through
-    :class:`~xml2arrow_spark.sources.files.BlockWalk`. Returns a
+    :class:`~xml2arrow_spark.sources.files.BlockWalk`: the per-file
+    tallies fold on the driver on both paths (one fan-out job above
+    ``local_bytes``, no shuffle), so the call is eager. Returns a
     DataFrame ``(bucket bigint, bucket_start bigint, cnt bigint)`` — non-empty
     buckets only, ordered by bucket; ``bucket_start = origin +
     bucket * width`` (ticks) for direct rendering.
     """
     import yaml
-
-    from pyspark.sql import functions as F
 
     from xml2arrow_spark.operators.blocks import value_counts_column
     from xml2arrow_spark.operators.encode import split_schema_ddl
@@ -2255,32 +2239,17 @@ def time_bucket_count(
         payload."""
         return _fold_blocks_file(fpath, pq_mod, [column], conj, _tally, _claim)
 
-    def _finish(total: dict):
-        return local_frame(
-            spark, "bucket bigint, bucket_start bigint, cnt bigint",
-            [(b, origin + b * width, c) for b, c in sorted(total.items())],
-        )
-
     walk = BlockWalk(out_path, local_bytes)
-    if walk.local:
-        total: dict = {}
-        for fb in walk.on_driver(_file_buckets):
-            for b, c in fb.items():
-                total[b] = total.get(b, 0) + c
-        return _finish(total)
-    per_file = walk.fan_out(
-        spark, _file_buckets, dict.items, "bucket bigint, cnt bigint", n_tasks
+    total: dict = {}
+    for fb in walk.partials(spark, _file_buckets, n_tasks):
+        for b, c in fb.items():
+            total[b] = total.get(b, 0) + c
+    # labels in unbounded python ints: origin + bucket*width cannot wrap
+    # on an intermediate even when bucket_start itself fits int64
+    return local_frame(
+        spark, "bucket bigint, bucket_start bigint, cnt bigint",
+        [(b, origin + b * width, c) for b, c in sorted(total.items())],
     )
-    # KB-scale finish (one row per bucket): collect and label driver-side
-    # in unbounded python ints — a Spark-side origin + bucket*width would
-    # ANSI-overflow on the bucket*width INTERMEDIATE for extreme origins
-    # even when bucket_start itself fits int64 (false refusal)
-    total = {
-        r["bucket"]: r["cnt"]
-        for r in per_file.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
-        .collect()
-    }
-    return _finish(total)
 
 
 def top_k_rows(

@@ -290,7 +290,7 @@ def group_distinct_est(
     walk = BlockWalk(out_path, local_bytes)
     if walk.local:
         total: dict = {}
-        for fh in walk.on_driver(_file_hashes):
+        for fh in walk.partials(spark, _file_hashes):
             for kv, hs in fh.items():
                 total[kv] = _kmv_merge(total.get(kv, []), hs, k)
         return local_frame(spark, f"{key_ddl}, n_distinct_est bigint", [
@@ -466,7 +466,7 @@ def group_distinct(
     walk = BlockWalk(out_path, local_bytes)
     if walk.local:
         total: dict = {}
-        for fps in walk.on_driver(_file_pairs):
+        for fps in walk.partials(spark, _file_pairs):
             for kv, vs in fps.items():
                 total.setdefault(kv, set()).update(vs)
             _cap_check(total, "the merged tally across files")

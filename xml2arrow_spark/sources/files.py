@@ -30,6 +30,7 @@ Scale notes (1000-executor / 100 TB):
 from __future__ import annotations
 
 import os
+import pickle
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -244,8 +245,8 @@ class BlockWalk:
     time_bucket_count and the sketches walks). An operator supplies only
     its own logic — a per-file routine ``per_file(path, pyarrow.parquet)``
     that classifies blocks pruned / interior / boundary and folds what
-    survives, its driver fold and finish, and its Spark combine — and the
-    walk supplies the rest:
+    survives, plus its driver fold and finish — and the walk supplies the
+    rest:
 
     - **One size decision.** ``local`` is True when the tree's files total
       at most ``local_bytes`` (a conservative stand-in for what the stat
@@ -253,30 +254,50 @@ class BlockWalk:
       DRIVER-SIDE: a cluster job to scan kilobytes of block stats costs
       more than the scan (the KB-metadata ground rule). ``local_bytes=0``
       forces the distributed path.
-    - **The driver loop** (:meth:`on_driver`) runs ``per_file`` over the
-      files in order, so the caller's fold stays bit-deterministic.
+    - **Every file's partial, on either path** (:meth:`partials`): the
+      driver loop, or one fan-out job whose partials come back pickled —
+      so an op with a bounded partial per file has ONE driver fold.
     - **One fan-out** (:meth:`fan_out`) plans file tasks from the same
       listing (one tree walk per op) and runs the identical ``per_file``
-      in one ``mapInArrow`` worker fn.
+      in one ``mapInArrow`` worker fn. Only ops whose partials are
+      O(groups) per file combine the rows in Spark; a driver fold over
+      them would be unbounded.
     """
 
     def __init__(self, out_path: str, local_bytes: int):
         self.infos = parquet_file_infos(os.path.join(out_path, "blocks"))
         self.local = sum(s for _p, s in self.infos) <= local_bytes
 
-    def on_driver(self, per_file):
-        """``per_file(path, pyarrow.parquet)`` for every file IN ORDER,
-        lazily, on the driver.
+    def partials(
+        self, spark: SparkSession, per_file, n_tasks: int | None = None
+    ):
+        """Every file's ``per_file(path, pyarrow.parquet)`` result, ready
+        for a driver-side fold.
 
+        When ``local``, a lazy driver loop over the files IN ORDER.
         Deliberately SEQUENTIAL: a ThreadPoolExecutor variant was
         measured at sf1.0/local[32] and made every metadata-aggregate local
         dispatch ~2x SLOWER (group_sum 0.63 s -> 1.63 s, count_where[str]
         0.37 s -> 1.37 s, group_aggs 1.5 s -> 2.4 s): the per-file work is
         dominated by many SMALL per-block numpy/python steps that hold the
-        GIL, so threads only add contention."""
+        GIL, so threads only add contention.
+
+        Otherwise ONE fan-out job, run before this returns: each file
+        ships its partial pickled as one ``p binary`` row and the driver
+        unpickles it, so the fold sees the same Python objects on both
+        paths and no op declares a partial schema. The rows arrive in
+        task order, not file order, so the fold must not depend on order.
+        Only for partials bounded per file; ``per_file`` and its result
+        must pickle."""
         import pyarrow.parquet as pq
 
-        return (per_file(fp, pq) for fp, _s in self.infos)
+        if self.local:
+            return (per_file(fp, pq) for fp, _s in self.infos)
+        rows = self.fan_out(
+            spark, per_file, lambda part: [(pickle.dumps(part),)],
+            "p binary", n_tasks,
+        ).collect()
+        return [pickle.loads(r[0]) for r in rows]
 
     def fan_out(
         self, spark: SparkSession, per_file, to_rows, ddl: str,
@@ -285,8 +306,9 @@ class BlockWalk:
         """DataFrame (schema ``ddl``) of every file's partial: each file
         task runs ``per_file(path, pyarrow.parquet)`` on its files and
         ships ``to_rows(partial)`` — row tuples under ``ddl``; an empty
-        result ships nothing. The caller combines the rows in Spark.
-        ``per_file`` and ``to_rows`` must pickle."""
+        result ships nothing. The caller combines the rows in Spark, or
+        :meth:`partials` collects them. ``per_file`` and ``to_rows`` must
+        pickle."""
         struct, schema = _arrow_schema(ddl)
 
         def walk_files(batches):

@@ -193,7 +193,7 @@ def test_every_worker_fn_calls_task_setup_first():
                                   fn.name if fn is not None else None))
                     if fn is None or not _calls_prologue_first(fn):
                         offenders.append(where)
-    assert len(sites) == 28  # the lint really found the engine's worker fns
+    assert len(sites) == 27  # the lint really found the engine's worker fns
     assert (os.path.join("sources", "files.py"), "walk_files") in sites
     assert offenders == []
 
@@ -217,7 +217,14 @@ def test_only_the_task_format_module_reads_task_paths():
 _LAYOUT_BLIND = (
     "_fold_blocks_file", "count_where", "group_count",
     "_group_count_composite", "group_aggs", "_group_aggs_composite",
-    "top_k", "time_bucket_count",
+    "top_k", "time_bucket_count", "decode_dataset",
+)
+# the decode loop and decode_table, beside the view in operators/encode.py
+_LAYOUT_BLIND_ENCODE = ("decode_blocks", "decode_table")
+# modules that read the blocks format only through operators/encode.py
+_LAYOUT_BLIND_MODULES = (
+    os.path.join("pipeline", "sketches.py"),
+    os.path.join("operators", "bloomidx.py"),
 )
 
 
@@ -247,24 +254,30 @@ def _layout_knowledge(tree) -> list[str]:
 
 
 def test_claiming_walks_do_not_know_the_blocks_layout():
-    """Lint: the metadata-aggregate walks read the blocks format only
-    through operators/encode.py (``BlockStats`` on pyarrow, ``zone_col``
-    on Spark), never by naming a layout's columns themselves."""
+    """Lint: the metadata-aggregate walks, the dataset decode and the
+    Bloom index builders read the blocks format only through
+    operators/encode.py (``BlockStats`` on pyarrow, ``zone_col`` and
+    ``payload_columns`` on Spark), never by naming a layout's columns
+    themselves."""
     import xml2arrow_spark
 
     root = os.path.dirname(xml2arrow_spark.__file__)
-    with open(os.path.join(root, "operators", "dataset.py"), encoding="utf-8") as f:
-        tree = ast.parse(f.read())
-    fns = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
-    assert set(_LAYOUT_BLIND) <= set(fns)  # the lint really found the walks
-    offenders = {
-        name: hits for name in _LAYOUT_BLIND
-        if (hits := _layout_knowledge(fns[name]))
-    }
-    with open(os.path.join(root, "pipeline", "sketches.py"), encoding="utf-8") as f:
-        hits = _layout_knowledge(ast.parse(f.read()))
-    if hits:
-        offenders["pipeline/sketches.py"] = hits
+    offenders = {}
+    for module, names in (("dataset.py", _LAYOUT_BLIND),
+                          ("encode.py", _LAYOUT_BLIND_ENCODE)):
+        with open(os.path.join(root, "operators", module), encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        fns = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+        assert set(names) <= set(fns)  # the lint really found the functions
+        offenders.update({
+            name: hits for name in names
+            if (hits := _layout_knowledge(fns[name]))
+        })
+    for rel in _LAYOUT_BLIND_MODULES:
+        with open(os.path.join(root, rel), encoding="utf-8") as f:
+            hits = _layout_knowledge(ast.parse(f.read()))
+        if hits:
+            offenders[rel] = hits
     assert offenders == {}
 
 

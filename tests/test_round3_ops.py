@@ -270,7 +270,7 @@ def test_nested_decode_missing_column_is_descriptive(spark):
     man = CodecManifest.auto_for(df.schema, block_rows=8)
     blocks = encode_table(df, man)
     bad = decode_table(blocks, "a bigint, zz bigint")
-    with pytest.raises(Exception, match="lacks encoded column"):
+    with pytest.raises(Exception, match="block lacks an entry for 'zz'"):
         bad.collect()
 
 

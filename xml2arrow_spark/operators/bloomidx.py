@@ -153,6 +153,21 @@ def invalidate_units(tree: str, units: list[int]) -> None:
             )
 
 
+def _view_filters(view, column: str, bits_per_row: int, k: int):
+    """``([m_bits], [bits])`` over every block of a
+    :class:`~xml2arrow_spark.operators.encode.BlockStats` view, decoding
+    only ``column`` — the one per-block step of both index builders."""
+    from xml2arrow_spark.operators.blocks import decode_column
+
+    filters = [
+        build_block_bloom(
+            decode_column(*view.payload(column, i)).to_pylist(), bits_per_row, k
+        )
+        for i in range(len(view))
+    ]
+    return [m for m, _bits in filters], [bits for _m, bits in filters]
+
+
 def _computed_filters_df(
     spark, tree: str, column: str, bits_per_row: int, k: int,
     units: list[int] | None,
@@ -164,59 +179,39 @@ def _computed_filters_df(
     import pyarrow as pa
     from pyspark.sql import functions as F
 
+    from xml2arrow_spark.operators.encode import payload_columns
+
     blocks = spark.read.parquet(os.path.join(tree, "blocks"))
     if units is not None:
         blocks = blocks.filter(F.col("unit_id").isin([int(u) for u in units]))
-    wide = "cols" not in blocks.columns
-    if wide:
-        blocks = blocks.select(
-            "unit_id", "block_id", f"c_{column}__meta", f"c_{column}__data"
-        )
-    else:
-        blocks = blocks.select("unit_id", "block_id", "cols")
+    blocks = blocks.select(
+        "unit_id", "block_id", *payload_columns(blocks.columns, [column])
+    )
 
     def build_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from xml2arrow_spark.env import task_setup
-        from xml2arrow_spark.operators.blocks import decode_column
+        from xml2arrow_spark.operators.encode import BlockStats
 
         task_setup()
         for b in batches:
-            units_a = b.column(0)
-            blocks_a = b.column(1)
-            for row in range(b.num_rows):
-                if wide:
-                    meta = b.column(2)[row].as_py()
-                    data = b.column(3)[row].as_py()
-                else:
-                    entries = b.column(2)[row].values
-                    names = entries.field("name").to_pylist()
-                    try:
-                        i = names.index(column)
-                    except ValueError:
-                        raise ValueError(
-                            f"bloom index column {column!r} not in encoded "
-                            f"columns {sorted(names)}"
-                        ) from None
-                    meta = entries.field("meta")[i].as_py()
-                    data = entries.field("data")[i].as_py()
-                arr = decode_column(meta, data)
-                m, bits = build_block_bloom(arr.to_pylist(), bits_per_row, k)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "unit_id": [units_a[row].as_py()],
-                        "block_id": [blocks_a[row].as_py()],
-                        "m_bits": [m],
-                        "bits": [bits],
-                    },
-                    schema=pa.schema(
-                        [
-                            pa.field("unit_id", pa.int32()),
-                            pa.field("block_id", pa.int64()),
-                            pa.field("m_bits", pa.int32()),
-                            pa.field("bits", pa.binary()),
-                        ]
-                    ),
-                )
+            view = BlockStats.of_table(pa.Table.from_batches([b]), [column])
+            m_bits, bits = _view_filters(view, column, bits_per_row, k)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "unit_id": b.column(0).to_pylist(),
+                    "block_id": b.column(1).to_pylist(),
+                    "m_bits": m_bits,
+                    "bits": bits,
+                },
+                schema=pa.schema(
+                    [
+                        pa.field("unit_id", pa.int32()),
+                        pa.field("block_id", pa.int64()),
+                        pa.field("m_bits", pa.int32()),
+                        pa.field("bits", pa.binary()),
+                    ]
+                ),
+            )
 
     return blocks.mapInArrow(build_fn, BLOOM_DDL)
 
@@ -247,7 +242,7 @@ def _build_bloom_local(
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
-    from xml2arrow_spark.operators.blocks import decode_column
+    from xml2arrow_spark.operators.encode import BlockStats, payload_columns
 
     bdir = os.path.join(tree, "blocks")
     if not os.path.isdir(bdir):
@@ -279,35 +274,13 @@ def _build_bloom_local(
     n_indexed = 0
     for d in unit_dirs:
         ds = pads.dataset(os.path.join(bdir, d))
-        wide = "cols" not in ds.schema.names
-        if wide:
-            t = ds.to_table(
-                columns=["block_id", f"c_{column}__meta", f"c_{column}__data"]
-            )
-        else:
-            t = ds.to_table(columns=["block_id", "cols"])
-        block_ids, m_list, bits_list = [], [], []
-        for row in range(t.num_rows):
-            if wide:
-                meta = t.column(1)[row].as_py()
-                data = t.column(2)[row].as_py()
-            else:
-                entries = t.column(1)[row].values
-                names = entries.field("name").to_pylist()
-                try:
-                    i = names.index(column)
-                except ValueError:
-                    raise ValueError(
-                        f"bloom index column {column!r} not in encoded "
-                        f"columns {sorted(names)}"
-                    ) from None
-                meta = entries.field("meta")[i].as_py()
-                data = entries.field("data")[i].as_py()
-            arr = decode_column(meta, data)
-            m, bits = build_block_bloom(arr.to_pylist(), bits_per_row, k)
-            block_ids.append(t.column(0)[row].as_py())
-            m_list.append(m)
-            bits_list.append(bits)
+        t = ds.to_table(columns=[
+            "block_id", *payload_columns(ds.schema.names, [column])
+        ])
+        m_list, bits_list = _view_filters(
+            BlockStats.of_table(t, [column]), column, bits_per_row, k
+        )
+        block_ids = t.column("block_id").to_pylist()
         # dynamic-overwrite semantics per unit partition
         pdir = os.path.join(idx_blocks, d)
         shutil.rmtree(pdir, ignore_errors=True)

@@ -244,6 +244,7 @@ def encode_parquet_dataset(
     policies = {c: resolved.columns[c].codec for c in cols}
     required = frozenset(c for c in cols if not resolved.columns[c].nullable)
     block_rows = resolved.block_rows
+    zone_maps_on = resolved.zone_maps
     wide = layout == "wide"
     out_schema = wide_pa_schema(cols) if wide else _BLOCKS_PA_SCHEMA
 
@@ -274,7 +275,8 @@ def encode_parquet_dataset(
             blocks = [
                 _encode_block(
                     block, cols, policies, part_id, file_idx,
-                    (file_idx << 20) | seq, required=required,
+                    (file_idx << 20) | seq, zone_maps=zone_maps_on,
+                    required=required,
                 )
                 for seq, block in enumerate(_blockify(batch_iter, block_rows))
             ]
@@ -2676,10 +2678,16 @@ def decode_dataset(
     kernel runs, with :func:`~xml2arrow_spark.operators.encode.
     prune_blocks` semantics (missing stats keep the block; the result is a
     SUPERSET of matching rows — apply the row filter after). Bounds may be
-    int, float, or str. On the wide layout the filter is a pyarrow
-    expression over the top-level zone columns, so parquet ROW-GROUP
-    statistics prune IO too; on the nested layout blocks are skipped after
-    the struct read.
+    int, float, or str. Each file is read through one
+    :class:`~xml2arrow_spark.operators.encode.BlockStats` view, which
+    reads the stats of the zone-filter columns only, and its blocks are
+    judged by the aggregates' zone classifier; a block is
+    decoded by :func:`~xml2arrow_spark.operators.encode.decode_blocks`.
+    On the wide layout the view reads payload one parquet row group at a
+    time, only for row groups holding a surviving block, so a row group
+    whose every block is pruned (e.g. one merged input of a
+    :func:`compact_dataset` file) reads no payload IO; on the nested
+    layout blocks are skipped after the struct read.
 
     ``row_filter`` pushes row selection INSIDE the decode kernel, with
     :func:`~xml2arrow_spark.operators.encode.decode_table` semantics:
@@ -2698,12 +2706,13 @@ def decode_dataset(
     import yaml
 
     from xml2arrow_spark.operators.encode import (
-        _zone_suffixes,
-        apply_row_filters,
+        _zone_cat,
+        decode_blocks,
         normalize_row_filters,
         normalize_zone_filters,
         split_schema_ddl,
     )
+    from xml2arrow_spark.operators.predicates import DnfConjuncts
     from xml2arrow_spark.sources.files import plan_parquet_tasks
 
     _refuse_pending_tombstones(out_path)
@@ -2721,32 +2730,20 @@ def decode_dataset(
             )
         out_names = list(columns)
     ddl = ", ".join(by_name[n] for n in out_names)
-    wide = side.get("layout", "nested") == "wide"
-    # (column, lo, hi, vmin-field, vmax-field) per conjunct; zf_groups
-    # carries the disjunct spans when the filter is a DNF (any_of) —
-    # a block is kept when ANY disjunct's every range can intersect it
-    _zfs_norm = normalize_zone_filters(zone_filter)
-    zf_groups = getattr(_zfs_norm, "groups", None)
-    zfs = [
-        (c, lo, hi, *_zone_suffixes(lo, hi))
-        for (c, lo, hi) in _zfs_norm
-    ]
-
     rfs = normalize_row_filters(row_filter)
-    for c, _v, _l, _h in rfs:
+    # the zone filter as a range conjunction (a DNF under any_of) for the
+    # walks' classifier; each conjunct's stat category follows its bounds
+    zfs = normalize_zone_filters(zone_filter)
+    zconj = [(c, None, lo, hi, _zone_cat(lo, hi)) for c, lo, hi in zfs]
+    if getattr(zfs, "groups", None) is not None:
+        zconj = DnfConjuncts(zconj, zfs.groups)
+    read_names = out_names + [c for c, *_ in rfs]
+    zone_names = [c for c, *_ in zconj]
+    for c in read_names[len(out_names):] + zone_names:
         if c not in by_name:
             raise ValueError(
                 f"dataset lacks encoded column {c!r}; it has {sorted(by_name)}"
             )
-
-    def _zone_keep(vmin, vmax, lo, hi) -> bool:
-        # prune_blocks semantics: missing stats always keep; a None bound
-        # is one-sided (tests only the bounded side)
-        return (
-            vmin is None
-            or vmax is None
-            or ((lo is None or lo <= vmax) and (hi is None or vmin <= hi))
-        )
 
     def decode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -2755,134 +2752,12 @@ def decode_dataset(
 
         task_setup()
         for _i, fpath in task_files(batches):
-            if wide:
-                read_names = list(dict.fromkeys(
-                    out_names + [c for c, _v, _l, _h in rfs]
-                ))
-                need = [
-                    x for n in read_names
-                    for x in (f"c_{n}__meta", f"c_{n}__data")
-                ]
-                kwargs = {}
-                if zfs:
-                    import pyarrow.dataset as pads
-
-                    def _one(zf):
-                        zf_col, zf_lo, zf_hi, zf_min, zf_max = zf
-                        fmin = pads.field(f"c_{zf_col}__{zf_min}")
-                        fmax = pads.field(f"c_{zf_col}__{zf_max}")
-                        # expression filter over top-level zone columns:
-                        # parquet row-group statistics prune the IO, then
-                        # the row-level (= block-level) filter applies
-                        # exactly; conjuncts AND together, disjuncts OR;
-                        # a None bound is one-sided
-                        cond = None
-                        if zf_lo is not None:
-                            cond = fmax >= zf_lo
-                        if zf_hi is not None:
-                            c2 = fmin <= zf_hi
-                            cond = c2 if cond is None else (cond & c2)
-                        if cond is None:
-                            return ~fmin.is_null() | fmin.is_null()
-                        return fmin.is_null() | fmax.is_null() | cond
-
-                    if zf_groups is None:
-                        expr = None
-                        for zf in zfs:
-                            one = _one(zf)
-                            expr = one if expr is None else (expr & one)
-                    else:
-                        expr = None
-                        for ga, gb in zf_groups:
-                            g = None
-                            for zf in zfs[ga:gb]:
-                                one = _one(zf)
-                                g = one if g is None else (g & one)
-                            expr = g if expr is None else (expr | g)
-                    kwargs["filters"] = expr
-                tbl = pq.read_table(fpath, columns=need, **kwargs)  # pruned IO
-                metas = {n: tbl.column(f"c_{n}__meta").combine_chunks()
-                         for n in read_names}
-                datas = {n: tbl.column(f"c_{n}__data").combine_chunks()
-                         for n in read_names}
-                for row in range(tbl.num_rows):
-                    fr = apply_row_filters(
-                        rfs,
-                        lambda c: (
-                            metas[c][row].as_py(), datas[c][row].as_py()
-                        ),
-                        out_names,
-                    )
-                    if fr is None:
-                        continue  # zero matches: skip other kernels
-                    mask, selected = fr
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            selected[n] if n in selected else (
-                                decode_column(
-                                    metas[n][row].as_py(),
-                                    datas[n][row].as_py(),
-                                ).filter(mask)
-                                if mask is not None
-                                else decode_column(
-                                    metas[n][row].as_py(),
-                                    datas[n][row].as_py(),
-                                )
-                            )
-                            for n in out_names
-                        ],
-                        names=out_names,
-                    )
-                continue
-            tbl = pq.read_table(fpath, columns=["cols"])
-            cols_col = tbl.column("cols").combine_chunks()
-            wanted = set(out_names)
-            for row in range(len(cols_col)):
-                entries = cols_col[row].values  # zero-copy struct view
-                names = entries.field("name").to_pylist()
-                def _conj_keeps(sub):
-                    for zf_col, zf_lo, zf_hi, zf_min, zf_max in sub:
-                        try:
-                            zi = names.index(zf_col)
-                        except ValueError:
-                            continue  # no stats entry: keep
-                        if not _zone_keep(
-                            entries.field(zf_min)[zi].as_py(),
-                            entries.field(zf_max)[zi].as_py(),
-                            zf_lo, zf_hi,
-                        ):
-                            return False  # a failing conjunct drops it
-                    return True
-
-                if zf_groups is None:
-                    pruned = zfs and not _conj_keeps(zfs)
-                else:
-                    # DNF: kept when ANY disjunct's ranges all keep
-                    pruned = not any(
-                        _conj_keeps(zfs[ga:gb]) for ga, gb in zf_groups
-                    )
-                if pruned:
-                    continue  # whole block pruned before any kernel
-                metas = entries.field("meta")
-                datas = entries.field("data")
-                fr = apply_row_filters(
-                    rfs,
-                    lambda c: (
-                        metas[names.index(c)].as_py(),
-                        datas[names.index(c)].as_py(),
-                    ),
-                    out_names,
-                )
-                if fr is None:
-                    continue  # zero matches: skip other kernels
-                mask, decoded = fr
-                for i, nm in enumerate(names):
-                    if nm in wanted and nm not in decoded:
-                        arr = decode_column(metas[i].as_py(), datas[i].as_py())
-                        decoded[nm] = arr.filter(mask) if mask is not None else arr
-                yield pa.RecordBatch.from_arrays(
-                    [decoded[n] for n in out_names], names=out_names
-                )
+            view = BlockStats(fpath, pq, read_names, zone_names)
+            keep = None
+            if zconj:
+                def keep(i, view=view):
+                    return _classify_where(zconj, _zones(zconj, view, i)) != "pruned"
+            yield from decode_blocks(view, out_names, rfs, keep)
 
     tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
     return tasks.mapInArrow(decode_files, ddl)

@@ -16,6 +16,7 @@ Execution model (Spark-first, no per-row Python):
 
 from __future__ import annotations
 
+import bisect
 import json
 from typing import Iterator
 
@@ -50,6 +51,8 @@ __all__ = [
     "blocks_metadata",
     "wide_blocks_ddl",
     "BlockStats",
+    "decode_blocks",
+    "payload_columns",
     "zone_col",
 ]
 
@@ -423,80 +426,125 @@ def _lacks(col: str) -> ValueError:
     )
 
 
+def _one_array(col) -> pa.Array:
+    """A column as one Array (``combine_chunks`` copies even one chunk)."""
+    return col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+
+
 class BlockStats:
-    """Read-side view of one blocks file, the same on both layouts: the
+    """Read-side view of the blocks format, the same on both layouts: the
     nested ``cols`` array<struct> (``_BLOCKS_PA_SCHEMA``) and the wide
     top-level ``c_<col>__<field>`` columns (:func:`wide_pa_schema`).
 
-    Opened with the columns whose stats or payload a walk may need; block
-    ``i`` then offers ``n_rows(i)``, ``zone(col, i, cat)`` (the
+    Opened with the columns whose payload a reader may need (``cols``)
+    and those whose stats it may judge (``stats``, default ``cols``);
+    block ``i`` then offers ``n_rows(i)``, ``zone(col, i, cat)`` (the
     ``(zmin, zmax, n_null)`` triple of a predicate category),
     ``stat(col, field, i)`` (one stat: ``zsum_i``, the int extrema, ...)
-    and ``payload(col, i)`` (the ``(meta, data)`` pair). A stat field the
-    file does not store reads as None (older blocks, ``zone_maps=False``);
-    a column the file or any of its blocks lacks raises.
+    and ``payload(col, i)`` (the ``(meta, data)`` pair of a ``cols``
+    entry). A stat field the source does not hold reads as None (older
+    blocks, ``zone_maps=False``, a table projected to its payload), as
+    does any stat of a column outside ``stats``; a column the source or
+    any of its blocks lacks raises.
 
-    IO: the file is opened once and read once up front — ``n_rows`` and
-    ``cols`` on the nested layout; ``n_rows`` and the opened columns' stats
-    on the wide layout, whose payload columns come in one further
-    ``read_table`` on the first ``payload`` call, so a walk that prunes or
-    claims every block reads no payload bytes."""
+    ``BlockStats(fpath, pq, cols, stats)`` opens one blocks file and reads
+    it once up front: ``n_rows`` and ``cols`` on the nested layout;
+    ``n_rows`` and the ``stats`` columns' stats on the wide layout, whose
+    payload comes later, one ``read_row_group`` of every ``cols`` pair
+    per parquet row group, on the first ``payload`` call that needs it —
+    so a reader that prunes or claims every block of a row group reads no
+    payload bytes of it. :meth:`of_table` wraps block rows already in
+    memory (a Spark batch)."""
 
-    def __init__(self, fpath: str, pq_mod, cols: list[str]):
-        self._fpath, self._pq = fpath, pq_mod
-        self._cols = list(dict.fromkeys(cols))
-        self._cache: dict = {}  # (col, field) -> per-block values or None
+    def __init__(self, fpath: str, pq_mod, cols: list[str],
+                 stats: list[str] | None = None):
+        cols = list(dict.fromkeys(cols))
+        stats = cols if stats is None else list(dict.fromkeys(stats))
         with pq_mod.ParquetFile(fpath) as pf:
             names = pf.schema_arrow.names
-            nested = "cols" in names
-            if nested:
-                want = ["n_rows", "cols"]
-            else:
-                for c in self._cols:
-                    if f"c_{c}__meta" not in names or f"c_{c}__data" not in names:
-                        raise _lacks(c)
-                want = ["n_rows"] + [
-                    n for c in self._cols for f in _STAT_FIELDS
-                    if (n := f"c_{c}__{f}") in names
-                ]
+            want = ["n_rows", "cols"] if "cols" in names else ["n_rows"] + [
+                n for c in stats for f in _STAT_FIELDS
+                if (n := f"c_{c}__{f}") in names
+            ]
             tbl = pf.read(columns=want)
-        self._rows = tbl.column("n_rows").to_pylist()
-        if nested:
-            lists = tbl.column("cols").combine_chunks()
-            self._entries = lists.values  # every block's entries, flat
-            self._fields: dict = {}  # field -> values over all entries
-            offs = lists.offsets.to_pylist()
-            ent_names = self._entries.field("name").to_pylist()
-            # per column: the index of each block's entry for it
-            self._at = {}
-            for c in self._cols:
-                try:
-                    self._at[c] = [
-                        ent_names.index(c, offs[b], offs[b + 1])
-                        for b in range(len(self._rows))
-                    ]
-                except ValueError:
-                    raise _lacks(c) from None
-            pair = (self._entries.field("meta"), self._entries.field("data"))
-            self._pay = dict.fromkeys(self._cols, pair)
-        else:
+            self._md = pf.metadata  # reopened footer-free per row group
+        self._fpath, self._pq = fpath, pq_mod
+        groups = [self._md.row_group(k).num_rows
+                  for k in range(self._md.num_row_groups)]
+        self._open(tbl, cols, stats, names, groups)
+
+    @classmethod
+    def of_table(cls, tbl: pa.Table, cols: list[str]) -> "BlockStats":
+        """A view over block rows in memory: ``tbl`` holds the nested
+        ``cols`` column or the wide ``c_<col>__meta``/``__data`` columns of
+        ``cols`` (stats and ``n_rows`` optional)."""
+        view = cls.__new__(cls)
+        cols = list(dict.fromkeys(cols))
+        view._open(tbl, cols, cols, tbl.column_names)
+        return view
+
+    def _open(self, tbl: pa.Table, cols: list[str], stats: list[str],
+              names: list[str], groups: list[int] | None = None) -> None:
+        """Index ``tbl``'s block rows; ``names`` are the source's columns.
+        ``groups`` (a wide file's parquet row-group sizes) leaves the
+        payload to :meth:`_read_group`; without it ``tbl`` holds it."""
+        self._n = tbl.num_rows
+        self._rows = (tbl.column("n_rows").to_pylist()
+                      if "n_rows" in tbl.column_names else None)
+        self._cols, self._stat_cols = cols, frozenset(stats)
+        self._cache: dict = {}  # (col, field) -> per-block values or None
+        self._starts = [0]  # first block of each payload row group
+        opened = list(dict.fromkeys(cols + stats))
+        if "cols" not in names:
+            for c in opened:
+                if f"c_{c}__meta" not in names or f"c_{c}__data" not in names:
+                    raise _lacks(c)
             self._entries = None
             self._stats = tbl
-            self._at = dict.fromkeys(self._cols, range(len(self._rows)))
-            self._pay = None  # read on the first payload() call
+            self._at = dict.fromkeys(opened, range(self._n))
+            if groups is None:
+                self._pay = {0: {
+                    c: (_one_array(tbl.column(f"c_{c}__meta")),
+                        _one_array(tbl.column(f"c_{c}__data")))
+                    for c in cols
+                }}
+            else:
+                for r in groups[:-1]:
+                    self._starts.append(self._starts[-1] + r)
+                self._pay = {}  # row group -> {col: arrays}, read on demand
+            return
+        lists = _one_array(tbl.column("cols"))
+        self._entries = lists.values  # every block's entries, flat
+        self._fields: dict = {}  # field -> values over all entries
+        offs = lists.offsets.to_pylist()
+        ent_names = self._entries.field("name").to_pylist()
+        # per column: the index of each block's entry for it
+        self._at = {}
+        for c in opened:
+            try:
+                self._at[c] = [
+                    ent_names.index(c, offs[b], offs[b + 1])
+                    for b in range(self._n)
+                ]
+            except ValueError:
+                raise _lacks(c) from None
+        pair = (self._entries.field("meta"), self._entries.field("data"))
+        self._pay = {0: dict.fromkeys(cols, pair)}
 
     def __len__(self) -> int:
-        return len(self._rows)
+        return self._n
 
-    def n_rows(self, i: int) -> int:
-        return self._rows[i]
+    def n_rows(self, i: int) -> int | None:
+        return None if self._rows is None else self._rows[i]
 
     def _per_block(self, col: str, field: str):
         """``field`` of ``col`` for every block, or None when unstored."""
         key = (col, field)
         if key not in self._cache:
             at = self._at[col]
-            if self._entries is None:
+            if col not in self._stat_cols:
+                vals = None
+            elif self._entries is None:
                 name = f"c_{col}__{field}"
                 vals = (
                     self._stats.column(name).to_pylist()
@@ -525,18 +573,26 @@ class BlockStats:
                 self.stat(col, "n_null", i))
 
     def payload(self, col: str, i: int) -> tuple:
-        if self._pay is None:
-            tbl = self._pq.read_table(self._fpath, columns=[
+        j = self._at[col][i]
+        k = bisect.bisect_right(self._starts, j) - 1
+        if k not in self._pay:
+            self._pay[k] = self._read_group(k)
+        meta, data = self._pay[k][col]
+        j -= self._starts[k]
+        return meta[j].as_py(), data[j].as_py()
+
+    def _read_group(self, k: int) -> dict:
+        """Every ``cols`` entry's (meta, data) arrays over parquet row
+        group ``k``, in one read of a file reopened on the cached footer."""
+        with self._pq.ParquetFile(self._fpath, metadata=self._md) as pf:
+            tbl = pf.read_row_group(k, columns=[
                 x for c in self._cols for x in (f"c_{c}__meta", f"c_{c}__data")
             ])
-            self._pay = {
-                c: (tbl.column(f"c_{c}__meta").combine_chunks(),
-                    tbl.column(f"c_{c}__data").combine_chunks())
-                for c in self._cols
-            }
-        meta, data = self._pay[col]
-        j = self._at[col][i]
-        return meta[j].as_py(), data[j].as_py()
+        return {
+            c: (_one_array(tbl.column(f"c_{c}__meta")),
+                _one_array(tbl.column(f"c_{c}__data")))
+            for c in self._cols
+        }
 
 
 def zone_col(blocks_df, column: str, field: str):
@@ -826,6 +882,7 @@ def encode_parquet_stats(
     policies = {c: resolved.columns[c].codec for c in cols}
     required = frozenset(c for c in cols if not resolved.columns[c].nullable)
     block_rows = resolved.block_rows
+    zone_maps_on = resolved.zone_maps
 
     def encode_stats(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -845,7 +902,7 @@ def encode_parquet_stats(
             ):
                 enc = _encode_block(
                     block, cols, policies, 0, file_idx, seq,
-                    required=required,
+                    zone_maps=zone_maps_on, required=required,
                 )
                 nb += 1
                 nr += enc.column(3)[0].as_py()
@@ -913,20 +970,25 @@ def split_schema_ddl(ddl: str) -> dict[str, str]:
     return {p.split(" ")[0]: p for p in pairs if p}
 
 
-def _zone_suffixes(lo, hi) -> tuple[str, str]:
-    """Zone-stat column pair for a predicate's bound type. A ``None``
-    bound is one-sided — the pair is typed by the bound that IS present
-    (previously a one-sided int/string range fell through to the float
-    pair, whose null-filled stats kept every block: sound, but the prune
-    was silently vacuous)."""
+def _zone_cat(lo, hi) -> str:
+    """The zone-stat category (a ``_ZONE_SUFFIXES`` key) of a predicate's
+    bound type. A ``None`` bound is one-sided — the category is typed by
+    the bound that IS present (previously a one-sided int/string range
+    fell through to the float pair, whose null-filled stats kept every
+    block: sound, but the prune was silently vacuous)."""
     probe = [b for b in (lo, hi) if b is not None]
     if probe and all(isinstance(b, str) for b in probe):
-        return "vmin_s", "vmax_s"
+        return "s"
     if probe and all(
         isinstance(b, int) and not isinstance(b, bool) for b in probe
     ):
-        return "vmin_i", "vmax_i"
-    return "vmin_d", "vmax_d"
+        return "i"
+    return "d"
+
+
+def _zone_suffixes(lo, hi) -> tuple[str, str]:
+    """Zone-stat column pair for a predicate's bound type."""
+    return _ZONE_SUFFIXES[_zone_cat(lo, hi)]
 
 
 def normalize_zone_filters(zone_filter) -> list[tuple]:
@@ -1165,6 +1227,41 @@ def apply_row_filters(rfs, pair, out_names):
     return mask, {}
 
 
+def decode_blocks(view: "BlockStats", out_names: list[str], rfs, keep=None):
+    """The one per-block decode loop: for each block of ``view`` that
+    ``keep(i)`` accepts (every block when ``keep`` is None), evaluate the
+    row filter ``rfs`` (:func:`apply_row_filters`), skip a block no row
+    matches, decode every other ``out_names`` column (gathering only the
+    matching rows) and yield the block as one batch."""
+    for i in range(len(view)):
+        if keep is not None and not keep(i):
+            continue
+        fr = apply_row_filters(rfs, lambda c, i=i: view.payload(c, i), out_names)
+        if fr is None:
+            continue  # zero matches: skip every other kernel
+        mask, selected = fr
+        arrays = []
+        for n in out_names:
+            arr = selected.get(n)
+            if arr is None:
+                arr = decode_column(*view.payload(n, i))
+                if mask is not None:
+                    arr = arr.filter(mask)
+            arrays.append(arr)
+        yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+
+
+def payload_columns(names: list[str], cols: list[str]) -> list[str]:
+    """The columns of a blocks table (column ``names``) that hold the
+    payload of ``cols`` on either layout — the projection that lets a
+    wide parquet scan skip every other column's payload IO."""
+    if "cols" in names:
+        return ["cols"]
+    need = [x for c in cols for x in (f"c_{c}__meta", f"c_{c}__data")]
+    missing = sorted(set(need) - set(names))
+    if missing:
+        raise ValueError(f"blocks table lacks columns for {missing}")
+    return need
 
 
 def decode_table(blocks_df, schema_ddl: str, zone_filter=None, row_filter=None):
@@ -1208,12 +1305,14 @@ def decode_table(blocks_df, schema_ddl: str, zone_filter=None, row_filter=None):
     conjunction masks OR together, and only a block NO disjunct matches
     skips.
 
-    ``schema_ddl`` may name a SUBSET of the encoded columns. Nested layout:
-    only the named entries are decoded (CPU pruning — the payload bytes of
-    the others still ride in the ``cols`` struct). Wide layout (see
-    :func:`wide_blocks_ddl`): the projection keeps only the named columns'
-    (meta, data) pairs, so parquet-backed blocks tables ALSO skip the
-    unneeded payload IO — true decode-side column pruning.
+    ``schema_ddl`` may name a SUBSET of the encoded columns: only the
+    named columns are decoded. Nested layout: their payload bytes still
+    ride in the ``cols`` struct. Wide layout (see :func:`wide_blocks_ddl`):
+    the projection keeps only the named columns' (meta, data) pairs
+    (:func:`payload_columns`), so parquet-backed blocks tables ALSO skip
+    the unneeded payload IO — true decode-side column pruning. Each Spark
+    batch is read through :meth:`BlockStats.of_table` and decoded by
+    :func:`decode_blocks`.
     """
     from pyspark.sql.types import StructType
 
@@ -1223,96 +1322,22 @@ def decode_table(blocks_df, schema_ddl: str, zone_filter=None, row_filter=None):
     else:
         for zf in zfs:
             blocks_df = prune_blocks(blocks_df, *zf)
-    out_schema = StructType.fromDDL(schema_ddl)
-    out_names = [f.name for f in out_schema.fields]
+    out_names = [f.name for f in StructType.fromDDL(schema_ddl).fields]
     rfs = normalize_row_filters(row_filter)
-    is_wide = "cols" not in blocks_df.columns
-
-    if is_wide:
-        read_names = list(dict.fromkeys(
-            out_names + [c for c, _v, _l, _h in rfs]
-        ))
-        needed = [x for n in read_names for x in (f"c_{n}__meta", f"c_{n}__data")]
-        missing = set(needed) - set(blocks_df.columns)
-        if missing:
-            raise ValueError(f"blocks table lacks columns for {sorted(missing)}")
-
-        def decode_wide(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            from xml2arrow_spark.env import task_setup
-
-            task_setup()
-            for b in batches:
-                for row in range(b.num_rows):
-                    def pair(n):
-                        return (
-                            b.column(b.schema.get_field_index(f"c_{n}__meta"))[row].as_py(),
-                            b.column(b.schema.get_field_index(f"c_{n}__data"))[row].as_py(),
-                        )
-
-                    def col(n):
-                        return decode_column(*pair(n))
-
-                    # codec-aware: each conjunct evaluates on the code
-                    # stream where the codec allows, so a zero-match
-                    # block skips without materializing a value
-                    fr = apply_row_filters(rfs, pair, out_names)
-                    if fr is None:
-                        continue  # zero matches: skip every other kernel
-                    mask, selected = fr
-                    arrays = [
-                        selected[n] if n in selected
-                        else (col(n) if mask is None else col(n).filter(mask))
-                        for n in out_names
-                    ]
-                    yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-        # the select is what lets the parquet scan prune payload columns
-        return blocks_df.select(*needed).mapInArrow(decode_wide, schema_ddl)
-
-    wanted = set(out_names)
+    read_names = list(dict.fromkeys(out_names + [c for c, _v, _l, _h in rfs]))
 
     def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from xml2arrow_spark.env import task_setup
 
         task_setup()
         for b in batches:
-            cols_col = b.column(b.schema.get_field_index("cols"))
-            for row in range(b.num_rows):
-                # zero-copy struct view of this block's entries; only the
-                # REQUESTED columns' payload bytes are ever materialized
-                # (``as_py`` on the whole struct would copy every column's
-                # payload just to decode a subset)
-                entries = cols_col[row].values
-                names = entries.field("name").to_pylist()
-                metas = entries.field("meta")
-                datas = entries.field("data")
-                missing = wanted - set(names)
-                if missing:
-                    # mirror the wide path's explicit missing-column error
-                    # (a bare KeyError from an executor is undiagnosable)
-                    raise ValueError(
-                        f"blocks table lacks encoded column(s) {sorted(missing)}; "
-                        f"blocks contain {sorted(names)}"
-                    )
-                fr = apply_row_filters(
-                    rfs,
-                    lambda c: (
-                        metas[names.index(c)].as_py(),
-                        datas[names.index(c)].as_py(),
-                    ),
-                    out_names,
-                )
-                if fr is None:
-                    continue  # zero matches: skip every other kernel
-                mask, decoded = fr
-                for i, nm in enumerate(names):
-                    if nm in wanted and nm not in decoded:
-                        arr = decode_column(metas[i].as_py(), datas[i].as_py())
-                        decoded[nm] = arr.filter(mask) if mask is not None else arr
-                arrays = [decoded[n] for n in out_names]
-                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+            view = BlockStats.of_table(pa.Table.from_batches([b]), read_names)
+            yield from decode_blocks(view, out_names, rfs)
 
-    return blocks_df.select("cols").mapInArrow(decode_fn, schema_ddl)
+    # the select is what lets the parquet scan prune payload columns
+    return blocks_df.select(
+        *payload_columns(blocks_df.columns, read_names)
+    ).mapInArrow(decode_fn, schema_ddl)
 
 
 def blocks_metadata(blocks_df):

@@ -56,9 +56,11 @@ def test_encode_dataset_resume_skips_completed(spark, token_dir, tmp_path):
     import shutil
 
     shutil.rmtree(os.path.join(out, "manifest"))
-    from xml2arrow_spark.operators.dataset import METADATA_DDL
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    spark.createDataFrame(keep_pdf, METADATA_DDL).write.parquet(
+    from xml2arrow_spark.operators.dataset import METADATA_SCHEMA
+
+    spark.createDataFrame(keep_pdf, from_arrow_schema(METADATA_SCHEMA)).write.parquet(
         os.path.join(out, "manifest")
     )
     for r in removed:

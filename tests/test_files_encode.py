@@ -193,7 +193,7 @@ def test_every_worker_fn_calls_task_setup_first():
                                   fn.name if fn is not None else None))
                     if fn is None or not _calls_prologue_first(fn):
                         offenders.append(where)
-    assert len(sites) == 27  # the lint really found the engine's worker fns
+    assert len(sites) == 25  # the lint really found the engine's worker fns
     assert (os.path.join("sources", "files.py"), "walk_files") in sites
     assert offenders == []
 
@@ -219,12 +219,18 @@ _LAYOUT_BLIND = (
     "_group_count_composite", "group_aggs", "_group_aggs_composite",
     "top_k", "time_bucket_count", "decode_dataset",
 )
-# the decode loop and decode_table, beside the view in operators/encode.py
-_LAYOUT_BLIND_ENCODE = ("decode_blocks", "decode_table")
-# modules that read the blocks format only through operators/encode.py
+# the decode loop, decode_table and the encoders, beside the writer and
+# the view in operators/encode.py
+_LAYOUT_BLIND_ENCODE = (
+    "decode_blocks", "decode_table", "encode_table", "encode_parquet_tasks",
+    "encode_parquet_stats", "encode_parquet",
+)
+# modules that read and write the blocks format only through
+# operators/encode.py
 _LAYOUT_BLIND_MODULES = (
     os.path.join("pipeline", "sketches.py"),
     os.path.join("operators", "bloomidx.py"),
+    os.path.join("operators", "dataset.py"),
 )
 
 
@@ -254,9 +260,10 @@ def _layout_knowledge(tree) -> list[str]:
 
 
 def test_claiming_walks_do_not_know_the_blocks_layout():
-    """Lint: the metadata-aggregate walks, the dataset decode and the
-    Bloom index builders read the blocks format only through
-    operators/encode.py (``BlockStats`` on pyarrow, ``zone_col`` and
+    """Lint: the metadata-aggregate walks, the decoders, the encoders and
+    the Bloom index builders read and write the blocks format only through
+    operators/encode.py (the writer ``_encode_block`` and its schema
+    builder; ``BlockStats`` on pyarrow, ``zone_col`` and
     ``payload_columns`` on Spark), never by naming a layout's columns
     themselves."""
     import xml2arrow_spark
@@ -414,3 +421,32 @@ def test_fused_auto_cascade_resolves_bss_on_reduced_precision_floats(
     np.testing.assert_array_equal(
         emb0.view(np.uint32), flat[:dim].view(np.uint32)
     )
+
+
+def test_fused_encoders_list_their_input_once(spark, token_dir, tmp_path,
+                                              monkeypatch):
+    """The fused encoders share one prologue that lists the input once and
+    hands that listing to manifest resolution and task planning."""
+    import xml2arrow_spark.sources.files as files_mod
+    from xml2arrow_spark.operators.dataset import encode_parquet_dataset
+    from xml2arrow_spark.operators.encode import encode_parquet_stats
+
+    calls = []
+    real = files_mod.parquet_file_infos
+
+    def spy(path):
+        calls.append(path)
+        return real(path)
+
+    monkeypatch.setattr(files_mod, "parquet_file_infos", spy)
+    man = CodecManifest.auto_for(spark.read.parquet(token_dir).schema,
+                                 block_rows=1024)
+    for run in (
+        lambda: encode_parquet_dataset(spark, token_dir, str(tmp_path / "ds"),
+                                       manifest=man, n_tasks=2),
+        lambda: encode_parquet(spark, token_dir, man, n_tasks=2).count(),
+        lambda: encode_parquet_stats(spark, token_dir, man, n_tasks=2).count(),
+    ):
+        calls.clear()
+        run()
+        assert calls == [token_dir]

@@ -11,6 +11,7 @@ from xml2arrow_spark.errors import EncodeValueError, ManifestError
 from xml2arrow_spark.manifest import CodecManifest, ColumnPolicy
 from xml2arrow_spark.operators.encode import (
     _encode_block,
+    _encode_plan,
     decode_table,
     encode_table,
 )
@@ -19,6 +20,10 @@ from xml2arrow_spark.pipeline import dedup, similarity
 
 # -- non-nullable enforcement (reference MissingRequiredField analog,
 #    /root/reference/src/xml_parser.rs:327-338, 4777-4789) -------------------
+
+
+def _required_manifest(col):
+    return CodecManifest(columns={col: ColumnPolicy(codec="auto", nullable=False)})
 
 
 @pytest.mark.parametrize(
@@ -33,17 +38,16 @@ from xml2arrow_spark.pipeline import dedup, similarity
 )
 def test_null_in_non_nullable_column_raises(arr):
     block = pa.table({"c": arr})
+    plan = _encode_plan(_required_manifest("c"), ["c"])
     with pytest.raises(EncodeValueError, match="nullable=False"):
-        _encode_block(block, ["c"], {"c": "auto"}, 0, -1, 0, required=frozenset(["c"]))
+        _encode_block(block, plan, 0, -1, 0)
 
 
 def test_non_nullable_string_null_becomes_empty():
     """The reference's rule: a missing non-nullable Utf8 value is ``""``,
     not an error (/root/reference/src/xml_parser.rs:327-338)."""
     block = pa.table({"s": pa.array(["a", None, "c"])})
-    enc = _encode_block(
-        block, ["s"], {"s": "auto"}, 0, -1, 0, required=frozenset(["s"])
-    )
+    enc = _encode_block(block, _encode_plan(_required_manifest("s"), ["s"]), 0, -1, 0)
     entry = enc.column(7)[0].as_py()[0]
     from xml2arrow_spark.operators.blocks import decode_column
 

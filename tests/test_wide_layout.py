@@ -71,5 +71,49 @@ def test_unknown_layout_rejected(spark, tok):
 def test_wide_missing_column_rejected(spark, tok):
     man = CodecManifest.auto_for(tok.schema, block_rows=512)
     blocks = encode_table(tok, man, layout="wide")
-    with pytest.raises(ValueError, match="lacks columns"):
+    with pytest.raises(ValueError, match="block lacks an entry for 'nope'"):
         decode_table(blocks, "doc_id string, nope int")
+
+
+def _same_entries(nested, wide, cols):
+    """Every block's nested entry equals the wide row's ``c_<col>__<field>``
+    values for every field the wide layout stores."""
+    from xml2arrow_spark.operators.encode import _WIDE_FIELDS
+
+    nested, wide = nested.sort_by("block_id"), wide.sort_by("block_id")
+    assert nested.num_rows == wide.num_rows > 1
+    head = [n for n in nested.column_names if n != "cols"]
+    assert nested.select(head).equals(wide.select(head))
+    for b, entries in enumerate(nested.column("cols").to_pylist()):
+        assert [e["name"] for e in entries] == cols
+        for e in entries:
+            for f in _WIDE_FIELDS:
+                assert e[f] == wide.column(f"c_{e['name']}__{f}")[b].as_py()
+
+
+def test_layouts_hold_the_same_entries_encode_table(spark, tok):
+    man = CodecManifest.auto_for(tok.schema, block_rows=512)
+    _same_entries(
+        encode_table(tok, man).toArrow(),
+        encode_table(tok, man, layout="wide").toArrow(),
+        tok.columns,
+    )
+
+
+def test_layouts_hold_the_same_entries_dataset(spark, tok, tmp_path):
+    import os
+
+    import pyarrow.parquet as pq
+
+    from xml2arrow_spark.operators.dataset import encode_parquet_dataset
+
+    src = str(tmp_path / "src")
+    tok.write.parquet(src)
+    man = CodecManifest.auto_for(tok.schema, block_rows=256)
+    read = {}
+    for layout in ("nested", "wide"):
+        out = str(tmp_path / layout)
+        encode_parquet_dataset(spark, src, out, manifest=man, n_tasks=2,
+                               layout=layout)
+        read[layout] = pq.read_table(os.path.join(out, "blocks"))
+    _same_entries(read["nested"], read["wide"], tok.columns)

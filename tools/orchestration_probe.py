@@ -84,7 +84,7 @@ import pyarrow.parquet as pq
 from pyspark.sql.pandas.types import from_arrow_schema
 from xml2arrow_spark.manifest import CodecManifest
 from xml2arrow_spark.operators.encode import (
-    _blockify, _encode_block, _STATS_PA_SCHEMA, ENCODE_STATS_DDL,
+    _blockify, _encode_block, _encode_plan, _STATS_PA_SCHEMA,
     resolve_manifest_parquet,
 )
 from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
@@ -94,8 +94,7 @@ schema = from_arrow_schema(pq.read_schema(first))
 manifest = CodecManifest.auto_for(schema, block_rows=65536)
 resolved = resolve_manifest_parquet(input_dir, manifest)
 cols = list(resolved.columns)
-policies = {{c: resolved.columns[c].codec for c in cols}}
-required = frozenset(c for c in cols if not resolved.columns[c].nullable)
+plan = _encode_plan(resolved, cols)
 block_rows = resolved.block_rows
 LOG = log_root
 
@@ -117,8 +116,7 @@ def encode_stats(batches):
             for seq, block in enumerate(_blockify(
                     pf.iter_batches(batch_size=block_rows, columns=cols),
                     block_rows)):
-                enc = _encode_block(block, cols, policies, 0, file_idx, seq,
-                                    required=required)
+                enc = _encode_block(block, plan, 0, file_idx, seq)
                 nb += 1; nr += enc.column(3)[0].as_py()
                 nv += enc.column(4)[0].as_py()
                 ib += enc.column(5)[0].as_py(); ob += enc.column(6)[0].as_py()
@@ -136,7 +134,7 @@ def encode_stats(batches):
 tasks = plan_parquet_tasks(spark, input_dir, n_tasks)
 
 def job():
-    return tasks.mapInArrow(encode_stats, ENCODE_STATS_DDL).agg(
+    return tasks.mapInArrow(encode_stats, from_arrow_schema(_STATS_PA_SCHEMA)).agg(
         F.sum("n_values")).collect()[0][0]
 
 job()  # warm-up (JVM, python workers, page cache); logs discarded below

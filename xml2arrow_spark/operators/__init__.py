@@ -6,8 +6,6 @@ from xml2arrow_spark.operators.dataset import (
     encode_parquet_dataset,
 )
 from xml2arrow_spark.operators.encode import (
-    BLOCKS_SCHEMA_DDL,
-    blocks_metadata,
     decode_table,
     encode_parquet,
     encode_parquet_stats,
@@ -22,6 +20,4 @@ __all__ = [
     "decode_table",
     "decode_dataset",
     "dataset_metrics",
-    "blocks_metadata",
-    "BLOCKS_SCHEMA_DDL",
 ]

@@ -36,18 +36,18 @@ from xml2arrow_spark.operators.predicates import (  # noqa: F401 (re-export)
     not_between,
     not_in,
 )
-from xml2arrow_spark.operators.encode import (
-    BLOCKS_SCHEMA_DDL,
+from xml2arrow_spark.operators.encode import (  # noqa: F401 (resolve_manifest_parquet: re-export)
     BlockStats,
-    _blockify,
-    _BLOCKS_PA_SCHEMA,
-    _encode_block,
-    _widen_block,
+    _encode_files,
+    _encode_plan,
+    _file_totals,
+    _fused_prologue,
+    _STAT_FIELDS,
+    _STATS_PA_SCHEMA,
     _ZONE_SUFFIXES,
     decode_column,
     resolve_manifest_parquet,
     value_counts_column,
-    wide_pa_schema,
     zone_col,
 )
 from xml2arrow_spark.sources.files import BlockWalk, local_frame, task_files
@@ -70,12 +70,18 @@ __all__ = [
     "any_of",
     "not_between",
     "not_in",
-    "METADATA_DDL",
+    "METADATA_SCHEMA",
 ]
 
-METADATA_DDL = (
-    "unit_id int, src_file string, out_file string, n_blocks int, "
-    "n_rows long, n_values long, in_bytes long, out_bytes long"
+# one manifest row per encoded unit: its source and blocks files, then the
+# fused encode's per-file totals
+METADATA_SCHEMA = pa.schema(
+    [
+        pa.field("unit_id", pa.int32()),
+        pa.field("src_file", pa.string()),
+        pa.field("out_file", pa.string()),
+        *list(_STATS_PA_SCHEMA)[1:],
+    ]
 )
 
 MANIFEST_SIDECAR = "_manifest.yaml"
@@ -135,23 +141,14 @@ def encode_parquet_dataset(
     than one axis. Clustering is physical only (decode order changes,
     values never do) and is recorded in the sidecar; resuming with a
     different clustering refuses rather than mixing layouts."""
-    if layout not in ("nested", "wide"):
-        raise ValueError(f"unknown blocks layout {layout!r}")
     if cluster not in ("lex", "zorder"):
         raise ValueError(f"unknown cluster {cluster!r}: use 'lex' or 'zorder'")
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     import pyarrow.parquet as pq
 
-    from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
-
-    infos = parquet_file_infos(in_path)
-    file_schema = from_arrow_schema(pq.read_schema(infos[0][0]))
-    if manifest is None:
-        manifest = CodecManifest.auto_for(file_schema, block_rows=65536)
-    manifest.validate(file_schema)
-    resolved = resolve_manifest_parquet(in_path, manifest)
+    file_schema, resolved, tasks = _fused_prologue(spark, in_path, manifest, n_tasks)
+    plan = _encode_plan(resolved, list(resolved.columns), layout)
 
     blocks_dir = os.path.join(out_path, "blocks")
     os.makedirs(blocks_dir, exist_ok=True)
@@ -222,7 +219,6 @@ def encode_parquet_dataset(
         )
     os.replace(spath + ".inprogress", spath)
 
-    tasks = plan_parquet_tasks(spark, in_path, n_tasks)
     if done:
         # drop completed units from each task's file arrays (resume)
         keep = F.filter(
@@ -240,83 +236,24 @@ def encode_parquet_dataset(
             .filter(F.size("file_idx") > 0)
         )
 
-    cols = list(resolved.columns)
-    policies = {c: resolved.columns[c].codec for c in cols}
-    required = frozenset(c for c in cols if not resolved.columns[c].nullable)
-    block_rows = resolved.block_rows
-    zone_maps_on = resolved.zone_maps
-    wide = layout == "wide"
-    out_schema = wide_pa_schema(cols) if wide else _BLOCKS_PA_SCHEMA
+    def write_unit(file_idx, fpath, rows):
+        rows = list(rows)
+        out_file = os.path.join(blocks_dir, f"blocks-u{file_idx:06d}.parquet")
+        # deterministic name per unit -> task retries overwrite, never
+        # duplicate (idempotent sink)
+        pq.write_table(
+            pa.Table.from_batches(rows, schema=plan.schema),
+            out_file, compression="none",
+        )
+        yield pa.RecordBatch.from_pylist(
+            [{"unit_id": file_idx, "src_file": fpath, "out_file": out_file,
+              **_file_totals(rows)}],
+            schema=METADATA_SCHEMA,
+        )
 
-    def encode_sink(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else 0
-        for file_idx, fpath in task_files(batches):
-            pf = pq.ParquetFile(fpath)
-            if presort:
-                # clustering needs the whole unit in memory (one file
-                # = one unit, sized for an executor by construction);
-                # one vectorized sort/take, then the same blockify
-                from xml2arrow_spark.operators.zorder import presort_table
-
-                unit_tbl = presort_table(
-                    pf.read(columns=cols), list(presort), cluster
-                )
-                batch_iter = unit_tbl.to_batches(max_chunksize=block_rows)
-            else:
-                batch_iter = pf.iter_batches(
-                    batch_size=block_rows, columns=cols
-                )
-            blocks = [
-                _encode_block(
-                    block, cols, policies, part_id, file_idx,
-                    (file_idx << 20) | seq, zone_maps=zone_maps_on,
-                    required=required,
-                )
-                for seq, block in enumerate(_blockify(batch_iter, block_rows))
-            ]
-            if wide:
-                blocks = [_widen_block(b, cols) for b in blocks]
-            out_file = os.path.join(blocks_dir, f"blocks-u{file_idx:06d}.parquet")
-            tbl = (
-                pa.Table.from_batches(blocks, schema=out_schema)
-                if blocks
-                else out_schema.empty_table()
-            )
-            # deterministic name per unit -> task retries overwrite,
-            # never duplicate (idempotent sink)
-            pq.write_table(tbl, out_file, compression="none")
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "unit_id": [file_idx],
-                    "src_file": [fpath],
-                    "out_file": [out_file],
-                    "n_blocks": [len(blocks)],
-                    "n_rows": [sum(x.column(3)[0].as_py() for x in blocks)],
-                    "n_values": [sum(x.column(4)[0].as_py() for x in blocks)],
-                    "in_bytes": [sum(x.column(5)[0].as_py() for x in blocks)],
-                    "out_bytes": [sum(x.column(6)[0].as_py() for x in blocks)],
-                },
-                schema=pa.schema(
-                    [
-                        pa.field("unit_id", pa.int32()),
-                        pa.field("src_file", pa.string()),
-                        pa.field("out_file", pa.string()),
-                        pa.field("n_blocks", pa.int32()),
-                        pa.field("n_rows", pa.int64()),
-                        pa.field("n_values", pa.int64()),
-                        pa.field("in_bytes", pa.int64()),
-                        pa.field("out_bytes", pa.int64()),
-                    ]
-                ),
-            )
-
-    meta = tasks.mapInArrow(encode_sink, METADATA_DDL).collect()
+    meta = _encode_files(
+        tasks, plan, write_unit, METADATA_SCHEMA, presort, cluster
+    ).collect()
     if meta:
         # manifest append AFTER the encode action completed (commit
         # ordering); driver-side atomic append — see operators/metadata.py
@@ -328,18 +265,7 @@ def encode_parquet_dataset(
         append_rows(
             os.path.join(out_path, "manifest"),
             [r.asDict() for r in meta],
-            pa.schema(
-                [
-                    pa.field("unit_id", pa.int32()),
-                    pa.field("src_file", pa.string()),
-                    pa.field("out_file", pa.string()),
-                    pa.field("n_blocks", pa.int32()),
-                    pa.field("n_rows", pa.int64()),
-                    pa.field("n_values", pa.int64()),
-                    pa.field("in_bytes", pa.int64()),
-                    pa.field("out_bytes", pa.int64()),
-                ]
-            ),
+            METADATA_SCHEMA,
             f"manifest-{uuid.uuid4().hex}.parquet",
         )
     return dataset_metrics(spark, out_path)
@@ -393,6 +319,7 @@ def dataset_column_stats(spark, out_path: str):
     import yaml
 
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_type
 
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
@@ -417,50 +344,25 @@ def dataset_column_stats(spark, out_path: str):
         )
     }
     blocks = spark.read.parquet(os.path.join(out_path, "blocks"))
-    stat_fields = ("vmin_i", "vmax_i", "vmin_d", "vmax_d", "vmin_s", "vmax_s")
-    agg_fields = ("n_null", "zsum_i")
-    if side.get("layout", "nested") == "wide":
-        # datasets written before the aggregate stats existed lack the
-        # columns entirely: surface NULL (= unstated) instead of failing
-        has_agg = f"c_{names[0]}__n_null" in blocks.columns
-        # ONE scan: stack() unpivots every column's stat tuple in a
-        # single projection (k separate selects would re-list and re-scan
-        # the blocks files k times)
-        args = []
-        for n in names:
-            args.append(f"'{n}'")
-            args += [f"c_{n}__{s}" for s in stat_fields]
-            args += (
-                [f"c_{n}__{s}" for s in agg_fields]
-                if has_agg
-                else ["CAST(NULL AS LONG)"] * 2
-            )
-        per_col = blocks.selectExpr(
-            "n_rows AS block_rows",
-            f"stack({len(names)}, {', '.join(args)}) AS "
-            f"(column, {', '.join(stat_fields + agg_fields)})",
+
+    def stat(n, f):
+        # a stat the blocks do not store (datasets written before the
+        # aggregate stats existed) reads as NULL = unstated
+        col = None if f == "zsum_i" and n in _temporal else zone_col(blocks, n, f)
+        return col if col is not None else F.lit(None).cast(
+            from_arrow_type(_STAT_FIELDS[f])
         )
-    else:
-        entry_fields = blocks.schema["cols"].dataType.elementType.fieldNames()
-        has_agg = "n_null" in entry_fields
-        c = F.explode("cols").alias("c")
-        per_col = blocks.select(F.col("n_rows").alias("block_rows"), c).select(
-            "block_rows",
-            F.col("c.name").alias("column"),
-            *[F.col(f"c.{s}").alias(s) for s in stat_fields],
-            *[
-                (F.col(f"c.{s}") if has_agg else F.lit(None).cast("long")).alias(s)
-                for s in agg_fields
-            ],
-        )
-    if _temporal:
-        per_col = per_col.withColumn(
-            "zsum_i",
-            F.when(
-                F.col("column").isin(sorted(_temporal)),
-                F.lit(None).cast("long"),
-            ).otherwise(F.col("zsum_i")),
-        )
+
+    # ONE scan: every column's stat tuple unpivots in a single projection
+    # (k separate selects would re-list and re-scan the blocks files k times)
+    per_col = blocks.select(
+        F.col("n_rows").alias("block_rows"),
+        F.explode(F.array(*[
+            F.struct(F.lit(n).alias("column"),
+                     *[stat(n, f).alias(f) for f in _STAT_FIELDS])
+            for n in names
+        ])).alias("c"),
+    ).select("block_rows", "c.*")
     # a block counts as unstated when it contributes no bounds at all, OR
     # when its string upper bound was withheld (un-incrementable truncated
     # prefix) — in both cases the aggregated extrema may understate

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import bisect
 import json
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pyarrow as pa
 
@@ -47,64 +47,68 @@ __all__ = [
     "prune_blocks_dnf",
     "normalize_zone_filters",
     "split_schema_ddl",
-    "BLOCKS_SCHEMA_DDL",
-    "blocks_metadata",
-    "wide_blocks_ddl",
     "BlockStats",
     "decode_blocks",
+    "encode_blocks",
     "payload_columns",
     "zone_col",
 ]
 
-BLOCKS_SCHEMA_DDL = (
-    "part_id int, unit_id int, block_id long, n_rows int, n_values long, "
-    "in_bytes long, out_bytes long, "
-    "cols array<struct<name: string, codec: string, meta: string, data: binary, "
-    "in_bytes: long, out_bytes: long, "
-    "vmin_i: long, vmax_i: long, vmin_d: double, vmax_d: double, "
-    "vmin_s: string, vmax_s: string, n_null: long, zsum_i: long>>"
+# The blocks format, defined once. A block row is its head fields, then one
+# entry per encoded column. The nested layout stores the entries as one
+# ``cols`` array<struct> column; the wide layout stores every entry field
+# but ``_NESTED_ONLY`` as a top-level ``c_<col>__<field>`` column, which a
+# parquet scan can prune per column. Both are derived by
+# :func:`_blocks_schema`.
+_HEAD_FIELDS = (
+    ("part_id", pa.int32()),
+    ("unit_id", pa.int32()),
+    ("block_id", pa.int64()),
+    ("n_rows", pa.int32()),
+    ("n_values", pa.int64()),
+    ("in_bytes", pa.int64()),
+    ("out_bytes", pa.int64()),
 )
+_ENTRY_FIELDS = (
+    ("name", pa.string()),
+    ("codec", pa.string()),
+    ("meta", pa.string()),
+    ("data", pa.binary()),
+    ("in_bytes", pa.int64()),
+    ("out_bytes", pa.int64()),
+    # zone map: per-block min/max of the column's values (int64 for
+    # integer/list columns, double for floats, truncation-safe bounds for
+    # strings; None when unknown/NaN/empty -> never pruned)
+    ("vmin_i", pa.int64()),
+    ("vmax_i", pa.int64()),
+    ("vmin_d", pa.float64()),
+    ("vmax_d", pa.float64()),
+    ("vmin_s", pa.string()),
+    ("vmax_s", pa.string()),
+    # aggregate stats (r05): row-level null count and provably-exact int64
+    # value sum (None = unavailable)
+    ("n_null", pa.int64()),
+    ("zsum_i", pa.int64()),
+)
+_NESTED_ONLY = ("name", "in_bytes", "out_bytes")
+_WIDE_FIELDS = tuple(f for f, _ in _ENTRY_FIELDS if f not in _NESTED_ONLY)
+# the per-block stats (name -> Arrow type), the ones :func:`_zone_stats` states
+_STAT_FIELDS = dict(_ENTRY_FIELDS[6:])
 
-_BLOCKS_PA_SCHEMA = pa.schema(
-    [
-        pa.field("part_id", pa.int32()),
-        pa.field("unit_id", pa.int32()),
-        pa.field("block_id", pa.int64()),
-        pa.field("n_rows", pa.int32()),
-        pa.field("n_values", pa.int64()),
-        pa.field("in_bytes", pa.int64()),
-        pa.field("out_bytes", pa.int64()),
-        pa.field(
-            "cols",
-            pa.list_(
-                pa.struct(
-                    [
-                        pa.field("name", pa.string()),
-                        pa.field("codec", pa.string()),
-                        pa.field("meta", pa.string()),
-                        pa.field("data", pa.binary()),
-                        pa.field("in_bytes", pa.int64()),
-                        pa.field("out_bytes", pa.int64()),
-                        # zone map: per-block min/max of the column's values
-                        # (int64 for integer/list columns, double for floats,
-                        # truncation-safe bounds for strings; None when
-                        # unknown/NaN/empty -> never pruned)
-                        pa.field("vmin_i", pa.int64()),
-                        pa.field("vmax_i", pa.int64()),
-                        pa.field("vmin_d", pa.float64()),
-                        pa.field("vmax_d", pa.float64()),
-                        pa.field("vmin_s", pa.string()),
-                        pa.field("vmax_s", pa.string()),
-                        # aggregate stats (r05): row-level null count and
-                        # provably-exact int64 value sum (None = unavailable)
-                        pa.field("n_null", pa.int64()),
-                        pa.field("zsum_i", pa.int64()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
+
+def _blocks_schema(cols: list[str], layout: str) -> pa.Schema:
+    """The Arrow schema of a blocks table holding ``cols`` in ``layout``
+    — the only place an unknown layout is rejected."""
+    head = [pa.field(n, t) for n, t in _HEAD_FIELDS]
+    if layout == "nested":
+        entry = pa.struct([pa.field(n, t) for n, t in _ENTRY_FIELDS])
+        return pa.schema(head + [pa.field("cols", pa.list_(entry))])
+    if layout == "wide":
+        return pa.schema(head + [
+            pa.field(f"c_{c}__{f}", t)
+            for c in cols for f, t in _ENTRY_FIELDS if f not in _NESTED_ONLY
+        ])
+    raise ValueError(f"unknown blocks layout {layout!r}")
 
 
 def _blockify(batches: Iterator[pa.RecordBatch], block_rows: int) -> Iterator[pa.Table]:
@@ -255,35 +259,53 @@ def _zone_stats(arr: pa.Array):
     return none6 + (n_null, None)
 
 
-def _encode_block(
-    block: pa.Table,
-    cols: list[str],
-    policies: dict[str, str],
-    part_id: int,
-    unit_id: int,
-    block_id: int,
-    zone_maps: bool = True,
-    required: frozenset = frozenset(),
-) -> pa.RecordBatch:
-    """Encode one bounded block (all manifest columns over the same row span)
-    into a single blocks-schema row. Shared by the DataFrame and the fused
-    parquet paths so their outputs are byte-identical.
+class EncodePlan(NamedTuple):
+    """Everything a block encode needs, built once on the driver by
+    :func:`_encode_plan` and shipped to the worker fns."""
 
-    ``required`` = columns whose ColumnPolicy declares ``nullable=False``.
-    A null there raises :class:`EncodeValueError` — the MissingRequiredField
-    analog (/root/reference/src/xml_parser.rs:327-338) — EXCEPT strings,
-    where the reference's rule maps a missing non-nullable Utf8 to ``""``;
-    the engine applies the same fill (decode then yields ``""``, not null)."""
+    cols: list[str]
+    policies: dict[str, str]
+    # columns whose ColumnPolicy declares nullable=False
+    required: frozenset
+    block_rows: int
+    zone_maps: bool
+    layout: str
+    schema: pa.Schema  # the blocks rows' schema in ``layout``
+
+
+def _encode_plan(
+    manifest: CodecManifest, cols: list[str], layout: str = "nested"
+) -> EncodePlan:
+    return EncodePlan(
+        cols=cols,
+        policies={c: manifest.columns[c].codec for c in cols},
+        required=frozenset(c for c in cols if not manifest.columns[c].nullable),
+        block_rows=manifest.block_rows,
+        zone_maps=manifest.zone_maps,
+        layout=layout,
+        schema=_blocks_schema(cols, layout),
+    )
+
+
+def _encode_block(
+    block: pa.Table, plan: EncodePlan, part_id: int, unit_id: int, block_id: int
+) -> pa.RecordBatch:
+    """Encode one bounded block (all ``plan.cols`` over the same row span)
+    into a single blocks row in ``plan.layout`` — the one writer of the
+    blocks format, so every encode path writes identical bytes.
+
+    A null in a ``plan.required`` column raises :class:`EncodeValueError`
+    — the reference's MissingRequiredField analog
+    (``src/xml_parser.rs:327-338``) — EXCEPT strings, where the reference's
+    rule maps a missing non-nullable Utf8 to ``""``; the engine applies the
+    same fill (decode then yields ``""``, not null)."""
     from xml2arrow_spark.errors import EncodeValueError
 
-    n_rows = block.num_rows
-    out_cols = []
+    entries = []
     n_values = 0
-    in_bytes = 0
-    out_bytes = 0
-    for name in cols:
+    for name in plan.cols:
         arr = block.column(name).combine_chunks()
-        if name in required and arr.null_count:
+        if name in plan.required and arr.null_count:
             if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
                 arr = arr.fill_null("")
             else:
@@ -291,9 +313,7 @@ def _encode_block(
                     f"column {name!r}: {arr.null_count} null value(s) in a "
                     f"column declared nullable=False (missing required field)"
                 )
-        col_in = arr.nbytes
-        resolved, meta_json, payload = encode_column(arr, policies[name])
-        col_out = len(payload) + len(meta_json)
+        resolved, meta_json, payload = encode_column(arr, plan.policies[name])
         meta = json.loads(meta_json)
         if meta["kind"] == "general":  # cascade wrapper: account the inner
             meta = json.loads(meta["inner"])
@@ -301,122 +321,40 @@ def _encode_block(
             n_values += meta["values_meta"]["n"]
         else:
             n_values += meta["n"]
-        in_bytes += col_in
-        out_bytes += col_out
-        zmin_i, zmax_i, zmin_d, zmax_d, zmin_s, zmax_s, z_nnull, z_sum = (
-            _zone_stats(arr) if zone_maps else (None,) * 8
-        )
-        out_cols.append(
-            {
-                "name": name,
-                "codec": resolved,
-                "meta": meta_json,
-                "data": payload,
-                "in_bytes": col_in,
-                "out_bytes": col_out,
-                "vmin_i": zmin_i,
-                "vmax_i": zmax_i,
-                "vmin_d": zmin_d,
-                "vmax_d": zmax_d,
-                "vmin_s": zmin_s,
-                "vmax_s": zmax_s,
-                "n_null": z_nnull,
-                "zsum_i": z_sum,
-            }
-        )
-    return pa.RecordBatch.from_pydict(
-        {
-            "part_id": [part_id],
-            "unit_id": [unit_id],
-            "block_id": [block_id],
-            "n_rows": [n_rows],
-            "n_values": [n_values],
-            "in_bytes": [in_bytes],
-            "out_bytes": [out_bytes],
-            "cols": [out_cols],
-        },
-        schema=_BLOCKS_PA_SCHEMA,
+        stats = _zone_stats(arr) if plan.zone_maps else (None,) * 8
+        entries.append({
+            "name": name, "codec": resolved, "meta": meta_json, "data": payload,
+            "in_bytes": arr.nbytes, "out_bytes": len(payload) + len(meta_json),
+            **dict(zip(_STAT_FIELDS, stats)),
+        })
+    head = [
+        part_id, unit_id, block_id, block.num_rows, n_values,
+        sum(e["in_bytes"] for e in entries),
+        sum(e["out_bytes"] for e in entries),
+    ]
+    if plan.layout == "nested":
+        values = head + [entries]
+    else:
+        values = head + [e[f] for e in entries for f in _WIDE_FIELDS]
+    return pa.RecordBatch.from_arrays(
+        [pa.array([v], type=t) for v, t in zip(values, plan.schema.types)],
+        schema=plan.schema,
     )
 
 
-def wide_blocks_ddl(cols: list[str]) -> str:
-    """Blocks DDL for ``layout='wide'``: one (codec, meta, data) column
-    TRIPLE per encoded column at the TOP level of the schema. Unlike the
-    default array<struct> ``cols`` layout, parquet can column-prune a wide
-    blocks table: decoding 1 of k columns reads ~1/k of the payload bytes —
-    the decode-side analog of the reference's unknown-subtree skip
-    (/root/reference/src/path_registry.rs:400-408)."""
-    per_col = ", ".join(
-        f"c_{name}__codec string, c_{name}__meta string, c_{name}__data binary, "
-        f"c_{name}__vmin_i long, c_{name}__vmax_i long, "
-        f"c_{name}__vmin_d double, c_{name}__vmax_d double, "
-        f"c_{name}__vmin_s string, c_{name}__vmax_s string, "
-        f"c_{name}__n_null long, c_{name}__zsum_i long"
-        for name in cols
-    )
-    return (
-        "part_id int, unit_id int, block_id long, n_rows int, n_values long, "
-        f"in_bytes long, out_bytes long, {per_col}"
-    )
-
-
-def wide_pa_schema(cols: list[str]) -> pa.Schema:
-    """Arrow schema matching :func:`wide_blocks_ddl` (for direct pyarrow
-    writers, e.g. the dataset sink's wide layout)."""
-    fields = [_BLOCKS_PA_SCHEMA.field(i) for i in range(7)]
-    for name in cols:
-        fields += [
-            pa.field(f"c_{name}__codec", pa.string()),
-            pa.field(f"c_{name}__meta", pa.string()),
-            pa.field(f"c_{name}__data", pa.binary()),
-            pa.field(f"c_{name}__vmin_i", pa.int64()),
-            pa.field(f"c_{name}__vmax_i", pa.int64()),
-            pa.field(f"c_{name}__vmin_d", pa.float64()),
-            pa.field(f"c_{name}__vmax_d", pa.float64()),
-            pa.field(f"c_{name}__vmin_s", pa.string()),
-            pa.field(f"c_{name}__vmax_s", pa.string()),
-            pa.field(f"c_{name}__n_null", pa.int64()),
-            pa.field(f"c_{name}__zsum_i", pa.int64()),
-        ]
-    return pa.schema(fields)
-
-
-def _widen_block(row_batch: pa.RecordBatch, cols: list[str]) -> pa.RecordBatch:
-    """One array<struct> block row -> the wide layout."""
-    entries = row_batch.column(7)[0].as_py()
-    by_name = {e["name"]: e for e in entries}
-    arrays = [row_batch.column(i) for i in range(7)]
-    names = [row_batch.schema.field(i).name for i in range(7)]
-    for name in cols:
-        e = by_name[name]
-        arrays += [
-            pa.array([e["codec"]], type=pa.string()),
-            pa.array([e["meta"]], type=pa.string()),
-            pa.array([e["data"]], type=pa.binary()),
-            pa.array([e["vmin_i"]], type=pa.int64()),
-            pa.array([e["vmax_i"]], type=pa.int64()),
-            pa.array([e["vmin_d"]], type=pa.float64()),
-            pa.array([e["vmax_d"]], type=pa.float64()),
-            pa.array([e["vmin_s"]], type=pa.string()),
-            pa.array([e["vmax_s"]], type=pa.string()),
-            pa.array([e["n_null"]], type=pa.int64()),
-            pa.array([e["zsum_i"]], type=pa.int64()),
-        ]
-        names += [
-            f"c_{name}__codec", f"c_{name}__meta", f"c_{name}__data",
-            f"c_{name}__vmin_i", f"c_{name}__vmax_i",
-            f"c_{name}__vmin_d", f"c_{name}__vmax_d",
-            f"c_{name}__vmin_s", f"c_{name}__vmax_s",
-            f"c_{name}__n_null", f"c_{name}__zsum_i",
-        ]
-    return pa.RecordBatch.from_arrays(arrays, names=names)
+def encode_blocks(
+    plan: EncodePlan, blocks, part_id: int, id_base: int
+) -> Iterator[pa.RecordBatch]:
+    """The one per-block encode loop, the write-side twin of
+    :func:`decode_blocks`: encode each ``(unit_id, table)`` of ``blocks``
+    into its blocks row; the ``seq``-th block gets id ``id_base | seq``."""
+    for seq, (unit_id, block) in enumerate(blocks):
+        yield _encode_block(block, plan, part_id, unit_id, id_base | seq)
 
 
 # the zone-bound stat pair per predicate category (int, double, string)
 _ZONE_SUFFIXES = {"i": ("vmin_i", "vmax_i"), "d": ("vmin_d", "vmax_d"),
                   "s": ("vmin_s", "vmax_s")}
-_STAT_FIELDS = ("vmin_i", "vmax_i", "vmin_d", "vmax_d", "vmin_s", "vmax_s",
-                "n_null", "zsum_i")
 
 
 def _lacks(col: str) -> ValueError:
@@ -433,8 +371,8 @@ def _one_array(col) -> pa.Array:
 
 class BlockStats:
     """Read-side view of the blocks format, the same on both layouts: the
-    nested ``cols`` array<struct> (``_BLOCKS_PA_SCHEMA``) and the wide
-    top-level ``c_<col>__<field>`` columns (:func:`wide_pa_schema`).
+    nested ``cols`` array<struct> and the wide top-level
+    ``c_<col>__<field>`` columns (:func:`_blocks_schema`).
 
     Opened with the columns whose payload a reader may need (``cols``)
     and those whose stats it may judge (``stats``, default ``cols``);
@@ -496,9 +434,7 @@ class BlockStats:
         self._starts = [0]  # first block of each payload row group
         opened = list(dict.fromkeys(cols + stats))
         if "cols" not in names:
-            for c in opened:
-                if f"c_{c}__meta" not in names or f"c_{c}__data" not in names:
-                    raise _lacks(c)
+            payload_columns(names, opened)  # raises on a column it lacks
             self._entries = None
             self._stats = tbl
             self._at = dict.fromkeys(opened, range(self._n))
@@ -632,9 +568,9 @@ def encode_table(
     the checkpoint/resume layer keys on. Without it, ``unit_id`` is -1.
 
     ``layout='nested'`` (default) emits one ``cols array<struct>`` column;
-    ``layout='wide'`` emits per-column top-level (codec, meta, data)
-    triples so a persisted blocks table supports parquet column pruning on
-    decode (:func:`wide_blocks_ddl`).
+    ``layout='wide'`` emits per-column top-level (codec, meta, data, stats)
+    columns so a persisted blocks table supports parquet column pruning on
+    decode (:func:`_blocks_schema`).
 
     ``presort=[cols...]`` reorders rows WITHIN each task before blocking —
     no shuffle, one in-task sort. Row permutation is the classic RLE/dict
@@ -645,13 +581,13 @@ def encode_table(
     per-row equality keyed by ids, not global order — same as the
     reference's document-order guarantee being per-scope).
     """
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     manifest.validate(df.drop(unit_col).schema if unit_col else df.schema)
     cols = manifest.encodable_columns(df.schema)
     if not cols:
         raise ValueError("manifest selects no encodable columns")
-    policies = {c: manifest.columns[c].codec for c in cols}
-    required = frozenset(c for c in cols if not manifest.columns[c].nullable)
-    block_rows = manifest.block_rows
+    plan = _encode_plan(manifest, cols, layout)
     if unit_col is None:
         # NOTE (r06): no widen_scan here — encode respects the CALLER's
         # partitioning (an explicit coalesce/repartition upstream is a
@@ -665,11 +601,6 @@ def encode_table(
     else:
         projected = df.select(unit_col, *cols).sortWithinPartitions(unit_col)
 
-    wide = layout == "wide"
-    if layout not in ("nested", "wide"):
-        raise ValueError(f"unknown blocks layout {layout!r}")
-    zone_maps_on = manifest.zone_maps
-
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
@@ -679,33 +610,29 @@ def encode_table(
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         if unit_col is None:
-            blocks_iter = ((-1, blk) for blk in _blockify(batches, block_rows))
+            blocks = ((-1, blk) for blk in _blockify(batches, plan.block_rows))
         else:
-            blocks_iter = _blockify_grouped(batches, block_rows, unit_col)
-        for seq, (unit_id, block) in enumerate(blocks_iter):
-            enc = _encode_block(
-                block, cols, policies, part_id, unit_id, (part_id << 32) | seq,
-                zone_maps=zone_maps_on, required=required,
-            )
-            yield _widen_block(enc, cols) if wide else enc
+            blocks = _blockify_grouped(batches, plan.block_rows, unit_col)
+        yield from encode_blocks(plan, blocks, part_id, part_id << 32)
 
-    ddl = wide_blocks_ddl(cols) if wide else BLOCKS_SCHEMA_DDL
-    return projected.mapInArrow(encode_fn, ddl)
+    return projected.mapInArrow(encode_fn, from_arrow_schema(plan.schema))
 
 
 def resolve_manifest_parquet(
-    path: str, manifest: CodecManifest, sample_rows: int = 8192
+    path, manifest: CodecManifest, sample_rows: int = 8192
 ) -> CodecManifest:
     """Driver-side manifest resolution straight from parquet footers/pages —
     no Spark job at all (the ``Parser::new`` compile step,
     /root/reference/src/xml_parser.rs:763-784). Reads at most ``sample_rows``
     rows from the first file(s) with pyarrow and runs the same choosers the
-    block-side 'auto' path uses."""
+    block-side 'auto' path uses. ``path`` is a parquet file or directory,
+    or its already-listed :func:`~xml2arrow_spark.sources.files
+    .parquet_file_infos`."""
     import pyarrow.parquet as pq
 
     from xml2arrow_spark.sources.files import parquet_file_infos
 
-    infos = parquet_file_infos(path)
+    infos = parquet_file_infos(path) if isinstance(path, str) else path
     batches = []
     remaining = sample_rows
     for fpath, _ in infos:
@@ -787,24 +714,38 @@ def resolve_manifest_parquet(
     )
 
 
-def encode_parquet_tasks(tasks_df, manifest: CodecManifest):
-    """Fused pyarrow scan + encode over a file-task DataFrame
-    (:func:`xml2arrow_spark.sources.files.plan_parquet_tasks`).
+def _fused_prologue(spark, path: str, manifest: CodecManifest | None,
+                    n_tasks: int | None):
+    """The fused encoders' one prologue: list ``path`` once, read the
+    first file's schema, default the manifest (``auto_for``), validate it,
+    resolve its 'auto' codecs from a sample and plan balanced file tasks,
+    all over that one listing. Returns ``(file_schema, resolved, tasks)``."""
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    Each task opens its files with pyarrow and streams
-    parquet -> Arrow -> numpy kernels with no JVM row materialization — the
-    path that makes the Python boundary disappear (see sources/files.py
-    module doc; measured 20-30x over row-fed ``mapInArrow``). Blocks never
-    span files; ``unit_id`` = ``file_idx`` is the resume key. Column pruning
-    happens in the pyarrow reader (only manifest columns are decoded), the
-    engine-side analog of the reference's unknown-subtree skip
-    (/root/reference/src/path_registry.rs:400-408).
-    """
-    cols = [name for name in manifest.columns]
-    policies = {c: manifest.columns[c].codec for c in cols}
-    required = frozenset(c for c in cols if not manifest.columns[c].nullable)
-    block_rows = manifest.block_rows
-    zone_maps_on = manifest.zone_maps
+    import pyarrow.parquet as pq
+
+    from xml2arrow_spark.sources.files import _plan_tasks, parquet_file_infos
+
+    infos = parquet_file_infos(path)
+    file_schema = from_arrow_schema(pq.read_schema(infos[0][0]))
+    if manifest is None:
+        manifest = CodecManifest.auto_for(file_schema, block_rows=65536)
+    manifest.validate(file_schema)
+    resolved = resolve_manifest_parquet(infos, manifest)
+    return file_schema, resolved, _plan_tasks(spark, infos, n_tasks)
+
+
+def _encode_files(tasks_df, plan: EncodePlan, finish, out_schema: pa.Schema,
+                  presort: list[str] | None = None, cluster: str = "lex"):
+    """The one fused file worker: each task opens its files with pyarrow
+    and streams parquet -> Arrow -> numpy kernels through
+    :func:`encode_blocks`, with no JVM row materialization. Blocks never
+    span files; a file's ``seq``-th block is ``unit_id = file_idx``,
+    ``block_id = (file_idx << 20) | seq``. ``finish(file_idx, fpath,
+    rows)`` turns one file's block rows into the batches (``out_schema``)
+    the task ships. ``presort`` clusters each file's rows before blocking
+    (:func:`~xml2arrow_spark.operators.zorder.presort_table`)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -817,26 +758,44 @@ def encode_parquet_tasks(tasks_df, manifest: CodecManifest):
         task_setup()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
-        seq = 0
         for file_idx, fpath in task_files(batches):
             pf = pq.ParquetFile(fpath)
-            for block in _blockify(
-                pf.iter_batches(batch_size=block_rows, columns=cols), block_rows
-            ):
-                yield _encode_block(
-                    block, cols, policies, part_id, file_idx,
-                    (part_id << 32) | seq, zone_maps=zone_maps_on,
-                    required=required,
+            if presort:
+                # clustering needs the whole unit in memory (one file = one
+                # unit, sized for an executor by construction); one
+                # vectorized sort/take, then the same blockify
+                from xml2arrow_spark.operators.zorder import presort_table
+
+                unit_tbl = presort_table(
+                    pf.read(columns=plan.cols), list(presort), cluster
                 )
-                seq += 1
+                batch_iter = unit_tbl.to_batches(max_chunksize=plan.block_rows)
+            else:
+                batch_iter = pf.iter_batches(
+                    batch_size=plan.block_rows, columns=plan.cols
+                )
+            blocks = ((file_idx, b) for b in _blockify(batch_iter, plan.block_rows))
+            yield from finish(
+                file_idx, fpath, encode_blocks(plan, blocks, part_id, file_idx << 20)
+            )
 
-    return tasks_df.mapInArrow(encode_files, BLOCKS_SCHEMA_DDL)
+    return tasks_df.mapInArrow(encode_files, from_arrow_schema(out_schema))
 
 
-ENCODE_STATS_DDL = (
-    "unit_id int, n_blocks int, n_rows long, n_values long, "
-    "in_bytes long, out_bytes long"
-)
+def encode_parquet_tasks(tasks_df, manifest: CodecManifest):
+    """Fused pyarrow scan + encode over a file-task DataFrame
+    (:func:`xml2arrow_spark.sources.files.plan_parquet_tasks`): the blocks
+    rows of every file, nested layout.
+
+    The path that makes the Python boundary disappear (see sources/files.py
+    module doc; measured 20-30x over row-fed ``mapInArrow``). ``unit_id`` =
+    ``file_idx`` is the resume key. Column pruning happens in the pyarrow
+    reader (only manifest columns are decoded), the engine-side analog of
+    the reference's unknown-subtree skip (``src/path_registry.rs:400-408``).
+    """
+    plan = _encode_plan(manifest, list(manifest.columns))
+    return _encode_files(tasks_df, plan, lambda _i, _f, rows: rows, plan.schema)
+
 
 _STATS_PA_SCHEMA = pa.schema(
     [
@@ -848,6 +807,16 @@ _STATS_PA_SCHEMA = pa.schema(
         pa.field("out_bytes", pa.int64()),
     ]
 )
+
+
+def _file_totals(rows) -> dict:
+    """``n_blocks`` and the summed counts of one file's block rows."""
+    out = dict.fromkeys(_STATS_PA_SCHEMA.names[1:], 0)
+    for r in rows:
+        out["n_blocks"] += 1
+        for k in _STATS_PA_SCHEMA.names[2:]:
+            out[k] += r.column(k)[0].as_py()
+    return out
 
 
 def encode_parquet_stats(
@@ -865,63 +834,15 @@ def encode_parquet_stats(
     /root/reference/benches/parse_benchmark.rs:415-455): the kernel work is
     identical, only result transport differs. Also the right shape for
     dry-run codec planning over a large table."""
-    from pyspark.sql.pandas.types import from_arrow_schema
+    _schema, resolved, tasks = _fused_prologue(spark, path, manifest, n_tasks)
 
-    import pyarrow.parquet as pq
+    def ship_totals(file_idx, _fpath, rows):
+        yield pa.RecordBatch.from_pylist(
+            [{"unit_id": file_idx, **_file_totals(rows)}], schema=_STATS_PA_SCHEMA
+        )
 
-    from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
-
-    first = parquet_file_infos(path)[0][0]
-    file_schema = from_arrow_schema(pq.read_schema(first))
-    if manifest is None:
-        manifest = CodecManifest.auto_for(file_schema, block_rows=65536)
-    manifest.validate(file_schema)
-    resolved = resolve_manifest_parquet(path, manifest)
-    tasks = plan_parquet_tasks(spark, path, n_tasks)
-    cols = list(resolved.columns)
-    policies = {c: resolved.columns[c].codec for c in cols}
-    required = frozenset(c for c in cols if not resolved.columns[c].nullable)
-    block_rows = resolved.block_rows
-    zone_maps_on = resolved.zone_maps
-
-    def encode_stats(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        from xml2arrow_spark.env import task_setup
-        from xml2arrow_spark.sources.files import task_files
-
-        task_setup()
-        for file_idx, fpath in task_files(batches):
-            pf = pq.ParquetFile(fpath)
-            nb = nr = nv = ib = ob = 0
-            for seq, block in enumerate(
-                _blockify(
-                    pf.iter_batches(batch_size=block_rows, columns=cols),
-                    block_rows,
-                )
-            ):
-                enc = _encode_block(
-                    block, cols, policies, 0, file_idx, seq,
-                    zone_maps=zone_maps_on, required=required,
-                )
-                nb += 1
-                nr += enc.column(3)[0].as_py()
-                nv += enc.column(4)[0].as_py()
-                ib += enc.column(5)[0].as_py()
-                ob += enc.column(6)[0].as_py()
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "unit_id": [file_idx],
-                    "n_blocks": [nb],
-                    "n_rows": [nr],
-                    "n_values": [nv],
-                    "in_bytes": [ib],
-                    "out_bytes": [ob],
-                },
-                schema=_STATS_PA_SCHEMA,
-            )
-
-    return tasks.mapInArrow(encode_stats, ENCODE_STATS_DDL)
+    plan = _encode_plan(resolved, list(resolved.columns))
+    return _encode_files(tasks, plan, ship_totals, _STATS_PA_SCHEMA)
 
 
 def encode_parquet(
@@ -933,19 +854,7 @@ def encode_parquet(
     """Convenience: plan balanced file tasks over ``path``, resolve the
     manifest driver-side from the parquet sample, and return the fused-encode
     blocks DataFrame. The flagship ingest path (BASELINE.json north_star)."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    import pyarrow.parquet as pq
-
-    from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
-
-    first = parquet_file_infos(path)[0][0]
-    file_schema = from_arrow_schema(pq.read_schema(first))
-    if manifest is None:
-        manifest = CodecManifest.auto_for(file_schema, block_rows=65536)
-    manifest.validate(file_schema)
-    resolved = resolve_manifest_parquet(path, manifest)
-    tasks = plan_parquet_tasks(spark, path, n_tasks)
+    _schema, resolved, tasks = _fused_prologue(spark, path, manifest, n_tasks)
     return encode_parquet_tasks(tasks, resolved)
 
 
@@ -1257,11 +1166,10 @@ def payload_columns(names: list[str], cols: list[str]) -> list[str]:
     wide parquet scan skip every other column's payload IO."""
     if "cols" in names:
         return ["cols"]
-    need = [x for c in cols for x in (f"c_{c}__meta", f"c_{c}__data")]
-    missing = sorted(set(need) - set(names))
-    if missing:
-        raise ValueError(f"blocks table lacks columns for {missing}")
-    return need
+    for c in cols:
+        if f"c_{c}__meta" not in names or f"c_{c}__data" not in names:
+            raise _lacks(c)
+    return [x for c in cols for x in (f"c_{c}__meta", f"c_{c}__data")]
 
 
 def decode_table(blocks_df, schema_ddl: str, zone_filter=None, row_filter=None):
@@ -1307,7 +1215,7 @@ def decode_table(blocks_df, schema_ddl: str, zone_filter=None, row_filter=None):
 
     ``schema_ddl`` may name a SUBSET of the encoded columns: only the
     named columns are decoded. Nested layout: their payload bytes still
-    ride in the ``cols`` struct. Wide layout (see :func:`wide_blocks_ddl`):
+    ride in the ``cols`` struct. Wide layout (see :func:`_blocks_schema`):
     the projection keeps only the named columns' (meta, data) pairs
     (:func:`payload_columns`), so parquet-backed blocks tables ALSO skip
     the unneeded payload IO — true decode-side column pruning. Each Spark
@@ -1338,30 +1246,3 @@ def decode_table(blocks_df, schema_ddl: str, zone_filter=None, row_filter=None):
     return blocks_df.select(
         *payload_columns(blocks_df.columns, read_names)
     ).mapInArrow(decode_fn, schema_ddl)
-
-
-def blocks_metadata(blocks_df):
-    """Blocks DataFrame -> lightweight per-block metadata (no payload bytes).
-
-    This is what lands in the checkpoint manifest table; explode gives
-    per-column codec lineage.
-    """
-    from pyspark.sql import functions as F
-
-    return blocks_df.select(
-        "part_id",
-        "block_id",
-        "n_rows",
-        "n_values",
-        "in_bytes",
-        "out_bytes",
-        F.transform(
-            "cols",
-            lambda c: F.struct(
-                c["name"].alias("name"),
-                c["codec"].alias("codec"),
-                c["in_bytes"].alias("in_bytes"),
-                c["out_bytes"].alias("out_bytes"),
-            ),
-        ).alias("col_codecs"),
-    )

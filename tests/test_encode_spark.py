@@ -114,3 +114,18 @@ def test_blocks_respect_block_rows(spark):
     df = tokens_dataframe(spark, 4000, variant="low_card", n_partitions=2)
     blocks = encode_table(df, CodecManifest.auto_for(df.schema, block_rows=1000))
     assert blocks.agg(F.max("n_rows")).collect()[0][0] <= 1000
+
+
+def test_unit_encode_presorts_within_each_unit(spark):
+    """encode_table(unit_col=, presort=) clusters rows inside each unit:
+    one unit's decoded rows ascend on the presort column."""
+    df = spark.range(4000).select(
+        (F.col("id") % 4).cast("int").alias("unit_id"),
+        ((F.col("id") * 7919) % 1000).cast("int").alias("x"),
+    ).repartition(2, "unit_id")
+    man = CodecManifest(columns={"x": ColumnPolicy("auto")}, block_rows=8192)
+    blocks = encode_table(df, man, unit_col="unit_id", presort=["x"])
+    one = blocks.filter(F.col("unit_id") == 2).coalesce(1)
+    xs = [r["x"] for r in decode_table(one, "x int").collect()]
+    assert len(xs) == 1000
+    assert xs == sorted(xs)

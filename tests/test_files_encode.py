@@ -450,3 +450,41 @@ def test_fused_encoders_list_their_input_once(spark, token_dir, tmp_path,
         calls.clear()
         run()
         assert calls == [token_dir]
+
+
+def test_auto_encode_of_wide_decimal_roundtrips(spark, tmp_path):
+    """A decimal(20,0) column (UInt64's widened type) under the default
+    all-``auto`` manifest: the fused encoder resolves it through the same
+    chooser as resolve_manifest (the low 64 bits as an integer stream) and
+    round-trips values at and above 2^63 exactly."""
+    import decimal
+
+    import numpy as np
+    import pyarrow as pa
+
+    from xml2arrow_spark.operators.dataset import (
+        MANIFEST_SIDECAR,
+        decode_dataset,
+        encode_parquet_dataset,
+    )
+    from xml2arrow_spark.plans.selector import resolve_manifest
+
+    rng = np.random.default_rng(3)
+    n = 5000
+    vals = [None if i % 97 == 0 else decimal.Decimal(2**63 - 500 + int(x))
+            for i, x in enumerate(rng.integers(0, 1 << 30, n))]
+    vals[1] = decimal.Decimal(2**64 - 1)
+    d = str(tmp_path / "dec")
+    os.makedirs(d)
+    pq.write_table(pa.table({
+        "id": pa.array(np.arange(n, dtype=np.int64)),
+        "u": pa.array(vals, type=pa.decimal128(20, 0)),
+    }), os.path.join(d, "part-0.parquet"))
+    out = str(tmp_path / "store")
+    encode_parquet_dataset(spark, d, out, n_tasks=1)
+    got = {r["id"]: r["u"] for r in decode_dataset(spark, out).collect()}
+    assert got == dict(enumerate(vals))
+    stored = CodecManifest.from_yaml_file(os.path.join(out, MANIFEST_SIDECAR))
+    df = spark.read.parquet(d)
+    spark_pick = resolve_manifest(df, CodecManifest.auto_for(df.schema))
+    assert stored.columns["u"].codec == spark_pick.columns["u"].codec != "auto"

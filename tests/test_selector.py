@@ -1,6 +1,8 @@
 """Codec auto-selection picks the expected winner per FIXTURES.md F1 variant."""
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from xml2arrow_spark.codecs import StrData
@@ -10,6 +12,7 @@ from xml2arrow_spark.plans.selector import (
     estimate_int_sizes,
     int_stats,
 )
+from xml2arrow_spark.sources.tokens import VARIANTS, generate_tokens_arrow
 
 RNG = np.random.default_rng(42)
 
@@ -95,3 +98,101 @@ def test_resolve_manifest_spark(spark):
     resolved.validate(df.schema)
     assert CodecManifest.from_yaml(resolved.to_yaml()).columns["tokens"].codec == \
         resolved.columns["tokens"].codec
+
+
+# -- the value-bounded driver-side sample: both resolvers pick alike, and
+# -- each pick equals the pick from the whole 8,192-row reference sample
+
+def _bf16_embeddings():
+    # bf16-upcast float32 vectors (two all-zero mantissa byte planes), as
+    # in test_files_encode; 8,192 x 64 values is twice the value bound
+    rng = np.random.default_rng(23)
+    n_vec, dim = 8192, 64
+    flat = (
+        rng.normal(size=n_vec * dim).astype(np.float32).view(np.uint32)
+        & np.uint32(0xFFFF0000)
+    ).view(np.float32)
+    return pa.table({
+        "vec_id": pa.array(np.arange(n_vec, dtype=np.int64)),
+        "embedding": pa.FixedSizeListArray.from_arrays(pa.array(flat), dim)
+        .cast(pa.list_(pa.float32())),
+    })
+
+
+def _lineitem_table():
+    # scalar lineitem-shaped columns, 20,000 rows (the 8,192-row sample is
+    # a real prefix), one column of every type family the chooser
+    # dispatches on, nulls included
+    import datetime
+    import decimal
+
+    rng = np.random.default_rng(5)
+    n = 20_000
+    orderkey = np.sort(rng.integers(1, 60_000, n)).astype(np.int64)
+    partkey = rng.integers(1, 2_000, n).astype(np.int64)
+    qty = rng.integers(1, 51, n).astype(np.float64)
+    price = np.round(rng.uniform(900, 100_000, n), 2)
+    base = datetime.date(1992, 1, 1)
+    ship = [base + datetime.timedelta(days=int(d)) for d in rng.integers(0, 2_500, n)]
+    stamp = np.datetime64("2024-01-01T00:00:00", "us") + rng.integers(
+        0, 86_400_000_000, n
+    ).astype("timedelta64[us]")
+    wide = [decimal.Decimal(2**63 + int(x)) for x in rng.integers(0, 1 << 40, n)]
+    return pa.table({
+        "l_orderkey": pa.array(orderkey),
+        "l_partkey": pa.array(partkey, mask=rng.random(n) < 0.05),
+        "l_linenumber": pa.array(rng.integers(1, 8, n).astype(np.int32)),
+        "l_quantity": pa.array(qty),
+        "l_extendedprice": pa.array(price),
+        "l_returnflag": pa.array(rng.choice(["A", "N", "R"], n)),
+        "l_comment": pa.array(
+            [None if i % 11 == 0 else f"note {i % 97} x" for i in range(n)]
+        ),
+        "l_shipdate": pa.array(ship, type=pa.date32()),
+        "l_stamp": pa.array(stamp, type=pa.timestamp("us")),
+        "l_urn": pa.array(wide, type=pa.decimal128(20, 0)),
+        "l_returned": pa.array(rng.random(n) < 0.3),
+    })
+
+
+_PIN_CASES = {
+    **{f"f1_{v}": (lambda v=v: generate_tokens_arrow(8192, variant=v), {})
+       for v in VARIANTS},
+    "bf16_embeddings": (_bf16_embeddings, {"embedding": "auto+zstd"}),
+    "lineitem": (_lineitem_table, {}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PIN_CASES))
+def test_value_bounded_picks_pin_reference(spark, tmp_path, monkeypatch, case):
+    """Both resolvers pick alike under the value bound, and every pick equals
+    the pick with the bound lifted (the whole 8,192-row sample)."""
+    from xml2arrow_spark.manifest import CodecManifest
+    from xml2arrow_spark.operators.encode import resolve_manifest_parquet
+    from xml2arrow_spark.plans import selector
+    from xml2arrow_spark.plans.selector import resolve_manifest
+
+    make, overrides = _PIN_CASES[case]
+    tbl = make()
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(tbl, path)
+    df = spark.read.parquet(path)
+    man = CodecManifest.auto_for(df.schema, block_rows=65536)
+    for name, codec in overrides.items():
+        man.columns[name].codec = codec
+
+    def picks(m):
+        return {name: p.codec for name, p in m.columns.items()}
+
+    bound = selector.SAMPLE_VALUES
+    capped = picks(resolve_manifest_parquet(path, man))
+    assert picks(resolve_manifest(df, man)) == capped
+    monkeypatch.setattr(selector, "SAMPLE_VALUES", 1 << 62)
+    reference = picks(resolve_manifest_parquet(path, man))
+    assert capped == reference
+    assert "auto" not in capped.values()
+    lists = [c for c in tbl.column_names if pa.types.is_list(tbl.schema.field(c).type)]
+    if case not in ("f1_single_token", "lineitem"):
+        # the bound cut the list sample the chooser saw at least in half
+        assert all(len(tbl.column(c).slice(0, 8192).combine_chunks().flatten())
+                   >= 2 * bound for c in lists)

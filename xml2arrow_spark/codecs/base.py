@@ -19,6 +19,7 @@ import pyarrow as pa
 
 __all__ = [
     "StrData",
+    "decimal_low64",
     "pack_sections",
     "split_sections",
     "strdata_from_arrow",
@@ -109,3 +110,17 @@ def strdata_to_arrow(sd: StrData, large: bool = False) -> pa.Array:
         sd.n,
         [None, pa.py_buffer(sd.offsets.astype(np.int32).tobytes()), pa.py_buffer(sd.data)],
     )
+
+
+def decimal_low64(arr: pa.Array) -> np.ndarray | None:
+    """The values of a null-free decimal128 array as the int64 bit-cast of
+    their low 64 bits: the integer stream a scale-0 decimal (UInt64's
+    widened type) is coded as. None when a value lies outside [0, 2^64),
+    where the high 64 bits are not all zero."""
+    if len(arr) == 0:
+        return np.zeros(0, dtype=np.int64)
+    raw = np.frombuffer(arr.buffers()[1], dtype=np.uint64)
+    raw = raw[2 * arr.offset : 2 * (arr.offset + len(arr))]
+    if raw[1::2].any():
+        return None
+    return np.ascontiguousarray(raw[0::2]).view(np.int64)

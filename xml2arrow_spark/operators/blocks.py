@@ -28,6 +28,7 @@ from xml2arrow_spark.errors import (
 )
 from xml2arrow_spark.codecs.base import (
     StrData,
+    decimal_low64,
     strdata_from_arrow,
     strdata_to_arrow,
 )
@@ -327,17 +328,12 @@ def _encode_column_raw(
                 f"only scale-0 decimal columns are encodable (the UInt64 "
                 f"widening type); got {t}"
             )
-        valid_arr = arr.drop_null() if mask is not None else arr
-        nv = len(valid_arr)
-        raw = np.frombuffer(valid_arr.buffers()[1], dtype=np.uint64)
-        raw = raw[2 * valid_arr.offset : 2 * (valid_arr.offset + nv)]
-        lo, hi = raw[0::2], raw[1::2]
-        if nv and hi.any():
+        values = decimal_low64(arr.drop_null() if mask is not None else arr)
+        if values is None:
             raise EncodeValueError(
                 f"column of type {t}: values outside [0, 2^64) cannot be "
                 f"encoded (UInt64 widening contract; no silent truncation)"
             )
-        values = np.ascontiguousarray(lo).view(np.int64)
         resolved = _resolve_int(codec, values)
         vmeta, vblob = encode_values(resolved, values)
         meta = {

@@ -572,7 +572,8 @@ def encode_table(
     columns so a persisted blocks table supports parquet column pruning on
     decode (:func:`_blocks_schema`).
 
-    ``presort=[cols...]`` reorders rows WITHIN each task before blocking —
+    ``presort=[cols...]`` reorders rows WITHIN each task (within each unit,
+    when ``unit_col`` is set) before blocking —
     no shuffle, one in-task sort. Row permutation is the classic RLE/dict
     amplifier ("Column Partition and Permutation for Run Length Encoding in
     Columnar Databases", SIGMOD 2020): interleaved low-cardinality values
@@ -599,7 +600,10 @@ def encode_table(
         if presort:
             projected = projected.sortWithinPartitions(*presort)
     else:
-        projected = df.select(unit_col, *cols).sortWithinPartitions(unit_col)
+        # rows of one unit are contiguous; presort clusters them inside it
+        projected = df.select(unit_col, *cols).sortWithinPartitions(
+            unit_col, *(presort or [])
+        )
 
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -624,94 +628,60 @@ def resolve_manifest_parquet(
     """Driver-side manifest resolution straight from parquet footers/pages —
     no Spark job at all (the ``Parser::new`` compile step,
     /root/reference/src/xml_parser.rs:763-784). Reads at most ``sample_rows``
-    rows from the first file(s) with pyarrow and runs the same choosers the
-    block-side 'auto' path uses. ``path`` is a parquet file or directory,
-    or its already-listed :func:`~xml2arrow_spark.sources.files
-    .parquet_file_infos`."""
+    rows of the ``auto`` columns from the first file(s) with pyarrow, each
+    list column on its own and only until it holds
+    :data:`~xml2arrow_spark.plans.selector.SAMPLE_VALUES` values, and
+    resolves them with the chooser
+    :func:`~xml2arrow_spark.plans.selector.resolve_manifest` shares.
+    ``path`` is a parquet file or directory, or its already-listed
+    :func:`~xml2arrow_spark.sources.files.parquet_file_infos`."""
     import pyarrow.parquet as pq
 
+    from xml2arrow_spark.plans.selector import (
+        SAMPLE_VALUES,
+        auto_columns,
+        resolve_sample,
+    )
     from xml2arrow_spark.sources.files import parquet_file_infos
 
     infos = parquet_file_infos(path) if isinstance(path, str) else path
-    batches = []
-    remaining = sample_rows
-    for fpath, _ in infos:
-        if remaining <= 0:
-            break
-        for batch in pq.ParquetFile(fpath).iter_batches(batch_size=min(remaining, 65536)):
-            batches.append(batch)
-            remaining -= batch.num_rows
-            if remaining <= 0:
-                break
-    sample = pa.Table.from_batches(batches) if batches else None
-    if sample is None:
-        return manifest
+    schema = pq.read_schema(infos[0][0]) if infos else pa.schema([])
+    cols = auto_columns(manifest, schema.names)
 
-    from dataclasses import replace
+    def read(columns, batch_rows, max_values=None):
+        # batches of the first files until sample_rows rows, or until the
+        # (one) list column holds max_values values
+        batches, rows, values = [], 0, 0
+        for fpath, _ in infos:
+            for batch in pq.ParquetFile(fpath).iter_batches(
+                batch_size=batch_rows, columns=columns
+            ):
+                batches.append(batch.slice(0, sample_rows - rows))
+                rows += batch.num_rows
+                if max_values is not None:
+                    values += len(batch.column(0).flatten())
+                if rows >= sample_rows or (
+                    max_values is not None and values >= max_values
+                ):
+                    return batches
+        return batches
 
-    import numpy as np
+    def is_list(name):
+        t = schema.field(name).type
+        return pa.types.is_list(t) or pa.types.is_large_list(t)
 
-    from xml2arrow_spark.codecs.base import strdata_from_arrow
-    from xml2arrow_spark.plans.selector import choose_int_codec, choose_str_codec
-
-    resolved = {}
-    for name, policy in manifest.columns.items():
-        # preserve a "+zstd"/"+lz4" cascade suffix; resolve the base only
-        base, _, general = policy.codec.partition("+")
-        sfx = f"+{general}" if general else ""
-        if base != "auto" or name not in sample.column_names:
-            resolved[name] = policy
-            continue
-        arr = sample.column(name).combine_chunks()
-        if len(arr) == 0:
-            resolved[name] = policy
-        elif pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-            values = np.asarray(arr.flatten())
-            if pa.types.is_floating(arr.type.value_type):
-                from xml2arrow_spark.codecs.floats import choose_float_codec
-
-                resolved[name] = replace(
-                    policy,
-                    codec=choose_float_codec(values, cascade=general or None)
-                    + sfx,
-                )
-            else:
-                resolved[name] = replace(
-                    policy, codec=choose_int_codec(values) + sfx
-                )
-        elif pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
-            # sample-based caller: cost a canonical encode block, with the
-            # plain_str hysteresis (same rule as resolve_manifest — this
-            # path previously passed no target_rows and silently lost both
-            # the scale-invariant costing and the stability guard)
-            resolved[name] = replace(
-                policy,
-                codec=choose_str_codec(
-                    strdata_from_arrow(arr.drop_null()),
-                    target_rows=manifest.block_rows,
-                )
-                + sfx,
-            )
-        elif pa.types.is_floating(arr.type):
-            from xml2arrow_spark.codecs.floats import choose_float_codec
-
-            resolved[name] = replace(
-                policy,
-                codec=choose_float_codec(
-                    np.asarray(arr.drop_null()), cascade=general or None
-                )
-                + sfx,
-            )
-        elif pa.types.is_boolean(arr.type):
-            resolved[name] = replace(policy, codec="bool_pack" + sfx)
-        else:
-            resolved[name] = replace(
-                policy, codec=choose_int_codec(np.asarray(arr.drop_null())) + sfx
-            )
-    return CodecManifest(
-        columns=resolved, block_rows=manifest.block_rows,
-        version=manifest.version, zone_maps=manifest.zone_maps,
-    )
+    lists = [c for c in cols if is_list(c)]
+    scalars = [c for c in cols if c not in lists]
+    parts = [read(scalars, sample_rows)] if scalars else []
+    # a list's rows are read in small batches, so reading stops close to
+    # the value bound instead of decoding the whole row sample
+    parts += [read([c], 256, SAMPLE_VALUES) for c in lists]
+    sample = {}
+    for batches in parts:
+        tbl = pa.Table.from_batches(batches) if batches else None
+        if tbl is not None and tbl.num_rows:
+            sample.update(zip(tbl.column_names, tbl.columns))
+    return resolve_sample(manifest, sample) if sample else manifest
 
 
 def _fused_prologue(spark, path: str, manifest: CodecManifest | None,

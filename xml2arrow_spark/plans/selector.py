@@ -6,8 +6,11 @@ sampled statistics — cardinality, run count, value range, chunk-frequency —
 using closed-form size estimates per codec and picking the minimum. The same
 chooser runs in two places:
 
-- **driver-side** on a collected sample, to resolve the manifest once per job
+- **driver-side** on a bounded sample, to resolve the manifest once per job
   (compile-once amortization, /root/reference/src/xml_parser.rs:710-741);
+  scalar columns from a row-bounded sample, list columns from at most
+  :data:`SAMPLE_VALUES` flattened values, both through the one per-column
+  dispatch :func:`choose_column_codec`;
 - **block-side** on the actual block when the resolved codec is still
   ``auto`` (per-block adaptivity beats a global guess on skewed data).
 
@@ -19,21 +22,38 @@ implemented codecs.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
-from xml2arrow_spark.codecs.base import StrData
+from xml2arrow_spark.codecs.base import (
+    StrData,
+    decimal_low64,
+    strdata_from_arrow,
+    strdata_to_arrow,
+)
 from xml2arrow_spark.codecs.bitpack import bits_needed
-from xml2arrow_spark.codecs.integers import PDICT_MAX_RANGE, pdict_plan
+from xml2arrow_spark.codecs.integers import PDICT_MAX_RANGE, pdict_plan, pfor_plan
 
 __all__ = [
-    "estimate_int_sizes",
+    "SAMPLE_VALUES",
+    "choose_column_codec",
     "choose_int_codec",
     "choose_str_codec",
+    "estimate_int_sizes",
     "int_stats",
     "resolve_manifest",
+    "resolve_sample",
 ]
 
 
 _CARD_PROBE = 65536
+
+# The driver-side sample bound for LIST columns, in flattened values.
+# Scalar columns keep the resolvers' row-bounded sample (``sample_rows``),
+# but 8,192 rows of an F1-shaped token list (~245 tokens a row) hold ~2 M
+# values: ~130 ms per resolve of a 20k-row token batch on a 4-core Xeon,
+# ~28 ms at this bound. The picks at 2^18 values equal the full-sample
+# picks (tests/test_selector.py pins every F1 variant).
+SAMPLE_VALUES = 1 << 18
 
 
 def int_stats(values: np.ndarray) -> dict:
@@ -96,11 +116,10 @@ def choose_int_codec(values: np.ndarray) -> str:
     table (< 2^22) — on zipf-like token streams pdict beats FOR ~1.5x, so
     skipping it would forfeit the realistic win.
     """
-    if values.dtype.kind == "f":
-        # pandas yields float64 for int columns with nulls; the caller drops
-        # the nulls, so the remaining values are exact integers
-        values = values.astype(np.int64)
-    stats = int_stats(values)
+    # one int64 view and one min-shift feed the stats, pfor and pdict
+    # passes (a copy only for narrower dtypes)
+    v = values.astype(np.int64, copy=False)
+    stats = int_stats(v)
     est = estimate_int_sizes(stats, itemsize=values.dtype.itemsize)
     n = stats["n"]
     vrange = stats["max"] - stats["min"]
@@ -109,21 +128,14 @@ def choose_int_codec(values: np.ndarray) -> str:
         # outlier skew — rare huge sentinels — where plain FOR forfeits
         # the whole block's width); one O(n) frexp pass, rate-based and
         # therefore scale-invariant
-        from xml2arrow_spark.codecs.integers import pfor_plan
-
-        deltas = (
-            values.astype(np.int64, copy=False) - np.int64(stats["min"])
-        ).view(np.uint64)
-        _, est["pfor"] = pfor_plan(deltas, n, bits_needed(vrange))
-    if n and 0 < vrange < PDICT_MAX_RANGE:
-        shifted = np.subtract(
-            values, stats["min"], dtype=np.int64
-        ).astype(np.int32)
-        counts = np.bincount(shifted, minlength=vrange + 1)
-        nz = int((counts > 0).sum())
-        cum = np.cumsum(np.sort(counts)[::-1])[: max(nz, 1)]
-        _, size = pdict_plan(cum, n, bits_needed(vrange))
-        est["pdict"] = size
+        shifted = v - np.int64(stats["min"])
+        _, est["pfor"] = pfor_plan(shifted.view(np.uint64), n, bits_needed(vrange))
+        if vrange < PDICT_MAX_RANGE:
+            counts = np.bincount(shifted, minlength=vrange + 1)
+            nz = int((counts > 0).sum())
+            cum = np.cumsum(np.sort(counts)[::-1])[: max(nz, 1)]
+            _, size = pdict_plan(cum, n, bits_needed(vrange))
+            est["pdict"] = size
     return min(est, key=est.get)
 
 
@@ -165,10 +177,6 @@ def choose_str_codec(sd: StrData, target_rows: int | None = None) -> str:
     data_bytes = len(sd.data)
     # cardinality probe on a bounded sample of rows
     take = min(n, 8192)
-    import pyarrow as pa
-
-    from xml2arrow_spark.codecs.base import strdata_to_arrow
-
     arr = strdata_to_arrow(StrData(sd.offsets[: take + 1], sd.data[: int(sd.offsets[take])]), large=True)
     card = len(arr.dictionary_encode().dictionary)
     if take == n or card <= take * 0.1:
@@ -233,138 +241,106 @@ def choose_str_codec(sd: StrData, target_rows: int | None = None) -> str:
     return best
 
 
-def resolve_manifest(df, manifest, sample_rows: int = 8192):
-    """Resolve every ``auto`` policy against a driver-collected sample.
+def choose_column_codec(arr, general: str, block_rows: int) -> str | None:
+    """The ``auto`` pick for one sampled column, from its Arrow array: the
+    one type dispatch both driver-side resolvers share.
 
-    Returns a new :class:`CodecManifest` with concrete codecs. Uses one
-    bounded ``limit(sample_rows)`` collect — no full scan. Columns the
-    sample can't discriminate stay ``auto`` and are chosen per block.
+    The chooser sees the values the block encoder (operators/blocks.py)
+    codes: non-null values, temporal columns as their storage epoch counts,
+    scale-0 decimals as the bit-cast low 64 bits, list columns as their
+    flattened elements, cut to the first :data:`SAMPLE_VALUES`.
+    ``general`` is the policy's cascade coder ('' for none); strings are
+    costed for a canonical block of ``block_rows``. None leaves the column
+    ``auto``: an empty sample, or a decimal sample outside [0, 2^64)."""
+    from xml2arrow_spark.codecs.floats import choose_float_codec
 
-    The collect goes through ``toPandas()`` deliberately: PySpark 4.1's
-    ``toArrow()`` executes the plan via the Arrow-batch RDD, which does NOT
-    take the CollectLimit fast path — on a many-file table it scans every
-    split (measured 15-20x slower than ``toPandas()`` for an 8k-row limit).
-    Column conversion back to numpy/Arrow is schema-driven (never inferred),
-    bounded by the sample size.
-    """
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if len(arr) == 0:
+        return None
+    t = arr.type
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        arr = arr.flatten()[:SAMPLE_VALUES]
+        t = arr.type
+    else:
+        arr = arr.drop_null()
+    if pa.types.is_floating(t):
+        return choose_float_codec(np.asarray(arr), cascade=general or None)
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return choose_str_codec(strdata_from_arrow(arr), target_rows=block_rows)
+    if pa.types.is_boolean(t):
+        return "bool_pack"
+    if pa.types.is_decimal(t):
+        values = decimal_low64(arr)
+        return None if values is None else choose_int_codec(values)
+    if pa.types.is_timestamp(t) or pa.types.is_date(t):
+        arr = arr.cast(pa.int64() if pa.types.is_timestamp(t) else pa.int32())
+    return choose_int_codec(np.asarray(arr))
+
+
+def resolve_sample(manifest, sample: dict):
+    """A new :class:`CodecManifest` with every ``auto`` policy whose column
+    ``sample`` holds (name -> Arrow array) resolved by
+    :func:`choose_column_codec`. A "+zstd"/"+lz4" cascade suffix rides
+    along unchanged; only the lightweight base codec is resolved."""
     from dataclasses import replace
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        DateType,
-        DecimalType,
-        DoubleType,
-        FloatType,
-        StringType,
-        TimestampNTZType,
-        TimestampType,
-    )
-
-    from xml2arrow_spark.codecs.base import strdata_from_arrow
     from xml2arrow_spark.manifest import CodecManifest
 
-    cols = manifest.encodable_columns(df.schema)
-    if not cols:
-        return manifest
-
-    pdf = df.select(*cols).limit(sample_rows).toPandas()
     resolved = {}
     for name, policy in manifest.columns.items():
-        # a "+zstd"/"+lz4" general-cascade suffix rides along unchanged;
-        # only the lightweight base codec is sample-resolved
         base, _, general = policy.codec.partition("+")
-        suffix = f"+{general}" if general else ""
-        if base != "auto":
-            resolved[name] = policy
-            continue
-        if name not in pdf.columns or len(pdf) == 0:
-            resolved[name] = policy
-            continue
-        series = pdf[name]
-        spark_type = df.schema[name].dataType
-        if isinstance(spark_type, ArrayType):
-            if isinstance(spark_type.elementType, (DoubleType, FloatType)):
-                # float lists (embedding columns): the flattened sample
-                # rides the float chooser, in the element precision
-                fdt = (
-                    np.float32
-                    if isinstance(spark_type.elementType, FloatType)
-                    else np.float64
-                )
-                from xml2arrow_spark.codecs.floats import choose_float_codec
-
-                chunks = [
-                    np.asarray(x, dtype=fdt) for x in series if x is not None
-                ]
-                values = (
-                    np.concatenate(chunks) if chunks else np.zeros(0, dtype=fdt)
-                )
-                codec = choose_float_codec(values, cascade=general or None)
-            else:
-                # sample in int64: an int32 hard-cast would wrap
-                # array<bigint> elements (block-side guards keep data
-                # correct, but the codec choice would be garbage); the
-                # choosers work on int64 anyway
-                chunks = [
-                    np.asarray(x, dtype=np.int64) for x in series if x is not None
-                ]
-                values = (
-                    np.concatenate(chunks)
-                    if chunks
-                    else np.zeros(0, dtype=np.int64)
-                )
-                codec = choose_int_codec(values)
-        elif isinstance(spark_type, StringType):
-            arr = pa.array(series.fillna(""), type=pa.string())
-            # cost a canonical encode block, not the sample (scale-invariant
-            # selection — see choose_str_codec)
-            codec = choose_str_codec(
-                strdata_from_arrow(arr), target_rows=manifest.block_rows
-            )
-        elif isinstance(spark_type, (DoubleType, FloatType)):
-            from xml2arrow_spark.codecs.floats import choose_float_codec
-
-            codec = choose_float_codec(
-                series.dropna().to_numpy(), cascade=general or None
-            )
-        elif isinstance(spark_type, BooleanType):
-            codec = "bool_pack"
-        elif isinstance(
-            spark_type, (DateType, TimestampType, TimestampNTZType)
-        ):
-            # temporal columns ride the integer choosers on their epoch
-            # counts (pandas ns for timestamps, ordinal days for dates —
-            # the unit scales deltas uniformly, so the CHOICE is the same
-            # as over the stored micros/days)
-            sample = series.dropna()
-            if isinstance(spark_type, DateType):
-                values = np.array(
-                    [d.toordinal() for d in sample], dtype=np.int64
-                )
-            else:
-                values = sample.to_numpy().astype("datetime64[ns]").astype(np.int64)
-            codec = choose_int_codec(values)
-        elif isinstance(spark_type, DecimalType):
-            # UInt64-widened columns: sample as python ints (driver-side,
-            # bounded), bit-cast through uint64 like the block encoder
-            vals = [int(x) for x in series.dropna()]
-            if vals and 0 <= min(vals) and max(vals) < 2**64:
-                codec = choose_int_codec(
-                    np.array(vals, dtype=np.uint64).view(np.int64)
-                )
-            else:
-                codec = policy.codec  # out-of-contract sample: leave auto
-        else:
-            # dropna() first: pandas represents int+nulls as float64, and the
-            # chooser needs the non-null values only (astype in choose_int_codec
-            # restores exact int64)
-            codec = choose_int_codec(series.dropna().to_numpy())
-        resolved[name] = replace(
-            policy, codec=codec + ("" if codec == policy.codec else suffix)
+        codec = None
+        if base == "auto" and name in sample:
+            codec = choose_column_codec(sample[name], general, manifest.block_rows)
+        resolved[name] = policy if codec is None else replace(
+            policy, codec=codec + (f"+{general}" if general else "")
         )
     return CodecManifest(
         columns=resolved, block_rows=manifest.block_rows,
         version=manifest.version, zone_maps=manifest.zone_maps,
     )
+
+
+def auto_columns(manifest, names) -> list[str]:
+    """The columns of ``names`` whose manifest policy is ``auto`` (with or
+    without a cascade suffix): the only ones a resolver samples."""
+    return [
+        n for n in names
+        if n in manifest.columns
+        and manifest.columns[n].codec.partition("+")[0] == "auto"
+    ]
+
+
+def resolve_manifest(df, manifest, sample_rows: int = 8192):
+    """Resolve every ``auto`` policy against a driver-collected sample.
+
+    Returns a new :class:`CodecManifest` with concrete codecs (``manifest``
+    itself when nothing is ``auto`` or the sample is empty). One bounded
+    ``limit(sample_rows)`` collect of the ``auto`` columns (no Spark job
+    when there are none), no full scan. Scalar columns are chosen from
+    those rows; list columns from at most :data:`SAMPLE_VALUES` of their
+    flattened values (:func:`choose_column_codec`). Columns the sample
+    can't discriminate stay ``auto`` and are chosen per block.
+
+    The collect goes through ``toPandas()`` deliberately: PySpark 4.1's
+    ``toArrow()`` executes the plan via the Arrow-batch RDD, which does NOT
+    take the CollectLimit fast path — on a many-file table it scans every
+    split (measured 15-20x slower than ``toPandas()`` for an 8k-row limit).
+    The pandas sample is turned back into Arrow with the schema's types
+    (never inferred), so both resolvers share one chooser.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    cols = auto_columns(manifest, manifest.encodable_columns(df.schema))
+    if not cols:
+        return manifest
+    projected = df.select(*cols)
+    pdf = projected.limit(sample_rows).toPandas()
+    if len(pdf) == 0:
+        return manifest
+    types = to_arrow_schema(projected.schema)
+    return resolve_sample(manifest, {
+        name: pa.Array.from_pandas(pdf[name], type=types.field(name).type)
+        for name in cols
+    })

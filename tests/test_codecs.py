@@ -16,7 +16,8 @@ from xml2arrow_spark.codecs import (
     decode_values,
     encode_values,
 )
-from xml2arrow_spark.codecs.bitpack import bits_needed, pack_uint, unpack_uint
+from xml2arrow_spark.codecs.bitpack import bits_needed, pack_uint, uint_dtype, unpack_uint
+from xml2arrow_spark.errors import EncodeValueError
 
 RNG = np.random.default_rng(42)
 
@@ -159,15 +160,51 @@ def test_fsst_compresses_common_prefix():
     assert len(fsst) < len(plain) / 1.5
 
 
-def test_bitpack_widths():
-    for width in [0, 1, 3, 7, 8, 13, 17, 31, 32, 40, 63, 64]:
-        hi = (1 << width) - 1
-        v = RNG.integers(0, hi + 1, 1000, dtype=np.uint64) if width else np.zeros(
-            1000, dtype=np.uint64
-        )
-        v[0] = hi
-        out = unpack_uint(pack_uint(v, width), v.size, width)
-        np.testing.assert_array_equal(out, v)
+def _ref_pack(values: list, width: int) -> bytes:
+    """Pure-Python reference of the stream layout: native little-endian at
+    widths 8/16/32/64, else one MSB-first bit string padded to a byte."""
+    if width in (8, 16, 32, 64):
+        return b"".join(v.to_bytes(width // 8, "little") for v in values)
+    bits = "".join(format(v, f"0{width}b") for v in values) if width else ""
+    bits += "0" * (-len(bits) % 8)
+    return int(bits, 2).to_bytes(len(bits) // 8, "big") if bits else b""
+
+
+def _ref_unpack(buf: bytes, n: int, width: int) -> list:
+    if width in (8, 16, 32, 64):
+        k = width // 8
+        return [int.from_bytes(buf[i * k : (i + 1) * k], "little") for i in range(n)]
+    if width == 0 or n == 0:
+        return [0] * n
+    bits = format(int.from_bytes(buf, "big"), f"0{len(buf) * 8}b")
+    return [int(bits[i * width : (i + 1) * width], 2) for i in range(n)]
+
+
+@pytest.mark.parametrize("width", range(65))
+def test_bitpack_every_width_against_reference(width):
+    """Every width 0-64 at sizes on both sides of a lane row (8 values) and
+    of the old 2,048-value kernel crossover, both ways against the
+    reference: pack -> bytes and bytes -> unpack."""
+    rng = np.random.default_rng(width)
+    hi = (1 << width) - 1
+    for n in (0, 1, 7, 8, 2047, 2048, 65537):
+        v = rng.integers(0, hi, n, dtype=np.uint64, endpoint=True)
+        if n:
+            v[0] = hi
+        if width % 2 and width < 64:
+            v = v.astype(np.int64)  # the signed-input path
+        values = v.tolist()
+        ref = _ref_pack(values, width)
+        assert pack_uint(v, width) == ref, (width, n)
+        got = unpack_uint(ref, n, width)
+        assert got.dtype == uint_dtype(width) and got.size == n
+        assert got.tolist() == _ref_unpack(ref, n, width) == values, (width, n)
+    if width:
+        with pytest.raises(EncodeValueError):
+            pack_uint(np.array([3, -1], dtype=np.int64), width)
+        if width < 64:
+            with pytest.raises(EncodeValueError):
+                pack_uint(np.array([0, 1 << width], dtype=np.uint64), width)
 
 
 def test_bitpack_overflow_is_error():

@@ -8,6 +8,8 @@ drift from the materialized evaluation."""
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -292,6 +294,27 @@ def test_value_counts_pdict_extremes():
     arr = pa.array(vals, type=pa.int64())
     _, meta, data = encode_column(arr, "pdict")
     _assert_counts_equiv(meta, data)
+
+
+@pytest.mark.parametrize("ref", [250, 2**32 - 100])
+def test_pdict_ref_plus_top_beyond_narrow_container(ref):
+    """A pdict block with value range < 2^8 unpacks its dictionary and
+    exceptions into uint8; ``ref`` plus such a value wraps if it is added
+    in that container (uint8 at ref 250, uint32 at 2^32 - 100). The
+    codec-aware counts and match must equal decode-then-aggregate, and the
+    decode must equal the input."""
+    rng = np.random.default_rng(11)
+    offsets = np.minimum(rng.zipf(1.6, 4000), 200) - 1
+    vals = (ref + offsets).tolist() + [None, ref + 199]
+    arr = pa.array(vals, type=pa.int64())
+    _, meta, data = encode_column(arr, "pdict")
+    vm = json.loads(meta)["values_meta"]
+    assert vm["w_exc"] == 8 and vm["n_exc"] > 0
+    assert decode_column(meta, data).to_pylist() == vals
+    _assert_counts_equiv(meta, data)
+    for pred in [([ref + 150, ref + 199], None, None), (None, ref + 100, ref + 199),
+                 ([ref + 3], None, None), (None, ref + 250, None)]:
+        _assert_equiv(meta, data, *pred)
 
 
 # ---- group_sum_column (codec-aware grouped COUNT + SUM) ---------------------

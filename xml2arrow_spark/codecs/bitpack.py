@@ -1,22 +1,31 @@
-"""Vectorized bit-(un)packing primitives.
+"""Vectorized bit-(un)packing: one lane kernel for every width.
 
-The integer analog of the reference's byte-level parse loop
-(/root/reference/src/xml_parser.rs:200-240): every value passes through a
-narrow, fully-checked width — overflow is an error, never silent truncation.
+The stream is unchanged since the first store: value i at bits
+``[i*w, (i+1)*w)`` of one MSB-first bit stream, or a native little-endian
+integer at widths 8/16/32/64. Overflow is an error, never silent
+truncation, as in the reference parser.
 
-All kernels are pure numpy (no per-value Python), operating on whole arrays —
-the engine-side counterpart of the reference's "enum dispatch over dyn
-dispatch" hot-loop discipline (/root/reference/src/xml_parser.rs:39-54):
-the width branch happens once per block, never per value.
+Lane view: 8 values of width w take exactly w bytes, so the payload is a
+``(ceil(n/8), w)`` byte matrix where value j of every row (lane j) starts
+at byte ``j*w // 8``, bit ``j*w % 8``: one big-endian word at a fixed
+offset with a fixed shift, uint32 up to w = 25 and uint64 up to w = 57.
+At w = 58..63 a lane spans 9 bytes and its head byte is folded in apart
+from the 8-byte word after it. Unpack gathers every row's 8 words at once;
+pack writes them back. The bits land where the older unpackbits/packbits
+kernels put them, so payloads are byte-identical
+(``tests/test_bitpack_format.py``). The width picks the path once per
+block; no path depends on the number of values.
 """
 
 from __future__ import annotations
+
+from functools import lru_cache
 
 import numpy as np
 
 from xml2arrow_spark.errors import EncodeValueError
 
-__all__ = ["bits_needed", "pack_uint", "unpack_uint"]
+__all__ = ["bits_needed", "pack_uint", "unpack_uint", "uint_dtype"]
 
 
 def bits_needed(max_value: int) -> int:
@@ -26,30 +35,36 @@ def bits_needed(max_value: int) -> int:
     return int(max_value).bit_length()
 
 
-# Byte-aligned fast paths: widths 8/16/32/64 store values as NATIVE
-# little-endian narrow integers (a pure truncating cast — measured 2x the
-# big-endian cast, which pays a byteswap pass). Non-aligned widths use the
-# MSB-first bit-matrix stream; the two sub-formats are distinguished by
-# width alone, so pack/unpack always agree.
+# Byte-aligned widths store NATIVE little-endian narrow integers: a pure
+# truncating cast on pack and a zero-copy view on unpack.
 _ALIGNED = {8: "<u1", 16: "<u2", 32: "<u4", 64: "<u8"}
 
-# Narrowest big-endian container holding `width` bits. Working in the small
-# container instead of upcasting to uint64 matters twice: per-core speed AND
-# multi-core scaling — the kernel is memory-bandwidth-bound, so bytes moved
-# per token is what the 8->32-core efficiency target rides on.
-def _container(width: int) -> tuple[str, int]:
-    if width <= 8:
-        return ">u1", 1
-    if width <= 16:
-        return ">u2", 2
-    if width <= 32:
-        return ">u4", 4
-    return ">u8", 8
 
-# Chunk length for the general path: multiple of 8 so every chunk boundary is
-# byte-aligned for ANY width (8 values x width bits ≡ width bytes). Bounds the
-# unpackbits intermediate to ~width MB per task instead of O(block).
-_CHUNK = 4 * 1024 * 1024
+def uint_dtype(width: int) -> np.dtype:
+    """Narrowest unsigned dtype holding ``width`` bits: what :func:`unpack_uint` returns."""
+    return np.dtype(_ALIGNED[max(8, 1 << (max(width, 1) - 1).bit_length())])
+
+
+@lru_cache(maxsize=None)
+def _lanes(width: int):
+    """Lane plan of a non-aligned width: word bytes and dtype, each lane's
+    word offset and right shift, the head-byte mask and shift (w > 57
+    only; the head byte sits just before the word), and how many lane
+    classes pack needs so that lanes of one class never share a byte."""
+    start = np.arange(8) * width
+    bit, first, last = start & 7, start >> 3, (start + width - 1) >> 3
+    nbytes = 4 if width <= 25 else 8
+    word = np.uint32 if nbytes == 4 else np.uint64
+    offset, shift, head = first, 8 * nbytes - bit - width, None
+    if width > 57:
+        offset, shift = first + 1, 72 - bit - width
+        head = ((0xFF >> bit).astype(np.uint8), (bit + width - 8).astype(word))
+    classes = next(c for c in range(1, 9)
+                   if all(last[j] < first[j + c] for j in range(8 - c)))
+    shift = shift.astype(word)
+    for a in (offset, shift, *(head or ())):
+        a.flags.writeable = False  # cached: shared by every call
+    return nbytes, word, offset, shift, head, classes
 
 
 def pack_uint(values: np.ndarray, width: int) -> bytes:
@@ -75,70 +90,54 @@ def pack_uint(values: np.ndarray, width: int) -> bytes:
     dt = _ALIGNED.get(width)
     if dt is not None:
         return v.astype(dt).tobytes()
-    cdt, cbytes = _container(width)
-    nb = (width + 7) // 8
-    out = []
-    for lo in range(0, n, _CHUNK):
-        # low nb big-endian bytes of each value -> bit matrix -> keep the low
-        # `width` bits -> repack. Two numpy passes, no Python loop per value.
-        chunk = v[lo : lo + _CHUNK].astype(cdt)
-        as_bytes = chunk.view(np.uint8).reshape(-1, cbytes)[:, cbytes - nb :]
-        bits = np.unpackbits(np.ascontiguousarray(as_bytes), axis=1)
-        out.append(np.packbits(bits[:, nb * 8 - width :]).tobytes())
-    return b"".join(out)
+    nbytes, word, offset, shift, head, classes = _lanes(width)
+    g = -(-n // 8)
+    lanes = np.zeros((g, 8), word)
+    lanes.reshape(-1)[:n] = v
+    # one zeroed row buffer per lane class, each row padded by a word so no
+    # lane spills into the next row (a spare row keeps the views inside the
+    # buffer at n = 0); in a class, a lane's zero tail is overwritten by the
+    # class's next lane, written later
+    row = width + nbytes
+    rows = np.zeros((classes, g + 1, row), np.uint8)
+    body = rows[:, :g]
+    if head is not None:
+        for k in range(classes):
+            body[k][:, offset[k::classes] - 1] = lanes[:, k::classes] >> head[1][k::classes]
+    lanes <<= shift
+    for j in range(8):
+        dest = np.ndarray((g,), f">u{nbytes}", rows[j % classes], offset[j], (row,))
+        dest[...] = lanes[:, j]
+    out = body[0]
+    for k in range(1, classes):
+        out |= body[k]
+    return np.ascontiguousarray(out[:, :width]).reshape(-1)[: (n * width + 7) // 8].tobytes()
 
 
 def unpack_uint(buf: bytes, n: int, width: int) -> np.ndarray:
-    """Inverse of :func:`pack_uint`; returns uint64 array of length ``n``."""
+    """Inverse of :func:`pack_uint`: ``n`` values as :func:`uint_dtype` (width).
+
+    At the aligned widths the result is a read-only view of ``buf``.
+    """
     if width == 0:
-        return np.zeros(n, dtype=np.uint64)
+        return np.zeros(n, dtype=np.uint8)
     if not 0 < width <= 64:
         raise EncodeValueError(f"width out of range: {width}")
     dt = _ALIGNED.get(width)
     if dt is not None:
-        return np.frombuffer(buf, dtype=dt, count=n).astype(np.uint64)
-    nb = (width + 7) // 8
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    out = np.empty(n, dtype=np.uint64)
-    # gather decode for width <= 56 (r06): each value's bits span at most
-    # ceil((width + 7) / 8) + 1 consecutive bytes; gather them with ONE
-    # fancy index, fold big-endian, shift+mask. Replaces the
-    # unpackbits -> pad -> packbits -> view chain (6 full-array
-    # temporaries) — measured 1.5-2x on 8192-value blocks (the FOR/delta
-    # decode hot path both the fused kernels and the driver-side metadata
-    # aggregates ride); below ~2k values the old path's fewer small
-    # allocations win (17 vs 25 us at 256), so tiny blocks keep it.
-    # Widths 57..63 would overflow the uint64 byte fold (9 gathered
-    # bytes) and keep the bit-matrix path too.
-    use_gather = width <= 56 and n >= 2048
-    m = (width + 14) // 8  # bytes gathered per value (worst bit offset 7)
-    mask = np.uint64((1 << width) - 1)
-    for lo in range(0, n, _CHUNK):
-        cn = min(_CHUNK, n - lo)
-        blo = lo * width // 8  # byte-aligned: lo is a multiple of 8
-        if use_gather:
-            chunk_bytes = raw[blo : blo + (cn * width + 7) // 8]
-            if chunk_bytes.size < ((cn - 1) * width) // 8 + m:
-                pad = np.zeros(
-                    ((cn - 1) * width) // 8 + m - chunk_bytes.size, np.uint8
-                )
-                chunk_bytes = np.concatenate((chunk_bytes, pad))
-            start_bit = np.arange(cn, dtype=np.int64) * width
-            first_byte = start_bit >> 3
-            g = chunk_bytes[
-                first_byte[:, None] + np.arange(m, dtype=np.int64)
-            ].astype(np.uint64)
-            acc = g[:, 0]
-            for k in range(1, m):
-                acc = (acc << np.uint64(8)) | g[:, k]
-            rshift = (np.uint64(8 * m - width) - (start_bit & 7).astype(np.uint64))
-            out[lo : lo + cn] = (acc >> rshift) & mask
-        else:
-            bits = np.unpackbits(raw[blo : blo + (cn * width + 7) // 8])[: cn * width]
-            full = np.zeros((cn, nb * 8), dtype=np.uint8)
-            full[:, nb * 8 - width :] = bits.reshape(cn, width)
-            packed = np.packbits(full, axis=1)  # (cn, nb) big-endian low bytes
-            wide = np.zeros((cn, 8), dtype=np.uint8)
-            wide[:, 8 - nb :] = packed
-            out[lo : lo + cn] = wide.reshape(-1).view(">u8").astype(np.uint64)
-    return out
+        return np.frombuffer(buf, dtype=dt, count=n)
+    nbytes, word, offset, shift, head, _ = _lanes(width)
+    g, size = -(-n // 8), (n * width + 7) // 8
+    # whole rows plus one word of zero padding past the last row
+    raw = np.zeros(g * width + 9, np.uint8)
+    raw[:size] = np.frombuffer(buf, np.uint8, size)
+    windows = np.ndarray((g, width + 1), f">u{nbytes}", raw, 0, (width, 1))
+    lanes = windows[:, offset] >> shift
+    if head is not None:
+        heads = raw[: g * width].reshape(g, width)[:, offset - 1] & head[0]
+        lanes |= heads.astype(word) << head[1]
+    # the gather lays lanes out column by column: mask, narrow and restore
+    # row order in one pass
+    out = np.empty((g, 8), uint_dtype(width))
+    np.bitwise_and(lanes, word((1 << width) - 1), out=out, casting="unsafe")
+    return out.reshape(-1)[:n]

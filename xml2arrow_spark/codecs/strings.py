@@ -101,7 +101,7 @@ def encode_dict_str(sd: StrData) -> tuple[dict, bytes]:
 def decode_dict_str(meta: dict, blob: bytes) -> StrData:
     parts = split_sections(meta, blob)
     dict_sd = decode_plain_str(meta["dict_meta"], parts["dict"])
-    idx = bitpack.unpack_uint(parts["indices"], meta["n"], meta["iwidth"]).astype(np.int64)
+    idx = bitpack.unpack_uint(parts["indices"], meta["n"], meta["iwidth"])
     lengths = dict_sd.lengths()
     out_lengths = lengths[idx]
     offsets = np.zeros(meta["n"] + 1, dtype=np.int64)

@@ -20,7 +20,8 @@ import zlib
 import numpy as np
 import pyarrow as pa
 
-from xml2arrow_spark.codecs import decode_values, encode_values
+from xml2arrow_spark.codecs import bitpack, decode_values, encode_values
+from xml2arrow_spark.codecs.integers import _for_unpack
 from xml2arrow_spark.errors import (
     BlockCorruptionError,
     EncodeTypeError,
@@ -616,7 +617,6 @@ def value_counts_column(meta_json: str, payload: bytes, mask=None):
         )
 
     if kind in ("int", "str"):
-        from xml2arrow_spark.codecs import bitpack
         from xml2arrow_spark.codecs.base import INT_DTYPES, split_sections
 
         vmask, vpayload = _unpack_validity(meta, payload)
@@ -626,23 +626,19 @@ def value_counts_column(meta_json: str, payload: bytes, mask=None):
             vm = meta["values_meta"]
             pa_type = _PA_INT[meta["dtype"]]
             if vm["codec"] == "dict":
-                from xml2arrow_spark.codecs.integers import _for_unpack
-
                 np_dtype = INT_DTYPES[vm["dtype"]]
                 parts = split_sections(vm, vpayload)
                 uniq = _for_unpack(parts["dict"], vm["card"], vm["uref"], vm["uwidth"])
-                idx = bitpack.unpack_uint(
-                    parts["indices"], vm["n"], vm["iwidth"]
+                idx = bitpack.unpack_uint(parts["indices"], vm["n"], vm["iwidth"])
+                counts = np.bincount(
+                    idx.astype(np.intp), minlength=vm["card"]
                 ).astype(np.int64)
-                counts = np.bincount(idx, minlength=vm["card"]).astype(np.int64)
                 return (
                     pa.array(uniq.astype(np_dtype), type=pa_type),
                     counts,
                     n_null,
                 )
             if vm["codec"] == "rle":
-                from xml2arrow_spark.codecs.integers import _for_unpack
-
                 np_dtype = INT_DTYPES[vm["dtype"]]
                 parts = split_sections(vm, vpayload)
                 k = vm["n_runs"]
@@ -663,24 +659,26 @@ def value_counts_column(meta_json: str, payload: bytes, mask=None):
             if vm["codec"] == "pdict" and vm["n"]:
                 np_dtype = INT_DTYPES[vm["dtype"]]
                 parts = split_sections(vm, vpayload)
-                top = bitpack.unpack_uint(
-                    parts["dict"], vm["n_dict"], vm["w_exc"]
-                ).astype(np.int64)
-                codes = bitpack.unpack_uint(parts["codes"], vm["n"], vm["w"]).astype(
-                    np.int64
-                )
+                codes = bitpack.unpack_uint(parts["codes"], vm["n"], vm["w"])
                 escape = (1 << vm["w"]) - 1
                 # top codes are 0..n_dict-1; the escape slot's tally is the
                 # exception-row count, not a dictionary value's
-                cc = np.bincount(codes, minlength=escape + 1).astype(np.int64)
-                vals = [(top + vm["ref"]).astype(np_dtype)]
+                cc = np.bincount(
+                    codes.astype(np.intp), minlength=escape + 1
+                ).astype(np.int64)
+                # ref is added in np_dtype (decode_pdict's arithmetic), never
+                # in the narrow unpacked container
+                vals = [_for_unpack(
+                    parts["dict"], vm["n_dict"], vm["ref"], vm["w_exc"], np_dtype
+                )]
                 cnts = [cc[: vm["n_dict"]]]
                 if vm["n_exc"]:
-                    exc = bitpack.unpack_uint(
-                        parts["exceptions"], vm["n_exc"], vm["w_exc"]
-                    ).astype(np.int64)
                     euniq, ecnt = np.unique(
-                        (exc + vm["ref"]).astype(np_dtype), return_counts=True
+                        _for_unpack(
+                            parts["exceptions"], vm["n_exc"], vm["ref"],
+                            vm["w_exc"], np_dtype,
+                        ),
+                        return_counts=True,
                     )
                     vals.append(euniq)
                     cnts.append(ecnt.astype(np.int64))
@@ -696,10 +694,10 @@ def value_counts_column(meta_json: str, payload: bytes, mask=None):
 
                 parts = split_sections(sm, vpayload)
                 dict_sd = decode_plain_str(sm["dict_meta"], parts["dict"])
-                idx = bitpack.unpack_uint(
-                    parts["indices"], sm["n"], sm["iwidth"]
+                idx = bitpack.unpack_uint(parts["indices"], sm["n"], sm["iwidth"])
+                counts = np.bincount(
+                    idx.astype(np.intp), minlength=dict_sd.n
                 ).astype(np.int64)
-                counts = np.bincount(idx, minlength=dict_sd.n).astype(np.int64)
                 return (
                     strdata_to_arrow(dict_sd, large=meta.get("large", False)),
                     counts,
@@ -758,7 +756,6 @@ def group_codes_column(meta_json: str, payload: bytes):
         return dictionary, codes
 
     if kind in ("int", "str"):
-        from xml2arrow_spark.codecs import bitpack
         from xml2arrow_spark.codecs.base import INT_DTYPES, split_sections
 
         vmask, vpayload = _unpack_validity(meta, payload)
@@ -766,8 +763,6 @@ def group_codes_column(meta_json: str, payload: bytes):
             vm = meta["values_meta"]
             pa_type = _PA_INT[meta["dtype"]]
             if vm["codec"] == "dict":
-                from xml2arrow_spark.codecs.integers import _for_unpack
-
                 np_dtype = INT_DTYPES[vm["dtype"]]
                 parts = split_sections(vm, vpayload)
                 uniq = _for_unpack(parts["dict"], vm["card"], vm["uref"], vm["uwidth"])
@@ -779,8 +774,6 @@ def group_codes_column(meta_json: str, payload: bytes):
                     idx, vmask, meta["n"],
                 )
             if vm["codec"] == "rle":
-                from xml2arrow_spark.codecs.integers import _for_unpack
-
                 np_dtype = INT_DTYPES[vm["dtype"]]
                 parts = split_sections(vm, vpayload)
                 k = vm["n_runs"]
@@ -1159,7 +1152,6 @@ def _match_column_impl(meta_json: str, payload: bytes, values, lo, hi,
     kind = meta["kind"]
 
     if kind in ("int", "str"):
-        from xml2arrow_spark.codecs import bitpack
         from xml2arrow_spark.codecs.base import INT_DTYPES, split_sections
 
         vmask, vpayload = _unpack_validity(meta, payload)
@@ -1168,8 +1160,6 @@ def _match_column_impl(meta_json: str, payload: bytes, values, lo, hi,
             vm = meta["values_meta"]
             pa_type = _PA_INT[meta["dtype"]]
             if vm["codec"] == "dict":
-                from xml2arrow_spark.codecs.integers import _for_unpack
-
                 np_dtype = INT_DTYPES[vm["dtype"]]
                 parts = split_sections(vm, vpayload)
                 uniq = _for_unpack(parts["dict"], vm["card"], vm["uref"], vm["uwidth"])
@@ -1179,9 +1169,7 @@ def _match_column_impl(meta_json: str, payload: bytes, values, lo, hi,
                 if dmask is None:
                     return None
                 dmatch = dmask.to_numpy(zero_copy_only=False)
-                idx = bitpack.unpack_uint(
-                    parts["indices"], vm["n"], vm["iwidth"]
-                ).astype(np.int64)
+                idx = bitpack.unpack_uint(parts["indices"], vm["n"], vm["iwidth"])
                 dense = dmatch[idx]
                 if not dense.any():
                     return None
@@ -1190,8 +1178,6 @@ def _match_column_impl(meta_json: str, payload: bytes, values, lo, hi,
                         uniq[idx[dense]].astype(np_dtype), type=pa_type
                     )
             elif vm["codec"] == "rle":
-                from xml2arrow_spark.codecs.integers import _for_unpack
-
                 np_dtype = INT_DTYPES[vm["dtype"]]
                 parts = split_sections(vm, vpayload)
                 k = vm["n_runs"]
@@ -1221,20 +1207,19 @@ def _match_column_impl(meta_json: str, payload: bytes, values, lo, hi,
             elif vm["codec"] == "pdict" and vm["n"]:
                 np_dtype = INT_DTYPES[vm["dtype"]]
                 parts = split_sections(vm, vpayload)
-                top = bitpack.unpack_uint(
-                    parts["dict"], vm["n_dict"], vm["w_exc"]
-                ).astype(np.int64)
-                # same wrap-then-cast arithmetic as decode_pdict
-                dict_vals = (top + vm["ref"]).astype(np_dtype)
+                # same ref-in-np_dtype arithmetic as decode_pdict
+                dict_vals = _for_unpack(
+                    parts["dict"], vm["n_dict"], vm["ref"], vm["w_exc"], np_dtype
+                )
                 dmask = row_match_mask(
                     pa.array(dict_vals, type=pa_type), values, lo, hi
                 )
                 emask = None
                 if vm["n_exc"]:
-                    exc = bitpack.unpack_uint(
-                        parts["exceptions"], vm["n_exc"], vm["w_exc"]
-                    ).astype(np.int64)
-                    exc_vals = (exc + vm["ref"]).astype(np_dtype)
+                    exc_vals = _for_unpack(
+                        parts["exceptions"], vm["n_exc"], vm["ref"],
+                        vm["w_exc"], np_dtype,
+                    )
                     emask = row_match_mask(
                         pa.array(exc_vals, type=pa_type), values, lo, hi
                     )
@@ -1242,9 +1227,7 @@ def _match_column_impl(meta_json: str, payload: bytes, values, lo, hi,
                     # neither the dictionary nor the exception stream holds
                     # a match: skip before the code stream is even unpacked
                     return None
-                codes = bitpack.unpack_uint(parts["codes"], vm["n"], vm["w"]).astype(
-                    np.int64
-                )
+                codes = bitpack.unpack_uint(parts["codes"], vm["n"], vm["w"])
                 escape = (1 << vm["w"]) - 1
                 dense = np.zeros(vm["n"], dtype=bool)
                 nonesc = codes != escape
@@ -1270,9 +1253,7 @@ def _match_column_impl(meta_json: str, payload: bytes, values, lo, hi,
                 if dmask is None:
                     return None
                 dmatch = dmask.to_numpy(zero_copy_only=False)
-                idx = bitpack.unpack_uint(
-                    parts["indices"], sm["n"], sm["iwidth"]
-                ).astype(np.int64)
+                idx = bitpack.unpack_uint(parts["indices"], sm["n"], sm["iwidth"])
                 dense = dmatch[idx]
                 if not dense.any():
                     return None

@@ -316,31 +316,54 @@ def resolve_manifest(df, manifest, sample_rows: int = 8192):
     """Resolve every ``auto`` policy against a driver-collected sample.
 
     Returns a new :class:`CodecManifest` with concrete codecs (``manifest``
-    itself when nothing is ``auto`` or the sample is empty). One bounded
-    ``limit(sample_rows)`` collect of the ``auto`` columns (no Spark job
-    when there are none), no full scan. Scalar columns are chosen from
-    those rows; list columns from at most :data:`SAMPLE_VALUES` of their
-    flattened values (:func:`choose_column_codec`). Columns the sample
-    can't discriminate stay ``auto`` and are chosen per block.
+    itself when nothing is ``auto`` or the sample is empty). No Spark job
+    when no column is ``auto``, no full scan otherwise. The first bounded
+    ``limit(sample_rows)`` collect holds the ``auto`` scalar columns plus
+    each ``auto`` list column's ``size``; scalars are chosen from those
+    rows. The list columns come from a second ``limit(k)`` collect, with k
+    the fewest leading rows holding :data:`SAMPLE_VALUES` values of every
+    list column (the first collect's sizes), so a list's chooser sees the
+    same leading values as in
+    :func:`~xml2arrow_spark.operators.encode.resolve_manifest_parquet` without
+    collecting whole rows it would cut (:func:`choose_column_codec`).
+    Columns the sample can't discriminate stay ``auto`` and are chosen per
+    block.
 
-    The collect goes through ``toPandas()`` deliberately: PySpark 4.1's
+    The collects go through ``toPandas()`` deliberately: PySpark 4.1's
     ``toArrow()`` executes the plan via the Arrow-batch RDD, which does NOT
     take the CollectLimit fast path — on a many-file table it scans every
     split (measured 15-20x slower than ``toPandas()`` for an 8k-row limit).
     The pandas sample is turned back into Arrow with the schema's types
     (never inferred), so both resolvers share one chooser.
     """
+    from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import to_arrow_schema
 
     cols = auto_columns(manifest, manifest.encodable_columns(df.schema))
     if not cols:
         return manifest
-    projected = df.select(*cols)
-    pdf = projected.limit(sample_rows).toPandas()
+    types = to_arrow_schema(df.select(*cols).schema)
+    lists = [
+        c for c in cols
+        if pa.types.is_list(types.field(c).type)
+        or pa.types.is_large_list(types.field(c).type)
+    ]
+    scalars = [c for c in cols if c not in lists]
+    head = df.select(*scalars, *[F.size(c) for c in lists])
+    pdf = head.limit(sample_rows).toPandas()
     if len(pdf) == 0:
         return manifest
-    types = to_arrow_schema(projected.schema)
-    return resolve_sample(manifest, {
+    sample = {
         name: pa.Array.from_pandas(pdf[name], type=types.field(name).type)
-        for name in cols
-    })
+        for name in scalars
+    }
+    if lists:
+        # size() of a NULL list is -1 (or NULL): it holds no values
+        sizes = np.nan_to_num(pdf.iloc[:, len(scalars):].to_numpy(np.float64))
+        k = int((sizes.clip(0).cumsum(axis=0) < SAMPLE_VALUES).sum(axis=0).max()) + 1
+        ldf = df.select(*lists).limit(min(k, len(pdf))).toPandas()
+        sample.update({
+            name: pa.Array.from_pandas(ldf[name], type=types.field(name).type)
+            for name in lists
+        })
+    return resolve_sample(manifest, sample)

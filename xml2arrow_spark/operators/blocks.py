@@ -711,6 +711,25 @@ def value_counts_column(meta_json: str, payload: bytes, mask=None):
     return vc.field("values"), vc.field("counts").to_numpy().astype(np.int64), n_null
 
 
+def header_distinct(meta_json: str) -> int | None:
+    """How many distinct non-null values a block's codec header proves at
+    most, without its payload: ``card`` for ``dict``/``dict_str``,
+    ``n_runs`` for ``rle`` (one value per run) and ``n_dict + n_exc`` for
+    ``pdict``; None for every other codec."""
+    meta = json.loads(meta_json)
+    if meta["kind"] == "general":
+        meta = json.loads(meta["inner"])
+    vm = meta.get("values_meta") or meta.get("str_meta") or {}
+    codec = vm.get("codec")
+    if codec in ("dict", "dict_str"):
+        return vm["card"]
+    if codec == "rle":
+        return vm["n_runs"]
+    if codec == "pdict":
+        return vm["n_dict"] + vm["n_exc"]
+    return None
+
+
 def group_codes_column(meta_json: str, payload: bytes):
     """Per-row GROUP codes for one encoded column: returns ``(dictionary,
     codes)`` where ``dictionary`` is a pyarrow array of candidate key

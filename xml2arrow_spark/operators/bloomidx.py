@@ -50,6 +50,8 @@ from typing import Iterator
 
 import numpy as np
 
+from xml2arrow_spark.manifest import read_sidecar
+
 __all__ = [
     "build_bloom_index",
     "list_indexes",
@@ -124,8 +126,6 @@ def _index_dir(tree: str, column: str) -> str:
 
 def list_indexes(tree: str) -> dict[str, dict]:
     """{column: sidecar dict} for every bloom index under ``tree``."""
-    import yaml
-
     root = os.path.join(tree, "bloomidx")
     out = {}
     if not os.path.isdir(root):
@@ -133,8 +133,7 @@ def list_indexes(tree: str) -> dict[str, dict]:
     for column in sorted(os.listdir(root)):
         spath = os.path.join(root, column, BLOOM_SIDEVAR)
         if os.path.exists(spath):
-            with open(spath) as f:
-                out[column] = yaml.safe_load(f.read()) or {}
+            out[column] = read_sidecar(os.path.join(root, column), BLOOM_SIDEVAR)
     return out
 
 
@@ -325,8 +324,7 @@ def build_bloom_index(
     idx = _index_dir(tree, column)
     spath = os.path.join(idx, BLOOM_SIDEVAR)
     if units is not None and os.path.exists(spath):
-        with open(spath) as f:
-            side = yaml.safe_load(f.read()) or {}
+        side = read_sidecar(idx, BLOOM_SIDEVAR)
         if side.get("hash") != BLOOM_HASH_ID:
             raise ValueError(
                 f"bloom index at {idx!r} was built with hash "
@@ -387,14 +385,12 @@ def bloom_survivors(
     when the index, any null probe value, or a hash mismatch makes bloom
     pruning inapplicable as a whole."""
     import pyarrow.parquet as pq
-    import yaml
 
     idx = _index_dir(tree, column)
     spath = os.path.join(idx, BLOOM_SIDEVAR)
     if not os.path.exists(spath) or any(v is None for v in values):
         return None
-    with open(spath) as f:
-        side = yaml.safe_load(f.read()) or {}
+    side = read_sidecar(idx, BLOOM_SIDEVAR)
     if side.get("hash") != BLOOM_HASH_ID:
         return None
     k = int(side["k"])
@@ -443,13 +439,11 @@ def audit_index(spark, tree: str, column: str, deep: bool = False) -> dict:
     Returns ``{indexed_units, unindexed_units, stale_units,
     deep_mismatched_units, ok}``; ``ok`` = no stale (and, deep, no
     mismatch)."""
-    import yaml
     from pyspark.sql import functions as F
 
     idx = _index_dir(tree, column)
     bdir = os.path.join(idx, "blocks")
-    with open(os.path.join(idx, BLOOM_SIDEVAR)) as f:
-        side = yaml.safe_load(f.read()) or {}
+    side = read_sidecar(idx, BLOOM_SIDEVAR)
     indexed = sorted(
         int(d.split("=", 1)[1])
         for d in os.listdir(bdir)

@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from xml2arrow_spark.manifest import CodecManifest
+from xml2arrow_spark.manifest import CodecManifest, read_sidecar
 from xml2arrow_spark.operators import bloomidx, tombstones
 from xml2arrow_spark.operators.encode import decode_table, encode_table
 from xml2arrow_spark.operators.lease import with_dataset_lease
@@ -99,8 +99,6 @@ def _check_placement(path: str, n_units: int, schema_ddl: str) -> None:
     completed-unit markers stop covering the same row sets), and the
     encoded column set (mixed blocks schemas would surface as decode
     errors on half the dataset)."""
-    import yaml
-
     from xml2arrow_spark.errors import ManifestError
 
     spath = os.path.join(path, MANIFEST_SIDEVAR)
@@ -112,8 +110,7 @@ def _check_placement(path: str, n_units: int, schema_ddl: str) -> None:
                 f"cannot verify unit placement — re-encode from scratch"
             )
         return
-    with open(spath) as f:
-        side = yaml.safe_load(f.read()) or {}
+    side = read_sidecar(path)
     found = side.get("placement")
     if found != PLACEMENT_ID:
         raise ManifestError(
@@ -399,12 +396,9 @@ def _resolve_columns(path: str, columns, id_col: str):
     """Shared column resolution for the read paths: requested (or all)
     columns routed to their owning tree — base or a column family.
     Returns (columns, base_cols, base_want, fams, fam_want)."""
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
-    with open(os.path.join(path, MANIFEST_SIDEVAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(path)
     base_cols = split_schema_ddl(side["schema_ddl"])  # decimal(p,0)-safe
     fams = list_families(path)
     fam_cols = {c: fam for fam, cols in fams.items() for c in cols
@@ -531,10 +525,7 @@ def _load_sidecar(path: str) -> tuple[CodecManifest, str, int, list[str] | None]
     yaml plus placement keys; ``from_dict`` tolerates the extras, so
     mutations re-encode with the exact codecs (and clustering) of the
     original run (never a re-resolved guess)."""
-    import yaml
-
-    with open(os.path.join(path, MANIFEST_SIDEVAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(path)
     n_units = int(side["n_units"])
     ddl = side["schema_ddl"]
     _check_placement(path, n_units, ddl)
@@ -978,8 +969,6 @@ def list_families(path: str) -> dict[str, dict[str, str]]:
     """Column families of an encoded dataset: ``{family: {col: "col type"}}``
     (the id column included), in sorted family order — the deterministic
     projection order read_encoded_dataset uses for ``columns=None``."""
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     fdir = os.path.join(path, "families")
@@ -988,8 +977,7 @@ def list_families(path: str) -> dict[str, dict[str, str]]:
         for name in sorted(os.listdir(fdir)):
             spath = os.path.join(fdir, name, MANIFEST_SIDEVAR)
             if os.path.exists(spath):
-                with open(spath) as f:
-                    side = yaml.safe_load(f.read())
+                side = read_sidecar(os.path.join(fdir, name))
                 out[name] = split_schema_ddl(side["schema_ddl"])
     return out
 

@@ -24,12 +24,17 @@ completed work unit instead of one YAML per run.
 from __future__ import annotations
 
 import functools
+import math
 import os
 from typing import Iterator
 
 import pyarrow as pa
 
-from xml2arrow_spark.manifest import CodecManifest
+from xml2arrow_spark.manifest import (
+    MANIFEST_SIDECAR,
+    CodecManifest,
+    read_sidecar,
+)
 from xml2arrow_spark.operators.lease import with_dataset_lease as _with_dataset_lease
 from xml2arrow_spark.operators.predicates import (  # noqa: F401 (re-export)
     any_of,
@@ -84,7 +89,6 @@ METADATA_SCHEMA = pa.schema(
     ]
 )
 
-MANIFEST_SIDECAR = "_manifest.yaml"
 
 def _refuse_pending_tombstones(out_path: str) -> None:
     """Every stored-dataset read in this module answers from block stats
@@ -155,8 +159,6 @@ def encode_parquet_dataset(
 
     # sidecar BEFORE the encode action (crash-safe placement tag; see
     # checkpoint.py::_check_placement for the rationale)
-    import yaml
-
     from xml2arrow_spark.errors import ManifestError
 
     schema_ddl = ", ".join(
@@ -172,8 +174,7 @@ def encode_parquet_dataset(
     done = read_unit_ids(os.path.join(out_path, "manifest"))
     spath = os.path.join(out_path, MANIFEST_SIDECAR)
     if os.path.exists(spath):
-        with open(spath) as f:
-            side = yaml.safe_load(f.read()) or {}
+        side = read_sidecar(out_path)
         if side.get("placement") != PLACEMENT_ID:
             raise ManifestError(
                 f"dataset at {out_path!r} was written with unit placement "
@@ -316,16 +317,13 @@ def dataset_column_stats(spark, out_path: str):
     for free — the reader-side twin of parquet column statistics plus
     Spark's stats-based aggregate pushdown, at block granularity over the
     ENCODED payload."""
-    import yaml
-
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import from_arrow_type
 
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(out_path)
     by_name_ddl = split_schema_ddl(side["schema_ddl"])
     names = list(by_name_ddl)
     # temporal columns NEVER surface sum_i (r06 correctness fix, inherited
@@ -680,6 +678,52 @@ def _fold_blocks_file(fpath, pq_mod, cols, conj, on_block, claim=None):
     return tally
 
 
+def _file_groups(keys):
+    """The per-file pre-pass of a keyed fold's dispatch
+    (:meth:`~xml2arrow_spark.sources.files.BlockWalk.folds_on_driver`):
+    ``file_groups(path, pyarrow.parquet)`` bounds the groups over ``keys``
+    one file's partial can hold, from block metadata alone. A key bounds
+    a block's distinct values by its codec header
+    (:func:`~xml2arrow_spark.operators.blocks.header_distinct`), else by
+    its int zone range ``vmax_i - vmin_i + 1``, else by the block's rows,
+    plus one for a NULL group unless ``n_null`` states 0; a composite
+    key's block bound is the product of its keys' bounds. A file's bound
+    is the least of its rows, the sum of its block bounds and the product
+    over keys of the file-wide key bound (the sum of the key's block
+    bounds, or its int range over the file when every block states one,
+    plus one for NULL). Keys are the only columns opened, and no payload
+    bytes are read on either layout."""
+    from xml2arrow_spark.operators.blocks import header_distinct
+
+    def key_groups(view, col, i):
+        """(distinct non-null values, 1 if a NULL may occur) in block i"""
+        n = header_distinct(view.stat(col, "meta", i))
+        if n is None:
+            lo, hi = view.stat(col, "vmin_i", i), view.stat(col, "vmax_i", i)
+            n = view.n_rows(i) if lo is None or hi is None else hi - lo + 1
+        return n, int(view.stat(col, "n_null", i) != 0)
+
+    def file_groups(fpath, pq_mod):
+        view = BlockStats(fpath, pq_mod, [], keys)
+        blocks = range(len(view))
+        per = {c: [key_groups(view, c, i) for i in blocks] for c in keys}
+        bound = sum(
+            math.prod(sum(per[c][i]) for c in keys) for i in blocks
+        )
+        whole = 1
+        for c in keys:
+            n = sum(d for d, _z in per[c])
+            lo = [view.stat(c, "vmin_i", i) for i in blocks]
+            hi = [view.stat(c, "vmax_i", i) for i in blocks]
+            if lo and None not in lo and None not in hi:
+                n = min(n, max(hi) - min(lo) + 1)
+            whole *= n + any(z for _d, z in per[c])
+        rows = sum(view.n_rows(i) for i in blocks)
+        return min(rows, bound, whole)
+
+    return file_groups
+
+
 def count_where(
     spark,
     out_path: str,
@@ -760,13 +804,10 @@ def count_where(
     classification telemetry that makes the skip rates observable (the
     no-silent-caps rule).
     """
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
 
     conj = _resolve_conjuncts(by_name, predicate, "count_where")
@@ -993,11 +1034,11 @@ def _group_count_composite(
     (:func:`~xml2arrow_spark.operators.blocks.composite_value_counts` —
     no per-row tuple build, no key materialization for dict/rle/dict_str),
     so "rows per (source, language)" prices the key columns' code streams
-    plus a (tuple, count) KB-scale shuffle. SQL semantics: every NULL
-    combination is its own group. ``where`` composes exactly as the
-    single-key path (zone prune / unmasked / masked); composite keys make
-    no metadata claim — a block would need EVERY key single-valued, a
-    layout presort can't generally produce."""
+    plus a driver fold (or a KB-scale shuffle) of (tuple, count) pairs.
+    SQL semantics: every NULL combination is its own group. ``where``
+    composes exactly as the single-key path (zone prune / unmasked /
+    masked); composite keys make no metadata claim — a block would need
+    EVERY key single-valued, a layout presort can't generally produce."""
     from pyspark.sql import functions as F
 
     from xml2arrow_spark.operators.blocks import composite_value_counts
@@ -1033,9 +1074,9 @@ def _group_count_composite(
         return [(*kt, c) for kt, c in tally.items()]
 
     walk = BlockWalk(out_path, local_bytes)
-    if walk.local:
+    if walk.folds_on_driver(_file_groups(columns)):
         total: dict = {}
-        for fc in walk.partials(spark, _file_counts):
+        for fc in walk.partials(spark, _file_counts, n_tasks):
             for kt, c in fc.items():
                 total[kt] = total.get(kt, 0) + c
         return local_frame(spark, out_ddl, _rows(total))
@@ -1058,8 +1099,10 @@ def group_count(
     the dict/pdict/dict_str code stream against its dictionary or folds RLE
     run lengths — the group column's values are never materialized for
     those codecs (other codecs decode and count; exactness is identical
-    either way and pinned per codec). Per-file partial tallies then
-    aggregate through one KB-scale shuffle keyed on the group value.
+    either way and pinned per codec). Per-file partial tallies then fold
+    on the driver, or, above the valve when block metadata cannot bound
+    their groups, aggregate through one KB-scale shuffle keyed on the
+    group value.
 
     On KEY-CLUSTERED data (``presort`` by the key) a block whose zone
     bounds PROVE the key single-valued — null-free key, vmin == vmax,
@@ -1095,21 +1138,28 @@ def group_count(
 
     Scale-adaptive through
     :class:`~xml2arrow_spark.sources.files.BlockWalk` (``local_bytes``
-    sizes the driver-local path); both paths pinned equal in
-    tests/test_dataset.py.
+    sizes the driver-local path; above it, one fan-out job whose partials
+    fold on the driver while
+    :meth:`~xml2arrow_spark.sources.files.BlockWalk.folds_on_driver`
+    bounds their groups, else a Spark combine); the paths are pinned
+    equal in tests/test_dataset.py and tests/test_driver_fold.py.
 
     Returns a DataFrame ``(column, cnt)`` with the column's original type.
     """
-    import yaml
-
-    from pyspark.sql import functions as F
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
-    by_name = split_schema_ddl(side["schema_ddl"])
+    by_name = split_schema_ddl(read_sidecar(out_path)["schema_ddl"])
+    return _group_count(
+        spark, out_path, column, by_name, n_tasks, local_bytes, where
+    )
+
+
+def _group_count(spark, out_path, column, by_name, n_tasks, local_bytes, where):
+    """:func:`group_count` over a dataset whose columns ``by_name`` the
+    caller has read from the sidecar."""
+    from pyspark.sql import functions as F
+
     if not isinstance(column, str):
         cols = list(column)
         if len(cols) == 1:
@@ -1180,9 +1230,9 @@ def group_count(
         )
 
     walk = BlockWalk(out_path, local_bytes)
-    if walk.local:
+    if walk.folds_on_driver(_file_groups([column])):
         total: dict = {}
-        for fc in walk.partials(spark, _file_counts):
+        for fc in walk.partials(spark, _file_counts, n_tasks):
             for v, c in fc.items():
                 total[v] = total.get(v, 0) + c
         return local_frame(spark, out_ddl, total.items())
@@ -1247,9 +1297,9 @@ def _group_aggs_walk(
         return kt if len(keys) > 1 else (kt,)
 
     walk = BlockWalk(out_path, local_bytes)
-    if walk.local:
+    if walk.folds_on_driver(_file_groups(keys)):
         total: dict = {}
-        for fs_ in walk.partials(spark, file_sums):
+        for fs_ in walk.partials(spark, file_sums, n_tasks):
             for kt, (c, trips) in fs_.items():
                 _merge_aggs(total, kt, c, trips)
         rows = []
@@ -1407,20 +1457,19 @@ def group_aggs(
     blocks downgrade to the kernel, results exact either way.
 
     Scale-adaptive through
-    :class:`~xml2arrow_spark.sources.files.BlockWalk`. Returns a
-    DataFrame ``(key, cnt, nn_<c>, sum_<c>, min_<c>, max_<c> [, sumsq_<c>] ...)``
+    :class:`~xml2arrow_spark.sources.files.BlockWalk`, dispatched as
+    :func:`group_count`; a driver-folded total outside int64 refuses on
+    both paths. Returns a DataFrame
+    ``(key, cnt, nn_<c>, sum_<c>, min_<c>, max_<c> [, sumsq_<c>] ...)``
     with the key's original type.
     """
-    import yaml
-
     from xml2arrow_spark.operators.blocks import group_aggs_column
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     if not agg_cols:
         raise ValueError("group_aggs needs at least one agg column")
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
     if not isinstance(key, str):
         keys = list(key)
@@ -1635,15 +1684,14 @@ def top_k(
     Returns a DataFrame with one column (the original name and type), k
     rows, sorted in rank order.
     """
-    import yaml
+    import pyarrow.compute as pc
 
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     if k < 1:
         raise ValueError(f"top_k needs k >= 1, got {k}")
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
     conj = (
         _resolve_conjuncts(by_name, where, "top_k")
@@ -1669,6 +1717,7 @@ def top_k(
         else None
     )
     kz = _ZONE_SUFFIXES[cat] if cat is not None else None
+    sort_order = "descending" if descending else "ascending"
     # the rank bound that can SKIP a block: the side the top of the order
     # lives on (vmax for descending, vmin for ascending) — over-/under-
     # statement of truncated string bounds only ever under-skips
@@ -1743,6 +1792,14 @@ def top_k(
             vals, counts, _n_null = value_counts_column(
                 *view.payload(column, i), mask=mask
             )
+            # only the block's k best entries can rank: each kept entry
+            # counts at least one row, so any other holds k rows at least
+            # as good (zero-count entries prove nothing and drop first)
+            keep = counts > 0
+            vals, counts = vals.filter(pa.array(keep)), counts[keep]
+            if len(vals) > k:
+                best = pc.select_k_unstable(vals, k, [("v", sort_order)])
+                vals, counts = vals.take(best), counts[best.to_numpy()]
             for v, c in zip(vals.to_pylist(), counts.tolist()):
                 tally[v] = tally.get(v, 0) + c
             kth = _topk_trim(tally, k, descending)
@@ -1871,8 +1928,6 @@ def exact_quantiles(
     Returns a DataFrame ``(q_milli bigint, value <column type>)``, one
     row per requested quantile, in the requested order.
     """
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     qs = list(q_milli)
@@ -1883,9 +1938,10 @@ def exact_quantiles(
             raise ValueError(
                 f"milli-quantiles must be ints in [0, 1000], got {q!r}"
             )
-    counts = group_count(
-        spark, out_path, column, n_tasks=n_tasks, local_bytes=local_bytes,
-        where=where,
+    _refuse_pending_tombstones(out_path)
+    by_name = split_schema_ddl(read_sidecar(out_path)["schema_ddl"])
+    counts = _group_count(
+        spark, out_path, column, by_name, n_tasks, local_bytes, where
     ).collect()
     pairs = sorted(
         ((r[0], r[1]) for r in counts if r[0] is not None), key=lambda t: t[0]
@@ -1905,10 +1961,6 @@ def exact_quantiles(
             # ceil(q*n/1000), floored at rank 1 so q=0 returns the min
             rank = max(1, (q * n + 999) // 1000)
             rows.append((q, values[bisect.bisect_left(cums, rank)]))
-    _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
-    by_name = split_schema_ddl(side["schema_ddl"])
     vtype = by_name[column].split(None, 1)[1]
     return local_frame(spark, f"q_milli bigint, value {vtype}", rows)
 
@@ -1952,15 +2004,12 @@ def value_histogram(
     Returns a DataFrame ``(bin bigint, cnt bigint)``, non-empty bins
     only, ordered by bin.
     """
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     if n_bins < 1:
         raise ValueError(f"value_histogram needs n_bins >= 1, got {n_bins}")
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
     if column not in by_name:
         raise ValueError(
@@ -1977,9 +2026,8 @@ def value_histogram(
     for b in (lo, hi):
         if b is not None and (not isinstance(b, int) or isinstance(b, bool)):
             raise ValueError(f"lo/hi must be ints, got {b!r}")
-    counts = group_count(
-        spark, out_path, column, n_tasks=n_tasks, local_bytes=local_bytes,
-        where=where,
+    counts = _group_count(
+        spark, out_path, column, by_name, n_tasks, local_bytes, where
     ).collect()
     pairs = [(r[0], r[1]) for r in counts if r[0] is not None]
     bins: dict[int, int] = {}
@@ -2037,8 +2085,6 @@ def time_bucket_count(
     buckets only, ordered by bucket; ``bucket_start = origin +
     bucket * width`` (ticks) for direct rendering.
     """
-    import yaml
-
     from xml2arrow_spark.operators.blocks import value_counts_column
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
@@ -2047,8 +2093,7 @@ def time_bucket_count(
     if not isinstance(origin, int) or isinstance(origin, bool):
         raise ValueError(f"origin must be a tick int, got {origin!r}")
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
     if column not in by_name:
         raise ValueError(
@@ -2495,15 +2540,12 @@ def recluster_dataset(
     """
     import shutil
 
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     presort = list(presort or [])
     if not presort:
         raise ValueError("recluster_dataset needs at least one presort column")
-    with open(os.path.join(src_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(src_path)
     by_name = split_schema_ddl(side["schema_ddl"])
     missing = [c for c in presort if c not in by_name]
     if missing:
@@ -2605,8 +2647,6 @@ def decode_dataset(
     per-disjunct masks OR; only a block NO disjunct matches skips). Pair
     with the corresponding ``zone_filter`` so non-overlapping blocks
     never reach the kernel at all."""
-    import yaml
-
     from xml2arrow_spark.operators.encode import (
         _zone_cat,
         decode_blocks,
@@ -2618,8 +2658,7 @@ def decode_dataset(
     from xml2arrow_spark.sources.files import plan_parquet_tasks
 
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])  # decimal(p,0)-safe
     if columns is None:
         out_names = list(by_name)

@@ -391,19 +391,33 @@ class BlockStats:
     payload comes later, one ``read_row_group`` of every ``cols`` pair
     per parquet row group, on the first ``payload`` call that needs it —
     so a reader that prunes or claims every block of a row group reads no
-    payload bytes of it. :meth:`of_table` wraps block rows already in
-    memory (a Spark batch)."""
+    payload bytes of it. A view with no ``cols`` reads no payload on
+    either layout, and offers each entry's codec header as
+    ``stat(col, "meta", i)`` (on the nested layout it reads only the
+    entries' ``name``, ``meta`` and stat leaves). :meth:`of_table` wraps
+    block rows already in memory (a Spark batch)."""
 
     def __init__(self, fpath: str, pq_mod, cols: list[str],
                  stats: list[str] | None = None):
         cols = list(dict.fromkeys(cols))
         stats = cols if stats is None else list(dict.fromkeys(stats))
+        fields = [*_STAT_FIELDS] + ([] if cols else ["meta"])
         with pq_mod.ParquetFile(fpath) as pf:
             names = pf.schema_arrow.names
-            want = ["n_rows", "cols"] if "cols" in names else ["n_rows"] + [
-                n for c in stats for f in _STAT_FIELDS
-                if (n := f"c_{c}__{f}") in names
-            ]
+            if "cols" not in names:
+                want = ["n_rows"] + [
+                    n for c in stats for f in fields
+                    if (n := f"c_{c}__{f}") in names
+                ]
+            elif cols:
+                want = ["n_rows", "cols"]
+            else:  # the entry leaves a stats reader looks at, no payload
+                leaves = {"name", *fields}
+                want = ["n_rows"] + [
+                    p for j in range(len(pf.schema))
+                    if (p := pf.schema.column(j).path).startswith("cols.")
+                    and p.rsplit(".", 1)[1] in leaves
+                ]
             tbl = pf.read(columns=want)
             self._md = pf.metadata  # reopened footer-free per row group
         self._fpath, self._pq = fpath, pq_mod
@@ -464,8 +478,10 @@ class BlockStats:
                 ]
             except ValueError:
                 raise _lacks(c) from None
-        pair = (self._entries.field("meta"), self._entries.field("data"))
-        self._pay = {0: dict.fromkeys(cols, pair)}
+        self._pay = {0: {
+            c: (self._entries.field("meta"), self._entries.field("data"))
+            for c in cols
+        }}
 
     def __len__(self) -> int:
         return self._n

@@ -126,9 +126,8 @@ def export_slice(
     an interrupted export leaves no manifest, so :func:`verify_export`
     (and :func:`read_export`) refuse the debris.
     """
-    import yaml
-
-    from xml2arrow_spark.operators.dataset import MANIFEST_SIDECAR, decode_dataset
+    from xml2arrow_spark.manifest import read_sidecar
+    from xml2arrow_spark.operators.dataset import decode_dataset
     from xml2arrow_spark.operators.encode import split_schema_ddl
     from xml2arrow_spark.pipeline.sampling import shuffle_order
 
@@ -144,8 +143,7 @@ def export_slice(
             )
         shutil.rmtree(dest)
 
-    with open(os.path.join(dataset_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(dataset_path)
     by_name = split_schema_ddl(side["schema_ddl"])
     if id_col not in by_name:
         raise ValueError(

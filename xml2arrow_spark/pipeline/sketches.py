@@ -208,7 +208,6 @@ def group_distinct_est(
     import os
 
     import numpy as np
-    import yaml
 
     from xml2arrow_spark.operators.blocks import decode_column
     from xml2arrow_spark.operators.dataset import (
@@ -216,8 +215,8 @@ def group_distinct_est(
         _fold_blocks_file,
         _refuse_pending_tombstones,
         _resolve_conjuncts,
-        MANIFEST_SIDECAR,
     )
+    from xml2arrow_spark.manifest import read_sidecar
     from xml2arrow_spark.operators.encode import split_schema_ddl
     from xml2arrow_spark.sources.files import BlockWalk, local_frame
 
@@ -227,8 +226,7 @@ def group_distinct_est(
     # rows would silently misreport (the same contract every metadata-
     # accelerated aggregate in operators/dataset.py enforces)
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
     if column not in by_name:
         raise ValueError(
@@ -356,7 +354,6 @@ def group_distinct(
     import os
 
     import numpy as np
-    import yaml
 
     from xml2arrow_spark.operators.blocks import decode_column
     from xml2arrow_spark.operators.dataset import (
@@ -364,16 +361,15 @@ def group_distinct(
         _fold_blocks_file,
         _refuse_pending_tombstones,
         _resolve_conjuncts,
-        MANIFEST_SIDECAR,
     )
+    from xml2arrow_spark.manifest import read_sidecar
     from xml2arrow_spark.operators.encode import split_schema_ddl
     from xml2arrow_spark.sources.files import BlockWalk, local_frame
 
     if max_pairs < 1:
         raise ValueError(f"group_distinct needs max_pairs >= 1, got {max_pairs}")
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
     if column not in by_name:
         raise ValueError(

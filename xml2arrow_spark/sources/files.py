@@ -239,6 +239,25 @@ def local_frame(spark: SparkSession, ddl: str, rows) -> DataFrame:
     )
 
 
+# The most groups the per-file partials of a keyed fold (group_count,
+# group_aggs) may hold, by the metadata bound, for a walk above the valve to
+# fold them on the driver (:meth:`BlockWalk.folds_on_driver`) instead of
+# combining them in Spark. Set at the crossover measured on a 4-core host
+# (8 files of disjoint int keys, bound = groups): at 2^13 the driver fold
+# of group_sum took 580 ms of process-tree CPU against the combine's 920,
+# at 2^14 it ran longer in wall time (538 against 449 ms) and at 2^15 it
+# lost on CPU too (1,330 against 1,230 ms).
+DRIVER_FOLD_GROUPS = 1 << 13
+
+# The most blocks files whose groups the driver pre-pass bounds; a longer
+# listing combines in Spark without it. The pre-pass reads one file at a
+# time, at about 0.9 ms each on the same host (4 blocks per file), while
+# the driver fold saves a job stage: with the pre-pass, group_sum ran
+# 188 against 230 ms wall over 32 files, 315 against 226 over 128 and
+# 1,009 against 529 over 512.
+DRIVER_FOLD_FILES = 64
+
+
 class BlockWalk:
     """The one executor of the metadata aggregates over a stored dataset's
     ``blocks/`` tree (count_where, group_count, group_aggs, top_k,
@@ -257,16 +276,44 @@ class BlockWalk:
     - **Every file's partial, on either path** (:meth:`partials`): the
       driver loop, or one fan-out job whose partials come back pickled —
       so an op with a bounded partial per file has ONE driver fold.
+    - **One bound for keyed partials** (:meth:`folds_on_driver`): a keyed
+      fold's partials hold O(groups) per file, so above the valve they
+      fold on the driver only when block metadata bounds their groups by
+      :data:`DRIVER_FOLD_GROUPS` over at most :data:`DRIVER_FOLD_FILES`
+      files; past either bound the op combines the rows in Spark, which
+      is faster there and whose driver memory does not grow with the
+      number of groups.
     - **One fan-out** (:meth:`fan_out`) plans file tasks from the same
       listing (one tree walk per op) and runs the identical ``per_file``
-      in one ``mapInArrow`` worker fn. Only ops whose partials are
-      O(groups) per file combine the rows in Spark; a driver fold over
-      them would be unbounded.
+      in one ``mapInArrow`` worker fn.
     """
 
     def __init__(self, out_path: str, local_bytes: int):
         self.infos = parquet_file_infos(os.path.join(out_path, "blocks"))
         self.local = sum(s for _p, s in self.infos) <= local_bytes
+
+    def folds_on_driver(self, file_groups) -> bool:
+        """True when a keyed fold may fold every file's partial on the
+        driver (:meth:`partials`): always on the local path, which runs no
+        pre-pass; above the valve, when ``file_groups(path,
+        pyarrow.parquet)`` — an upper bound on the groups one file's
+        partial holds, read off block metadata without payload bytes —
+        sums to at most :data:`DRIVER_FOLD_GROUPS` over the files. The
+        pre-pass runs on the driver in listing order and stops at the
+        first file that takes the sum past the cap. A listing of more
+        than :data:`DRIVER_FOLD_FILES` files runs none and combines."""
+        if self.local:
+            return True
+        if len(self.infos) > DRIVER_FOLD_FILES:
+            return False
+        import pyarrow.parquet as pq
+
+        total = 0
+        for fp, _s in self.infos:
+            total += file_groups(fp, pq)
+            if total > DRIVER_FOLD_GROUPS:
+                return False
+        return True
 
     def partials(
         self, spark: SparkSession, per_file, n_tasks: int | None = None
@@ -287,8 +334,9 @@ class BlockWalk:
         unpickles it, so the fold sees the same Python objects on both
         paths and no op declares a partial schema. The rows arrive in
         task order, not file order, so the fold must not depend on order.
-        Only for partials bounded per file; ``per_file`` and its result
-        must pickle."""
+        Only for bounded partials (a keyed fold asks
+        :meth:`folds_on_driver` first); ``per_file`` and its result must
+        pickle."""
         import pyarrow.parquet as pq
 
         if self.local:

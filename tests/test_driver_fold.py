@@ -244,6 +244,31 @@ def test_group_aggs_refuses_an_int64_total_across_files(spark, tmp_path):
             group_aggs(spark, out, "k", ["v"], local_bytes=lb)
 
 
+def test_group_aggs_combine_refuses_an_int64_total(spark, tmp_path,
+                                                   monkeypatch):
+    """Past the group bound the Spark combine sums as decimal(38,0) and
+    refuses a total outside int64 with the driver fold's text, not ANSI's
+    ARITHMETIC_OVERFLOW; an in-range total equals the driver fold's."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "ds")
+    os.makedirs(src)
+    big = pa.array([1 << 62, (1 << 62) - 1], pa.int64())  # sums to 2^63 - 1
+    for j, w in enumerate(([-5, None], [7, 3])):
+        pq.write_table(
+            pa.table({"k": pa.array([1, 1], pa.int64()), "v": big,
+                      "w": pa.array(w, pa.int64())}),
+            os.path.join(src, f"p-{j}.parquet"))
+    encode_parquet_dataset(spark, src, out)
+    folded = {sq: _rows(group_aggs(spark, out, "k", ["w"], local_bytes=0,
+                                   with_sum_sq=sq)) for sq in (False, True)}
+    monkeypatch.setattr(files, "DRIVER_FOLD_GROUPS", 0)
+    for sq in (False, True):
+        assert _rows(group_aggs(spark, out, "k", ["w"], local_bytes=0,
+                                with_sum_sq=sq)) == folded[sq]
+    with pytest.raises(Exception, match="outside int64") as err:
+        group_aggs(spark, out, "k", ["v"], local_bytes=0).collect()
+    assert "ARITHMETIC_OVERFLOW" not in str(err.value)
+
+
 def test_top_k_trims_masked_blocks_that_repeat_values(spark, tmp_path):
     """A masked RLE block tallies one entry per run, so a value repeats;
     keeping only the block's k best entries still gives the exact top k

@@ -25,6 +25,8 @@ from xml2arrow_spark.operators.encode import (
 )
 from xml2arrow_spark.sources.files import (
     _lpt_assign,
+    _plan_tasks,
+    map_tasks,
     parquet_file_infos,
     plan_parquet_tasks,
 )
@@ -75,26 +77,132 @@ def _per_partition(df, *aggs) -> dict[int, tuple]:
     }
 
 
+def _file_ids():
+    """A file worker that opens nothing and ships the ``file_idx`` of its
+    bin (a local def: workers cannot import this test module)."""
+    def file_ids(files):
+        import pyarrow as pa
+
+        yield pa.RecordBatch.from_pydict(
+            {"file_idx": [i for i, _p in files]},
+            pa.schema([("file_idx", pa.int32())]),
+        )
+
+    return file_ids
+
+
 def test_plan_parquet_tasks_covers_all_files(spark, token_dir):
-    sizes = [s for _, s in parquet_file_infos(token_dir)]
+    infos = parquet_file_infos(token_dir)
+    sizes = [s for _, s in infos]
     # 6 is above the fixture session's local[4] defaultParallelism
     for n_tasks in (3, 6):
-        tasks = plan_parquet_tasks(spark, token_dir, n_tasks=n_tasks)
-        rows = tasks.collect()
-        assert len(rows) == n_tasks  # one row per task bin
-        assert sorted(i for r in rows for i in r.file_idx) == list(range(7))
-        assert set(r.task_id for r in rows) == set(range(n_tasks))
-        # the bins are exactly the LPT assignment
+        bins = plan_parquet_tasks(spark, token_dir, n_tasks=n_tasks)
+        # the bins are exactly the LPT assignment, files as (file_idx, path)
         lpt = _lpt_assign(sizes, n_tasks)
-        assert {r.task_id: r.file_idx for r in rows} == {
-            b: [i for i in range(7) if lpt[i] == b] for b in range(n_tasks)
-        }
-        # exactly one bin per Spark partition (the scaling-critical invariant)
-        assert tasks.rdd.getNumPartitions() == n_tasks
-        assert _per_partition(tasks, F.count("*")) == {
-            p: (1,) for p in range(n_tasks)
-        }
-        assert _python_rdd_free(tasks)
+        assert bins == [
+            [(i, infos[i][0]) for i in range(7) if lpt[i] == b]
+            for b in range(n_tasks)
+        ]
+        # the runner puts exactly one bin per Spark partition (the
+        # scaling-critical invariant) and every file in one of them
+        df = map_tasks(spark, bins, _file_ids(), "file_idx int")
+        assert df.rdd.getNumPartitions() == n_tasks
+        got = _per_partition(df, F.sort_array(F.collect_list("file_idx")))
+        assert got == {b: ([i for i, _p in files],) for b, files in enumerate(bins)}
+        assert _python_rdd_free(df)
+
+
+def test_map_tasks_runs_unit_i_alone_in_partition_i(spark):
+    """Unit i runs alone in partition i, above local[4]'s parallelism, and
+    the plan is the bare range + mapInArrow: no Python RDD and no
+    Generate or JSON parse of a task literal."""
+    import pyarrow as pa
+
+    units = [f"unit-{i}" for i in range(6)]
+
+    def one_row(unit):
+        yield pa.RecordBatch.from_pydict({"u": [unit]})
+
+    df = map_tasks(spark, units, one_row, "u string")
+    assert df.rdd.getNumPartitions() == 6
+    assert _per_partition(df, F.count("*"), F.first("u")) == {
+        p: (1, f"unit-{p}") for p in range(6)
+    }
+    assert _python_rdd_free(df)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Generate" not in plan and "JsonToStructs" not in plan
+
+
+def test_map_tasks_ships_a_long_unit_list_in_the_closure(spark):
+    """20,000 files of ~100-byte paths make a closure over 1 MB (PySpark
+    broadcasts it); every file comes back exactly once."""
+    import pickle
+
+    infos = [(f"/data/{'d' * 80}/part-{i:06d}.parquet", 1000 + i % 7)
+             for i in range(20_000)]
+    bins = _plan_tasks(spark, infos, 4)
+    assert len(pickle.dumps(bins)) > 1 << 20
+    got = [r[0] for r in map_tasks(spark, bins, _file_ids(), "file_idx int")
+           .collect()]
+    assert sorted(got) == list(range(20_000))
+
+
+def test_encode_resume_plans_only_the_files_left(spark, tmp_path, monkeypatch):
+    """With units 0-4 of 8 done, a resume lists all eight files but plans
+    only 5-7, each with its original file_idx and one per task at
+    n_tasks=3; the finished store equals a fresh encode."""
+    import pyarrow as pa
+
+    import xml2arrow_spark.sources.files as files_mod
+    from xml2arrow_spark.operators.dataset import (
+        dataset_metrics,
+        decode_dataset,
+        encode_parquet_dataset,
+    )
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for i in range(8):
+        pq.write_table(
+            generate_tokens_arrow(60 + 10 * i, seed=i, start_id=1000 * i),
+            os.path.join(src, f"part-{i}.parquet"),
+        )
+    man = CodecManifest.auto_for(spark.read.parquet(src).schema, block_rows=32)
+    fresh, res = str(tmp_path / "fresh"), str(tmp_path / "res")
+    encode_parquet_dataset(spark, src, fresh, manifest=man, n_tasks=3)
+    # a crash after units 0-4 committed: their manifest rows and blocks only
+    encode_parquet_dataset(spark, src, res, manifest=man, n_tasks=3)
+    mdir = os.path.join(res, "manifest")
+    meta = pq.read_table(mdir)
+    for name in os.listdir(mdir):
+        os.remove(os.path.join(mdir, name))
+    pq.write_table(meta.filter(pa.compute.less(meta["unit_id"], 5)),
+                   os.path.join(mdir, "manifest-crash.parquet"))
+    for u in (5, 6, 7):
+        os.remove(os.path.join(res, "blocks", f"blocks-u{u:06d}.parquet"))
+
+    planned = []
+    real = files_mod.map_tasks
+
+    def spy(spark_, units, fn, schema):
+        planned.append(units)
+        return real(spark_, units, fn, schema)
+
+    monkeypatch.setattr(files_mod, "map_tasks", spy)
+    encode_parquet_dataset(spark, src, res, manifest=man, n_tasks=3)
+    paths = [p for p, _s in parquet_file_infos(src)]
+    [bins] = planned
+    assert sorted(bins) == [[(u, paths[u])] for u in (5, 6, 7)]
+
+    assert dataset_metrics(spark, res) == dataset_metrics(spark, fresh)
+    for u in range(8):
+        name = f"blocks-u{u:06d}.parquet"
+        # part_id is the task that wrote the block, so a resume may differ
+        a, b = (pq.read_table(os.path.join(d, "blocks", name)).drop(["part_id"])
+                for d in (res, fresh))
+        assert a.equals(b), name
+    rows = [sorted(decode_dataset(spark, d).collect()) for d in (res, fresh)]
+    assert rows[0] == rows[1]
 
 
 def test_tokens_dataframe_slices_one_per_partition(spark):
@@ -114,7 +222,7 @@ def test_tokens_dataframe_slices_one_per_partition(spark):
 
 def test_engine_builds_no_python_rdd():
     """Lint: engine DataFrames are planned JVM-side
-    (sources/files.py::one_row_per_partition), never from a Python RDD."""
+    (sources/files.py::map_tasks), never from a Python RDD."""
     import xml2arrow_spark
 
     root = os.path.dirname(xml2arrow_spark.__file__)
@@ -160,9 +268,10 @@ def test_every_worker_fn_calls_task_setup_first():
     """Lint: every function the engine hands to mapInArrow / mapInPandas /
     applyInPandasWithState runs ``env.task_setup()`` before anything but
     imports (pinned pyarrow pools, frozen import-time heap, no zip finder).
-    The metadata aggregates share ONE worker fn, the block walk's fan-out
-    in sources/files.py; the exact site count makes a new hand-rolled
-    worker show up here."""
+    Every file job (the fused encoders, decode_dataset, compaction, the
+    block walk's fan-out, tokens_dataframe) shares ONE worker fn, the
+    runner sources/files.py::map_tasks; the exact site count makes a new
+    hand-rolled worker show up here."""
     import xml2arrow_spark
 
     root = os.path.dirname(xml2arrow_spark.__file__)
@@ -193,25 +302,38 @@ def test_every_worker_fn_calls_task_setup_first():
                                   fn.name if fn is not None else None))
                     if fn is None or not _calls_prologue_first(fn):
                         offenders.append(where)
-    assert len(sites) == 25  # the lint really found the engine's worker fns
-    assert (os.path.join("sources", "files.py"), "walk_files") in sites
+    assert len(sites) == 20  # the lint really found the engine's worker fns
+    assert (os.path.join("sources", "files.py"), "run") in sites
     assert offenders == []
 
 
-def test_only_the_task_format_module_reads_task_paths():
-    """Lint: the TASKS_DDL ``path`` column is read in one place,
-    sources/files.py::task_files; every file-task worker iterates it."""
+def test_file_workers_get_units_only_from_map_tasks():
+    """Lint: file workers get their units only from
+    sources/files.py::map_tasks, the one place that calls ``range`` for
+    exact placement; no engine module builds a task table out of a SQL
+    literal (``from_json``/``unbase64`` of the units)."""
     import xml2arrow_spark
 
     root = os.path.dirname(xml2arrow_spark.__file__)
-    readers = []
+    ranges, literals = [], []
     for dirpath, _dirs, names in os.walk(root):
         for name in (n for n in names if n.endswith(".py")):
             fp = os.path.join(dirpath, name)
             with open(fp, encoding="utf-8") as f:
-                if 'get_field_index("path")' in f.read():
-                    readers.append(os.path.relpath(fp, root))
-    assert readers == [os.path.join("sources", "files.py")]
+                src = f.read()
+            rel = os.path.relpath(fp, root)
+            if "from_json(" in src or "unbase64(" in src:
+                literals.append(rel)
+            for scope in ast.walk(ast.parse(src)):
+                if not isinstance(scope, (ast.Module, ast.FunctionDef)):
+                    continue
+                for call in _scope_nodes(scope):
+                    if (isinstance(call, ast.Call)
+                            and isinstance(call.func, ast.Attribute)
+                            and call.func.attr == "range"):
+                        ranges.append((rel, getattr(scope, "name", None)))
+    assert ranges == [(os.path.join("sources", "files.py"), "map_tasks")]
+    assert literals == []
 
 
 _LAYOUT_BLIND = (
@@ -412,7 +534,7 @@ def test_fused_auto_cascade_resolves_bss_on_reduced_precision_floats(
     assert resolved.columns["embedding"].codec == "bss_float+zstd"
     # roundtrip through the real encode (not just stats) stays bit-exact
     blocks = encode_parquet_tasks(
-        plan_parquet_tasks(spark, d, n_tasks=2), resolved
+        spark, plan_parquet_tasks(spark, d, n_tasks=2), resolved
     )
     decoded = decode_table(blocks, "vec_id bigint, embedding array<float>")
     got = decoded.orderBy("vec_id").collect()

@@ -58,7 +58,8 @@ spark.stop()
 """
 
 # Instrumented twin of operators/encode.py::encode_parquet_stats — same task
-# planning (plan_parquet_tasks LPT bins), same kernels (_encode_block), plus
+# planning (plan_parquet_tasks LPT bins) and runner (map_tasks), same kernels
+# (_encode_block), plus
 # per-task timing records. Bench-only duplication, kept here so the engine
 # path carries zero probe overhead.
 _CHILD = r"""
@@ -87,7 +88,9 @@ from xml2arrow_spark.operators.encode import (
     _blockify, _encode_block, _encode_plan, _STATS_PA_SCHEMA,
     resolve_manifest_parquet,
 )
-from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
+from xml2arrow_spark.sources.files import (
+    map_tasks, parquet_file_infos, plan_parquet_tasks,
+)
 
 first = parquet_file_infos(input_dir)[0][0]
 schema = from_arrow_schema(pq.read_schema(first))
@@ -98,43 +101,35 @@ plan = _encode_plan(resolved, cols)
 block_rows = resolved.block_rows
 LOG = log_root
 
-def encode_stats(batches):
-    from xml2arrow_spark.env import task_setup
-    task_setup()
+def encode_stats(files):
     t_in = time.time()
     compute = 0.0
-    nfiles = 0
-    for b in batches:
-        idx_lists = b.column(b.schema.get_field_index("file_idx")).to_pylist()
-        path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-        for file_idx, fpath in ((i, p)
-                for idxs, paths in zip(idx_lists, path_lists)
-                for i, p in zip(idxs, paths)):
-            t0 = time.time()
-            pf = pq.ParquetFile(fpath)
-            nb = nr = nv = ib = ob = 0
-            for seq, block in enumerate(_blockify(
-                    pf.iter_batches(batch_size=block_rows, columns=cols),
-                    block_rows)):
-                enc = _encode_block(block, plan, 0, file_idx, seq)
-                nb += 1; nr += enc.column(3)[0].as_py()
-                nv += enc.column(4)[0].as_py()
-                ib += enc.column(5)[0].as_py(); ob += enc.column(6)[0].as_py()
-            compute += time.time() - t0
-            nfiles += 1
-            yield pa.RecordBatch.from_pydict(
-                {{"unit_id": [file_idx], "n_blocks": [nb], "n_rows": [nr],
-                  "n_values": [nv], "in_bytes": [ib], "out_bytes": [ob]}},
-                schema=_STATS_PA_SCHEMA)
+    for file_idx, fpath in files:
+        t0 = time.time()
+        pf = pq.ParquetFile(fpath)
+        nb = nr = nv = ib = ob = 0
+        for seq, block in enumerate(_blockify(
+                pf.iter_batches(batch_size=block_rows, columns=cols),
+                block_rows)):
+            enc = _encode_block(block, plan, 0, file_idx, seq)
+            nb += 1; nr += enc.column(3)[0].as_py()
+            nv += enc.column(4)[0].as_py()
+            ib += enc.column(5)[0].as_py(); ob += enc.column(6)[0].as_py()
+        compute += time.time() - t0
+        yield pa.RecordBatch.from_pydict(
+            {{"unit_id": [file_idx], "n_blocks": [nb], "n_rows": [nr],
+              "n_values": [nv], "in_bytes": [ib], "out_bytes": [ob]}},
+            schema=_STATS_PA_SCHEMA)
     rec = {{"pid": os.getpid(), "t_in": t_in, "t_out": time.time(),
-            "compute": compute, "files": nfiles}}
+            "compute": compute, "files": len(files)}}
     with open(os.path.join(LOG, f"task_{{os.getpid()}}_{{t_in}}.json"), "w") as f:
         json.dump(rec, f)
 
-tasks = plan_parquet_tasks(spark, input_dir, n_tasks)
+bins = plan_parquet_tasks(spark, input_dir, n_tasks)
 
 def job():
-    return tasks.mapInArrow(encode_stats, from_arrow_schema(_STATS_PA_SCHEMA)).agg(
+    return map_tasks(spark, bins, encode_stats,
+                     from_arrow_schema(_STATS_PA_SCHEMA)).agg(
         F.sum("n_values")).collect()[0][0]
 
 job()  # warm-up (JVM, python workers, page cache); logs discarded below

@@ -55,7 +55,7 @@ from xml2arrow_spark.operators.encode import (  # noqa: F401 (resolve_manifest_p
     value_counts_column,
     zone_col,
 )
-from xml2arrow_spark.sources.files import BlockWalk, local_frame, task_files
+from xml2arrow_spark.sources.files import BlockWalk, local_frame
 
 __all__ = [
     "encode_parquet_dataset",
@@ -147,11 +147,17 @@ def encode_parquet_dataset(
     different clustering refuses rather than mixing layouts."""
     if cluster not in ("lex", "zorder"):
         raise ValueError(f"unknown cluster {cluster!r}: use 'lex' or 'zorder'")
-    from pyspark.sql import functions as F
-
     import pyarrow.parquet as pq
 
-    file_schema, resolved, tasks = _fused_prologue(spark, in_path, manifest, n_tasks)
+    from xml2arrow_spark.operators.metadata import read_unit_ids
+
+    # driver-side pyarrow read: the manifest is KB-scale metadata. Raises on
+    # an unreadable manifest (resume must not re-encode and re-append
+    # every unit). Done units leave the listing before the task plan.
+    done = read_unit_ids(os.path.join(out_path, "manifest"))
+    file_schema, resolved, bins = _fused_prologue(
+        spark, in_path, manifest, n_tasks, done
+    )
     plan = _encode_plan(resolved, list(resolved.columns), layout)
 
     blocks_dir = os.path.join(out_path, "blocks")
@@ -166,12 +172,6 @@ def encode_parquet_dataset(
         for f in file_schema.fields
         if f.name in resolved.columns
     )
-    from xml2arrow_spark.operators.metadata import read_unit_ids
-
-    # driver-side pyarrow read: the manifest is KB-scale metadata. Raises on
-    # an unreadable manifest (resume must not re-encode and re-append
-    # every unit).
-    done = read_unit_ids(os.path.join(out_path, "manifest"))
     spath = os.path.join(out_path, MANIFEST_SIDECAR)
     if os.path.exists(spath):
         side = read_sidecar(out_path)
@@ -220,23 +220,6 @@ def encode_parquet_dataset(
         )
     os.replace(spath + ".inprogress", spath)
 
-    if done:
-        # drop completed units from each task's file arrays (resume)
-        keep = F.filter(
-            F.arrays_zip("file_idx", "path", "bytes"),
-            lambda e: ~e["file_idx"].isin(sorted(done)),
-        )
-        tasks = (
-            tasks.withColumn("_keep", keep)
-            .select(
-                "task_id",
-                F.col("_keep.file_idx").alias("file_idx"),
-                F.col("_keep.path").alias("path"),
-                F.col("_keep.bytes").alias("bytes"),
-            )
-            .filter(F.size("file_idx") > 0)
-        )
-
     def write_unit(file_idx, fpath, rows):
         rows = list(rows)
         out_file = os.path.join(blocks_dir, f"blocks-u{file_idx:06d}.parquet")
@@ -253,7 +236,7 @@ def encode_parquet_dataset(
         )
 
     meta = _encode_files(
-        tasks, plan, write_unit, METADATA_SCHEMA, presort, cluster
+        spark, bins, plan, write_unit, METADATA_SCHEMA, presort, cluster
     ).collect()
     if meta:
         # manifest append AFTER the encode action completed (commit
@@ -1331,20 +1314,33 @@ def _group_aggs_walk(
         for i in range(len(agg_cols))
         for x in ("nn", "s", "mn", "mx", "ssq")[:width]
     )
+    key_txt = F.concat_ws(", ", *(
+        F.coalesce(F.col(k).cast("string"), F.lit("None")) for k in keys
+    ))
+
+    def total(part, i, a):
+        # summed as decimal(38,0), which no int64 partials overflow, so a
+        # total outside int64 refuses with the driver fold's text, not
+        # ANSI's ARITHMETIC_OVERFLOW; NULL when the group has no value
+        tot = F.sum(F.col(f"{part}{i}").cast("decimal(38,0)"))
+        refuse = F.raise_error(F.concat(
+            F.lit(f"group_aggs total of {a!r} for key "), key_txt,
+            F.lit(" is outside int64; refusing rather than wrapping (ANSI "
+                  "contract)"),
+        ))
+        return F.when(F.sum(f"nn{i}") > 0,
+                      F.coalesce(tot.try_cast("bigint"), refuse))
+
     aggs = [F.sum("cnt").alias("cnt")]
     for i, a in enumerate(agg_cols):
         aggs += [
             F.sum(f"nn{i}").alias(f"nn_{a}"),
-            F.when(F.sum(f"nn{i}") > 0, F.sum(f"s{i}"))
-            .otherwise(F.lit(None)).alias(f"sum_{a}"),
+            total("s", i, a).alias(f"sum_{a}"),
             F.min(f"mn{i}").alias(f"min_{a}"),
             F.max(f"mx{i}").alias(f"max_{a}"),
         ]
         if with_sum_sq:
-            aggs.append(
-                F.when(F.sum(f"nn{i}") > 0, F.sum(f"ssq{i}"))
-                .otherwise(F.lit(None)).alias(f"sumsq_{a}")
-            )
+            aggs.append(total("ssq", i, a).alias(f"sumsq_{a}"))
     return walk.fan_out(
         spark, file_sums, part_rows, part_ddl, n_tasks
     ).groupBy(*keys).agg(*aggs)
@@ -2348,7 +2344,7 @@ def compact_dataset(
 
     import pyarrow.parquet as pq
 
-    from xml2arrow_spark.sources.files import plan_parquet_tasks
+    from xml2arrow_spark.sources.files import map_tasks, plan_parquet_tasks
 
     blocks_dir = os.path.join(out_path, "blocks")
 
@@ -2385,16 +2381,12 @@ def compact_dataset(
         if m
     ]
     gen = (max(gens) + 1) if gens else 0
-    tasks = plan_parquet_tasks(spark, blocks_dir, n_tasks=target_files)
 
-    def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def merge(files) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         from pyspark import TaskContext
 
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         attempt = ctx.attemptNumber() if ctx is not None else 0
@@ -2409,11 +2401,11 @@ def compact_dataset(
         out_file = os.path.join(
             blocks_dir, f"compact-g{gen:04d}-{part_id:06d}.parquet"
         )
-        # the task's one row is its LPT group; gen is fresh, so out_file
+        # the task's unit is its LPT group; gen is fresh, so out_file
         # is never among the inputs; a group file can only vanish if an
         # earlier attempt of THIS task already merged and removed it (rows
         # live in out_file).
-        group = [p for _i, p in task_files(batches) if os.path.exists(p)]
+        group = [p for _i, p in files if os.path.exists(p)]
         covered: set[str] = set()
         if os.path.exists(out_file):  # earlier attempt finished the rename
             covered = _coverage(out_file)
@@ -2463,8 +2455,9 @@ def compact_dataset(
             schema=out_schema,
         )
 
-    merged = tasks.mapInArrow(
-        merge, "out_file string, n_src int, nbytes long, sources string"
+    merged = map_tasks(
+        spark, plan_parquet_tasks(spark, blocks_dir, n_tasks=target_files),
+        merge, "out_file string, n_src int, nbytes long, sources string",
     )
     rows = merged.collect()  # KB-scale metadata rows, never payload
     if rows:
@@ -2655,7 +2648,7 @@ def decode_dataset(
         split_schema_ddl,
     )
     from xml2arrow_spark.operators.predicates import DnfConjuncts
-    from xml2arrow_spark.sources.files import plan_parquet_tasks
+    from xml2arrow_spark.sources.files import map_tasks, plan_parquet_tasks
 
     _refuse_pending_tombstones(out_path)
     side = read_sidecar(out_path)
@@ -2686,13 +2679,10 @@ def decode_dataset(
                 f"dataset lacks encoded column {c!r}; it has {sorted(by_name)}"
             )
 
-    def decode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def decode_files(files) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        for _i, fpath in task_files(batches):
+        for _i, fpath in files:
             view = BlockStats(fpath, pq, read_names, zone_names)
             keep = None
             if zconj:
@@ -2700,5 +2690,5 @@ def decode_dataset(
                     return _classify_where(zconj, _zones(zconj, view, i)) != "pruned"
             yield from decode_blocks(view, out_names, rfs, keep)
 
-    tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
-    return tasks.mapInArrow(decode_files, ddl)
+    bins = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
+    return map_tasks(spark, bins, decode_files, ddl)

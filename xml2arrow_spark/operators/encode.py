@@ -701,11 +701,12 @@ def resolve_manifest_parquet(
 
 
 def _fused_prologue(spark, path: str, manifest: CodecManifest | None,
-                    n_tasks: int | None):
+                    n_tasks: int | None, done=frozenset()):
     """The fused encoders' one prologue: list ``path`` once, read the
     first file's schema, default the manifest (``auto_for``), validate it,
-    resolve its 'auto' codecs from a sample and plan balanced file tasks,
-    all over that one listing. Returns ``(file_schema, resolved, tasks)``."""
+    resolve its 'auto' codecs from a sample and plan balanced file tasks
+    of the files whose ``file_idx`` is not in ``done``, all over that one
+    listing. Returns ``(file_schema, resolved, bins)``."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     import pyarrow.parquet as pq
@@ -718,13 +719,13 @@ def _fused_prologue(spark, path: str, manifest: CodecManifest | None,
         manifest = CodecManifest.auto_for(file_schema, block_rows=65536)
     manifest.validate(file_schema)
     resolved = resolve_manifest_parquet(infos, manifest)
-    return file_schema, resolved, _plan_tasks(spark, infos, n_tasks)
+    return file_schema, resolved, _plan_tasks(spark, infos, n_tasks, done)
 
 
-def _encode_files(tasks_df, plan: EncodePlan, finish, out_schema: pa.Schema,
+def _encode_files(spark, bins, plan: EncodePlan, finish, out_schema: pa.Schema,
                   presort: list[str] | None = None, cluster: str = "lex"):
-    """The one fused file worker: each task opens its files with pyarrow
-    and streams parquet -> Arrow -> numpy kernels through
+    """The one fused file worker: each task opens its bin's files with
+    pyarrow and streams parquet -> Arrow -> numpy kernels through
     :func:`encode_blocks`, with no JVM row materialization. Blocks never
     span files; a file's ``seq``-th block is ``unit_id = file_idx``,
     ``block_id = (file_idx << 20) | seq``. ``finish(file_idx, fpath,
@@ -733,18 +734,16 @@ def _encode_files(tasks_df, plan: EncodePlan, finish, out_schema: pa.Schema,
     (:func:`~xml2arrow_spark.operators.zorder.presort_table`)."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    from xml2arrow_spark.sources.files import map_tasks
+
+    def encode_files(files) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         from pyspark import TaskContext
 
-        from xml2arrow_spark.env import task_setup
-        from xml2arrow_spark.sources.files import task_files
-
-        task_setup()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
-        for file_idx, fpath in task_files(batches):
+        for file_idx, fpath in files:
             pf = pq.ParquetFile(fpath)
             if presort:
                 # clustering needs the whole unit in memory (one file = one
@@ -765,11 +764,11 @@ def _encode_files(tasks_df, plan: EncodePlan, finish, out_schema: pa.Schema,
                 file_idx, fpath, encode_blocks(plan, blocks, part_id, file_idx << 20)
             )
 
-    return tasks_df.mapInArrow(encode_files, from_arrow_schema(out_schema))
+    return map_tasks(spark, bins, encode_files, from_arrow_schema(out_schema))
 
 
-def encode_parquet_tasks(tasks_df, manifest: CodecManifest):
-    """Fused pyarrow scan + encode over a file-task DataFrame
+def encode_parquet_tasks(spark, bins, manifest: CodecManifest):
+    """Fused pyarrow scan + encode over file-task bins
     (:func:`xml2arrow_spark.sources.files.plan_parquet_tasks`): the blocks
     rows of every file, nested layout.
 
@@ -780,7 +779,8 @@ def encode_parquet_tasks(tasks_df, manifest: CodecManifest):
     the reference's unknown-subtree skip (``src/path_registry.rs:400-408``).
     """
     plan = _encode_plan(manifest, list(manifest.columns))
-    return _encode_files(tasks_df, plan, lambda _i, _f, rows: rows, plan.schema)
+    return _encode_files(spark, bins, plan, lambda _i, _f, rows: rows,
+                         plan.schema)
 
 
 _STATS_PA_SCHEMA = pa.schema(
@@ -820,7 +820,7 @@ def encode_parquet_stats(
     /root/reference/benches/parse_benchmark.rs:415-455): the kernel work is
     identical, only result transport differs. Also the right shape for
     dry-run codec planning over a large table."""
-    _schema, resolved, tasks = _fused_prologue(spark, path, manifest, n_tasks)
+    _schema, resolved, bins = _fused_prologue(spark, path, manifest, n_tasks)
 
     def ship_totals(file_idx, _fpath, rows):
         yield pa.RecordBatch.from_pylist(
@@ -828,7 +828,7 @@ def encode_parquet_stats(
         )
 
     plan = _encode_plan(resolved, list(resolved.columns))
-    return _encode_files(tasks, plan, ship_totals, _STATS_PA_SCHEMA)
+    return _encode_files(spark, bins, plan, ship_totals, _STATS_PA_SCHEMA)
 
 
 def encode_parquet(
@@ -840,8 +840,8 @@ def encode_parquet(
     """Convenience: plan balanced file tasks over ``path``, resolve the
     manifest driver-side from the parquet sample, and return the fused-encode
     blocks DataFrame. The flagship ingest path (BASELINE.json north_star)."""
-    _schema, resolved, tasks = _fused_prologue(spark, path, manifest, n_tasks)
-    return encode_parquet_tasks(tasks, resolved)
+    _schema, resolved, bins = _fused_prologue(spark, path, manifest, n_tasks)
+    return encode_parquet_tasks(spark, bins, resolved)
 
 
 def split_schema_ddl(ddl: str) -> dict[str, str]:

@@ -15,20 +15,29 @@ execution (``Parser::new`` vs ``Parser::parse``,
 /root/reference/src/xml_parser.rs:763-806): planning is a driver-side pure
 function over file metadata; per-file state lives entirely in the task.
 
+Every file job runs through ONE runner, :func:`map_tasks`: the driver
+plans the units (LPT file bins, or any other per-task list), and
+``spark.range(0, n, 1, n).mapInArrow`` runs unit i alone in partition i,
+with the unit list pickled in the worker closure. A file worker is only
+its per-unit body; the runner calls ``task_setup()`` for all of them.
+
 Scale notes (1000-executor / 100 TB):
 
-- The task table is one row per FILE (path + bytes) — KB-scale per thousand
-  files; it broadcasts/shuffles names, never payload.
+- The unit list is one ``(file_idx, path)`` per FILE — KB-scale per
+  thousand files; it ships names, never payload, and PySpark broadcasts
+  it once the pickled command passes 1 MB.
 - Balance uses greedy LPT (longest-processing-time) bin-packing on file
   size: deterministic, O(F log F) on the driver, bounds the makespan at
   4/3 OPT. At 100 TB with row-group-sized files this is what keeps stragglers
   off the encode stage without touching the data.
 - ``file_idx`` is a stable unit id (position in the sorted file list), the
-  checkpoint/resume key: completed files are anti-joined away on resume.
+  checkpoint/resume key: a resume drops completed files from the listing
+  on the driver before the LPT, and the rest keep their ``file_idx``.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import pickle
 
@@ -38,60 +47,53 @@ from pyspark.sql import DataFrame, SparkSession
 __all__ = [
     "BlockWalk",
     "local_frame",
-    "one_row_per_partition",
+    "map_tasks",
     "parquet_file_infos",
     "plan_parquet_tasks",
     "scan_map_arrow",
-    "task_files",
-    "TASKS_DDL",
 ]
 
-# one row per TASK; files carried as parallel arrays. A per-file-row layout
-# hash-repartitioned on task_id looks natural but is wrong at low task
-# counts: hashing k distinct ids into k partitions leaves ~1/e of them empty
-# and stacks 2-3 bins on others (measured: capped 4-core scaling at 1.2x).
-# one_row_per_partition pins exactly one bin per partition, JVM-side.
-TASKS_DDL = (
-    "task_id int, file_idx array<int>, path array<string>, bytes array<long>"
-)
 
+def map_tasks(spark: SparkSession, units: list, fn, schema) -> DataFrame:
+    """The one file-task runner: a DataFrame (``schema``, a StructType or
+    a DDL string, parsed once per process) of every ``fn(unit)``'s record
+    batches, with ``units[i]`` run alone in Spark partition i by a worker
+    that calls ``task_setup()`` first. ``units`` (LPT file bins, token
+    slices) and ``fn`` travel pickled in the worker closure; PySpark
+    broadcasts a command over 1 MB, so a long unit list does not bloat
+    every task.
 
-def one_row_per_partition(
-    spark: SparkSession, rows: list[tuple], ddl: str
-) -> DataFrame:
-    """DataFrame of ``rows`` (schema ``ddl``) with row i alone in Spark
-    partition i — exact placement for per-task work units, built without
-    any Python RDD.
+    ``spark.range(0, n, 1, n)`` pins id i to partition i, JVM-side, with
+    no Python RDD and no Generate. Shapes that look simpler are wrong:
 
-    ``spark.range(0, n, 1, n)`` pins id i to partition i, and each id picks
-    its row out of ONE literal (the rows as a JSON array, base64-wrapped so
-    no path character needs SQL escaping), which Catalyst folds once on the
-    driver. Two shapes that look simpler are wrong:
-
+    - A per-op SQL literal (the units as base64 JSON, ``from_json`` and
+      ``inline`` over ``range``) keeps the placement, but Catalyst parses,
+      resolves and constant-folds it on every op, and the JIT keeps
+      compiling that driver-side code: 59 against 44 py4j commands for a
+      ``decode_dataset`` plus count, 84 against 66 for a ``count_where``
+      above the valve (4-core host, BENCH/OP_THREADS.md).
     - ``createDataFrame`` over ``parallelize(rows, n)`` is a Python RDD:
       every task then starts a SECOND Python worker session (for
       PySpark's row conversion) before the real ``mapInArrow`` session,
-      ~0.26 s of worker CPU each (measured on a 4-core host).
+      ~0.26 s of worker CPU each.
     - ``createDataFrame(pyarrow.Table)`` plans as a LocalRelation, whose
-      partition count is capped at ``defaultParallelism`` (measured: 8 rows
-      landed 2 per partition on 4 partitions).
+      partition count is capped at ``defaultParallelism`` (8 rows landed
+      2 per partition on 4 partitions).
+    - Hash-repartitioning k unit ids into k partitions leaves ~1/e of
+      them empty and stacks 2-3 units on others (measured: capped 4-core
+      scaling at 1.2x)."""
+    def run(batches):
+        from xml2arrow_spark.env import task_setup
 
-    A broadcast join of the rows onto ``range`` keeps the placement but
-    adds a Spark job to every consuming action."""
-    import base64
-    import json
+        task_setup()
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from fn(units[i])
 
-    from xml2arrow_spark.operators.encode import split_schema_ddl
-
-    names = list(split_schema_ddl(ddl))
-    payload = base64.b64encode(
-        json.dumps([dict(zip(names, r)) for r in rows]).encode()
-    ).decode()
-    n = len(rows)
-    return spark.range(0, n, 1, n).selectExpr(
-        f"inline(array(element_at(from_json(CAST(unbase64('{payload}') AS "
-        f"STRING), 'array<struct<{ddl}>>'), CAST(id AS INT) + 1)))"
-    )
+    if isinstance(schema, str):
+        schema = _arrow_schema(schema)[0]
+    n = len(units)
+    return spark.range(0, n, 1, max(n, 1)).mapInArrow(run, schema)
 
 
 def parquet_file_infos(path: str) -> list[tuple[str, int]]:
@@ -134,46 +136,28 @@ def _lpt_assign(sizes: list[int], n_tasks: int) -> list[int]:
 
 def plan_parquet_tasks(
     spark: SparkSession, path: str, n_tasks: int | None = None
-) -> DataFrame:
-    """One row per TASK: (task_id, file_idx[], path[], bytes[]), size-balanced
-    over ``n_tasks`` LPT bins, with exactly one row (bin) per Spark partition.
-
-    ``file_idx`` values are the stable per-file unit ids used for checkpoint
-    lineage.
-    """
+) -> list[list[tuple[int, str]]]:
+    """The file tasks of ``path``: ``n_tasks`` size-balanced LPT bins, each
+    a list of ``(file_idx, path)``, ready for :func:`map_tasks` (bin i runs
+    alone in partition i). ``file_idx`` is the stable per-file unit id
+    used for checkpoint lineage."""
     return _plan_tasks(spark, parquet_file_infos(path), n_tasks)
 
 
-def _plan_tasks(spark: SparkSession, infos, n_tasks: int | None) -> DataFrame:
-    """:func:`plan_parquet_tasks` over an already-listed ``infos``."""
+def _plan_tasks(
+    spark: SparkSession, infos, n_tasks: int | None, skip=frozenset()
+) -> list[list[tuple[int, str]]]:
+    """:func:`plan_parquet_tasks` over an already-listed ``infos``, leaving
+    out the ``file_idx`` values in ``skip`` (a resume's done units) before
+    the LPT; the files that remain keep their ``file_idx``."""
+    todo = [(i, p, s) for i, (p, s) in enumerate(infos) if i not in skip]
     if n_tasks is None:
         n_tasks = max(spark.sparkContext.defaultParallelism, 1)
-    n_tasks = min(n_tasks, len(infos))
-    bins = _lpt_assign([s for _, s in infos], n_tasks)
-    per_task: dict[int, list[tuple[int, str, int]]] = {b: [] for b in range(n_tasks)}
-    for i, (p, s) in enumerate(infos):
-        per_task[bins[i]].append((i, p, s))
-    rows = [
-        (
-            t,
-            [f[0] for f in files],
-            [f[1] for f in files],
-            [f[2] for f in files],
-        )
-        for t, files in sorted(per_task.items())
-        if files
-    ]
-    return one_row_per_partition(spark, rows, TASKS_DDL)
-
-
-def task_files(batches):
-    """``(file_idx, path)`` of every file in a worker's TASKS_DDL batches,
-    in task order — the one reader of the task format's file columns."""
-    for b in batches:
-        idx_lists = b.column(b.schema.get_field_index("file_idx")).to_pylist()
-        path_lists = b.column(b.schema.get_field_index("path")).to_pylist()
-        for idxs, paths in zip(idx_lists, path_lists):
-            yield from zip(idxs, paths)
+    n_tasks = min(n_tasks, len(todo))
+    bins: list[list[tuple[int, str]]] = [[] for _ in range(n_tasks)]
+    for (i, p, _s), b in zip(todo, _lpt_assign([s for *_, s in todo], n_tasks)):
+        bins[b].append((i, p))
+    return [b for b in bins if b]
 
 
 def scan_map_arrow(
@@ -193,25 +177,25 @@ def scan_map_arrow(
     20-30x on payload-heavy columns (module doc above). ``fn`` must be a
     plain function (it is pickled to workers).
     """
-    tasks = plan_parquet_tasks(spark, path, n_tasks)
-
-    def run(batches):
+    def scan(files):
         import pyarrow.parquet as pq
 
-        from xml2arrow_spark.env import task_setup
-
-        task_setup()
-        for _i, fpath in task_files(batches):
+        for _i, fpath in files:
             pf = pq.ParquetFile(fpath)
             for batch in pf.iter_batches(batch_size=65536, columns=columns):
                 yield from fn(batch)
 
-    return tasks.mapInArrow(run, output_ddl)
+    return map_tasks(spark, plan_parquet_tasks(spark, path, n_tasks), scan,
+                     output_ddl)
 
 
+@functools.lru_cache(maxsize=256)
 def _arrow_schema(ddl: str):
-    """(Spark StructType, pyarrow Schema) of a DDL string. Needs an active
-    SparkContext, so resolve it driver-side; the pa.Schema pickles."""
+    """(Spark StructType, pyarrow Schema) of a DDL string, parsed once per
+    driver process: a parse is a py4j call into the JVM's SQL parser, and
+    the ops that need one run the same few DDLs again and again. Needs an
+    active SparkContext, so resolve it driver-side; the pa.Schema pickles.
+    Callers must not mutate the shared results."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
@@ -285,7 +269,7 @@ class BlockWalk:
       number of groups.
     - **One fan-out** (:meth:`fan_out`) plans file tasks from the same
       listing (one tree walk per op) and runs the identical ``per_file``
-      in one ``mapInArrow`` worker fn.
+      on each bin through :func:`map_tasks`.
     """
 
     def __init__(self, out_path: str, local_bytes: int):
@@ -359,17 +343,13 @@ class BlockWalk:
         pickle."""
         struct, schema = _arrow_schema(ddl)
 
-        def walk_files(batches):
+        def walk_files(files):
             import pyarrow.parquet as pq
 
-            from xml2arrow_spark.env import task_setup
-
-            task_setup()
-            for _i, fpath in task_files(batches):
+            for _i, fpath in files:
                 rows = to_rows(per_file(fpath, pq))
                 if rows:
                     yield _arrow_batch(schema, rows)
 
-        return _plan_tasks(spark, self.infos, n_tasks).mapInArrow(
-            walk_files, struct
-        )
+        return map_tasks(spark, _plan_tasks(spark, self.infos, n_tasks),
+                         walk_files, struct)

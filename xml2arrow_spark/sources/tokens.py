@@ -134,7 +134,7 @@ def tokens_dataframe(spark, n_rows: int, variant: str = "uniform_vocab", seed: i
         StructType,
     )
 
-    from xml2arrow_spark.sources.files import one_row_per_partition
+    from xml2arrow_spark.sources.files import map_tasks
 
     if n_partitions is None:
         n_partitions = max(spark.sparkContext.defaultParallelism, 1)
@@ -147,33 +147,19 @@ def tokens_dataframe(spark, n_rows: int, variant: str = "uniform_vocab", seed: i
             StructField("source", StringType(), False),
         ]
     )
-    rows = [
-        (int(i), int(bounds[i]), int(bounds[i + 1])) for i in range(n_partitions)
+    # slice i is unit i, alone in partition i (map_tasks)
+    slices = [
+        (i, int(bounds[i]), int(bounds[i + 1])) for i in range(n_partitions)
     ]
-    # one slice row per partition: hash-repartitioning k pids into k
-    # partitions would leave ~1/e of them empty (collisions) and stack
-    # doubled slices on others; one_row_per_partition pins slice i to
-    # partition i.
-    parts = one_row_per_partition(spark, rows, "pid int, lo long, hi long")
 
-    def gen(batches):
-        from xml2arrow_spark.env import task_setup
+    def gen(unit):
+        pid, lo, hi = unit
+        if hi > lo:
+            yield from generate_tokens_arrow(
+                hi - lo, variant=variant, seed=seed + pid, start_id=lo
+            ).to_batches()
 
-        task_setup()
-        for batch in batches:
-            for pid, lo, hi in zip(
-                batch.column("pid").to_pylist(),
-                batch.column("lo").to_pylist(),
-                batch.column("hi").to_pylist(),
-            ):
-                if hi <= lo:
-                    continue
-                tbl = generate_tokens_arrow(
-                    hi - lo, variant=variant, seed=seed + pid, start_id=lo
-                )
-                yield from tbl.to_batches()
-
-    return parts.mapInArrow(gen, schema)
+    return map_tasks(spark, slices, gen, schema)
 
 
 # -- SQL-expressible tokenizer over the documents table ---------------------

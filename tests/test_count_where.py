@@ -1981,35 +1981,114 @@ def test_group_count_composite_where_and_validation(spark, ds):
 
 
 def test_composite_value_counts_kernel_equivalence():
-    """The mixed-radix kernel must equal a decode + python tuple count for
-    every codec mix, nulls included."""
+    """The mixed-radix kernel (group_codes, counted by fold_group_aggs
+    with no aggregates) must equal a decode + python tuple count for
+    every key codec mix, nulls included, unmasked and masked; every row's
+    slot decodes to its own key tuple."""
+    import itertools
+    import json
+
     import pyarrow as pa2
 
-    from xml2arrow_spark.operators.blocks import composite_value_counts
+    from xml2arrow_spark.operators.blocks import (
+        decode_column,
+        fold_group_aggs,
+        group_codes,
+    )
     from xml2arrow_spark.operators.encode import encode_column
-    from xml2arrow_spark.operators.blocks import decode_column
 
-    a = pa2.array([1, 1, 2, None, 2, 1] * 40, type=pa2.int64())
-    b = pa2.array(["x", None, "y", "y", "x", "x"] * 40)
-    c = pa2.array([True, False, None, True, True, False] * 40)
-    pairs = []
-    for arr, codec in [(a, "dict"), (b, "dict_str"), (c, "auto")]:
-        _, meta, data = encode_column(arr, codec)
-        pairs.append((meta, data))
-    got = composite_value_counts(pairs)
-    want: dict = {}
-    cols = [decode_column(m, d).to_pylist() for m, d in pairs]
-    for kt in zip(*cols):
-        want[kt] = want.get(kt, 0) + 1
-    assert got == want
-    # masked variant
-    mask = np.arange(240) % 3 != 1
-    got = composite_value_counts(pairs, mask=mask)
-    want = {}
-    for i, kt in enumerate(zip(*cols)):
-        if mask[i]:
-            want[kt] = want.get(kt, 0) + 1
-    assert got == want
+    # the tail makes pdict escape rows; the bool key decodes (auto)
+    a = pa2.array([1, 1, 2, None, 2, 1] * 40 + [7, 8, 9], type=pa2.int64())
+    b = pa2.array(["x", None, "y", "y", "x", "x"] * 40 + ["z", "x", None])
+    c = pa2.array([True, False, None, True, True, False] * 40 + [None] * 3)
+    n = len(a)
+    masks = [None, np.arange(n) % 3 != 1, np.zeros(n, dtype=bool)]
+    for acodec, bcodec in itertools.product(
+        ["plain", "dict", "rle", "pdict"], ["plain_str", "dict_str"]
+    ):
+        pairs = []
+        for arr, codec in [(a, acodec), (b, bcodec), (c, "auto")]:
+            _, meta, data = encode_column(arr, codec)
+            pairs.append((meta, data))
+        if acodec == "pdict":
+            assert json.loads(pairs[0][0])["values_meta"]["n_exc"] > 0
+        rows = list(zip(*(decode_column(m, d).to_pylist() for m, d in pairs)))
+        keys, codes = group_codes(pairs)
+        assert [keys[g] for g in codes] == rows
+        for mask in masks:
+            got = {
+                kt: row[0]
+                for kt, row in fold_group_aggs(pairs, [], mask=mask).items()
+            }
+            want: dict = {}
+            for i, kt in enumerate(rows):
+                if mask is None or mask[i]:
+                    want[kt] = want.get(kt, 0) + 1
+            assert got == want, (acodec, bcodec)
+    # five keys of 8,192 distinct values each: the radix product
+    # (8,193^5) passes int64, so the combine must compact after every key
+    rng = np.random.default_rng(0)
+    pairs = [encode_column(pa2.array(rng.permutation(8192)), "plain")[1:]
+             for _ in range(5)]
+    rows = list(zip(*(decode_column(m, d).to_pylist() for m, d in pairs)))
+    keys, codes = group_codes(pairs)
+    assert [keys[g] for g in codes] == rows
+
+
+@pytest.mark.parametrize("layout", ["nested", "wide"])
+def test_composite_key_claims_constant_blocks(spark, tmp_path, monkeypatch,
+                                              layout):
+    """A store presorted by both keys, whose blocks are single-valued (or
+    all-null) in both: every such block folds from metadata and reads no
+    payload; only the one mixed block does. Answers are equal on the
+    driver-local path and above the valve."""
+    from xml2arrow_spark.operators import encode as enc
+    from xml2arrow_spark.operators.dataset import group_aggs, group_count
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "ds")
+    os.makedirs(src)
+    k1, k2 = [], []
+    for x, y in [(1, "a"), (1, "b"), (2, "a"), (2, None), (3, "b")]:
+        k1 += [x] * 100
+        k2 += [y] * 100
+    k1 += [i % 3 for i in range(100)]  # the last block mixes both keys
+    k2 += ["a" if i % 2 else None for i in range(100)]
+    v = [None if i % 9 == 0 else i * 7 - 300 for i in range(600)]
+    tbl = pa.table({"k1": pa.array(k1, pa.int64()), "k2": pa.array(k2),
+                    "v": pa.array(v, pa.int64())})
+    pq.write_table(tbl, os.path.join(src, "p.parquet"))
+    manifest = CodecManifest.auto_for(from_arrow_schema(tbl.schema),
+                                      block_rows=100)
+    encode_parquet_dataset(spark, src, out, manifest=manifest, layout=layout)
+
+    counts: dict = {}
+    sums: dict = {}
+    for x, y, w in zip(k1, k2, v):
+        counts[(x, y)] = counts.get((x, y), 0) + 1
+        c, nn, sm = sums.get((x, y), (0, 0, 0))
+        sums[(x, y)] = (c + 1, nn + (w is not None), sm + (w or 0))
+
+    read = []
+    payload = enc.BlockStats.payload
+
+    def spy(self, col, i):
+        read.append(i)
+        return payload(self, col, i)
+
+    monkeypatch.setattr(enc.BlockStats, "payload", spy)
+    for lb in (128 << 20, 0):
+        read.clear()
+        got = {(r["k1"], r["k2"]): r["cnt"]
+               for r in group_count(spark, out, ["k1", "k2"],
+                                    local_bytes=lb).collect()}
+        assert got == counts
+        got = {(r["k1"], r["k2"]): (r["cnt"], r["nn_v"], r["sum_v"] or 0)
+               for r in group_aggs(spark, out, ["k1", "k2"], ["v"],
+                                   local_bytes=lb).collect()}
+        assert got == sums
+        if lb:  # the driver-local walk: only the mixed block reads payload
+            assert read and set(read) == {5}
+
 
 # ---- composite-key group_aggs --------------------------------------------------
 

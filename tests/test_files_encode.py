@@ -337,9 +337,8 @@ def test_file_workers_get_units_only_from_map_tasks():
 
 
 _LAYOUT_BLIND = (
-    "_fold_blocks_file", "count_where", "group_count",
-    "_group_count_composite", "group_aggs", "_group_aggs_composite",
-    "top_k", "time_bucket_count", "decode_dataset",
+    "_fold_blocks_file", "count_where", "group_count", "group_aggs",
+    "_keyed_fold", "top_k", "time_bucket_count", "decode_dataset",
 )
 # the decode loop, decode_table and the encoders, beside the writer and
 # the view in operators/encode.py
@@ -408,6 +407,39 @@ def test_claiming_walks_do_not_know_the_blocks_layout():
         if hits:
             offenders[rel] = hits
     assert offenders == {}
+
+
+
+def test_one_keyed_fold():
+    """Lint, one way to group: ``BlockWalk.folds_on_driver`` has exactly
+    one caller in the engine (the keyed fold in operators/dataset.py),
+    and no module but operators/blocks.py computes mixed-radix group
+    codes (``codes * len(dictionary) + c``)."""
+    import xml2arrow_spark
+
+    root = os.path.dirname(xml2arrow_spark.__file__)
+    dispatch, radix = [], []
+    for dirpath, _dirs, names in os.walk(root):
+        for name in sorted(names):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, root)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read())
+            for node in ast.walk(tree):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "folds_on_driver"):
+                    dispatch.append(rel)
+                if (isinstance(node, ast.BinOp) and isinstance(node.op, ast.Add)
+                        and isinstance(node.left, ast.BinOp)
+                        and isinstance(node.left.op, ast.Mult)
+                        and isinstance(node.left.right, ast.Call)
+                        and getattr(node.left.right.func, "id", None) == "len"):
+                    radix.append(rel)
+    assert dispatch == [os.path.join("operators", "dataset.py")]
+    assert radix == [os.path.join("operators", "blocks.py")]
 
 
 def test_fused_encode_roundtrip_bit_identical(spark, token_dir):

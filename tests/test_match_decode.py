@@ -317,13 +317,23 @@ def test_pdict_ref_plus_top_beyond_narrow_container(ref):
         _assert_equiv(meta, data, *pred)
 
 
-# ---- group_sum_column (codec-aware grouped COUNT + SUM) ---------------------
+# ---- fold_group_aggs (codec-aware grouped COUNT + SUM) ----------------------
 
-from xml2arrow_spark.operators.blocks import group_sum_column  # noqa: E402
+from xml2arrow_spark.operators.blocks import fold_group_aggs  # noqa: E402
+
+
+def group_sum_column(key_meta, key_data, agg_meta, agg_data):
+    """One key and one agg column through fold_group_aggs, as
+    ``{key: [cnt, n_nonnull, sum, min, max]}``."""
+    return {
+        kt[0]: [c, *t] for kt, (c, t) in fold_group_aggs(
+            [(key_meta, key_data)], [(agg_meta, agg_data)]
+        ).items()
+    }
 
 
 def _assert_group_sum_equiv(key_meta, key_data, agg_meta, agg_data):
-    """group_sum_column must equal a decode + python groupby — the kernel
+    """fold_group_aggs must equal a decode + python groupby — the kernel
     can only skip materialization, never change results."""
     karr = decode_column(key_meta, key_data)
     aarr = decode_column(agg_meta, agg_data)
@@ -411,8 +421,9 @@ def test_group_sum_row_count_mismatch_refused():
 
 
 def test_group_sum_key_never_decodes_dict_rle(monkeypatch):
-    """dict/rle/dict_str KEY streams must group without decode_column ever
-    running on the key block (the agg block decodes exactly once each)."""
+    """dict/rle/pdict/dict_str KEY streams must group without
+    decode_column ever running on the key block (the agg block decodes
+    exactly once each); the pdict key has exception rows."""
     agg = pa.array(np.arange(100, dtype=np.int64))
     _, am, ad = encode_column(agg, "plain")
     decoded_metas = []
@@ -425,7 +436,12 @@ def test_group_sum_key_never_decodes_dict_rle(monkeypatch):
         (pa.array([5, -3, 5, None] * 25, type=pa.int64()), "dict"),
         (pa.array(np.repeat([7, 9], [40, 60]).astype(np.int64)), "rle"),
         (pa.array((["x", "yy", None, "x"] * 25)[:100]), "dict_str+zstd"),
+        (pa.array([5, -3, 5, None] * 24 + [7, 8, 9, 11], type=pa.int64()),
+         "pdict"),
     ]:
         _, km, kd = encode_column(keys, codec)
         group_sum_column(km, kd, am, ad)
-    assert decoded_metas == [am] * 3
+    assert decoded_metas == [am] * 4
+    assert json.loads(km)["values_meta"]["n_exc"] > 0
+    monkeypatch.undo()
+    _assert_group_sum_equiv(km, kd, am, ad)  # escape rows group exactly

@@ -550,167 +550,6 @@ def _gather_strdata(sd: StrData, idx: np.ndarray) -> StrData:
     return StrData(offsets=offsets, data=data)
 
 
-def value_counts_column(meta_json: str, payload: bytes, mask=None):
-    """Exact per-block GROUP BY counts for one encoded column: returns
-    ``(values, counts, n_null)`` where ``values`` is a pyarrow array of
-    NON-NULL values from this block (distinct when ``mask`` is None; the
-    masked path MAY repeat a value — RLE run values are not uniqued —
-    and callers fold tallies by value), ``counts`` an int64 numpy array
-    aligned with it, and ``n_null`` the block's null count.
-
-    ``mask`` (optional numpy/pyarrow boolean array over the block's rows,
-    no nulls) restricts the tally to the selected rows — the filtered
-    GROUP BY COUNT shape: rows where the mask is False contribute to no
-    value's count and not to ``n_null``, exactly as SQL's ``WHERE`` runs
-    before ``GROUP BY``. Rides :func:`group_codes_column`, so the key
-    values still never materialize per row for dict/rle/dict_str codecs.
-
-    Codec-aware: ``dict``/``dict_str`` bincount the code stream against
-    the dictionary, ``rle`` folds run lengths per run value, ``pdict``
-    bincounts the code stream over the top table and uniques the (small)
-    exception stream — none of them materialize the value stream
-    (operating on compressed data, Abadi et al., SIGMOD 2006). Every
-    other integer/string/bool/decimal codec decodes and counts. Float
-    kinds are REFUSED: NaN != NaN under IEEE but SQL GROUP BY groups
-    NaNs together, so a float group-by cannot be reproduced portably —
-    the caller gets an error, never engine-defined groups.
-
-    Exactness pinned against decode + pyarrow value_counts in
-    tests/test_match_decode.py for every codec and null mix.
-    """
-    import pyarrow.compute as pc
-
-    if mask is not None:
-        dictionary, codes = group_codes_column(meta_json, payload)
-        m = np.asarray(mask, dtype=bool)
-        if m.size != codes.size:
-            raise BlockCorruptionError(
-                f"row mask and block disagree on row count "
-                f"({m.size} vs {codes.size})"
-            )
-        K = len(dictionary)
-        cnt = np.bincount(codes[m], minlength=K + 1).astype(np.int64)
-        keep = cnt[:K] > 0
-        return (
-            dictionary.take(pa.array(np.nonzero(keep)[0], type=pa.int64())),
-            cnt[:K][keep],
-            int(cnt[K]),
-        )
-
-    meta = json.loads(meta_json)
-    _verify_block_header(meta, payload)
-    if meta["kind"] == "general":
-        raw = pa.Codec(meta["g"]).decompress(
-            payload, decompressed_size=meta["raw_len"], asbytes=True
-        )
-        return value_counts_column(meta["inner"], raw)
-    kind = meta["kind"]
-    if kind in ("float", "list_float"):
-        raise EncodeTypeError(
-            "group-by counts over float columns are refused: SQL groups "
-            "NaNs together but IEEE equality does not, so the result "
-            "would be engine-defined; group on an integer/string column"
-        )
-    if kind == "list_int":
-        raise EncodeTypeError(
-            "group-by counts need a scalar key column, got a list column"
-        )
-
-    if kind in ("int", "str"):
-        from xml2arrow_spark.codecs.base import INT_DTYPES, split_sections
-
-        vmask, vpayload = _unpack_validity(meta, payload)
-        n_null = 0 if vmask is None else int(meta["n"] - vmask.sum())
-
-        if kind == "int":
-            vm = meta["values_meta"]
-            pa_type = _PA_INT[meta["dtype"]]
-            if vm["codec"] == "dict":
-                np_dtype = INT_DTYPES[vm["dtype"]]
-                parts = split_sections(vm, vpayload)
-                uniq = _for_unpack(parts["dict"], vm["card"], vm["uref"], vm["uwidth"])
-                idx = bitpack.unpack_uint(parts["indices"], vm["n"], vm["iwidth"])
-                counts = np.bincount(
-                    idx.astype(np.intp), minlength=vm["card"]
-                ).astype(np.int64)
-                return (
-                    pa.array(uniq.astype(np_dtype), type=pa_type),
-                    counts,
-                    n_null,
-                )
-            if vm["codec"] == "rle":
-                np_dtype = INT_DTYPES[vm["dtype"]]
-                parts = split_sections(vm, vpayload)
-                k = vm["n_runs"]
-                run_values = _for_unpack(
-                    parts["run_values"], k, vm["vref"], vm["vwidth"]
-                )
-                run_lengths = _for_unpack(
-                    parts["run_lengths"], k, vm["lref"], vm["lwidth"]
-                )
-                uniq, inverse = np.unique(run_values, return_inverse=True)
-                counts = np.zeros(uniq.size, dtype=np.int64)
-                np.add.at(counts, inverse, run_lengths)
-                return (
-                    pa.array(uniq.astype(np_dtype), type=pa_type),
-                    counts,
-                    n_null,
-                )
-            if vm["codec"] == "pdict" and vm["n"]:
-                np_dtype = INT_DTYPES[vm["dtype"]]
-                parts = split_sections(vm, vpayload)
-                codes = bitpack.unpack_uint(parts["codes"], vm["n"], vm["w"])
-                escape = (1 << vm["w"]) - 1
-                # top codes are 0..n_dict-1; the escape slot's tally is the
-                # exception-row count, not a dictionary value's
-                cc = np.bincount(
-                    codes.astype(np.intp), minlength=escape + 1
-                ).astype(np.int64)
-                # ref is added in np_dtype (decode_pdict's arithmetic), never
-                # in the narrow unpacked container
-                vals = [_for_unpack(
-                    parts["dict"], vm["n_dict"], vm["ref"], vm["w_exc"], np_dtype
-                )]
-                cnts = [cc[: vm["n_dict"]]]
-                if vm["n_exc"]:
-                    euniq, ecnt = np.unique(
-                        _for_unpack(
-                            parts["exceptions"], vm["n_exc"], vm["ref"],
-                            vm["w_exc"], np_dtype,
-                        ),
-                        return_counts=True,
-                    )
-                    vals.append(euniq)
-                    cnts.append(ecnt.astype(np.int64))
-                return (
-                    pa.array(np.concatenate(vals), type=pa_type),
-                    np.concatenate(cnts),
-                    n_null,
-                )
-        elif kind == "str":
-            sm = meta["str_meta"]
-            if sm["codec"] == "dict_str":
-                from xml2arrow_spark.codecs.strings import decode_plain_str
-
-                parts = split_sections(sm, vpayload)
-                dict_sd = decode_plain_str(sm["dict_meta"], parts["dict"])
-                idx = bitpack.unpack_uint(parts["indices"], sm["n"], sm["iwidth"])
-                counts = np.bincount(
-                    idx.astype(np.intp), minlength=dict_sd.n
-                ).astype(np.int64)
-                return (
-                    strdata_to_arrow(dict_sd, large=meta.get("large", False)),
-                    counts,
-                    n_null,
-                )
-
-    # no codec shortcut: decode and count (same kernels, same result)
-    arr = decode_column(meta_json, payload)
-    n_null = arr.null_count
-    vc = pc.value_counts(arr.drop_null())
-    return vc.field("values"), vc.field("counts").to_numpy().astype(np.int64), n_null
-
-
 def header_distinct(meta_json: str) -> int | None:
     """How many distinct non-null values a block's codec header proves at
     most, without its payload: ``card`` for ``dict``/``dict_str``,
@@ -730,249 +569,231 @@ def header_distinct(meta_json: str) -> int | None:
     return None
 
 
-def group_codes_column(meta_json: str, payload: bytes):
-    """Per-row GROUP codes for one encoded column: returns ``(dictionary,
-    codes)`` where ``dictionary`` is a pyarrow array of candidate key
-    values (it MAY contain duplicates — RLE run values are not uniqued;
-    callers fold tallies by value) and ``codes`` an int64 numpy array of
-    length n_rows mapping EVERY row to a dictionary slot, with
-    ``len(dictionary)`` as the dedicated NULL-group slot.
+def _code_stream(meta: dict, vpayload: bytes):
+    """``(dictionary, codes)`` straight off a ``dict``, ``rle``, ``pdict``
+    or ``dict_str`` value stream of an int/str block — a pyarrow array of
+    candidate key values and one int64 code per NON-NULL row — or None
+    for every other codec. ``rle`` slots are runs, so its dictionary may
+    repeat a value; the others hold each value once. A ``pdict`` top code
+    is its own slot, and an escape row maps to the uniques of the
+    exception stream after the top table."""
+    from xml2arrow_spark.codecs.base import INT_DTYPES, split_sections
 
-    Codec-aware: ``dict``/``dict_str`` lift the code stream directly and
-    ``rle`` repeats run indices — the key values never materialize per row
-    (operating on compressed data, Abadi et al., SIGMOD 2006); every other
-    codec decodes and dictionary-encodes, which yields the identical
-    grouping. Float and list kinds are refused with the same portability
-    rule as :func:`value_counts_column` (SQL groups NaNs together, IEEE
-    equality does not).
-    """
+    if meta["kind"] == "str":
+        sm = meta["str_meta"]
+        if sm["codec"] != "dict_str":
+            return None
+        from xml2arrow_spark.codecs.strings import decode_plain_str
+
+        parts = split_sections(sm, vpayload)
+        dict_sd = decode_plain_str(sm["dict_meta"], parts["dict"])
+        return (
+            strdata_to_arrow(dict_sd, large=meta.get("large", False)),
+            bitpack.unpack_uint(parts["indices"], sm["n"], sm["iwidth"]),
+        )
+    vm = meta["values_meta"]
+    codec = vm["codec"]
+    if codec not in ("dict", "rle") and not (codec == "pdict" and vm["n"]):
+        return None
+    np_dtype = INT_DTYPES[vm["dtype"]]
+    parts = split_sections(vm, vpayload)
+    if codec == "dict":
+        uniq = _for_unpack(parts["dict"], vm["card"], vm["uref"], vm["uwidth"])
+        idx = bitpack.unpack_uint(parts["indices"], vm["n"], vm["iwidth"])
+    elif codec == "rle":
+        k = vm["n_runs"]
+        uniq = _for_unpack(parts["run_values"], k, vm["vref"], vm["vwidth"])
+        idx = np.repeat(np.arange(k, dtype=np.int64), _for_unpack(
+            parts["run_lengths"], k, vm["lref"], vm["lwidth"]
+        ))
+    else:
+        # ref is added in np_dtype (decode_pdict's arithmetic), never in
+        # the narrow unpacked container
+        uniq = _for_unpack(
+            parts["dict"], vm["n_dict"], vm["ref"], vm["w_exc"], np_dtype
+        )
+        idx = bitpack.unpack_uint(parts["codes"], vm["n"], vm["w"]).astype(np.int64)
+        if vm["n_exc"]:
+            exc, inv = np.unique(_for_unpack(
+                parts["exceptions"], vm["n_exc"], vm["ref"], vm["w_exc"],
+                np_dtype,
+            ), return_inverse=True)
+            # escape rows hold the exceptions in row order
+            idx[idx == (1 << vm["w"]) - 1] = vm["n_dict"] + inv
+            uniq = np.concatenate([uniq, exc])
+    return pa.array(uniq.astype(np_dtype, copy=False), type=_PA_INT[meta["dtype"]]), idx
+
+
+def _column_codes(meta_json: str, payload: bytes):
+    """One key column's per-row group codes, the per-column step of
+    :func:`group_codes`: ``(dictionary, codes, runs)``, where ``codes``
+    maps EVERY row to a slot of the pyarrow array ``dictionary`` and
+    ``len(dictionary)`` is the NULL slot. ``runs`` is True on ``rle``,
+    whose slots are runs, so its dictionary may repeat a value; every
+    other dictionary holds each value once.
+
+    The ``dict``/``rle``/``pdict``/``dict_str`` code streams become the
+    codes without the key values materializing per row (operating on
+    compressed data, Abadi et al., SIGMOD 2006); every other codec
+    decodes and dictionary-encodes, which groups identically. Float and
+    list kinds are refused: SQL groups NaNs together but IEEE equality
+    does not, and a list is not one value."""
     import pyarrow.compute as pc
 
     meta = json.loads(meta_json)
     _verify_block_header(meta, payload)
-    if meta["kind"] == "general":
+    kind = meta["kind"]
+    if kind == "general":
         raw = pa.Codec(meta["g"]).decompress(
             payload, decompressed_size=meta["raw_len"], asbytes=True
         )
-        return group_codes_column(meta["inner"], raw)
-    kind = meta["kind"]
-    if kind in ("float", "list_float"):
+        return _column_codes(meta["inner"], raw)
+    if kind in ("float", "list_float", "list_int"):
         raise EncodeTypeError(
-            "group-by over float columns is refused: SQL groups NaNs "
-            "together but IEEE equality does not, so the result would be "
-            "engine-defined; group on an integer/string column"
+            f"group-by needs a scalar int/string/bool/decimal key, got a "
+            f"{kind} column: SQL groups NaNs together but IEEE equality "
+            f"does not, so a float group-by would be engine-defined"
         )
-    if kind == "list_int":
-        raise EncodeTypeError(
-            "group-by needs a scalar key column, got a list column"
-        )
-
-    def _expand(dictionary, nonnull_codes, vmask, n):
-        if vmask is None:
-            return dictionary, nonnull_codes
-        codes = np.full(n, len(dictionary), dtype=np.int64)
-        codes[vmask] = nonnull_codes
-        return dictionary, codes
-
     if kind in ("int", "str"):
-        from xml2arrow_spark.codecs.base import INT_DTYPES, split_sections
-
         vmask, vpayload = _unpack_validity(meta, payload)
-        if kind == "int":
-            vm = meta["values_meta"]
-            pa_type = _PA_INT[meta["dtype"]]
-            if vm["codec"] == "dict":
-                np_dtype = INT_DTYPES[vm["dtype"]]
-                parts = split_sections(vm, vpayload)
-                uniq = _for_unpack(parts["dict"], vm["card"], vm["uref"], vm["uwidth"])
-                idx = bitpack.unpack_uint(
-                    parts["indices"], vm["n"], vm["iwidth"]
-                ).astype(np.int64)
-                return _expand(
-                    pa.array(uniq.astype(np_dtype), type=pa_type),
-                    idx, vmask, meta["n"],
-                )
-            if vm["codec"] == "rle":
-                np_dtype = INT_DTYPES[vm["dtype"]]
-                parts = split_sections(vm, vpayload)
-                k = vm["n_runs"]
-                run_values = _for_unpack(
-                    parts["run_values"], k, vm["vref"], vm["vwidth"]
-                )
-                run_lengths = _for_unpack(
-                    parts["run_lengths"], k, vm["lref"], vm["lwidth"]
-                )
-                idx = np.repeat(np.arange(k, dtype=np.int64), run_lengths)
-                return _expand(
-                    pa.array(run_values.astype(np_dtype), type=pa_type),
-                    idx, vmask, meta["n"],
-                )
-        elif kind == "str":
-            sm = meta["str_meta"]
-            if sm["codec"] == "dict_str":
-                from xml2arrow_spark.codecs.strings import decode_plain_str
-
-                parts = split_sections(sm, vpayload)
-                dict_sd = decode_plain_str(sm["dict_meta"], parts["dict"])
-                idx = bitpack.unpack_uint(
-                    parts["indices"], sm["n"], sm["iwidth"]
-                ).astype(np.int64)
-                return _expand(
-                    strdata_to_arrow(dict_sd, large=meta.get("large", False)),
-                    idx, vmask, meta["n"],
-                )
-
-    # no codec shortcut: decode and dictionary-encode (same grouping)
-    arr = decode_column(meta_json, payload)
-    darr = pc.dictionary_encode(arr)
+        stream = _code_stream(meta, vpayload)
+        if stream is not None:
+            dictionary, idx = stream
+            runs = kind == "int" and meta["values_meta"]["codec"] == "rle"
+            if vmask is None:
+                return dictionary, idx.astype(np.int64), runs
+            codes = np.full(meta["n"], len(dictionary), dtype=np.int64)
+            codes[vmask] = idx
+            return dictionary, codes, runs
+    darr = pc.dictionary_encode(decode_column(meta_json, payload))
     dictionary = darr.dictionary
-    codes = (
-        darr.indices.fill_null(len(dictionary))
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-    return dictionary, codes
+    codes = darr.indices.fill_null(len(dictionary)).to_numpy(zero_copy_only=False)
+    return dictionary, codes.astype(np.int64), False
 
 
-def composite_value_counts(key_pairs, mask=None):
-    """Exact per-block GROUP BY counts over a COMPOSITE key: ``key_pairs``
-    is a list of (meta_json, payload) — one per key column — and the
-    result is ``{(v1, v2, ...): count}`` over the block's (masked) rows,
-    with ``None`` components for NULL key values (SQL: every NULL
-    combination is its own group).
+def _row_mask(mask, n: int) -> np.ndarray:
+    """``mask`` as a numpy boolean array over a block of ``n`` rows."""
+    mask = np.asarray(mask, dtype=bool)
+    if mask.size != n:
+        raise BlockCorruptionError(
+            f"row mask and key blocks disagree on row count ({mask.size} vs {n})"
+        )
+    return mask
 
-    Each column's group codes ride :func:`group_codes_column`
-    (dict/rle/dict_str code streams — no per-row key materialization);
-    the codes combine positionally into one mixed-radix code
-    (``c = c1 * (K2+1) + c2 ...``, the +1 radix slot being each column's
-    NULL group), so the composite tally is one ``np.unique`` over an
-    int64 stream no matter how many key columns — never a per-row tuple
-    build. Refusals (float/list keys) come from group_codes_column.
-    """
-    dicts = []
-    combined = None
-    n = None
+
+def group_codes(key_pairs):
+    """Per-row GROUP codes over one or several key columns: ``key_pairs``
+    is a list of (meta_json, payload), one per key column, and the result
+    is ``(keys, codes)``, where ``keys[j]`` is the key TUPLE of slot ``j``
+    (None components for NULL; SQL: every NULL combination is its own
+    group) and ``codes`` an int64 numpy array mapping every row to a slot.
+
+    One key keeps its column's slots (:func:`_column_codes`: dictionary
+    slots plus the NULL slot, which may be unoccupied; ``rle`` slots are
+    runs, so a key may repeat and callers fold by key). Each further key
+    combines mixed-radix (``c * (K + 1) + c_next``, the +1 being that
+    column's NULL slot) and compacts with one ``np.unique``, so the code
+    stays below the block's rows whatever the number of keys, and no
+    per-row tuple is ever built."""
+    keys = codes = None
     for meta, data in key_pairs:
-        d, c = group_codes_column(meta, data)
-        if n is None:
-            n = c.size
-        elif c.size != n:
+        dictionary, c, _runs = _column_codes(meta, data)
+        d = dictionary.to_pylist() + [None]
+        if codes is None:
+            keys, codes = [(v,) for v in d], c
+            continue
+        if c.size != codes.size:
             raise BlockCorruptionError(
-                f"composite key blocks disagree on row count ({n} vs {c.size})"
+                f"composite key blocks disagree on row count "
+                f"({codes.size} vs {c.size})"
             )
-        dicts.append(d.to_pylist() + [None])
-        combined = c if combined is None else combined * len(dicts[-1]) + c
+        slots, codes = np.unique(codes * len(d) + c, return_inverse=True)
+        keys = [keys[s // len(d)] + (d[s % len(d)],) for s in slots.tolist()]
+    return keys, codes.astype(np.int64, copy=False)
+
+
+def value_counts_column(meta_json: str, payload: bytes, mask=None):
+    """Exact per-block GROUP BY counts of one encoded column, the
+    count-only view of :func:`group_codes`: returns ``(values, counts,
+    n_null)``, ``values`` a pyarrow array of the block's non-null values
+    with a non-zero count, ``counts`` an int64 numpy array aligned with
+    it, and ``n_null`` the null rows. ``mask`` (boolean over the block's
+    rows, no nulls) restricts the tally to the selected rows, as SQL's
+    WHERE runs before GROUP BY. Unmasked, each value appears once;
+    masked, an ``rle`` value may appear once per run, so callers fold
+    tallies by value. Float and list columns are refused (see
+    :func:`_column_codes`). Exactness is pinned against decode + pyarrow
+    value_counts in tests/test_match_decode.py for every codec and null
+    mix."""
+    dictionary, codes, runs = _column_codes(meta_json, payload)
     if mask is not None:
-        mask = np.asarray(mask, dtype=bool)
-        if mask.size != n:
-            raise BlockCorruptionError(
-                f"row mask and key blocks disagree on row count "
-                f"({mask.size} vs {n})"
-            )
-        combined = combined[mask]
-    slots, counts = np.unique(combined, return_counts=True)
-    out: dict = {}
-    for slot, cnt in zip(slots.tolist(), counts.tolist()):
-        parts = []
-        for d in reversed(dicts):
-            slot, j = divmod(slot, len(d))
-            parts.append(d[j])
-        key = tuple(reversed(parts))
-        out[key] = out.get(key, 0) + cnt  # RLE dup dictionary slots fold
-    return out
-
-
-def composite_group_codes(key_pairs):
-    """COMPOSITE per-row group codes: mixed-radix combination of each key
-    column's codec-stream codes (:func:`group_codes_column`; the +1 radix
-    slot per column is its NULL group), compacted with one ``np.unique``
-    so downstream folds never allocate the full radix product. Returns
-    ``(keys, codes)`` — ``keys[j]`` the decoded key TUPLE of compact slot
-    ``j`` (None components for NULLs), ``codes`` int64 per row."""
-    dicts = []
-    combined = None
-    n = None
-    for meta, data in key_pairs:
-        d, c = group_codes_column(meta, data)
-        if n is None:
-            n = c.size
-        elif c.size != n:
-            raise BlockCorruptionError(
-                f"composite key blocks disagree on row count ({n} vs {c.size})"
-            )
-        dicts.append(d.to_pylist() + [None])
-        combined = c if combined is None else combined * len(dicts[-1]) + c
-    slots, codes = np.unique(combined, return_inverse=True)
-    keys = []
-    for slot in slots.tolist():
-        parts = []
-        for d in reversed(dicts):
-            slot, j = divmod(slot, len(d))
-            parts.append(d[j])
-        keys.append(tuple(reversed(parts)))
-    return keys, codes.astype(np.int64)
-
-
-def composite_group_aggs(key_pairs, aggs, mask=None, with_sq=False):
-    """:func:`group_aggs_column` over a COMPOSITE key: same per-agg
-    semantics (exact hi/lo folds, NULL-skipping counts), keyed by tuples
-    via the compacted mixed-radix codes — "tokens + chars per (source,
-    language)" in one pass over the key code streams + agg streams."""
-    keys, codes = composite_group_codes(key_pairs)
-    return _fold_group_aggs(keys, codes, aggs, mask, with_sq=with_sq)
-
-
-def group_aggs_column(key_meta: str, key_data: bytes, aggs, mask=None,
-                      with_sq=False):
-    """Exact per-block grouped COUNT plus per-agg (n_nonnull, SUM, MIN,
-    MAX) for one key column and SEVERAL agg columns in ONE pass: returns
-    ``{key_value_or_None: [cnt, (nn, sum, mn, mx), (nn, sum, mn, mx), ...]}``
-    with one 4-tuple per entry of ``aggs`` (a list of (meta_json, payload)
-    pairs). The key's group codes are computed ONCE
-    (:func:`group_codes_column` — dict/rle/dict_str code streams, no key
-    materialization) and shared by every agg fold; each agg column decodes
-    once — the one-scan multi-aggregate accounting shape ("rows, tokens,
-    chars per source" prices one key stream + m agg streams, not m scans).
-
-    Per-agg semantics are :func:`group_sum_column`'s exactly: ``cnt`` is
-    SQL COUNT(*) of the (masked) group, ``nn`` counts non-NULL agg rows,
-    ``sum`` is the exact python-int fold via the hi/lo 32-bit split (0
-    when nn is 0 — the caller maps that to SQL's NULL), ``mn``/``mx`` are
-    None when nn is 0. ``mask`` restricts every tally to the selected
-    rows (WHERE before GROUP BY). Integer agg columns only; float folds
-    are order-dependent and refused.
-
-    ``with_sq=True`` appends an exact sum of SQUARES to every agg tuple
-    (-> 5-tuples ``(nn, sum, mn, mx, sumsq)``): each |value| must stay
-    <= floor(sqrt(2^63-1)) so the per-element square fits int64 (any
-    larger value REFUSES — the ANSI no-silent-wrap contract; a sum of
-    squares cannot be range-split the way the linear sum can), then the
-    squares fold through the same exact hi/lo split. Sum + sum-of-squares
-    + count make variance/stddev exactly derivable by the caller.
-    """
-    dictionary, codes = group_codes_column(key_meta, key_data)
-    return _fold_group_aggs(dictionary.to_pylist() + [None], codes, aggs, mask,
-                            with_sq=with_sq)
+        codes = codes[_row_mask(mask, codes.size)]
+    k = len(dictionary)
+    cnt = np.bincount(codes, minlength=k + 1)
+    keep = np.flatnonzero(cnt[:k])
+    values, counts = dictionary.take(pa.array(keep)), cnt[keep]
+    if mask is None and runs:  # one entry per value: fold repeated runs
+        uniq, inv = np.unique(values.to_numpy(), return_inverse=True)
+        values = pa.array(uniq, type=values.type)
+        counts = np.bincount(inv, weights=counts, minlength=uniq.size)
+    return values, counts.astype(np.int64, copy=False), int(cnt[k])
 
 
 _SQ_BOUND = 3037000499  # floor(sqrt(2^63 - 1)): squares provably fit int64
 
 
-def _fold_group_aggs(keys, codes, aggs, mask=None, with_sq=False):
-    """Shared grouped-aggregate fold: ``keys`` maps slot -> key object
-    (single values for one key column, tuples for composite keys; slots
-    MAY repeat a key — RLE run values — and fold by value), ``codes`` maps
-    every row to a slot. Returns group_aggs_column's shape."""
+def merge_aggs(tally: dict, key, row: list) -> None:
+    """Fold one group's partial ``row`` — ``[cnt, (nn, sum, min, max[,
+    sumsq]) per agg]`` — into ``tally[key]``: counts and sums add, the
+    extrema of non-empty partials combine. The first row of a key is
+    stored as it is, not copied. The one merge of every keyed fold: a
+    block's repeated ``rle`` slots, a file's blocks and the files on the
+    driver."""
+    prev = tally.get(key)
+    if prev is None:
+        tally[key] = row
+        return
+    prev[0] += row[0]
+    for i in range(1, len(row)):
+        nn, sm, mn, mx, *sq = row[i]
+        pn, ps, pm, px, *psq = prev[i]
+        if mn is not None:
+            pm = mn if pm is None else min(pm, mn)
+            px = mx if px is None else max(px, mx)
+        prev[i] = (pn + nn, ps + sm, pm, px, *(a + b for a, b in zip(psq, sq)))
+
+
+def fold_group_aggs(key_pairs, aggs, mask=None, with_sq=False):
+    """Exact per-block grouped COUNT(*) plus per-agg (n_nonnull, SUM, MIN,
+    MAX) for one or several key columns and any number of agg columns in
+    ONE pass — the kernel of every keyed fold (``aggs=[]`` is the
+    count). ``key_pairs`` and ``aggs`` are lists of (meta_json, payload).
+    Returns ``{key tuple: [cnt, (nn, sum, mn, mx) per agg]}``: the key's
+    group codes come once off the code streams (:func:`group_codes`, no
+    key materialization for dict/rle/pdict/dict_str) and each agg column
+    decodes once — "rows, tokens, chars per source" prices one key stream
+    plus m agg streams, not m scans.
+
+    ``cnt`` is SQL COUNT(*) of the (masked) group, ``nn`` counts non-NULL
+    agg rows, ``sum`` is the exact python-int fold through the hi/lo
+    32-bit split (0 when nn is 0 — the caller maps that to SQL's NULL),
+    ``mn``/``mx`` are None when nn is 0. ``mask`` (boolean over the
+    block's rows) restricts every tally to the selected rows — WHERE
+    before GROUP BY, so a group with no selected row is absent. Integer
+    agg columns only; float folds are order-dependent and refused.
+
+    ``with_sq=True`` appends an exact sum of SQUARES to every agg tuple
+    (-> ``(nn, sum, mn, mx, sumsq)``): each |value| must stay <=
+    floor(sqrt(2^63-1)) so the per-element square fits int64 (any larger
+    value REFUSES — the ANSI no-silent-wrap contract; a sum of squares
+    cannot be range-split the way the linear sum can), then the squares
+    fold through the same exact hi/lo split. Sum + sum-of-squares + count
+    make variance/stddev exactly derivable by the caller."""
+    keys, codes = group_codes(key_pairs)
     if mask is not None:
-        mask = np.asarray(mask, dtype=bool)
-        if mask.size != codes.size:
-            raise BlockCorruptionError(
-                f"row mask and key block disagree on row count "
-                f"({mask.size} vs {codes.size})"
-            )
-    K = len(keys) - 1  # preserved naming: slots are 0..K
-    cnt = np.bincount(codes if mask is None else codes[mask],
-                      minlength=K + 1).astype(np.int64)
+        mask = _row_mask(mask, codes.size)
+    slots = len(keys)
+    cnt = np.bincount(codes if mask is None else codes[mask], minlength=slots)
 
     per_agg = []
     for agg_meta, agg_data in aggs:
@@ -1000,7 +821,7 @@ def _fold_group_aggs(keys, codes, aggs, mask=None, with_sq=False):
         else:
             v = arr.to_numpy()
             gcodes = codes
-        nn = np.bincount(gcodes, minlength=K + 1).astype(np.int64)
+        nn = np.bincount(gcodes, minlength=slots)
         # exact signed/unsigned split: v == (v >> 32) * 2^32 + (v & 0xFFFFFFFF)
         # in two's complement; each half's per-group fold fits int64 for any
         # block size (|hi| <= 2^32, lo < 2^32)
@@ -1016,11 +837,9 @@ def _fold_group_aggs(keys, codes, aggs, mask=None, with_sq=False):
         # numpy's ufunc.at has an indexed-loop fast path, and the float
         # weight conversion + argsort for extrema cost more than they
         # save. Keep the ufunc.at folds.
-        hi_acc = np.zeros(K + 1, dtype=np.int64)
-        lo_acc = np.zeros(K + 1, dtype=np.int64)
-        np.add.at(hi_acc, gcodes, hi)
-        np.add.at(lo_acc, gcodes, lo)
-        sq_hi_acc = sq_lo_acc = None
+        sums = [np.zeros(slots, dtype=np.int64) for _ in range(2)]
+        np.add.at(sums[0], gcodes, hi)
+        np.add.at(sums[1], gcodes, lo)
         if with_sq:
             if v.size and (
                 int(v.max(initial=0)) > _SQ_BOUND
@@ -1032,91 +851,31 @@ def _fold_group_aggs(keys, codes, aggs, mask=None, with_sq=False):
                     f"(ANSI contract)"
                 )
             sq = (v.astype(np.int64) * v.astype(np.int64))  # provably exact
-            sq_hi = sq >> 32
-            sq_lo = sq & 0xFFFFFFFF
-            sq_hi_acc = np.zeros(K + 1, dtype=np.int64)
-            sq_lo_acc = np.zeros(K + 1, dtype=np.int64)
-            np.add.at(sq_hi_acc, gcodes, sq_hi)
-            np.add.at(sq_lo_acc, gcodes, sq_lo)
+            sums += [np.zeros(slots, dtype=np.int64) for _ in range(2)]
+            np.add.at(sums[2], gcodes, sq >> 32)
+            np.add.at(sums[3], gcodes, sq & 0xFFFFFFFF)
         # extrema in the value's native dtype (no overflow possible);
         # sentinel slots are masked off by nn==0 below
         info = np.iinfo(v.dtype)
-        mn_acc = np.full(K + 1, info.max, dtype=v.dtype)
-        mx_acc = np.full(K + 1, info.min, dtype=v.dtype)
+        mn_acc = np.full(slots, info.max, dtype=v.dtype)
+        mx_acc = np.full(slots, info.min, dtype=v.dtype)
         np.minimum.at(mn_acc, gcodes, v)
         np.maximum.at(mx_acc, gcodes, v)
-        per_agg.append((nn, hi_acc, lo_acc, mn_acc, mx_acc,
-                        sq_hi_acc, sq_lo_acc))
+        per_agg.append((nn.tolist(), mn_acc.tolist(), mx_acc.tolist(),
+                        [s.tolist() for s in sums]))
 
     out: dict = {}
-    for g, kv in enumerate(keys):
-        c = int(cnt[g])
-        if not c:
-            continue  # unoccupied slot (the null slot of a null-free block)
-        trips = []
-        for nn, hi_acc, lo_acc, mn_acc, mx_acc, sq_hi_acc, sq_lo_acc in per_agg:
-            nng = int(nn[g])
-            trip = (
-                nng,
-                (int(hi_acc[g]) << 32) + int(lo_acc[g]),
-                int(mn_acc[g]) if nng else None,
-                int(mx_acc[g]) if nng else None,
-            )
+    for g in np.flatnonzero(cnt).tolist():
+        row = [int(cnt[g])]
+        for nn, mn, mx, sums in per_agg:
+            n = nn[g]
+            t = (n, (sums[0][g] << 32) + sums[1][g],
+                 mn[g] if n else None, mx[g] if n else None)
             if with_sq:
-                trip += ((int(sq_hi_acc[g]) << 32) + int(sq_lo_acc[g]),)
-            trips.append(trip)
-        prev = out.get(kv)
-        if prev is None:
-            out[kv] = [c] + trips
-        else:  # duplicate dictionary slots (RLE run values) fold by value
-            prev[0] += c
-            for i, t in enumerate(trips, start=1):
-                nng, sm, mn, mx = t[:4]
-                p = prev[i]
-                pn, ps, pm, px = p[:4]
-                pn += nng
-                ps += sm
-                if mn is not None:
-                    pm = mn if pm is None else min(pm, mn)
-                    px = mx if px is None else max(px, mx)
-                merged = (pn, ps, pm, px)
-                if with_sq:
-                    merged += (p[4] + t[4],)
-                prev[i] = merged
+                t += ((sums[2][g] << 32) + sums[3][g],)
+            row.append(t)
+        merge_aggs(out, keys[g], row)
     return out
-
-
-def group_sum_column(key_meta: str, key_data: bytes, agg_meta: str, agg_data: bytes,
-                     mask=None):
-    """Exact per-block grouped COUNT/SUM/MIN/MAX for one (key, agg) column
-    pair: returns ``{key_value_or_None: [cnt, n_nonnull, sum, min, max]}``
-    over the block's rows, where ``cnt`` counts every row of the group
-    (SQL ``COUNT(*)``), ``n_nonnull`` the rows whose agg value is
-    non-NULL, ``sum`` the exact python-int sum of those values (0 when
-    n_nonnull is 0; the CALLER maps that to SQL's NULL — python ints so a
-    block of int64 extremes can never silently wrap), and ``min``/``max``
-    the group's extrema (None when n_nonnull is 0). ``None`` keys are the
-    NULL group.
-
-    ``mask`` (optional numpy/pyarrow boolean array over the block's rows,
-    no nulls) restricts the tally to the selected rows — the filtered
-    GROUP BY shape: rows where the mask is False contribute to NO group,
-    and a group with zero selected rows is absent from the result, exactly
-    as SQL's ``WHERE`` runs before ``GROUP BY``.
-
-    The single-agg view of :func:`group_aggs_column` (the key side rides
-    group_codes_column — no key materialization; the agg side decodes
-    once and folds through the exact hi/lo 32-bit split); kept as the
-    stable kernel API and pinned per codec in tests/test_match_decode.py.
-    """
-    out = group_aggs_column(key_meta, key_data, [(agg_meta, agg_data)],
-                            mask=mask)
-    return {
-        kv: [c, nng, sm, mn, mx]
-        for kv, (c, (nng, sm, mn, mx)) in (
-            (kv, (row[0], row[1])) for kv, row in out.items()
-        )
-    }
 
 
 def match_decode_column(meta_json: str, payload: bytes, values, lo, hi):

@@ -52,8 +52,12 @@ from xml2arrow_spark.operators.encode import (  # noqa: F401 (resolve_manifest_p
     _ZONE_SUFFIXES,
     decode_column,
     resolve_manifest_parquet,
-    value_counts_column,
     zone_col,
+)
+from xml2arrow_spark.operators.blocks import (
+    fold_group_aggs,
+    merge_aggs,
+    value_counts_column,
 )
 from xml2arrow_spark.sources.files import BlockWalk, local_frame
 
@@ -626,8 +630,8 @@ def _zones(conj, view, i):
 
 def _fold_blocks_file(fpath, pq_mod, cols, conj, on_block, claim=None):
     """The one per-file block loop of the aggregates that fold blocks
-    into a tally dict — group_count, group_aggs, time_bucket_count (with
-    a metadata ``claim``) and the composite-key forms and per-group
+    into a tally dict — the keyed fold (:func:`_keyed_fold`) and
+    time_bucket_count (with a metadata ``claim``) and the per-group
     distinct operators (pipeline/sketches.py, without one). Opens one
     :class:`~xml2arrow_spark.operators.encode.BlockStats` view over
     ``cols`` and the ``conj`` columns, skips empty blocks, classifies the
@@ -1008,64 +1012,215 @@ def count_where(
     return df if agg_col is not None else df.drop("n_sum", "n_min", "n_max")
 
 
-def _group_count_composite(
-    spark, out_path, columns, by_name, n_tasks, local_bytes, where
-):
-    """COMPOSITE-key GROUP BY COUNT (``group_count(column=[k1, k2, ...])``):
-    every key column's group codes come off its codec stream and combine
-    into one mixed-radix int64 code per row
-    (:func:`~xml2arrow_spark.operators.blocks.composite_value_counts` —
-    no per-row tuple build, no key materialization for dict/rle/dict_str),
-    so "rows per (source, language)" prices the key columns' code streams
-    plus a driver fold (or a KB-scale shuffle) of (tuple, count) pairs.
-    SQL semantics: every NULL combination is its own group. ``where``
-    composes exactly as the single-key path (zone prune / unmasked /
-    masked); composite keys make no metadata claim — a block would need
-    EVERY key single-valued, a layout presort can't generally produce."""
-    from pyspark.sql import functions as F
-
-    from xml2arrow_spark.operators.blocks import composite_value_counts
-
-    if len(columns) < 2:
-        raise ValueError("composite group_count needs at least two key columns")
-    for col in columns:
-        if col not in by_name:
+def _key_columns(key, by_name: dict, caller: str) -> list[str]:
+    """A group key — one column name or a list of them (a COMPOSITE key)
+    — as its validated list of key columns: each must be a stored scalar
+    int/string/bool/decimal column. Float keys are refused because SQL
+    groups NaNs together and IEEE equality does not, list keys because a
+    list is not one value."""
+    keys = [key] if isinstance(key, str) else list(key)
+    if not keys:
+        raise ValueError(f"{caller} needs at least one key column")
+    for k in keys:
+        if k not in by_name:
             raise ValueError(
-                f"dataset lacks encoded column {col!r}; it has {sorted(by_name)}"
+                f"dataset lacks encoded column {k!r}; it has {sorted(by_name)}"
             )
-        typ = by_name[col].split(None, 1)[1].lower()
+        typ = by_name[k].split(None, 1)[1].lower()
         if "float" in typ or "double" in typ or "array" in typ:
             raise ValueError(
-                f"group_count needs scalar int/string/bool/decimal keys, "
-                f"got {col} {typ}"
+                f"{caller} needs scalar int/string/bool/decimal key(s), got "
+                f"{k} {typ} (SQL groups NaNs together, IEEE equality does "
+                f"not — a float group-by is not portable)"
             )
-    out_ddl = ", ".join(by_name[c] for c in columns) + ", cnt bigint"
+    return keys
+
+
+def _refuse_outside_int64(tally, agg_cols):
+    """Refuse a keyed-fold tally whose sum (or sum of squares) of some agg
+    column leaves int64 — the ANSI contract, checked per file so a task
+    fails before its partial is shipped, and on the driver's total.
+    Returns the tally."""
+    for kt, (_c, *trips) in tally.items():
+        for (_nn, sm, _mn, _mx, *sq), a in zip(trips, agg_cols):
+            for tot in (sm, *sq):
+                if not (-(1 << 63) <= tot < (1 << 63)):
+                    key = kt[0] if len(kt) == 1 else kt
+                    raise ArithmeticError(
+                        f"group_aggs total of {a!r} for key {key!r} is "
+                        f"outside int64 ({tot}); refusing rather than "
+                        f"wrapping (ANSI contract)"
+                    )
+    return tally
+
+
+def _keyed_fold(
+    spark, out_path, key, agg_cols, by_name, n_tasks, local_bytes, where,
+    with_sum_sq,
+):
+    """The one keyed GROUP BY behind :func:`group_count`,
+    :func:`group_aggs`/:func:`group_sum`, :func:`exact_quantiles` and
+    :func:`value_histogram`, for one key column or several: ``SELECT
+    keys, COUNT(*)[, nn/sum/min/max(a) per a in agg_cols] [WHERE ...]
+    GROUP BY keys``. With no ``agg_cols`` it is the count.
+
+    Per file, :func:`_fold_blocks_file` drops zone-pruned blocks, masks
+    straddling ones and folds the rest through
+    :func:`~xml2arrow_spark.operators.blocks.fold_group_aggs` (key codes
+    off the code streams, each agg column decoded once), merging by
+    :func:`~xml2arrow_spark.operators.blocks.merge_aggs`. One metadata
+    claim folds a block without its payload when every key column is
+    provably constant in it — all-null (stated ``n_null`` equals the
+    block's rows), or null-free with ``vmin == vmax`` on an int or string
+    zone (truncation-safe: stored string bounds are only equal when
+    neither was truncated) — and every agg column states its exact
+    ``zsum_i`` and ``n_null``, and its extrema when a non-null value
+    exists. Bool/decimal/temporal keys carry no usable zone pair and
+    never claim, and no block claims under ``with_sum_sq`` (no stat
+    stores a sum of squares).
+
+    Dispatch is :meth:`~xml2arrow_spark.sources.files.BlockWalk
+    .folds_on_driver`: while block metadata bounds the groups, every
+    file's partial folds on the driver and a total outside int64 refuses
+    there; past the bound, ``fan_out`` plus one Spark combine, which sums
+    as ``decimal(38,0)`` and refuses a total outside int64 with the same
+    text. Returns ``(keys, cnt[, nn_a, sum_a, min_a, max_a[, sumsq_a]]
+    ...)`` with the keys' original types; the aggregates of a group with
+    no non-null value are NULL."""
+    caller = "group_aggs" if agg_cols else "group_count"
+    keys = _key_columns(key, by_name, caller)
+    for a in agg_cols:
+        if a not in by_name:
+            raise ValueError(
+                f"dataset lacks encoded column {a!r}; it has {sorted(by_name)}"
+            )
+        typ = by_name[a].split(None, 1)[1].strip().lower()
+        if typ not in _CW_INT_TYPES:
+            raise ValueError(
+                f"group_aggs needs integer agg columns, got {a} {typ}: "
+                f"float folds are order-dependent and these aggregates "
+                f"never approximate (count_where's rule)"
+            )
     conj = (
-        _resolve_conjuncts(by_name, where, "group_count")
-        if where is not None
-        else None
+        _resolve_conjuncts(by_name, where, caller) if where is not None else None
     )
+    cats = []
+    for k in keys:
+        typ = by_name[k].split(None, 1)[1].strip().lower()
+        cats.append("i" if typ in _CW_INT_TYPES else "s" if typ == "string" else None)
 
-    def _block_counts(tally, pairs, mask):
-        for kt, c in composite_value_counts(pairs, mask=mask).items():
-            tally[kt] = tally.get(kt, 0) + c
+    def _claim(tally, view, i):
+        br = view.n_rows(i)
+        kt = []
+        for k, cat in zip(keys, cats):
+            vmin, vmax, n_null = view.zone(k, i, cat)
+            if n_null == br:
+                kt.append(None)
+            elif n_null == 0 and vmin is not None and vmin == vmax:
+                kt.append(vmin)
+            else:
+                return False
+        row = [br]
+        for a in agg_cols:
+            zsum, a_null, amin, amax = (
+                view.stat(a, f, i) for f in ("zsum_i", "n_null", "vmin_i", "vmax_i")
+            )
+            if zsum is None or a_null is None:
+                return False
+            nn = br - a_null
+            if nn and (amin is None or amax is None):
+                return False  # extrema unstated: the kernel folds it
+            row.append((nn, zsum, amin if nn else None, amax if nn else None))
+        merge_aggs(tally, tuple(kt), row)
+        return True
 
-    def _file_counts(fpath, pq_mod):
-        return _fold_blocks_file(fpath, pq_mod, columns, conj, _block_counts)
+    def _block(tally, pairs, mask):
+        for kt, row in fold_group_aggs(
+            pairs[:len(keys)], pairs[len(keys):], mask, with_sum_sq
+        ).items():
+            merge_aggs(tally, kt, row)
 
-    def _rows(tally):
-        return [(*kt, c) for kt, c in tally.items()]
+    def _file(fpath, pq_mod):
+        """One file's {key tuple: [cnt, (nn, sum, mn, mx[, sumsq]) per
+        agg]}; claimed blocks never touch payload bytes."""
+        return _refuse_outside_int64(_fold_blocks_file(
+            fpath, pq_mod, keys + agg_cols, conj, _block,
+            None if with_sum_sq or None in cats else _claim,
+        ), agg_cols)
 
+    key_ddl = ", ".join(by_name[k] for k in keys)
     walk = BlockWalk(out_path, local_bytes)
-    if walk.folds_on_driver(_file_groups(columns)):
+    if walk.folds_on_driver(_file_groups(keys)):
         total: dict = {}
-        for fc in walk.partials(spark, _file_counts, n_tasks):
-            for kt, c in fc.items():
-                total[kt] = total.get(kt, 0) + c
-        return local_frame(spark, out_ddl, _rows(total))
-    return walk.fan_out(spark, _file_counts, _rows, out_ddl, n_tasks).groupBy(
-        *columns
-    ).agg(F.sum("cnt").alias("cnt"))
+        for part in walk.partials(spark, _file, n_tasks):
+            for kt, row in part.items():
+                merge_aggs(total, kt, row)
+        rows = []
+        for kt, (c, *trips) in _refuse_outside_int64(total, agg_cols).items():
+            flat = [*kt, c]
+            for nn, sm, mn, mx, *sq in trips:
+                flat += [nn, sm if nn else None, mn, mx]
+                flat += [x if nn else None for x in sq]
+            rows.append(flat)
+        return local_frame(spark, key_ddl + ", cnt bigint" + "".join(
+            f", nn_{a} bigint, sum_{a} bigint, min_{a} bigint, max_{a} bigint"
+            + (f", sumsq_{a} bigint" if with_sum_sq else "")
+            for a in agg_cols
+        ), rows)
+
+    # the Spark combine, built from SQL expression strings: each
+    # aggregate is one F.expr, not a dozen py4j-backed Column calls
+    from pyspark.sql import functions as F
+
+    def q(name):
+        return "`" + name.replace("`", "``") + "`"
+
+    def lit(text):
+        return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    fields = ("nn", "s", "mn", "mx", "ssq")[:5 if with_sum_sq else 4]
+    key_txt = "concat_ws(', ', " + ", ".join(
+        f"coalesce(cast({q(k)} AS string), 'None')" for k in keys
+    ) + ")"
+
+    def total(part, i, a):
+        # summed as decimal(38,0), which no int64 partials overflow, so a
+        # total outside int64 refuses with the driver fold's text, not
+        # ANSI's ARITHMETIC_OVERFLOW; NULL when the group has no value
+        refuse = (
+            f"raise_error(concat({lit(f'group_aggs total of {a!r} for key ')}, "
+            f"{key_txt}, ' is outside int64; refusing rather than wrapping "
+            f"(ANSI contract)'))"
+        )
+        return (
+            f"CASE WHEN sum(nn{i}) > 0 THEN coalesce(try_cast(sum(cast("
+            f"{part}{i} AS decimal(38,0))) AS bigint), {refuse}) END"
+        )
+
+    aggs = ["sum(cnt) AS cnt"]
+    for i, a in enumerate(agg_cols):
+        aggs += [
+            f"sum(nn{i}) AS {q('nn_' + a)}",
+            f"{total('s', i, a)} AS {q('sum_' + a)}",
+            f"min(mn{i}) AS {q('min_' + a)}",
+            f"max(mx{i}) AS {q('max_' + a)}",
+        ]
+        if with_sum_sq:
+            aggs.append(f"{total('ssq', i, a)} AS {q('sumsq_' + a)}")
+
+    def part_rows(tally):
+        # nn==0 partials carry sum 0 (never NULL) so the combine's sum
+        # stays total-order deterministic; the CASE restores SQL's NULL
+        # (min/max partials carry NULL, which min/max skip)
+        return [(*kt, c, *(x for t in trips for x in t))
+                for kt, (c, *trips) in tally.items()]
+
+    part_ddl = f"{key_ddl}, cnt bigint" + "".join(
+        f", {x}{i} bigint" for i in range(len(agg_cols)) for x in fields
+    )
+    return walk.fan_out(spark, _file, part_rows, part_ddl, n_tasks).groupBy(
+        *keys
+    ).agg(*(F.expr(e) for e in aggs))
 
 
 def group_count(
@@ -1077,24 +1232,30 @@ def group_count(
     where=None,
 ):
     """Exact ``SELECT column, COUNT(*) [WHERE ...] GROUP BY column`` over a
-    STORED dataset, computed on the codec streams: per block,
-    :func:`~xml2arrow_spark.operators.blocks.value_counts_column` bincounts
-    the dict/pdict/dict_str code stream against its dictionary or folds RLE
-    run lengths — the group column's values are never materialized for
-    those codecs (other codecs decode and count; exactness is identical
-    either way and pinned per codec). Per-file partial tallies then fold
-    on the driver, or, above the valve when block metadata cannot bound
-    their groups, aggregate through one KB-scale shuffle keyed on the
-    group value.
+    STORED dataset, computed on the codec streams: the keyed fold
+    (:func:`_keyed_fold`) with no aggregates, so per block
+    :func:`~xml2arrow_spark.operators.blocks.group_codes` lifts the
+    dict/rle/pdict/dict_str code stream as the group codes — the group
+    column's values are never materialized for those codecs (other codecs
+    decode and dictionary-encode; exactness is identical either way and
+    pinned per codec) — and
+    :func:`~xml2arrow_spark.operators.blocks.fold_group_aggs` counts
+    them. Per-file partial tallies then fold on the driver, or, above the
+    valve when block metadata cannot bound their groups, aggregate
+    through one KB-scale shuffle keyed on the group value.
+
+    ``column`` may be a LIST of columns — a COMPOSITE key whose codes
+    combine mixed-radix into one int64 code per row, so "rows per
+    (source, language)" prices the key columns' code streams; SQL
+    semantics, every NULL combination its own group.
 
     On KEY-CLUSTERED data (``presort`` by the key) a block whose zone
-    bounds PROVE the key single-valued — null-free key, vmin == vmax,
-    truncation-safe for strings (see :func:`group_sum`'s claim rule) — or
-    prove it ALL-NULL (stated null count == block rows) contributes
-    ``(key, n_rows)`` from metadata without touching payload bytes at all,
-    the same degeneration to a metadata scan :func:`group_sum` makes.
-    Bool/decimal keys carry no usable zone pair and always take the
-    kernel; exactness is identical either way.
+    bounds prove every key column constant — single-valued (null-free,
+    vmin == vmax, truncation-safe for strings) or ALL-NULL (stated null
+    count == block rows) — contributes ``(key, n_rows)`` from metadata
+    without touching payload bytes at all. Bool/decimal keys carry no
+    usable zone pair and always take the kernel; exactness is identical
+    either way.
 
     This is the everyday corpus-composition query ("rows per source /
     language / shard") at 10^12 rows: the payload cost is one column's
@@ -1115,7 +1276,7 @@ def group_count(
     INSIDE every conjunct (null-free filter columns; floats never claim)
     count exactly as the unfiltered path, and only STRADDLING blocks
     evaluate the predicate — codec-aware on the filter column's dict/run
-    streams — and feed the row mask into the masked count kernel. Groups
+    streams — and feed the row mask into the masked kernel. Groups
     with zero matching rows are absent, exactly as SQL's WHERE-before-
     GROUP-BY.
 
@@ -1127,283 +1288,16 @@ def group_count(
     bounds their groups, else a Spark combine); the paths are pinned
     equal in tests/test_dataset.py and tests/test_driver_fold.py.
 
-    Returns a DataFrame ``(column, cnt)`` with the column's original type.
+    Returns a DataFrame ``(column..., cnt)`` with the columns' original
+    types.
     """
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     _refuse_pending_tombstones(out_path)
     by_name = split_schema_ddl(read_sidecar(out_path)["schema_ddl"])
-    return _group_count(
-        spark, out_path, column, by_name, n_tasks, local_bytes, where
-    )
-
-
-def _group_count(spark, out_path, column, by_name, n_tasks, local_bytes, where):
-    """:func:`group_count` over a dataset whose columns ``by_name`` the
-    caller has read from the sidecar."""
-    from pyspark.sql import functions as F
-
-    if not isinstance(column, str):
-        cols = list(column)
-        if len(cols) == 1:
-            column = cols[0]
-        else:
-            return _group_count_composite(
-                spark, out_path, cols, by_name, n_tasks, local_bytes,
-                where,
-            )
-    if column not in by_name:
-        raise ValueError(
-            f"dataset lacks encoded column {column!r}; it has {sorted(by_name)}"
-        )
-    col_type = by_name[column].split(None, 1)[1].lower()
-    if "float" in col_type or "double" in col_type or "array" in col_type:
-        raise ValueError(
-            f"group_count needs a scalar int/string/bool/decimal key, got "
-            f"{column} {col_type} (SQL groups NaNs together, IEEE equality "
-            f"does not — a float group-by is not portable)"
-        )
-    out_ddl = f"{by_name[column]}, cnt bigint"
-    # key category for the metadata fast path (group_sum's rule: bool and
-    # decimal keys carry no usable zone pair and never claim)
-    key_cat = (
-        "i" if col_type in _CW_INT_TYPES
-        else "s" if col_type == "string"
-        else None
-    )
-    conj = (
-        _resolve_conjuncts(by_name, where, "group_count")
-        if where is not None
-        else None
-    )
-
-    def _claim(tally, view, i):
-        """Fold one block's (key, n_rows) from zone metadata alone, or
-        return False when metadata cannot prove it. Sound exactly when the
-        key is provably SINGLE-VALUED (null count 0, vmin == vmax —
-        truncation-safe for strings: stored bounds are only equal when
-        neither was truncated and true min == true max, see
-        group_sum._claim) or provably ALL-NULL (stated null count == block
-        rows)."""
-        kmin, kmax, k_nnull = view.zone(column, i, key_cat)
-        br = view.n_rows(i)
-        if k_nnull == br:
-            kv = None
-        elif k_nnull == 0 and kmin is not None and kmin == kmax:
-            kv = kmin
-        else:
-            return False
-        tally[kv] = tally.get(kv, 0) + br
-        return True
-
-    def _block_counts(tally, pairs, mask):
-        vals, counts, n_null = value_counts_column(*pairs[0], mask=mask)
-        if n_null:
-            tally[None] = tally.get(None, 0) + n_null
-        for v, c in zip(vals.to_pylist(), counts.tolist()):
-            tally[v] = tally.get(v, 0) + c
-
-    def _file_counts(fpath, pq_mod):
-        """One file's (value -> count) dict; None key = the NULL group.
-        Metadata-claimable blocks never touch payload bytes;
-        predicate-straddling blocks mask first."""
-        return _fold_blocks_file(
-            fpath, pq_mod, [column], conj, _block_counts,
-            _claim if key_cat is not None else None,
-        )
-
-    walk = BlockWalk(out_path, local_bytes)
-    if walk.folds_on_driver(_file_groups([column])):
-        total: dict = {}
-        for fc in walk.partials(spark, _file_counts, n_tasks):
-            for v, c in fc.items():
-                total[v] = total.get(v, 0) + c
-        return local_frame(spark, out_ddl, total.items())
-    return walk.fan_out(
-        spark, _file_counts, dict.items, out_ddl, n_tasks
-    ).groupBy(column).agg(F.sum("cnt").alias("cnt"))
-
-
-def _merge_aggs(tally, kt, c, trips):
-    """Fold one group's ``(cnt, [(nn, sum, min, max[, sumsq]) per agg])``
-    partial into a group_aggs tally keyed by ``kt``."""
-    prev = tally.get(kt)
-    if prev is None:
-        tally[kt] = [c, list(trips)]
-        return
-    prev[0] += c
-    for i, t in enumerate(trips):
-        nng, sm, mn, mx = t[:4]
-        p = prev[1][i]
-        pn, ps, pm, px = p[:4]
-        pn += nng
-        ps += sm
-        if mn is not None:
-            pm = mn if pm is None else min(pm, mn)
-            px = mx if px is None else max(px, mx)
-        merged = (pn, ps, pm, px)
-        if len(t) > 4:
-            merged += (p[4] + t[4],)
-        prev[1][i] = merged
-
-
-def _refuse_outside_int64(tally, agg_cols):
-    """Refuse a group_aggs tally whose sum (or sum of squares) of some agg
-    column leaves int64 — the ANSI contract, checked per file so a task
-    fails before its partial is shipped. Returns the tally."""
-    for kt, (_c, trips) in tally.items():
-        for t, a in zip(trips, agg_cols):
-            for tot in t[1:2] + t[4:5]:
-                if not (-(1 << 63) <= tot < (1 << 63)):
-                    raise ArithmeticError(
-                        f"group_aggs total of {a!r} for key {kt!r} is "
-                        f"outside int64 ({tot}); refusing rather than "
-                        f"wrapping (ANSI contract)"
-                    )
-    return tally
-
-
-def _group_aggs_walk(
-    spark, out_path, keys, agg_cols, by_name, file_sums, n_tasks,
-    local_bytes, with_sum_sq,
-):
-    """The dispatch, driver finish and Spark combine :func:`group_aggs`
-    shares between its single- and composite-key forms. ``file_sums`` is
-    the form's per-file routine: {key (a tuple for a composite key):
-    [cnt, [(nn, sum, min, max[, sumsq]) per agg]]}."""
-    from pyspark.sql import functions as F
-
-    width = 5 if with_sum_sq else 4
-    key_ddl = ", ".join(by_name[c] for c in keys)
-
-    def key_of(kt):
-        return kt if len(keys) > 1 else (kt,)
-
-    walk = BlockWalk(out_path, local_bytes)
-    if walk.folds_on_driver(_file_groups(keys)):
-        total: dict = {}
-        for fs_ in walk.partials(spark, file_sums, n_tasks):
-            for kt, (c, trips) in fs_.items():
-                _merge_aggs(total, kt, c, trips)
-        rows = []
-        for kt, (c, trips) in _refuse_outside_int64(total, agg_cols).items():
-            flat = [*key_of(kt), c]
-            for t in trips:
-                nng, sm, mn, mx = t[:4]
-                flat += [nng, sm if nng else None, mn, mx]
-                if with_sum_sq:
-                    flat.append(t[4] if nng else None)
-            rows.append(flat)
-        return local_frame(spark, f"{key_ddl}, cnt bigint, " + ", ".join(
-            f"nn_{a} bigint, sum_{a} bigint, min_{a} bigint, max_{a} bigint"
-            + (f", sumsq_{a} bigint" if with_sum_sq else "")
-            for a in agg_cols
-        ), rows)
-
-    def part_rows(tally):
-        # nn==0 partials carry sum 0 (never NULL) so the roll-up's F.sum
-        # stays total-order deterministic; the final when() restores SQL's
-        # NULL (min/max partials carry NULL — F.min/F.max skip them)
-        return [
-            (*key_of(kt), c, *(x for t in trips for x in t[:width]))
-            for kt, (c, trips) in tally.items()
-        ]
-
-    part_ddl = f"{key_ddl}, cnt bigint, " + ", ".join(
-        f"{x}{i} bigint"
-        for i in range(len(agg_cols))
-        for x in ("nn", "s", "mn", "mx", "ssq")[:width]
-    )
-    key_txt = F.concat_ws(", ", *(
-        F.coalesce(F.col(k).cast("string"), F.lit("None")) for k in keys
-    ))
-
-    def total(part, i, a):
-        # summed as decimal(38,0), which no int64 partials overflow, so a
-        # total outside int64 refuses with the driver fold's text, not
-        # ANSI's ARITHMETIC_OVERFLOW; NULL when the group has no value
-        tot = F.sum(F.col(f"{part}{i}").cast("decimal(38,0)"))
-        refuse = F.raise_error(F.concat(
-            F.lit(f"group_aggs total of {a!r} for key "), key_txt,
-            F.lit(" is outside int64; refusing rather than wrapping (ANSI "
-                  "contract)"),
-        ))
-        return F.when(F.sum(f"nn{i}") > 0,
-                      F.coalesce(tot.try_cast("bigint"), refuse))
-
-    aggs = [F.sum("cnt").alias("cnt")]
-    for i, a in enumerate(agg_cols):
-        aggs += [
-            F.sum(f"nn{i}").alias(f"nn_{a}"),
-            total("s", i, a).alias(f"sum_{a}"),
-            F.min(f"mn{i}").alias(f"min_{a}"),
-            F.max(f"mx{i}").alias(f"max_{a}"),
-        ]
-        if with_sum_sq:
-            aggs.append(total("ssq", i, a).alias(f"sumsq_{a}"))
-    return walk.fan_out(
-        spark, file_sums, part_rows, part_ddl, n_tasks
-    ).groupBy(*keys).agg(*aggs)
-
-
-def _group_aggs_composite(
-    spark, out_path, keys, agg_cols, by_name, n_tasks, local_bytes,
-    where, with_sum_sq=False,
-):
-    """COMPOSITE-key :func:`group_aggs` (``key=[k1, k2, ...]``): the key
-    columns' codec-stream codes combine into one compacted mixed-radix
-    code per row (:func:`~xml2arrow_spark.operators.blocks
-    .composite_group_aggs`) and every agg column decodes once per block —
-    "tokens + chars per (source, language)" in one pass. Same per-agg
-    semantics and ANSI refusal as the single-key path; where= composes
-    (prune / unmasked / masked); composite keys make no metadata claim (a
-    block would need EVERY key column single-valued)."""
-    from xml2arrow_spark.operators.blocks import composite_group_aggs
-
-    if len(keys) < 2:
-        raise ValueError("composite group_aggs needs at least two key columns")
-    for col in keys:
-        if col not in by_name:
-            raise ValueError(
-                f"dataset lacks encoded column {col!r}; it has {sorted(by_name)}"
-            )
-        typ = by_name[col].split(None, 1)[1].lower()
-        if "float" in typ or "double" in typ or "array" in typ:
-            raise ValueError(
-                f"group_aggs needs scalar int/string/bool/decimal keys, "
-                f"got {col} {typ}"
-            )
-    for a in agg_cols:
-        if a not in by_name:
-            raise ValueError(
-                f"dataset lacks encoded column {a!r}; it has {sorted(by_name)}"
-            )
-        styp = by_name[a].split(None, 1)[1].strip().lower()
-        if styp not in _CW_INT_TYPES:
-            raise ValueError(
-                f"group_aggs needs integer agg columns, got {a} {styp}"
-            )
-    conj = (
-        _resolve_conjuncts(by_name, where, "group_aggs")
-        if where is not None
-        else None
-    )
-
-    def _block_sums(tally, pairs, mask):
-        for kt, row in composite_group_aggs(
-            pairs[:len(keys)], pairs[len(keys):],
-            mask=mask, with_sq=with_sum_sq,
-        ).items():
-            _merge_aggs(tally, kt, row[0], row[1:])
-
-    def _file_sums(fpath, pq_mod):
-        return _refuse_outside_int64(_fold_blocks_file(
-            fpath, pq_mod, keys + agg_cols, conj, _block_sums
-        ), agg_cols)
-
-    return _group_aggs_walk(
-        spark, out_path, keys, agg_cols, by_name, _file_sums, n_tasks,
-        local_bytes, with_sum_sq,
+    return _keyed_fold(
+        spark, out_path, column, [], by_name, n_tasks, local_bytes, where,
+        False,
     )
 
 
@@ -1419,12 +1313,16 @@ def group_aggs(
 ):
     """Exact ``SELECT key, COUNT(*), COUNT/SUM/MIN/MAX(a) for a in
     agg_cols [WHERE ...] GROUP BY key`` over a STORED dataset in ONE
-    pass: the key's group codes come off the codec streams once
-    (dict/rle/dict_str — key values never materialize) and every agg
+    pass: the keyed fold (:func:`_keyed_fold`), so the key's group codes
+    come off the codec streams once
+    (:func:`~xml2arrow_spark.operators.blocks.group_codes` —
+    dict/rle/pdict/dict_str key values never materialize) and every agg
     column decodes once per block into the exact hi/lo-split python-int
-    fold (:func:`~xml2arrow_spark.operators.blocks.group_aggs_column`) —
+    fold (:func:`~xml2arrow_spark.operators.blocks.fold_group_aggs`) —
     the multi-aggregate accounting query ("rows, tokens, chars per
     source") prices one key stream + m agg streams, never m scans.
+    ``key`` may be a LIST of columns (a COMPOSITE key, "tokens + chars
+    per (source, language)").
 
     Semantics per agg column are :func:`group_sum`'s exactly (NULL agg
     values skipped, ``sum_<c>`` NULL when a group has no non-null value,
@@ -1433,11 +1331,11 @@ def group_aggs(
     order are not portable).
 
     On KEY-CLUSTERED data the metadata claim carries over: a block whose
-    zone bounds prove the key single-valued contributes
-    ``(key, n_rows, zsum/extrema per agg)`` without touching payload —
-    but only when EVERY agg column's exact block stats are stated
-    (one unprovable column downgrades the whole block to the kernel;
-    results identical either way).
+    zone bounds prove every key column constant (single-valued or
+    all-null) contributes ``(key, n_rows, zsum/extrema per agg)`` without
+    touching payload — but only when EVERY agg column's exact block stats
+    are stated (one unprovable column downgrades the whole block to the
+    kernel; results identical either way).
 
     ``where`` takes the same range / IN-list conjunctions as
     :func:`count_where` — pruned / interior / boundary classification
@@ -1454,104 +1352,20 @@ def group_aggs(
 
     Scale-adaptive through
     :class:`~xml2arrow_spark.sources.files.BlockWalk`, dispatched as
-    :func:`group_count`; a driver-folded total outside int64 refuses on
-    both paths. Returns a DataFrame
+    :func:`group_count`; a total outside int64 refuses on every path.
+    Returns a DataFrame
     ``(key, cnt, nn_<c>, sum_<c>, min_<c>, max_<c> [, sumsq_<c>] ...)``
     with the key's original type.
     """
-    from xml2arrow_spark.operators.blocks import group_aggs_column
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     if not agg_cols:
         raise ValueError("group_aggs needs at least one agg column")
     _refuse_pending_tombstones(out_path)
-    side = read_sidecar(out_path)
-    by_name = split_schema_ddl(side["schema_ddl"])
-    if not isinstance(key, str):
-        keys = list(key)
-        if len(keys) == 1:
-            key = keys[0]
-        else:
-            return _group_aggs_composite(
-                spark, out_path, keys, list(agg_cols), by_name,
-                n_tasks, local_bytes, where, with_sum_sq,
-            )
-    for col in [key, *agg_cols]:
-        if col not in by_name:
-            raise ValueError(
-                f"dataset lacks encoded column {col!r}; it has {sorted(by_name)}"
-            )
-    key_type = by_name[key].split(None, 1)[1].lower()
-    if "float" in key_type or "double" in key_type or "array" in key_type:
-        raise ValueError(
-            f"group_aggs needs a scalar int/string/bool/decimal key, got "
-            f"{key} {key_type} (SQL groups NaNs together, IEEE equality "
-            f"does not — a float group-by is not portable)"
-        )
-    for a in agg_cols:
-        styp = by_name[a].split(None, 1)[1].strip().lower()
-        if styp not in _CW_INT_TYPES:
-            raise ValueError(
-                f"group_aggs needs integer agg columns, got {a} "
-                f"{styp}: float folds are order-dependent and these "
-                f"aggregates never approximate (count_where's rule)"
-            )
-    key_cat = (
-        "i" if key_type in _CW_INT_TYPES
-        else "s" if key_type == "string"
-        else None
-    )
-    conj = (
-        _resolve_conjuncts(by_name, where, "group_aggs")
-        if where is not None
-        else None
-    )
-
-    def _claim(tally, view, i):
-        """Fold one block's (key, cnt, trips) from zone metadata alone, or
-        return False — group_sum's claim rule per agg column: the key
-        provably single-valued (null-free, truncation-safe vmin == vmax)
-        and EVERY agg column carrying its exact block sum + stated null
-        count (and stated extrema whenever a non-null value exists). No
-        block stat stores a sum of squares, so the claim is disabled
-        entirely under with_sum_sq (kernel instead; exact either way)."""
-        kmin, kmax, k_nnull = view.zone(key, i, key_cat)
-        if k_nnull != 0 or kmin is None or kmax is None or kmin != kmax:
-            return False
-        br = view.n_rows(i)
-        trips = []
-        for a in agg_cols:
-            zsum, a_nnull, amin, amax = (
-                view.stat(a, f, i)
-                for f in ("zsum_i", "n_null", "vmin_i", "vmax_i")
-            )
-            if zsum is None or a_nnull is None:
-                return False
-            nng = br - a_nnull
-            if nng and (amin is None or amax is None):
-                return False  # extrema unstated: downgrade to the kernel
-            trips.append((nng, zsum, amin if nng else None,
-                          amax if nng else None))
-        _merge_aggs(tally, kmin, br, trips)
-        return True
-
-    def _block_sums(tally, pairs, mask):
-        for v, row in group_aggs_column(
-            *pairs[0], pairs[1:], mask=mask, with_sq=with_sum_sq
-        ).items():
-            _merge_aggs(tally, v, row[0], row[1:])
-
-    def _file_sums(fpath, pq_mod):
-        """One file's {key_or_None: [cnt, [(nn, sum, mn, mx) per agg]]};
-        metadata-claimable blocks never touch payload bytes."""
-        return _refuse_outside_int64(_fold_blocks_file(
-            fpath, pq_mod, [key, *agg_cols], conj, _block_sums,
-            None if with_sum_sq or key_cat is None else _claim,
-        ), agg_cols)
-
-    return _group_aggs_walk(
-        spark, out_path, [key], agg_cols, by_name, _file_sums, n_tasks,
-        local_bytes, with_sum_sq,
+    by_name = split_schema_ddl(read_sidecar(out_path)["schema_ddl"])
+    return _keyed_fold(
+        spark, out_path, key, list(agg_cols), by_name, n_tasks, local_bytes,
+        where, with_sum_sq,
     )
 
 
@@ -1566,13 +1380,14 @@ def group_sum(
 ):
     """Exact ``SELECT key, COUNT(*), COUNT(agg), SUM(agg), MIN(agg),
     MAX(agg) [WHERE ...] GROUP BY key`` over a STORED dataset — the
-    single-agg view of :func:`group_aggs` (one kernel, one claim rule,
-    one dispatch; see there for the execution story: codec-stream key
-    codes, exact hi/lo-split folds, zone-metadata claims on key-clustered
-    blocks, range/IN-list ``where`` composition, ANSI refusal outside
-    int64). Kept as the stable everyday API and pinned hard in
-    tests/test_count_where.py (tamper pins, dual-path equality, oracle
-    gates).
+    single-agg view of :func:`group_aggs` (one kernel,
+    :func:`~xml2arrow_spark.operators.blocks.fold_group_aggs`, one claim
+    rule, one dispatch; see :func:`_keyed_fold` for the execution story:
+    codec-stream key codes, exact hi/lo-split folds, zone-metadata claims
+    on key-clustered blocks, range/IN-list ``where`` composition, ANSI
+    refusal outside int64). Kept as the stable everyday API and pinned
+    hard in tests/test_count_where.py (tamper pins, dual-path equality,
+    oracle gates).
 
     Returns a DataFrame ``(key, cnt, n_nonnull, sum_a, min_a, max_a)``
     with the key's original type; the three aggregates are NULL for a
@@ -1588,7 +1403,6 @@ def group_sum(
         f"min_{agg_col}": "min_a",
         f"max_{agg_col}": "max_a",
     })
-
 
 
 def _topk_trim(tally: dict, k: int, descending: bool):
@@ -1936,8 +1750,9 @@ def exact_quantiles(
             )
     _refuse_pending_tombstones(out_path)
     by_name = split_schema_ddl(read_sidecar(out_path)["schema_ddl"])
-    counts = _group_count(
-        spark, out_path, column, by_name, n_tasks, local_bytes, where
+    counts = _keyed_fold(
+        spark, out_path, column, [], by_name, n_tasks, local_bytes, where,
+        False,
     ).collect()
     pairs = sorted(
         ((r[0], r[1]) for r in counts if r[0] is not None), key=lambda t: t[0]
@@ -2022,8 +1837,9 @@ def value_histogram(
     for b in (lo, hi):
         if b is not None and (not isinstance(b, int) or isinstance(b, bool)):
             raise ValueError(f"lo/hi must be ints, got {b!r}")
-    counts = _group_count(
-        spark, out_path, column, by_name, n_tasks, local_bytes, where
+    counts = _keyed_fold(
+        spark, out_path, column, [], by_name, n_tasks, local_bytes, where,
+        False,
     ).collect()
     pairs = [(r[0], r[1]) for r in counts if r[0] is not None]
     bins: dict[int, int] = {}
@@ -2081,7 +1897,6 @@ def time_bucket_count(
     buckets only, ordered by bucket; ``bucket_start = origin +
     bucket * width`` (ticks) for direct rendering.
     """
-    from xml2arrow_spark.operators.blocks import value_counts_column
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     if not isinstance(width, int) or isinstance(width, bool) or width < 1:

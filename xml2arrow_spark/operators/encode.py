@@ -30,11 +30,9 @@ from xml2arrow_spark.manifest import CodecManifest
 from xml2arrow_spark.operators.blocks import (
     decode_column,
     encode_column,
-    group_sum_column,
     match_decode_column,
     match_mask_column,
     row_match_mask,
-    value_counts_column,
 )
 
 __all__ = [

@@ -108,48 +108,6 @@ def kmv_hash_np(v):
     return (r * r % M + r * A) % M
 
 
-def _block_group_keys(key_pairs):
-    """One block's ``(keys, codes)`` for a (possibly COMPOSITE) group key:
-    a single key column rides :func:`~xml2arrow_spark.operators.blocks
-    .group_codes_column` (dictionary slots + the NULL slot), several ride
-    :func:`~xml2arrow_spark.operators.blocks.composite_group_codes`
-    (compacted mixed-radix codes; ``keys[j]`` is then a tuple with None
-    components for NULLs)."""
-    from xml2arrow_spark.operators.blocks import (
-        composite_group_codes,
-        group_codes_column,
-    )
-
-    if len(key_pairs) == 1:
-        dictionary, codes = group_codes_column(*key_pairs[0])
-        return dictionary.to_pylist() + [None], codes
-    return composite_group_codes(key_pairs)
-
-
-def _normalize_key_cols(key, by_name, caller):
-    """str|list key -> validated list of scalar-typed key columns."""
-    key_cols = [key] if isinstance(key, str) else list(key)
-    if not key_cols:
-        raise ValueError(f"{caller} needs at least one key column")
-    for kc in key_cols:
-        if kc not in by_name:
-            raise ValueError(
-                f"dataset lacks encoded column {kc!r}; it has {sorted(by_name)}"
-            )
-        kt = by_name[kc].split(None, 1)[1].lower()
-        if "float" in kt or "double" in kt or "array" in kt:
-            raise ValueError(
-                f"{caller} needs scalar int/string/bool/decimal key(s), "
-                f"got {kc} {kt}"
-            )
-    return key_cols
-
-
-def _key_tuple(kv) -> tuple:
-    """A tally key as its key-column values (composite keys already are)."""
-    return kv if isinstance(kv, tuple) else (kv,)
-
-
 def _kmv_merge(acc: list, hashes, k: int) -> list:
     """Merge sorted distinct hash lists, keep the k smallest distinct."""
     if not acc:
@@ -180,9 +138,9 @@ def group_distinct_est(
     """Per-group distinct-count ESTIMATE over a STORED dataset, computed on
     the codec streams — ``SELECT key, approx(COUNT(DISTINCT column))
     [WHERE ...] GROUP BY key`` with a gate-pinnable answer: the key's
-    group codes ride :func:`~xml2arrow_spark.operators.blocks
-    .group_codes_column` (dict/rle/dict_str — key values never materialize
-    per row), the value column decodes once per block and hashes through
+    group codes ride :func:`~xml2arrow_spark.operators.blocks.group_codes`
+    (dict/rle/pdict/dict_str — key values never materialize per row), the
+    value column decodes once per block and hashes through
     the PORTABLE quadratic hash (:func:`kmv_hash_np` ==
     ``sqlgen.kmv_hash_expr`` bit-for-bit), and each block keeps only the k
     smallest distinct hashes PER GROUP — so a 10^12-row corpus ships
@@ -205,14 +163,13 @@ def group_distinct_est(
     roll-up is one KB-scale (key, hash) shuffle + per-key window, no
     collect_set. Returns ``(key, n_distinct_est bigint)``.
     """
-    import os
-
     import numpy as np
 
-    from xml2arrow_spark.operators.blocks import decode_column
+    from xml2arrow_spark.operators.blocks import decode_column, group_codes
     from xml2arrow_spark.operators.dataset import (
         _CW_INT_TYPES,
         _fold_blocks_file,
+        _key_columns,
         _refuse_pending_tombstones,
         _resolve_conjuncts,
     )
@@ -232,7 +189,7 @@ def group_distinct_est(
         raise ValueError(
             f"dataset lacks encoded column {column!r}; it has {sorted(by_name)}"
         )
-    key_cols = _normalize_key_cols(key, by_name, "group_distinct_est")
+    key_cols = _key_columns(key, by_name, "group_distinct_est")
     val_type = by_name[column].split(None, 1)[1].strip().lower()
     if val_type not in _CW_INT_TYPES:
         raise ValueError(
@@ -247,7 +204,7 @@ def group_distinct_est(
     )
 
     def _block_hashes(tally, pairs, mask):
-        keys, codes = _block_group_keys(pairs[:-1])
+        keys, codes = group_codes(pairs[:-1])
         arr = decode_column(*pairs[-1])
         valid = np.asarray(arr.is_valid()) if arr.null_count else None
         if mask is not None:
@@ -292,12 +249,12 @@ def group_distinct_est(
             for kv, hs in fh.items():
                 total[kv] = _kmv_merge(total.get(kv, []), hs, k)
         return local_frame(spark, f"{key_ddl}, n_distinct_est bigint", [
-            (*_key_tuple(kv), _estimate(hs)) for kv, hs in total.items()
+            (*kv, _estimate(hs)) for kv, hs in total.items()
         ])
 
     def _hash_rows(tally):
         return [
-            (*_key_tuple(kv), h) for kv, hh in tally.items() for h in hh
+            (*kv, h) for kv, hh in tally.items() for h in hh
         ]
 
     pairs = walk.fan_out(
@@ -319,8 +276,8 @@ def group_distinct(
     """EXACT per-group ``COUNT(DISTINCT column)`` over a STORED dataset,
     computed on the codec streams — the exact twin of
     :func:`group_distinct_est`. Per block, the key's group codes ride
-    :func:`~xml2arrow_spark.operators.blocks.group_codes_column`
-    (dict/rle/dict_str — key values never materialize per row), the value
+    :func:`~xml2arrow_spark.operators.blocks.group_codes`
+    (dict/rle/pdict/dict_str — key values never materialize per row), the value
     column decodes once, and ONLY the block's distinct ``(group, value)``
     pairs survive (``np.unique`` — per-block dedup is the map-side
     combine). Exactness has an irreducible price the estimator does not
@@ -351,14 +308,13 @@ def group_distinct(
     :class:`~xml2arrow_spark.sources.files.BlockWalk`. Returns
     ``(key, n_distinct bigint)``.
     """
-    import os
-
     import numpy as np
 
-    from xml2arrow_spark.operators.blocks import decode_column
+    from xml2arrow_spark.operators.blocks import decode_column, group_codes
     from xml2arrow_spark.operators.dataset import (
         _CW_INT_TYPES,
         _fold_blocks_file,
+        _key_columns,
         _refuse_pending_tombstones,
         _resolve_conjuncts,
     )
@@ -375,7 +331,7 @@ def group_distinct(
         raise ValueError(
             f"dataset lacks encoded column {column!r}; it has {sorted(by_name)}"
         )
-    key_cols = _normalize_key_cols(key, by_name, "group_distinct")
+    key_cols = _key_columns(key, by_name, "group_distinct")
     val_type = by_name[column].split(None, 1)[1].strip().lower()
     val_is_str = val_type == "string"
     if not val_is_str and val_type not in _CW_INT_TYPES:
@@ -401,19 +357,15 @@ def group_distinct(
             )
 
     def _block_pairs(tally, pairs, mask):
-        keys, codes = _block_group_keys(pairs[:-1])
+        keys, codes = group_codes(pairs[:-1])
         val_pair = pairs[-1]
         if val_is_str:
             # string values stay on the CODE stream (dict_str never
             # materializes per-row strings): distinct (group, value-code)
             # pairs first, the (small) distinct set maps through the
-            # dictionary after. The dictionary MAY repeat a value (RLE
-            # run values are not uniqued) — set semantics absorb that.
-            from xml2arrow_spark.operators.blocks import group_codes_column
-
-            vdict, vcodes = group_codes_column(*val_pair)
-            vals_list = vdict.to_pylist()
-            valid = vcodes != len(vals_list)  # drop the NULL slot
+            # value slots after; set semantics absorb a repeated value
+            vals, vcodes = group_codes([val_pair])
+            valid = vcodes != len(vals) - 1  # drop the NULL slot
             if mask is not None:
                 valid &= np.asarray(mask, dtype=bool)
             v = vcodes[valid]
@@ -448,7 +400,7 @@ def group_distinct(
                 continue
             vv = pv[lo:hi].tolist()
             if val_is_str:
-                vv = [vals_list[c] for c in vv]
+                vv = [vals[c][0] for c in vv]
             tally.setdefault(kv, set()).update(vv)
         _cap_check(tally, "one file's tally")
 
@@ -467,11 +419,11 @@ def group_distinct(
                 total.setdefault(kv, set()).update(vs)
             _cap_check(total, "the merged tally across files")
         return local_frame(spark, f"{key_ddl}, n_distinct bigint", [
-            (*_key_tuple(kv), len(vs)) for kv, vs in total.items()
+            (*kv, len(vs)) for kv, vs in total.items()
         ])
 
     def _pair_rows(tally):
-        return [(*_key_tuple(kv), v) for kv, vv in tally.items() for v in vv]
+        return [(*kv, v) for kv, vv in tally.items() for v in vv]
 
     # per-file partials are already distinct; the global dedup is ONE
     # (key, value) shuffle bounded by files x true_distinct, then a

@@ -2090,6 +2090,62 @@ def test_composite_key_claims_constant_blocks(spark, tmp_path, monkeypatch,
             assert read and set(read) == {5}
 
 
+@pytest.mark.parametrize("layout", ["nested", "wide"])
+def test_keyed_claim_on_a_nullable_filter_column(spark, tmp_path, monkeypatch,
+                                                 layout):
+    """A single range conjunct whose zone lies inside its bounds but whose
+    column has nulls matches exactly that column's non-null rows, so a
+    key-constant block folds from metadata when its agg column IS the
+    filter column: only the block whose ``qty`` leaves the range reads
+    payload. Summing another column needs the decode. Answers equal a
+    Python groupby of the source rows on both paths."""
+    from xml2arrow_spark.operators import encode as enc
+    from xml2arrow_spark.operators.dataset import group_aggs
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "ds")
+    os.makedirs(src)
+    k = [i // 100 for i in range(500)]  # presorted: one key per block
+    qty = [None if i % 10 == 3 else i % 7 for i in range(500)]
+    qty[450] = 40  # block 4 straddles the range
+    ids = list(range(500))
+    tbl = pa.table({"k": pa.array(k, pa.int64()),
+                    "qty": pa.array(qty, pa.int64()),
+                    "id": pa.array(ids, pa.int64())})
+    pq.write_table(tbl, os.path.join(src, "p.parquet"))
+    manifest = CodecManifest.auto_for(from_arrow_schema(tbl.schema),
+                                      block_rows=100)
+    encode_parquet_dataset(spark, src, out, manifest=manifest, layout=layout)
+
+    def truth(agg):
+        got: dict = {}
+        for kk, q, v in zip(k, qty, agg):
+            if q is None or not 0 <= q <= 6:
+                continue
+            c, nn, sm, mn, mx = got.get(kk, (0, 0, 0, None, None))
+            got[kk] = (c + 1, nn + 1, sm + v, v if mn is None else min(mn, v),
+                       v if mx is None else max(mx, v))
+        return got
+
+    read = []
+    payload = enc.BlockStats.payload
+
+    def spy(self, col, i):
+        read.append(i)
+        return payload(self, col, i)
+
+    monkeypatch.setattr(enc.BlockStats, "payload", spy)
+    for agg, name, claimed in ((qty, "qty", True), (ids, "id", False)):
+        for lb in (128 << 20, 0):
+            read.clear()
+            got = {r["k"]: (r["cnt"], r[f"nn_{name}"], r[f"sum_{name}"],
+                            r[f"min_{name}"], r[f"max_{name}"])
+                   for r in group_aggs(spark, out, "k", [name], local_bytes=lb,
+                                       where=("qty", 0, 6)).collect()}
+            assert got == truth(agg), (name, lb)
+            if lb:  # the driver-local walk
+                assert set(read) == ({4} if claimed else {0, 1, 2, 3, 4})
+
+
 # ---- composite-key group_aggs --------------------------------------------------
 
 

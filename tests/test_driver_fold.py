@@ -79,10 +79,22 @@ def _jobs(spark, call):
     return in_call, on_collect
 
 
-@pytest.mark.parametrize("op", ["count_where", "time_bucket_count"])
-def test_bounded_fold_runs_one_job_eagerly(spark, store, op):
+@pytest.mark.parametrize(
+    "op", ["count_where", "count_where_past_the_bounds", "time_bucket_count"]
+)
+def test_bounded_fold_runs_one_job_eagerly(spark, store, op, monkeypatch):
+    if op == "count_where_past_the_bounds":
+        # a keyless partial holds one group: count_where folds on the
+        # driver whatever the keyed folds' bounds say, with no pre-pass
+        def pre_pass(self, _file_groups):
+            raise AssertionError("count_where ran the group bound pre-pass")
+
+        monkeypatch.setattr(files, "DRIVER_FOLD_GROUPS", 0)
+        monkeypatch.setattr(files, "DRIVER_FOLD_FILES", 0)
+        monkeypatch.setattr(BlockWalk, "folds_on_driver", pre_pass)
+
     def call():
-        if op == "count_where":
+        if op.startswith("count_where"):
             return count_where(spark, store, ("id", 5, 25), agg_col="t",
                                local_bytes=0)
         return time_bucket_count(spark, store, "t", 7, local_bytes=0)
@@ -242,6 +254,30 @@ def test_group_aggs_refuses_an_int64_total_across_files(spark, tmp_path):
     for lb in (0, 128 << 20):
         with pytest.raises(ArithmeticError, match="outside int64"):
             group_aggs(spark, out, "k", ["v"], local_bytes=lb)
+
+
+def test_group_aggs_answers_when_only_file_sums_leave_int64(spark, tmp_path,
+                                                          monkeypatch):
+    """One int64 rule, on the total: each file's sum (+-2^64) leaves int64
+    but the total (0) fits, so every path answers — the driver-local
+    walk, the driver fold above the valve and the Spark combine past the
+    group bound."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "ds")
+    os.makedirs(src)
+    for j, sign in enumerate((1, -1)):
+        pq.write_table(
+            pa.table({"k": pa.array([1] * 4, pa.int64()),
+                      "v": pa.array([sign << 62] * 4, pa.int64())}),
+            os.path.join(src, f"p-{j}.parquet"))
+    encode_parquet_dataset(spark, src, out)
+    want = [(1, 8, 8, 0, -(1 << 62), 1 << 62)]
+    for lb in (128 << 20, 0):
+        assert _rows(group_aggs(spark, out, "k", ["v"], local_bytes=lb)) == want
+    monkeypatch.setattr(files, "DRIVER_FOLD_GROUPS", 0)
+    in_call, _on_collect = _jobs(
+        spark, lambda: group_aggs(spark, out, "k", ["v"], local_bytes=0))
+    assert in_call == []  # the Spark combine
+    assert _rows(group_aggs(spark, out, "k", ["v"], local_bytes=0)) == want
 
 
 def test_group_aggs_combine_refuses_an_int64_total(spark, tmp_path,

@@ -413,8 +413,11 @@ def test_claiming_walks_do_not_know_the_blocks_layout():
 def test_one_keyed_fold():
     """Lint, one way to group: ``BlockWalk.folds_on_driver`` has exactly
     one caller in the engine (the keyed fold in operators/dataset.py),
-    and no module but operators/blocks.py computes mixed-radix group
-    codes (``codes * len(dictionary) + c``)."""
+    no module but operators/blocks.py computes mixed-radix group codes
+    (``codes * len(dictionary) + c``), and operators/dataset.py opens a
+    ``BlockStats`` view only in the one block loop, the group-bound
+    pre-pass, top_k and decode_dataset (count_where folds through the
+    block loop, with no view of its own)."""
     import xml2arrow_spark
 
     root = os.path.dirname(xml2arrow_spark.__file__)
@@ -440,6 +443,16 @@ def test_one_keyed_fold():
                     radix.append(rel)
     assert dispatch == [os.path.join("operators", "dataset.py")]
     assert radix == [os.path.join("operators", "blocks.py")]
+    with open(os.path.join(root, "operators", "dataset.py"), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    views = {
+        fn.name for fn in tree.body if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "BlockStats"
+    }
+    assert views == {"_fold_blocks_file", "_file_groups", "top_k",
+                     "decode_dataset"}
 
 
 def test_fused_encode_roundtrip_bit_identical(spark, token_dir):

@@ -34,8 +34,9 @@ over the measured cycles, in ms, per op (``class/api``).
 With ``--compare``, each checkout runs in its own child process, in
 alternating order, ``--runs`` times; the markdown table gives the median
 of the per-run medians. The engine and ``perfbench`` are imported from the
-checkout under test; the work directory (``.op_threads_work/`` in that
-checkout) is removed at exit.
+checkout under test, which is also the run's working directory (PySpark's
+Python workers import from the driver's working directory first); the work
+directory (``.op_threads_work/`` in that checkout) is removed at exit.
 """
 
 from __future__ import annotations
@@ -105,8 +106,13 @@ def snapshot(descendants) -> dict[str, int]:
 
 
 def run_one(args) -> dict:
-    """Set up the workload in this process and measure its ops."""
+    """Set up the workload in this process and measure its ops, from the
+    checkout's directory: PySpark starts its Python workers in the
+    driver's working directory and puts it first on their ``sys.path``,
+    so run elsewhere the executors would import that directory's
+    engine."""
     root = os.path.abspath(args.checkout)
+    os.chdir(root)
     sys.path.insert(0, root)
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (root, os.environ.get("PYTHONPATH")) if p
@@ -177,7 +183,8 @@ def compare(args) -> None:
         order = list(arms) if r % 2 == 0 else list(arms)[::-1]
         for name in order:
             cmd = [sys.executable, os.path.abspath(__file__),
-                   "--checkout", arms[name], "--workload", args.workload,
+                   "--checkout", os.path.abspath(arms[name]),
+                   "--workload", args.workload,
                    "--seed", str(args.seed), "--cycles", str(args.cycles),
                    "--warm", str(args.warm)]
             t0 = time.time()

@@ -54,6 +54,18 @@ def read_sidecar(dir_path: str, name: str = MANIFEST_SIDECAR) -> dict:
         return load_yaml(f.read()) or {}
 
 
+def write_sidecar(dir_path: str, text: str, name: str = MANIFEST_SIDECAR) -> None:
+    """Write the sidecar ``name`` of the tree at ``dir_path`` — the one
+    writer of every sidecar: ``text`` goes to ``<name>.inprogress`` first
+    and is renamed over the final name, so a crash never leaves a torn
+    sidecar (readers see the old complete file or the new one, and
+    ``vacuum`` sweeps a stranded ``.inprogress``)."""
+    path = os.path.join(dir_path, name)
+    with open(path + ".inprogress", "w") as f:
+        f.write(text)
+    os.replace(path + ".inprogress", path)
+
+
 AUTO = "auto"
 LIST_VALUE_SUFFIX = ""  # list columns carry one policy; lengths always FOR-packed
 

@@ -681,7 +681,7 @@ def _row_mask(mask, n: int) -> np.ndarray:
     return mask
 
 
-def group_codes(key_pairs):
+def group_codes(key_pairs, n=None):
     """Per-row GROUP codes over one or several key columns: ``key_pairs``
     is a list of (meta_json, payload), one per key column, and the result
     is ``(keys, codes)``, where ``keys[j]`` is the key TUPLE of slot ``j``
@@ -694,7 +694,12 @@ def group_codes(key_pairs):
     combines mixed-radix (``c * (K + 1) + c_next``, the +1 being that
     column's NULL slot) and compacts with one ``np.unique``, so the code
     stays below the block's rows whatever the number of keys, and no
-    per-row tuple is ever built."""
+    per-row tuple is ever built. No key at all is SQL's ``GROUP BY ()``:
+    every one of the block's ``n`` rows falls in the one group ``()``."""
+    if not key_pairs:
+        if n is None:
+            raise ValueError("a keyless group needs the block's row count")
+        return [()], np.zeros(n, dtype=np.int64)
     keys = codes = None
     for meta, data in key_pairs:
         dictionary, c, _runs = _column_codes(meta, data)
@@ -767,7 +772,9 @@ def fold_group_aggs(key_pairs, aggs, mask=None, with_sq=False):
     """Exact per-block grouped COUNT(*) plus per-agg (n_nonnull, SUM, MIN,
     MAX) for one or several key columns and any number of agg columns in
     ONE pass — the kernel of every keyed fold (``aggs=[]`` is the
-    count). ``key_pairs`` and ``aggs`` are lists of (meta_json, payload).
+    count, ``key_pairs=[]`` the one group ``()`` of count_where, its row
+    count taken from ``mask`` or the first agg column). ``key_pairs`` and
+    ``aggs`` are lists of (meta_json, payload).
     Returns ``{key tuple: [cnt, (nn, sum, mn, mx) per agg]}``: the key's
     group codes come once off the code streams (:func:`group_codes`, no
     key materialization for dict/rle/pdict/dict_str) and each agg column
@@ -789,15 +796,18 @@ def fold_group_aggs(key_pairs, aggs, mask=None, with_sq=False):
     cannot be range-split the way the linear sum can), then the squares
     fold through the same exact hi/lo split. Sum + sum-of-squares + count
     make variance/stddev exactly derivable by the caller."""
-    keys, codes = group_codes(key_pairs)
+    arrs = [decode_column(agg_meta, agg_data) for agg_meta, agg_data in aggs]
+    keys, codes = group_codes(
+        key_pairs,
+        len(mask) if mask is not None else len(arrs[0]) if arrs else None,
+    )
     if mask is not None:
         mask = _row_mask(mask, codes.size)
     slots = len(keys)
     cnt = np.bincount(codes if mask is None else codes[mask], minlength=slots)
 
     per_agg = []
-    for agg_meta, agg_data in aggs:
-        arr = decode_column(agg_meta, agg_data)
+    for arr in arrs:
         if not pa.types.is_integer(arr.type):
             raise EncodeTypeError(
                 f"SUM pushdown needs an integer agg column, got {arr.type}: "

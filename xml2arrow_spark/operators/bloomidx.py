@@ -50,7 +50,7 @@ from typing import Iterator
 
 import numpy as np
 
-from xml2arrow_spark.manifest import read_sidecar
+from xml2arrow_spark.manifest import read_sidecar, write_sidecar
 
 __all__ = [
     "build_bloom_index",
@@ -322,8 +322,7 @@ def build_bloom_index(
     import yaml
 
     idx = _index_dir(tree, column)
-    spath = os.path.join(idx, BLOOM_SIDEVAR)
-    if units is not None and os.path.exists(spath):
+    if units is not None and os.path.exists(os.path.join(idx, BLOOM_SIDEVAR)):
         side = read_sidecar(idx, BLOOM_SIDEVAR)
         if side.get("hash") != BLOOM_HASH_ID:
             raise ValueError(
@@ -335,19 +334,12 @@ def build_bloom_index(
     if units is None:
         shutil.rmtree(idx, ignore_errors=True)
     os.makedirs(idx, exist_ok=True)
-    tmp = spath + ".inprogress"
-    with open(tmp, "w") as f:
-        f.write(
-            yaml.safe_dump(
-                {
-                    "column": column,
-                    "bits_per_row": int(bits_per_row),
-                    "k": int(k),
-                    "hash": BLOOM_HASH_ID,
-                }
-            )
-        )
-    os.replace(tmp, spath)
+    write_sidecar(idx, yaml.safe_dump({
+        "column": column,
+        "bits_per_row": int(bits_per_row),
+        "k": int(k),
+        "hash": BLOOM_HASH_ID,
+    }), BLOOM_SIDEVAR)
 
     if units is not None and not units:
         return {"blocks_indexed": 0}

@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from xml2arrow_spark.manifest import CodecManifest, read_sidecar
+from xml2arrow_spark.manifest import CodecManifest, read_sidecar, write_sidecar
 from xml2arrow_spark.operators import bloomidx, tombstones
 from xml2arrow_spark.operators.encode import decode_table, encode_table
 from xml2arrow_spark.operators.lease import with_dataset_lease
@@ -134,15 +134,6 @@ def _check_placement(path: str, n_units: int, schema_ddl: str) -> None:
             f"[{prior_ddl}]; this run encodes [{schema_ddl}] — resuming "
             f"would mix incompatible block schemas"
         )
-
-
-def _atomic_write_text(path: str, text: str) -> None:
-    """tmp + rename so a crash can never leave a torn file at the final
-    name (readers either see the old complete file or the new one)."""
-    tmp = path + ".inprogress"
-    with open(tmp, "w") as f:
-        f.write(text)
-    os.replace(tmp, path)
 
 
 def _manifest_schema():
@@ -285,8 +276,8 @@ def encode_dataset(
     # placement tag next to its manifest rows, or the next run could not
     # verify unit placement and would refuse a legitimate resume.
     os.makedirs(path, exist_ok=True)
-    _atomic_write_text(
-        os.path.join(path, MANIFEST_SIDEVAR),
+    write_sidecar(
+        path,
         manifest.to_yaml()
         + f"\nschema_ddl: '{schema_ddl}'\nplacement: {PLACEMENT_ID}\n"
         + f"n_units: {int(n_units)}\n"

@@ -23,7 +23,6 @@ completed work unit instead of one YAML per run.
 
 from __future__ import annotations
 
-import functools
 import math
 import os
 from typing import Iterator
@@ -34,6 +33,7 @@ from xml2arrow_spark.manifest import (
     MANIFEST_SIDECAR,
     CodecManifest,
     read_sidecar,
+    write_sidecar,
 )
 from xml2arrow_spark.operators.lease import with_dataset_lease as _with_dataset_lease
 from xml2arrow_spark.operators.predicates import (  # noqa: F401 (re-export)
@@ -176,8 +176,7 @@ def encode_parquet_dataset(
         for f in file_schema.fields
         if f.name in resolved.columns
     )
-    spath = os.path.join(out_path, MANIFEST_SIDECAR)
-    if os.path.exists(spath):
+    if os.path.exists(os.path.join(out_path, MANIFEST_SIDECAR)):
         side = read_sidecar(out_path)
         if side.get("placement") != PLACEMENT_ID:
             raise ManifestError(
@@ -213,16 +212,13 @@ def encode_parquet_dataset(
             f"{MANIFEST_SIDECAR} sidecar (pre-placement-tag layout); "
             f"cannot verify unit placement — re-encode from scratch"
         )
-    # tmp + rename: crash-safe sidecar (readers see old-complete or new)
-    with open(spath + ".inprogress", "w") as f:
-        f.write(
-            resolved.to_yaml()
-            + f"\nschema_ddl: '{schema_ddl}'\nplacement: {PLACEMENT_ID}\n"
-            + f"layout: {layout}\n"
-            + (f"presort: {list(presort)}\ncluster: {cluster}\n"
-               if presort else "")
-        )
-    os.replace(spath + ".inprogress", spath)
+    write_sidecar(
+        out_path,
+        resolved.to_yaml()
+        + f"\nschema_ddl: '{schema_ddl}'\nplacement: {PLACEMENT_ID}\n"
+        + f"layout: {layout}\n"
+        + (f"presort: {list(presort)}\ncluster: {cluster}\n" if presort else ""),
+    )
 
     def write_unit(file_idx, fpath, rows):
         rows = list(rows)
@@ -322,11 +318,8 @@ def dataset_column_stats(spark, out_path: str):
     # a non-NULL sum, while larger ones refused — a scale-DEPENDENT
     # answer for the same query, caught at sf0.001.)
     _temporal = {
-        n
-        for n, decl in by_name_ddl.items()
-        if decl.split(None, 1)[1].strip().lower().startswith(
-            ("timestamp", "date")
-        )
+        n for n in names
+        if _column_type(by_name_ddl, n).startswith(("timestamp", "date"))
     }
     blocks = spark.read.parquet(os.path.join(out_path, "blocks"))
 
@@ -388,6 +381,17 @@ def dataset_column_stats(spark, out_path: str):
 _CW_INT_TYPES = ("tinyint", "smallint", "int", "integer", "bigint", "long")
 
 
+def _column_type(by_name: dict, col: str) -> str:
+    """The stored type of column ``col``, lower-case, from the sidecar
+    DDL's ``{name: "name type"}`` map; the one error of every operator
+    for a column the dataset does not hold."""
+    if col not in by_name:
+        raise ValueError(
+            f"dataset lacks encoded column {col!r}; it has {sorted(by_name)}"
+        )
+    return by_name[col].split(None, 1)[1].strip().lower()
+
+
 def _resolve_conjuncts(by_name: dict, predicate, caller: str):
     """Driver-side predicate validation shared by the metadata-accelerated
     aggregates (:func:`count_where`, :func:`group_sum` / :func:`group_count`
@@ -442,11 +446,7 @@ def _resolve_conjuncts(by_name: dict, predicate, caller: str):
         else:
             col, lo, hi = pred
             values = None
-        if col not in by_name:
-            raise ValueError(
-                f"dataset lacks encoded column {col!r}; it has {sorted(by_name)}"
-            )
-        typ = by_name[col].split(None, 1)[1].strip().lower()
+        typ = _column_type(by_name, col)
         if typ.startswith(("array", "map", "struct")):
             raise ValueError(
                 f"{caller} needs a scalar column; {col!r} is {typ}"
@@ -505,39 +505,42 @@ def _resolve_conjuncts(by_name: dict, predicate, caller: str):
     return conj
 
 
-def _classify_where(conj, stats):
-    """Classify one block against a conjunction from its zone stats
-    (per-conjunct (vmin, vmax, n_null); None = unstated; same bound
-    soundness as count_where's classifier — truncation-safe string
-    bounds, floats prune but never claim). 'pruned': some conjunct
-    provably matches no row. 'interior': EVERY row provably matches —
-    bounds inside on each bounded side AND a null-free filter column
-    (unlike count_where the GROUP paths cannot subtract filter nulls:
-    their group membership is unknown; and NaN is non-null yet fails
-    BETWEEN, so floats never claim). Else 'boundary' (decode + mask).
+def _classify_where(conj, stats, rows):
+    """The rows of a block of ``rows`` rows that provably match a
+    conjunction, judged from the block's zone stats alone (per-conjunct
+    (vmin, vmax, n_null); None = unstated): 0 when the block is PRUNED —
+    some conjunct provably matches no row; ``rows`` when EVERY row
+    provably matches — bounds inside on each bounded side of every
+    conjunct and null-free filter columns; ``rows - n_null`` when one
+    conjunct holds the block inside its bounds but its column has nulls,
+    the matched rows then being exactly that column's non-null rows; else
+    None (boundary: decode + mask). A multi-conjunct claim needs every
+    filter column null-free: per-column null counts cannot reconstruct
+    the union of null rows. Floats never count as inside (NaN is
+    non-null yet fails BETWEEN, and zone stats skip it), but they prune.
+    String bounds are truncation-safe (vmin understates the true min,
+    vmax overstates the true max), so both tests stay sound.
 
     IN-list conjuncts (values set): pruned when every point falls outside
-    [vmin, vmax] — sound for truncated string bounds too, vmin understates
-    the true min and vmax overstates the true max; interior only when the
-    block is provably single-valued (vmin == vmax, truncation-safe) on a
-    set member with a null-free column.
+    [vmin, vmax]; inside only when the block is provably single-valued
+    (vmin == vmax, truncation-safe) on a set member.
 
     Under a DNF predicate (``conj`` carries ``groups`` — see
-    :func:`_resolve_conjuncts`) the per-disjunct verdicts combine as:
-    pruned only when EVERY disjunct prunes; interior when ANY disjunct is
-    interior (its interior already proves ALL rows match, so the union
-    does too); else boundary."""
+    :func:`_resolve_conjuncts`) the per-disjunct answers combine as:
+    pruned only when EVERY disjunct prunes; ``rows`` when ANY disjunct
+    proves all its rows match; else None — a disjunct that matches only
+    its column's non-null rows says nothing of the rows another disjunct
+    may match."""
     groups = getattr(conj, "groups", None)
     if groups is not None:
-        kinds = [
-            _classify_where(list(conj[a:b]), stats[a:b]) for a, b in groups
+        got = [
+            _classify_where(list(conj[a:b]), stats[a:b], rows)
+            for a, b in groups
         ]
-        if all(k == "pruned" for k in kinds):
-            return "pruned"
-        if any(k == "interior" for k in kinds):
-            return "interior"
-        return "boundary"
-    interior = True
+        if all(g == 0 for g in got):
+            return 0
+        return rows if rows in got else None
+    inside = True
     for (_col, values, lo, hi, cat), (vmin, vmax, n_null) in zip(conj, stats):
         if values is not None:
             if (
@@ -545,28 +548,26 @@ def _classify_where(conj, stats):
                 and vmax is not None
                 and all(v < vmin or vmax < v for v in values)
             ):
-                return "pruned"
-            if (
-                cat == "d"
-                or n_null != 0
-                or vmin is None
-                or vmin != vmax
-                or vmin not in values
+                return 0
+            inside = inside and vmin is not None and vmin == vmax and (
+                vmin in values
+            )
+        else:
+            if (lo is not None and vmax is not None and vmax < lo) or (
+                hi is not None and vmin is not None and hi < vmin
             ):
-                interior = False
-            continue
-        if (lo is not None and vmax is not None and vmax < lo) or (
-            hi is not None and vmin is not None and hi < vmin
-        ):
-            return "pruned"
-        if (
-            cat == "d"
-            or n_null != 0
-            or not (lo is None or (vmin is not None and lo <= vmin))
-            or not (hi is None or (vmax is not None and vmax <= hi))
-        ):
-            interior = False
-    return "interior" if interior else "boundary"
+                return 0
+            inside = (
+                inside
+                and (lo is None or (vmin is not None and lo <= vmin))
+                and (hi is None or (vmax is not None and vmax <= hi))
+            )
+        inside = inside and cat != "d" and n_null is not None
+    if not inside:
+        return None
+    if all(n_null == 0 for _vmin, _vmax, n_null in stats):
+        return rows
+    return rows - stats[0][2] if len(conj) == 1 else None
 
 
 def _conj_boundary_mask(conj, pair_of):
@@ -575,9 +576,8 @@ def _conj_boundary_mask(conj, pair_of):
     ride the codec-aware mask kernel (match_mask_column — dictionary/run
     streams, values never materialize where the codec allows; IN-lists
     evaluate once per distinct value / run through the same kernel); float
-    conjuncts decode and compare as float64, the same widening
-    count_where's boundary path uses. NULL/NaN rows fail, matching SQL
-    WHERE. Returns a numpy row mask, or None when no row matches (the
+    conjuncts decode and compare as float64. NULL/NaN rows fail, matching
+    SQL WHERE. Returns a numpy row mask, or None when no row matches (the
     block contributes nothing).
 
     Under a DNF predicate the row mask is the OR of the per-disjunct
@@ -629,40 +629,43 @@ def _zones(conj, view, i):
 
 
 def _fold_blocks_file(fpath, pq_mod, cols, conj, on_block, claim=None):
-    """The one per-file block loop of the aggregates that fold blocks
-    into a tally dict — the keyed fold (:func:`_keyed_fold`) and
-    time_bucket_count (with a metadata ``claim``) and the per-group
+    """The one per-file block loop of every aggregate that folds blocks
+    into a tally dict — the keyed fold (:func:`_keyed_fold`, count_where's
+    too), time_bucket_count (with a metadata ``claim``) and the per-group
     distinct operators (pipeline/sketches.py, without one). Opens one
     :class:`~xml2arrow_spark.operators.encode.BlockStats` view over
-    ``cols`` and the ``conj`` columns, skips empty blocks, classifies the
-    rest against the (possibly DNF) ``conj`` through the shared zone
-    classifier, drops pruned blocks and masks boundary ones. A block
-    whose every row matches goes to ``claim(tally, view, i)`` first,
-    which folds it from metadata alone and returns True, or returns
-    False; every other survivor calls ``on_block(tally, pairs, mask)``
-    with one (meta, payload) pair per ``cols`` entry (``mask`` = the
-    boundary row mask, None when every row matches). Returns the
-    tally."""
+    ``cols`` and the ``conj`` columns and judges each block by the shared
+    zone classifier :func:`_classify_where` against the (possibly DNF)
+    ``conj``: pruned and empty blocks drop. A block whose matched rows
+    the metadata proves goes to ``claim(tally, view, i, rows)`` first,
+    which folds those ``rows`` from metadata alone and returns True, or
+    returns False; every other block decodes: ``on_block(tally, pairs,
+    mask)`` with one (meta, payload) pair per ``cols`` entry, ``mask``
+    the conjunction's row mask, None only when every row matches.
+    Returns ``(tally, [blocks, pruned, claimed, decoded])``; a decoded
+    block in which no row matched counts as decoded."""
     view = BlockStats(fpath, pq_mod, cols + [c[0] for c in conj or ()])
     tally: dict = {}
+    kinds = [len(view), 0, 0, 0]
     for i in range(len(view)):
-        if not view.n_rows(i):
+        n = view.n_rows(i)
+        rows = n if conj is None else _classify_where(
+            conj, _zones(conj, view, i), n
+        )
+        if not n or rows == 0:
+            kinds[1] += 1
             continue
+        if rows is not None and claim is not None and claim(tally, view, i, rows):
+            kinds[2] += 1
+            continue
+        kinds[3] += 1
         mask = None
-        if conj is not None:
-            kind = _classify_where(conj, _zones(conj, view, i))
-            if kind == "pruned":
+        if rows != n:
+            mask = _conj_boundary_mask(conj, lambda c, i=i: view.payload(c, i))
+            if mask is None:
                 continue
-            if kind == "boundary":
-                mask = _conj_boundary_mask(
-                    conj, lambda c, i=i: view.payload(c, i)
-                )
-                if mask is None:
-                    continue
-        if mask is None and claim is not None and claim(tally, view, i):
-            continue
         on_block(tally, [view.payload(c, i) for c in cols], mask)
-    return tally
+    return tally, kinds
 
 
 def _file_groups(keys):
@@ -719,297 +722,67 @@ def count_where(
     n_tasks: int | None = None,
     local_bytes: int = 128 << 20,
 ):
-    """Exact ``COUNT(*) WHERE col BETWEEN lo AND hi [AND ...]`` over a
-    STORED dataset, metadata-accelerated per block — the small-materialized-
-    aggregates move (Moerkotte, VLDB 1998) applied to the predicate count:
+    """Exact ``COUNT(*) [, SUM/MIN/MAX(agg_col)] WHERE ...`` over a STORED
+    dataset, metadata-accelerated per block — the small-materialized-
+    aggregates move (Moerkotte, VLDB 1998) applied to the predicate
+    count. It is the keyed fold with no key, SQL's ``GROUP BY ()``
+    (:func:`_keyed_file` per file, :func:`_driver_fold` over the files):
+    blocks whose zone bounds provably miss a conjunct are PRUNED; blocks
+    whose matched rows :func:`_classify_where` proves are counted, and
+    aggregated, from metadata alone (INTERIOR); only the rest decode, and
+    only the filter and agg columns (wide layout: no other column is read
+    off disk). At 10^12 rows the everyday accounting query ("how many
+    sequences have n_tok between a and b") becomes a metadata scan plus
+    a decode of the boundary slice — on range-clustered data
+    (``presort``) two blocks per unit, not the corpus.
 
-    - **pruned**: a block whose zone bounds provably miss any conjunct
-      contributes 0 without being read past its stats;
-    - **interior**: a block whose bounds sit provably INSIDE every conjunct
-      is counted from metadata alone (``n_rows - n_null``) — no payload
-      bytes decoded, no kernels run;
-    - **boundary**: only blocks straddling a bound decode, and ONLY the
-      filter column(s) — matches are counted vectorized (pyarrow compute)
-      and the payload of every other column is never touched (wide layout:
-      never read off disk).
+    ``predicate`` is one conjunct or a list (conjunction) of the shapes
+    :func:`_resolve_conjuncts` takes — ``(column, lo, hi)`` with either
+    bound None for a one-sided range, or ``(column, values)``, an IN-list
+    — or an :func:`~xml2arrow_spark.operators.predicates.any_of`
+    disjunction of such conjunctions. NULL and NaN rows never match, as
+    in SQL WHERE.
 
-    At 10^12 rows the everyday accounting query ("how many sequences have
-    n_tok between a and b") becomes a metadata scan plus a decode of the
-    boundary slice — on range-clustered data (``presort``) that is two
-    blocks per unit, not the corpus.
+    ``agg_col`` (integer columns only: a metadata roll-up cannot
+    reproduce an order-dependent float fold) adds ``SUM/MIN/MAX(agg_col)``
+    over the matched rows — nulls skipped, NULL when no non-null value
+    matched. An interior block contributes its exact ``zsum_i`` and zone
+    extrema only when they ARE the matched rows' aggregates: every row
+    matches, or the single filter column is ``agg_col``; otherwise it
+    decodes. A total outside int64 refuses rather than wrapping.
 
-    Soundness notes: float conjuncts never claim interior (zone stats skip
-    NaN, which is non-null yet fails BETWEEN — interior would overcount;
-    floats still prune, because NaN cannot satisfy a finite range either
-    way). String bounds are truncation-safe (vmin ≤ true min, vmax ≥ true
-    max), so both the outside and the interior test stay sound; a withheld
-    string upper bound disables both. A multi-conjunct interior claim needs
-    every filter column's ``n_null == 0`` (per-column null counts cannot
-    reconstruct the union of null rows). NULL and NaN rows never match,
-    matching SQL WHERE semantics.
-
-    ``agg_col`` additionally returns ``SUM/MIN/MAX(agg_col)`` over the
-    matching rows (``n_sum``/``n_min``/``n_max``; SQL semantics — nulls
-    skipped, NULL when no non-null value matched). Integer columns only: an
-    interior block contributes its stored exact ``zsum_i`` (and its exact
-    zone extrema as the min/max) when metadata can PROVE the matched set's
-    aggregates ARE the whole-block stats — every filter column null-free
-    (so all rows match), or the single filter column IS the agg column
-    (its nulls leave the match set, the stored sum, and the zone bounds
-    alike) — and its ``n_null`` is stated (distinguishing "sum of
-    non-nulls is 0" from "no non-null values", which must surface as NULL,
-    not 0). Anything unprovable downgrades the block to boundary-decode;
-    the result is exact either way. Floats are refused: a metadata roll-up
-    cannot reproduce a sequential float fold, NaN ordering is
-    engine-defined, and these stats never approximate.
-
-    Execution is scale-adaptive through
-    :class:`~xml2arrow_spark.sources.files.BlockWalk`: a blocks tree of at
-    most ``local_bytes`` (default 128 MiB) answers driver-side, a larger
-    one fans the identical per-file routine out over executors in one
-    job; ``local_bytes=0`` forces the distributed path. Either way the
-    per-file tallies fold on the driver and the int64 refusal applies to
-    the TOTAL sum, so both paths answer (or refuse) alike; the call is
-    eager and the returned frame is driver-local.
-
-    ``predicate`` is one conjunct or a list (conjunction). Each conjunct
-    is a 3-tuple ``(column, lo, hi)`` — inclusive bounds, either side may
-    be ``None`` for a one-sided range (``col >= lo`` / ``col <= hi``;
-    pruning and interior claims then test only the bounded side) — or a
-    2-tuple ``(column, values)``, an IN-list: a block prunes when every
-    point falls outside its zone range, claims interior when provably
-    single-valued on a set member, and otherwise evaluates the set once
-    per distinct value / run on the codec streams. Columns must be scalar
-    int/float/string/decimal; bound types must match the column category.
-    ``predicate`` may also be :func:`~xml2arrow_spark.operators.predicates
-    .any_of` — a DISJUNCTION of such conjunctions (DNF): a block prunes
-    only when every disjunct prunes it, claims interior only when one
-    disjunct provably matches ALL its rows, and a boundary block's row
-    mask is the OR of the per-disjunct masks. Returns a ONE-ROW DataFrame
-    ``(n_match, n_blocks, n_pruned, n_interior, n_boundary[, n_sum, n_min,
-    n_max])`` — n_match and the aggregates are exact, the rest are the
-    classification telemetry that makes the skip rates observable (the
-    no-silent-caps rule).
+    The per-file partials fold on the driver on both
+    :class:`~xml2arrow_spark.sources.files.BlockWalk` paths (driver loop
+    up to ``local_bytes``, else one fan-out job), so the call is eager.
+    Returns a ONE-ROW DataFrame ``(n_match, n_blocks, n_pruned,
+    n_interior, n_boundary[, n_sum, n_min, n_max])``: ``n_interior``
+    counts the blocks answered from metadata, ``n_boundary`` the decoded
+    ones — the classification telemetry that makes the skip rates
+    observable.
     """
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     _refuse_pending_tombstones(out_path)
-    side = read_sidecar(out_path)
-    by_name = split_schema_ddl(side["schema_ddl"])
-
+    by_name = split_schema_ddl(read_sidecar(out_path)["schema_ddl"])
     conj = _resolve_conjuncts(by_name, predicate, "count_where")
-    if agg_col is not None:
-        if agg_col not in by_name:
-            raise ValueError(
-                f"dataset lacks encoded column {agg_col!r}; "
-                f"it has {sorted(by_name)}"
-            )
-        styp = by_name[agg_col].split(None, 1)[1].strip().lower()
-        if styp not in _CW_INT_TYPES:
-            raise ValueError(
-                f"agg_col must be an integer column; {agg_col!r} is {styp}"
-            )
-    groups = getattr(conj, "groups", None)
-    single = groups is None and len(conj) == 1
-
-    def _classify(stats, zsum, s_nnull, avmin, avmax):
-        """stats: per-conjunct (vmin, vmax, n_null, block_rows) ->
-        (kind, metadata count, (sum, min, max) or None). Conservative:
-        anything unknown degrades to boundary (decode), never to a wrong
-        answer.
-
-        DNF combining (``groups`` set): pruned only when every disjunct
-        prunes. An interior claim is usable only when a disjunct provably
-        matches ALL rows (count == block_rows): the single-conjunct
-        interior-with-null-subtraction claim matches only that column's
-        non-null rows, and rows it fails may match ANOTHER disjunct, so
-        the union size is unknowable from metadata — such blocks degrade
-        to boundary. A full-rows disjunct also makes the block's stored
-        agg stats exactly the matched set's aggregates, so the trip claim
-        carries over untouched."""
-        if groups is not None:
-            res = [
-                _classify_conj(
-                    list(conj[a:b]), stats[a:b], b - a == 1,
-                    zsum, s_nnull, avmin, avmax,
-                )
-                for a, b in groups
-            ]
-            if all(k == "pruned" for k, _c, _t in res):
-                return "pruned", 0, None
-            rows = stats[0][3]
-            for k, c, trip in res:
-                if k == "interior" and c == rows:
-                    return "interior", c, trip
-            return "boundary", 0, None
-        return _classify_conj(conj, stats, single, zsum, s_nnull, avmin, avmax)
-
-    def _classify_conj(sub, stats, single, zsum, s_nnull, avmin, avmax):
-        interior = True
-        nulls: list[int] = []
-        rows = 0
-        for (col, values, lo, hi, cat), (vmin, vmax, n_null, block_rows) in zip(sub, stats):
-            rows = block_rows
-            if values is not None:
-                # IN-list conjunct: pruned when every point falls outside
-                # [vmin, vmax] (sound for truncated string bounds — vmin
-                # understates, vmax overstates); interior only when the
-                # block is provably single-valued on a set member
-                if (
-                    vmin is not None
-                    and vmax is not None
-                    and all(v < vmin or vmax < v for v in values)
-                ):
-                    return "pruned", 0, None
-                if (
-                    cat == "d"
-                    or n_null is None
-                    or vmin is None
-                    or vmin != vmax
-                    or vmin not in values
-                ):
-                    interior = False
-                else:
-                    nulls.append(n_null)
-                continue
-            # one-sided outside tests are sound even for truncation-safe
-            # string bounds (vmin understates, vmax overstates); a None
-            # bound is unbounded on that side
-            if (lo is not None and vmax is not None and vmax < lo) or (
-                hi is not None and vmin is not None and hi < vmin
-            ):
-                return "pruned", 0, None
-            # interior needs only the zone stat on each BOUNDED side
-            if (
-                cat == "d"
-                or n_null is None
-                or not (lo is None or (vmin is not None and lo <= vmin))
-                or not (hi is None or (vmax is not None and vmax <= hi))
-            ):
-                interior = False
-            else:
-                nulls.append(n_null)
-        if interior and (single or all(n == 0 for n in nulls)):
-            cnt = rows - (nulls[0] if single else 0)
-            if agg_col is None:
-                return "interior", cnt, None
-            # metadata aggregates are provable only when the matched set's
-            # stats ARE the stored whole-block stats (see docstring);
-            # presence needs the agg column's own null count
-            provable = zsum is not None and s_nnull is not None and (
-                all(n == 0 for n in nulls)
-                or (single and sub[0][0] == agg_col)
-            )
-            if provable:
-                if rows - s_nnull == 0:  # no non-null value matched
-                    return "interior", cnt, None
-                # non-null values exist, so the int zone extrema are stated
-                return "interior", cnt, (zsum, avmin, avmax)
-            return "boundary", 0, None
-        return "boundary", 0, None
-
-    def _count_boundary(pair_of):
-        """Count (+ masked sum/min/max) of one boundary block: the row mask
-        is the shared :func:`_conj_boundary_mask` (NULL/NaN rows fail,
-        matching SQL WHERE); the agg column decodes only when a row
-        actually matched. Returns (count, (sum, min, max) or None)."""
-        import pyarrow.compute as pc
-
-        mask = _conj_boundary_mask(conj, pair_of)
-        if mask is None:
-            return 0, None  # no row matched
-        cnt = int(mask.sum())
-        if agg_col is None:
-            return cnt, None
-        agg_arr = decode_column(*pair_of(agg_col))
-        vals = agg_arr.filter(pa.array(mask)).drop_null()
-        if len(vals) == 0:
-            return cnt, None
-        # unbounded python-int sum: Arrow's int64 sum kernel WRAPS on
-        # overflow -- a silently wrong aggregate; the engine refuses
-        # instead (the int64 range check happens at the fold's end)
-        v = sum(vals.to_pylist())
-        mm = pc.min_max(vals)
-        return cnt, (v, mm["min"].as_py(), mm["max"].as_py())
-
-    out_ddl = (
+    aggs = [] if agg_col is None else [agg_col]
+    for a in aggs:
+        typ = _column_type(by_name, a)
+        if typ not in _CW_INT_TYPES:
+            raise ValueError(f"agg_col must be an integer column; {a!r} is {typ}")
+    total, kinds = _driver_fold(
+        spark, BlockWalk(out_path, local_bytes),
+        _keyed_file([], aggs, conj, by_name, False), n_tasks, aggs,
+        "count_where",
+    )
+    cnt, *trips = total.get((), [0] + [(0, 0, None, None)] * len(aggs))
+    row = [cnt, *kinds]
+    for nn, sm, mn, mx in trips:
+        row += [sm if nn else None, mn, mx]
+    return local_frame(spark, (
         "n_match long, n_blocks long, n_pruned long, n_interior long, "
-        "n_boundary long, n_sum long, n_min long, n_max long"
-    )
-
-    def _merge_trip(acc, trip):
-        """Fold one block's (sum, min, max) contribution into the running
-        [sum, min, max, present] accumulator (None trip = no contribution)."""
-        if trip is None:
-            return
-        s, mn, mx = trip
-        acc[0] += s
-        acc[1] = mn if acc[1] is None else min(acc[1], mn)
-        acc[2] = mx if acc[2] is None else max(acc[2], mx)
-        acc[3] = True
-
-    view_cols = [c[0] for c in conj] + ([agg_col] if agg_col else [])
-
-    def _process_file(fpath: str, pq) -> tuple:
-        """Per-file tallies (n_match, n_blocks, n_pruned, n_interior,
-        n_boundary, sum, min, max, present). Runs identically on an
-        executor (distributed mode) or on the driver (metadata-scale
-        mode)."""
-        n_match = n_pruned = n_interior = n_boundary = 0
-        agg_acc = [0, None, None, False]
-        view = BlockStats(fpath, pq, view_cols)
-        for i in range(len(view)):
-            br = view.n_rows(i)
-            stats = [(*z, br) for z in _zones(conj, view, i)]
-            aggs = [
-                None if agg_col is None else view.stat(agg_col, f, i)
-                for f in ("zsum_i", "n_null", "vmin_i", "vmax_i")
-            ]
-            kind, c, trip = _classify(stats, *aggs)
-            if kind == "pruned":
-                n_pruned += 1
-                continue
-            if kind == "interior":
-                n_interior += 1
-            else:
-                n_boundary += 1
-                c, trip = _count_boundary(lambda col, i=i: view.payload(col, i))
-            n_match += c
-            _merge_trip(agg_acc, trip)
-        return (n_match, len(view), n_pruned, n_interior, n_boundary,
-                agg_acc[0], agg_acc[1], agg_acc[2], agg_acc[3])
-
-    def _fold(acc, t):
-        a = list(acc)
-        a[0], a[1], a[2] = a[0] + t[0], a[1] + t[1], a[2] + t[2]
-        a[3], a[4], a[5] = a[3] + t[3], a[4] + t[4], a[5] + t[5]
-        if t[8]:  # t carries a (sum, min, max) contribution
-            a[6] = t[6] if a[6] is None else min(a[6], t[6])
-            a[7] = t[7] if a[7] is None else max(a[7], t[7])
-            a[8] = True
-        return tuple(a)
-
-    zero = (0, 0, 0, 0, 0, 0, None, None, False)
-
-    def _finish(acc):
-        # SQL aggregate semantics: no non-null contribution -> NULL
-        if not acc[8]:
-            return acc[:5] + (None, None, None)
-        # per-block sums are exact python ints; refuse (ANSI-style) rather
-        # than wrap when the TOTAL leaves int64 -- never a silent misreport
-        if not (-(2**63) <= acc[5] < 2**63):
-            raise ArithmeticError(
-                f"SUM({agg_col}) over the matched rows is {acc[5]}, outside "
-                "int64; refusing rather than returning a wrapped value"
-            )
-        return acc[:8]
-
-    walk = BlockWalk(out_path, local_bytes)
-    acc = functools.reduce(
-        _fold, walk.partials(spark, _process_file, n_tasks), zero
-    )
-    df = local_frame(spark, out_ddl, [_finish(acc)])
-    return df if agg_col is not None else df.drop("n_sum", "n_min", "n_max")
+        "n_boundary long" + (", n_sum long, n_min long, n_max long" if aggs else "")
+    ), [row])
 
 
 def _key_columns(key, by_name: dict, caller: str) -> list[str]:
@@ -1022,11 +795,7 @@ def _key_columns(key, by_name: dict, caller: str) -> list[str]:
     if not keys:
         raise ValueError(f"{caller} needs at least one key column")
     for k in keys:
-        if k not in by_name:
-            raise ValueError(
-                f"dataset lacks encoded column {k!r}; it has {sorted(by_name)}"
-            )
-        typ = by_name[k].split(None, 1)[1].lower()
+        typ = _column_type(by_name, k)
         if "float" in typ or "double" in typ or "array" in typ:
             raise ValueError(
                 f"{caller} needs scalar int/string/bool/decimal key(s), got "
@@ -1036,81 +805,37 @@ def _key_columns(key, by_name: dict, caller: str) -> list[str]:
     return keys
 
 
-def _refuse_outside_int64(tally, agg_cols):
-    """Refuse a keyed-fold tally whose sum (or sum of squares) of some agg
-    column leaves int64 — the ANSI contract, checked per file so a task
-    fails before its partial is shipped, and on the driver's total.
-    Returns the tally."""
-    for kt, (_c, *trips) in tally.items():
-        for (_nn, sm, _mn, _mx, *sq), a in zip(trips, agg_cols):
-            for tot in (sm, *sq):
-                if not (-(1 << 63) <= tot < (1 << 63)):
-                    key = kt[0] if len(kt) == 1 else kt
-                    raise ArithmeticError(
-                        f"group_aggs total of {a!r} for key {key!r} is "
-                        f"outside int64 ({tot}); refusing rather than "
-                        f"wrapping (ANSI contract)"
-                    )
-    return tally
-
-
-def _keyed_fold(
-    spark, out_path, key, agg_cols, by_name, n_tasks, local_bytes, where,
-    with_sum_sq,
-):
-    """The one keyed GROUP BY behind :func:`group_count`,
-    :func:`group_aggs`/:func:`group_sum`, :func:`exact_quantiles` and
-    :func:`value_histogram`, for one key column or several: ``SELECT
-    keys, COUNT(*)[, nn/sum/min/max(a) per a in agg_cols] [WHERE ...]
-    GROUP BY keys``. With no ``agg_cols`` it is the count.
-
-    Per file, :func:`_fold_blocks_file` drops zone-pruned blocks, masks
-    straddling ones and folds the rest through
+def _keyed_file(keys, agg_cols, conj, by_name, with_sum_sq):
+    """The per-file routine of every keyed fold, ``(path,
+    pyarrow.parquet) -> (tally, kinds)``: one file's ``{key tuple: [cnt,
+    (nn, sum, mn, mx[, sumsq]) per agg]}`` and its block counts
+    (:func:`_fold_blocks_file`). Blocks that survive the zone classifier
+    fold through
     :func:`~xml2arrow_spark.operators.blocks.fold_group_aggs` (key codes
-    off the code streams, each agg column decoded once), merging by
-    :func:`~xml2arrow_spark.operators.blocks.merge_aggs`. One metadata
-    claim folds a block without its payload when every key column is
-    provably constant in it — all-null (stated ``n_null`` equals the
-    block's rows), or null-free with ``vmin == vmax`` on an int or string
-    zone (truncation-safe: stored string bounds are only equal when
-    neither was truncated) — and every agg column states its exact
-    ``zsum_i`` and ``n_null``, and its extrema when a non-null value
-    exists. Bool/decimal/temporal keys carry no usable zone pair and
-    never claim, and no block claims under ``with_sum_sq`` (no stat
-    stores a sum of squares).
+    off the code streams, each agg column decoded once), merged by
+    :func:`~xml2arrow_spark.operators.blocks.merge_aggs`; no key at all
+    is count_where's one group ``()``.
 
-    Dispatch is :meth:`~xml2arrow_spark.sources.files.BlockWalk
-    .folds_on_driver`: while block metadata bounds the groups, every
-    file's partial folds on the driver and a total outside int64 refuses
-    there; past the bound, ``fan_out`` plus one Spark combine, which sums
-    as ``decimal(38,0)`` and refuses a total outside int64 with the same
-    text. Returns ``(keys, cnt[, nn_a, sum_a, min_a, max_a[, sumsq_a]]
-    ...)`` with the keys' original types; the aggregates of a group with
-    no non-null value are NULL."""
-    caller = "group_aggs" if agg_cols else "group_count"
-    keys = _key_columns(key, by_name, caller)
-    for a in agg_cols:
-        if a not in by_name:
-            raise ValueError(
-                f"dataset lacks encoded column {a!r}; it has {sorted(by_name)}"
-            )
-        typ = by_name[a].split(None, 1)[1].strip().lower()
-        if typ not in _CW_INT_TYPES:
-            raise ValueError(
-                f"group_aggs needs integer agg columns, got {a} {typ}: "
-                f"float folds are order-dependent and these aggregates "
-                f"never approximate (count_where's rule)"
-            )
-    conj = (
-        _resolve_conjuncts(by_name, where, caller) if where is not None else None
-    )
+    One metadata claim folds a block without its payload when its matched
+    rows are proven, every key column is provably constant in it —
+    all-null (stated ``n_null`` equals the block's rows), or null-free
+    with ``vmin == vmax`` on an int or string zone (truncation-safe:
+    stored string bounds are only equal when neither was truncated) —
+    and every agg column states its exact ``zsum_i`` and ``n_null``, and
+    its extrema when a non-null value exists. Those stats are the matched
+    rows' aggregates when every row matches, or when the one filter
+    column matched its non-null rows and IS the agg column. Bool/decimal/
+    temporal keys carry no usable zone pair and never claim, and no block
+    claims under ``with_sum_sq`` (no stat stores a sum of squares)."""
     cats = []
     for k in keys:
-        typ = by_name[k].split(None, 1)[1].strip().lower()
+        typ = _column_type(by_name, k)
         cats.append("i" if typ in _CW_INT_TYPES else "s" if typ == "string" else None)
 
-    def _claim(tally, view, i):
+    def _claim(tally, view, i, rows):
         br = view.n_rows(i)
+        if rows != br and any(a != conj[0][0] for a in agg_cols):
+            return False  # the block stats are not the matched rows'
         kt = []
         for k, cat in zip(keys, cats):
             vmin, vmax, n_null = view.zone(k, i, cat)
@@ -1120,7 +845,7 @@ def _keyed_fold(
                 kt.append(vmin)
             else:
                 return False
-        row = [br]
+        row = [rows]
         for a in agg_cols:
             zsum, a_null, amin, amax = (
                 view.stat(a, f, i) for f in ("zsum_i", "n_null", "vmin_i", "vmax_i")
@@ -1140,23 +865,84 @@ def _keyed_fold(
         ).items():
             merge_aggs(tally, kt, row)
 
-    def _file(fpath, pq_mod):
-        """One file's {key tuple: [cnt, (nn, sum, mn, mx[, sumsq]) per
-        agg]}; claimed blocks never touch payload bytes."""
-        return _refuse_outside_int64(_fold_blocks_file(
+    def per_file(fpath, pq_mod):
+        return _fold_blocks_file(
             fpath, pq_mod, keys + agg_cols, conj, _block,
             None if with_sum_sq or None in cats else _claim,
-        ), agg_cols)
+        )
+
+    return per_file
+
+
+def _driver_fold(spark, walk, per_file, n_tasks, agg_cols, caller):
+    """Every file's keyed partial (:meth:`~xml2arrow_spark.sources.files
+    .BlockWalk.partials`, either path) merged on the driver: returns
+    ``(total, [blocks, pruned, claimed, decoded])``. A sum (or sum of
+    squares) outside int64 refuses. This is the one int64 rule of every
+    metadata aggregate: partials are exact python ints and only the
+    TOTAL is checked, on every path (the Spark combine raises the same
+    text)."""
+    total: dict = {}
+    kinds = [0, 0, 0, 0]
+    for part, n in walk.partials(spark, per_file, n_tasks):
+        for kt, row in part.items():
+            merge_aggs(total, kt, row)
+        kinds = [a + b for a, b in zip(kinds, n)]
+    for kt, (_c, *trips) in total.items():
+        for (_nn, sm, _mn, _mx, *sq), a in zip(trips, agg_cols):
+            for tot in (sm, *sq):
+                if not (-(1 << 63) <= tot < (1 << 63)):
+                    key = f" for key {', '.join(map(str, kt))}" if kt else ""
+                    raise ArithmeticError(
+                        f"{caller} total of {a!r}{key} is {tot}, outside "
+                        f"int64; refusing rather than wrapping (ANSI contract)"
+                    )
+    return total, kinds
+
+
+def _keyed_fold(
+    spark, out_path, key, agg_cols, by_name, n_tasks, local_bytes, where,
+    with_sum_sq,
+):
+    """The one keyed GROUP BY behind :func:`group_count`,
+    :func:`group_aggs`/:func:`group_sum`, :func:`exact_quantiles` and
+    :func:`value_histogram`, for one key column or several: ``SELECT
+    keys, COUNT(*)[, nn/sum/min/max(a) per a in agg_cols] [WHERE ...]
+    GROUP BY keys``. With no ``agg_cols`` it is the count; per file it
+    runs :func:`_keyed_file` (and :func:`count_where` runs it with no
+    key).
+
+    Dispatch is :meth:`~xml2arrow_spark.sources.files.BlockWalk
+    .folds_on_driver`: while block metadata bounds the groups, every
+    file's partial folds on the driver (:func:`_driver_fold`); past the
+    bound, ``fan_out`` plus one Spark combine, which sums as
+    ``decimal(38,0)``. Either way a total outside int64 refuses, with
+    the same text. Returns ``(keys, cnt[, nn_a, sum_a, min_a, max_a[,
+    sumsq_a]] ...)`` with the keys' original types; the aggregates of a
+    group with no non-null value are NULL."""
+    caller = "group_aggs" if agg_cols else "group_count"
+    keys = _key_columns(key, by_name, caller)
+    for a in agg_cols:
+        typ = _column_type(by_name, a)
+        if typ not in _CW_INT_TYPES:
+            raise ValueError(
+                f"group_aggs needs integer agg columns, got {a} {typ}: "
+                f"float folds are order-dependent and these aggregates "
+                f"never approximate (count_where's rule)"
+            )
+    conj = (
+        _resolve_conjuncts(by_name, where, caller) if where is not None else None
+    )
+    per_file = _keyed_file(keys, agg_cols, conj, by_name, with_sum_sq)
 
     key_ddl = ", ".join(by_name[k] for k in keys)
     walk = BlockWalk(out_path, local_bytes)
     if walk.folds_on_driver(_file_groups(keys)):
-        total: dict = {}
-        for part in walk.partials(spark, _file, n_tasks):
-            for kt, row in part.items():
-                merge_aggs(total, kt, row)
+        total, _kinds = _driver_fold(
+            spark, walk, per_file, n_tasks, agg_cols, caller
+        )
         rows = []
-        for kt, (c, *trips) in _refuse_outside_int64(total, agg_cols).items():
+        for kt, (c, *trips) in total.items():
             flat = [*kt, c]
             for nn, sm, mn, mx, *sq in trips:
                 flat += [nn, sm if nn else None, mn, mx]
@@ -1184,17 +970,19 @@ def _keyed_fold(
     ) + ")"
 
     def total(part, i, a):
-        # summed as decimal(38,0), which no int64 partials overflow, so a
-        # total outside int64 refuses with the driver fold's text, not
-        # ANSI's ARITHMETIC_OVERFLOW; NULL when the group has no value
+        # the partial sums ship as decimal(38,0), which holds any file's
+        # exact sum, so a total outside int64 refuses with the driver
+        # fold's text, not ANSI's ARITHMETIC_OVERFLOW; NULL when the
+        # group has no value
+        s = f"sum({part}{i})"
         refuse = (
-            f"raise_error(concat({lit(f'group_aggs total of {a!r} for key ')}, "
-            f"{key_txt}, ' is outside int64; refusing rather than wrapping "
-            f"(ANSI contract)'))"
+            f"raise_error(concat({lit(f'{caller} total of {a!r} for key ')}, "
+            f"{key_txt}, ' is ', cast({s} AS string), ', outside int64; "
+            f"refusing rather than wrapping (ANSI contract)'))"
         )
         return (
-            f"CASE WHEN sum(nn{i}) > 0 THEN coalesce(try_cast(sum(cast("
-            f"{part}{i} AS decimal(38,0))) AS bigint), {refuse}) END"
+            f"CASE WHEN sum(nn{i}) > 0 THEN coalesce(try_cast({s} AS bigint), "
+            f"{refuse}) END"
         )
 
     aggs = ["sum(cnt) AS cnt"]
@@ -1208,17 +996,19 @@ def _keyed_fold(
         if with_sum_sq:
             aggs.append(f"{total('ssq', i, a)} AS {q('sumsq_' + a)}")
 
-    def part_rows(tally):
+    def part_rows(part):
         # nn==0 partials carry sum 0 (never NULL) so the combine's sum
         # stays total-order deterministic; the CASE restores SQL's NULL
         # (min/max partials carry NULL, which min/max skip)
+        tally, _kinds = part
         return [(*kt, c, *(x for t in trips for x in t))
                 for kt, (c, *trips) in tally.items()]
 
     part_ddl = f"{key_ddl}, cnt bigint" + "".join(
-        f", {x}{i} bigint" for i in range(len(agg_cols)) for x in fields
+        f", {x}{i} {'decimal(38,0)' if x in ('s', 'ssq') else 'bigint'}"
+        for i in range(len(agg_cols)) for x in fields
     )
-    return walk.fan_out(spark, _file, part_rows, part_ddl, n_tasks).groupBy(
+    return walk.fan_out(spark, per_file, part_rows, part_ddl, n_tasks).groupBy(
         *keys
     ).agg(*(F.expr(e) for e in aggs))
 
@@ -1272,10 +1062,12 @@ def group_count(
     IN-list conjunct, or a list of them — a conjunction;
     either bound may be None, the same contract as :func:`count_where` /
     :func:`group_sum`) restricts the count to the matching rows: blocks
-    whose zone stats provably MISS a conjunct skip unread, blocks provably
-    INSIDE every conjunct (null-free filter columns; floats never claim)
-    count exactly as the unfiltered path, and only STRADDLING blocks
-    evaluate the predicate — codec-aware on the filter column's dict/run
+    whose zone stats provably MISS a conjunct skip unread, blocks whose
+    matched rows the zone stats prove (:func:`_classify_where`: inside
+    every conjunct with null-free filter columns, or inside one conjunct
+    whose column's non-null rows are then the match; floats never claim)
+    count from metadata like the unfiltered path, and only the other
+    blocks evaluate the predicate — codec-aware on the filter column's dict/run
     streams — and feed the row mask into the masked kernel. Groups
     with zero matching rows are absent, exactly as SQL's WHERE-before-
     GROUP-BY.
@@ -1339,7 +1131,9 @@ def group_aggs(
 
     ``where`` takes the same range / IN-list conjunctions as
     :func:`count_where` — pruned / interior / boundary classification
-    composes with the masked multi-agg kernel.
+    composes with the masked multi-agg kernel. A block inside one
+    conjunct whose column has nulls matches that column's non-null rows
+    and still claims when every agg column IS the filter column.
 
     ``with_sum_sq=True`` adds an exact ``sumsq_<c>`` per agg column (the
     sum of squares; NULL when the group has no non-null value), making
@@ -1508,11 +1302,7 @@ def top_k(
         if where is not None
         else None
     )
-    if column not in by_name:
-        raise ValueError(
-            f"dataset lacks encoded column {column!r}; it has {sorted(by_name)}"
-        )
-    col_type = by_name[column].split(None, 1)[1].strip().lower()
+    col_type = _column_type(by_name, column)
     if col_type in ("float", "double", "real"):
         raise ValueError(
             f"top_k refuses float columns ({column} is {col_type}): zone "
@@ -1546,18 +1336,19 @@ def top_k(
         return t < b if descending else b < t
 
     def _scan_blocks(fpath, pq_mod):
-        """One file's blocks as [(rank bound, kind, view, i)]: the bound
-        (None = unknown, never skippable) and the predicate kind come off
-        the file's BlockStats view; payload is read only on the first
-        block the walk actually folds."""
+        """One file's blocks as [(rank bound, matched, view, i)]: the
+        bound (None = unknown, never skippable) and the rows the
+        predicate provably matches (:func:`_classify_where`; 0 = pruned,
+        None = unknown) come off the file's BlockStats view; payload is
+        read only on the first block the walk actually folds."""
         view = BlockStats(
             fpath, pq_mod, [column] + [c[0] for c in conj or ()]
         )
         return [
             (
                 view.stat(column, bound_field, i) if bound_field else None,
-                None if conj is None
-                else _classify_where(conj, _zones(conj, view, i)),
+                view.n_rows(i) if conj is None
+                else _classify_where(conj, _zones(conj, view, i), view.n_rows(i)),
                 view,
                 i,
             )
@@ -1566,11 +1357,11 @@ def top_k(
 
     def _visit(order, tally, kth0=None):
         """Fold blocks in rank order into ``tally`` until the threshold
-        closes; ``order`` is [(bound, kind, view, i)] with unknown bounds
-        first. Returns the final k-th value. Predicate-pruned blocks
-        ``continue`` (the predicate skip is not rank-ordered); boundary
-        blocks evaluate the conjunction codec-aware and fold MASKED
-        tallies — the rank skip stays sound under a mask, because masking
+        closes; ``order`` is [(bound, matched, view, i)] with unknown
+        bounds first. Returns the final k-th value. Predicate-pruned
+        blocks ``continue`` (the predicate skip is not rank-ordered);
+        blocks not every row of which matches evaluate the conjunction
+        codec-aware and fold MASKED tallies — the rank skip stays sound under a mask, because masking
         only removes rows and the zone bound still dominates every
         surviving value.
 
@@ -1584,16 +1375,14 @@ def top_k(
         block bounded exactly at it may hold the very copies the global
         top k needs."""
         kth = None
-        for b, kind, view, i in order:
+        for b, matched, view, i in order:
             if b is not None and (
                 (kth is not None and not _beats(b, kth))
                 or (kth0 is not None and _beats(kth0, b))
             ):
                 break  # rank-ordered: every later block skips too
-            if kind == "pruned":
-                continue  # predicate skip: NOT rank-ordered, keep walking
             mask = None
-            if kind == "boundary":
+            if matched != view.n_rows(i):
                 mask = _conj_boundary_mask(
                     conj, lambda c, view=view, i=i: view.payload(c, i)
                 )
@@ -1616,10 +1405,10 @@ def top_k(
         return kth
 
     def _rank_order(items):
-        """[(bound, kind, key, i)] -> unknown-bound blocks first (never
-        skippable), then rank order; predicate-pruned blocks drop here —
-        they can never contribute, whatever their rank."""
-        items = [e for e in items if e[1] != "pruned"]
+        """[(bound, matched, view, i)] -> unknown-bound blocks first
+        (never skippable), then rank order; predicate-pruned blocks drop
+        here — they can never contribute, whatever their rank."""
+        items = [e for e in items if e[1] != 0]
         unknown = [e for e in items if e[0] is None]
         known = sorted(
             (e for e in items if e[0] is not None),
@@ -1772,7 +1561,7 @@ def exact_quantiles(
             # ceil(q*n/1000), floored at rank 1 so q=0 returns the min
             rank = max(1, (q * n + 999) // 1000)
             rows.append((q, values[bisect.bisect_left(cums, rank)]))
-    vtype = by_name[column].split(None, 1)[1]
+    vtype = _column_type(by_name, column)
     return local_frame(spark, f"q_milli bigint, value {vtype}", rows)
 
 
@@ -1822,11 +1611,7 @@ def value_histogram(
     _refuse_pending_tombstones(out_path)
     side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
-    if column not in by_name:
-        raise ValueError(
-            f"dataset lacks encoded column {column!r}; it has {sorted(by_name)}"
-        )
-    col_type = by_name[column].split(None, 1)[1].strip().lower()
+    col_type = _column_type(by_name, column)
     if col_type not in _CW_INT_TYPES:
         raise ValueError(
             f"value_histogram needs an integer column, got {column} "
@@ -1906,11 +1691,7 @@ def time_bucket_count(
     _refuse_pending_tombstones(out_path)
     side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
-    if column not in by_name:
-        raise ValueError(
-            f"dataset lacks encoded column {column!r}; it has {sorted(by_name)}"
-        )
-    col_type = by_name[column].split(None, 1)[1].strip().lower()
+    col_type = _column_type(by_name, column)
     if col_type not in (
         *_CW_INT_TYPES, "timestamp", "timestamp_ntz", "date"
     ):
@@ -1941,15 +1722,15 @@ def time_bucket_count(
             )
         return b
 
-    def _claim(tally, view, i):
+    def _claim(tally, view, i, rows):
         """Fold one block's (bucket, count) from zone metadata alone, or
-        return False: sound when the stated tick bounds land in the SAME
-        bucket (every non-null row is between them, hence in that
-        bucket); all-null blocks contribute nothing (NULLs never
-        count)."""
+        return False: sound when every row matches ``where`` and the
+        stated tick bounds land in the SAME bucket (every non-null row is
+        between them, hence in that bucket); all-null blocks contribute
+        nothing (NULLs never count)."""
         vmin, vmax, n_null = view.zone(column, i, "i")
         br = view.n_rows(i)
-        if n_null is None:
+        if n_null is None or rows != br:
             return False
         if n_null == br:
             return True  # provably empty contribution
@@ -1997,7 +1778,9 @@ def time_bucket_count(
     def _file_buckets(fpath, pq_mod):
         """One file's {bucket: count}; claimable blocks never touch
         payload."""
-        return _fold_blocks_file(fpath, pq_mod, [column], conj, _tally, _claim)
+        return _fold_blocks_file(
+            fpath, pq_mod, [column], conj, _tally, _claim
+        )[0]
 
     walk = BlockWalk(out_path, local_bytes)
     total: dict = {}
@@ -2489,10 +2272,7 @@ def decode_dataset(
     read_names = out_names + [c for c, *_ in rfs]
     zone_names = [c for c, *_ in zconj]
     for c in read_names[len(out_names):] + zone_names:
-        if c not in by_name:
-            raise ValueError(
-                f"dataset lacks encoded column {c!r}; it has {sorted(by_name)}"
-            )
+        _column_type(by_name, c)
 
     def decode_files(files) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -2502,7 +2282,9 @@ def decode_dataset(
             keep = None
             if zconj:
                 def keep(i, view=view):
-                    return _classify_where(zconj, _zones(zconj, view, i)) != "pruned"
+                    return _classify_where(
+                        zconj, _zones(zconj, view, i), view.n_rows(i)
+                    ) != 0
             yield from decode_blocks(view, out_names, rfs, keep)
 
     bins = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)

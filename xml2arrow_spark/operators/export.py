@@ -127,7 +127,7 @@ def export_slice(
     (and :func:`read_export`) refuse the debris.
     """
     from xml2arrow_spark.manifest import read_sidecar
-    from xml2arrow_spark.operators.dataset import decode_dataset
+    from xml2arrow_spark.operators.dataset import _column_type, decode_dataset
     from xml2arrow_spark.operators.encode import split_schema_ddl
     from xml2arrow_spark.pipeline.sampling import shuffle_order
 
@@ -145,11 +145,7 @@ def export_slice(
 
     side = read_sidecar(dataset_path)
     by_name = split_schema_ddl(side["schema_ddl"])
-    if id_col not in by_name:
-        raise ValueError(
-            f"dataset lacks encoded column {id_col!r}; it has {sorted(by_name)}"
-        )
-    id_type = by_name[id_col].split(None, 1)[1].strip().lower()
+    id_type = _column_type(by_name, id_col)
     if id_type not in ("tinyint", "smallint", "int", "bigint", "string"):
         raise EncodeTypeError(
             f"export_slice needs an integer or string id column for "

@@ -168,6 +168,7 @@ def group_distinct_est(
     from xml2arrow_spark.operators.blocks import decode_column, group_codes
     from xml2arrow_spark.operators.dataset import (
         _CW_INT_TYPES,
+        _column_type,
         _fold_blocks_file,
         _key_columns,
         _refuse_pending_tombstones,
@@ -185,12 +186,8 @@ def group_distinct_est(
     _refuse_pending_tombstones(out_path)
     side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
-    if column not in by_name:
-        raise ValueError(
-            f"dataset lacks encoded column {column!r}; it has {sorted(by_name)}"
-        )
+    val_type = _column_type(by_name, column)
     key_cols = _key_columns(key, by_name, "group_distinct_est")
-    val_type = by_name[column].split(None, 1)[1].strip().lower()
     if val_type not in _CW_INT_TYPES:
         raise ValueError(
             f"group_distinct_est needs an integer value column, got "
@@ -233,7 +230,7 @@ def group_distinct_est(
         """One file's {key_or_None: sorted <=k smallest distinct hashes}."""
         return _fold_blocks_file(
             fpath, pq_mod, key_cols + [column], conj, _block_hashes
-        )
+        )[0]
 
     def _estimate(hashes: list) -> int:
         n_h = len(hashes)
@@ -313,6 +310,7 @@ def group_distinct(
     from xml2arrow_spark.operators.blocks import decode_column, group_codes
     from xml2arrow_spark.operators.dataset import (
         _CW_INT_TYPES,
+        _column_type,
         _fold_blocks_file,
         _key_columns,
         _refuse_pending_tombstones,
@@ -327,12 +325,8 @@ def group_distinct(
     _refuse_pending_tombstones(out_path)
     side = read_sidecar(out_path)
     by_name = split_schema_ddl(side["schema_ddl"])
-    if column not in by_name:
-        raise ValueError(
-            f"dataset lacks encoded column {column!r}; it has {sorted(by_name)}"
-        )
+    val_type = _column_type(by_name, column)
     key_cols = _key_columns(key, by_name, "group_distinct")
-    val_type = by_name[column].split(None, 1)[1].strip().lower()
     val_is_str = val_type == "string"
     if not val_is_str and val_type not in _CW_INT_TYPES:
         raise ValueError(
@@ -408,7 +402,7 @@ def group_distinct(
         """One file's {key_or_None: set of distinct values}."""
         return _fold_blocks_file(
             fpath, pq_mod, key_cols + [column], conj, _block_pairs
-        )
+        )[0]
 
     key_ddl = ", ".join(by_name[kc] for kc in key_cols)
     walk = BlockWalk(out_path, local_bytes)

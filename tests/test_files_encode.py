@@ -455,6 +455,57 @@ def test_one_keyed_fold():
                      "decode_dataset"}
 
 
+def _engine_sites(want) -> set[tuple[str, str]]:
+    """``(module path, top-level def)`` of every engine node ``want(node)``
+    accepts; a node outside any def is attributed to ``<module>``."""
+    import xml2arrow_spark
+
+    root = os.path.dirname(xml2arrow_spark.__file__)
+    sites = set()
+    for dirpath, _dirs, names in os.walk(root):
+        for name in sorted(names):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read())
+            for top in tree.body:
+                scope = getattr(top, "name", "<module>")
+                sites.update((rel, scope) for n in ast.walk(top) if want(n))
+    return sites
+
+
+def _calls(*names):
+    def want(node):
+        if not isinstance(node, ast.Call):
+            return False
+        f = node.func
+        return getattr(f, "id", None) in names or getattr(f, "attr", None) in names
+    return want
+
+
+def test_one_predicate_path():
+    """Lint, one way to evaluate a predicate: in operators/ only
+    ``blocks.py::_code_stream`` splits a codec's sections (the match and
+    group kernels read every dictionary or run codec through it); only
+    ``encode.py::apply_row_filters`` calls the match kernels, so every
+    ``where=`` and ``row_filter=`` mask is its mask; and only
+    predicates.py reads an ``any_of``'s ``.disjuncts`` (its ``dnf`` is
+    the one flattener)."""
+    split = {
+        s for s in _engine_sites(_calls("split_sections"))
+        if s[0].startswith("operators/")
+    }
+    assert split == {("operators/blocks.py", "_code_stream")}
+    match = _engine_sites(_calls("match_mask_column", "match_decode_column"))
+    assert match == {("operators/encode.py", "apply_row_filters")}
+    disjuncts = _engine_sites(
+        lambda n: isinstance(n, ast.Attribute) and n.attr == "disjuncts"
+    )
+    assert {m for m, _fn in disjuncts} == {"operators/predicates.py"}
+
+
 def test_fused_encode_roundtrip_bit_identical(spark, token_dir):
     blocks = encode_parquet(spark, token_dir, n_tasks=3)
     decoded = decode_table(blocks, TOKENS_DDL)

@@ -260,3 +260,45 @@ def test_dataset_row_filter_conjunction(spark, tmp_path):
     assert {r["doc_id"] for r in got.collect()} == {
         r["doc_id"] for r in expect.collect()
     }
+
+
+@pytest.mark.parametrize("layout", ["nested", "wide"])
+def test_float32_filters_compare_in_float64(spark, layout, tmp_path):
+    """A float32 column answers every filter form in float64, as its zone
+    stats do: 0.1 is not a float32 value, so ``row_filter=("x", [0.1])``,
+    ``row_filter=("x", 0.1, 0.1)`` and ``count_where(("x", [0.1]))`` all
+    match no row (SQL against a DOUBLE 0.1 agrees), while 0.5, which
+    float32 holds exactly, matches the same rows in every form."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from xml2arrow_spark.operators.dataset import (
+        count_where,
+        decode_dataset,
+        encode_parquet_dataset,
+    )
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "ds")
+    os.makedirs(src)
+    x = np.array([0.1, 0.5, 1.0, 0.1] * 50, dtype=np.float32)
+    pq.write_table(
+        pa.table({"id": pa.array(np.arange(x.size)), "x": pa.array(x)}),
+        os.path.join(src, "part-0.parquet"),
+    )
+    man = CodecManifest.auto_for(
+        from_arrow_schema(pq.read_schema(os.path.join(src, "part-0.parquet"))),
+        block_rows=64,
+    )
+    encode_parquet_dataset(spark, src, out, manifest=man, layout=layout)
+
+    for v, expect in ((0.1, 0), (0.5, 50)):
+        assert decode_dataset(spark, out, row_filter=("x", [v])).count() == expect
+        assert decode_dataset(spark, out, row_filter=("x", v, v)).count() == expect
+        for kw in ({}, {"local_bytes": 0}):
+            got = count_where(spark, out, ("x", [v]), **kw).collect()[0]
+            assert got["n_match"] == expect, (v, kw)

@@ -490,12 +490,16 @@ def decode_column(meta_json: str, payload: bytes) -> pa.Array:
 def row_match_mask(arr: pa.Array, values, lo, hi):
     """Boolean match mask for the filter column, or None if no row matches
     (block skip). Null values never match; NaN never matches a finite
-    range (IEEE comparisons). Temporal columns compare as epoch ticks in
-    their storage unit (timestamp -> unit count, date32 -> days) — bounds
-    and IN-list values may be those integers or datetime/date objects
-    (converted through pyarrow's scalar semantics)."""
+    range (IEEE comparisons). Floating columns compare in float64, as the
+    zone stats and the zone classifier do: an IN-list is never cast down
+    to a float32 column's precision. Temporal columns compare as epoch
+    ticks in their storage unit (timestamp -> unit count, date32 -> days)
+    — bounds and IN-list values may be those integers or datetime/date
+    objects (converted through pyarrow's scalar semantics)."""
     import pyarrow.compute as pc
 
+    if pa.types.is_floating(arr.type) and arr.type != pa.float64():
+        arr = arr.cast(pa.float64())
     if pa.types.is_timestamp(arr.type) or pa.types.is_date(arr.type):
         t = arr.type
         itype = pa.int64() if pa.types.is_timestamp(t) else pa.int32()
@@ -529,27 +533,6 @@ def row_match_mask(arr: pa.Array, values, lo, hi):
     return mask
 
 
-def _gather_strdata(sd: StrData, idx: np.ndarray) -> StrData:
-    """Gather rows ``idx`` out of a StrData stream (row order preserved by
-    the caller). Same flattened repeat+cumsum byte gather as dict_str
-    decode, over the selected rows only."""
-    lengths = sd.lengths()
-    out_lengths = lengths[idx]
-    offsets = np.zeros(idx.size + 1, dtype=np.int64)
-    np.cumsum(out_lengths, out=offsets[1:])
-    total = int(offsets[-1])
-    if total:
-        data_arr = np.frombuffer(sd.data, dtype=np.uint8)
-        starts = sd.offsets[idx]
-        row_of = np.repeat(np.arange(idx.size), out_lengths)
-        j = np.arange(total, dtype=np.int64)
-        src = starts[row_of] + (j - offsets[row_of])
-        data = data_arr[src].tobytes()
-    else:
-        data = b""
-    return StrData(offsets=offsets, data=data)
-
-
 def header_distinct(meta_json: str) -> int | None:
     """How many distinct non-null values a block's codec header proves at
     most, without its payload: ``card`` for ``dict``/``dict_str``,
@@ -573,7 +556,8 @@ def _code_stream(meta: dict, vpayload: bytes):
     """``(dictionary, codes)`` straight off a ``dict``, ``rle``, ``pdict``
     or ``dict_str`` value stream of an int/str block — a pyarrow array of
     candidate key values and one int64 code per NON-NULL row — or None
-    for every other codec. ``rle`` slots are runs, so its dictionary may
+    for every other codec. The one code-stream reader of the group and
+    match kernels. ``rle`` slots are runs, so its dictionary may
     repeat a value; the others hold each value once. A ``pdict`` top code
     is its own slot, and an escape row maps to the uniques of the
     exception stream after the top table."""
@@ -896,18 +880,17 @@ def match_decode_column(meta_json: str, payload: bytes, values, lo, hi):
     ``decode_column(meta_json, payload).filter(mask)`` value-for-value
     (pinned by tests/test_match_decode.py).
 
-    For dictionary- and run-compressed codecs the predicate is evaluated
-    once per DISTINCT VALUE (``dict``/``pdict``/``dict_str``) or per RUN
-    (``rle``) — through the SAME pyarrow kernels the row path uses, so the
-    semantics (type casts, null handling, string collation) cannot drift —
-    and mapped onto rows through the integer code stream: a zero-match
-    block skips without materializing a single value, and a matching
-    ``dict``/``rle``/``dict_str`` block gathers ONLY the selected rows
-    (operating on compressed data, Abadi et al., "Integrating Compression
-    and Execution in Column-Oriented Database Systems", SIGMOD 2006; the
-    reference's analog is its refusal to build columns a query never
-    reads, /root/reference/src/xml_parser.rs:1061-1110). Every other
-    codec falls back to decode + mask — identical result, no shortcut.
+    Every code-stream codec (``dict``, ``rle``, ``pdict``, ``dict_str``)
+    goes through the one reader :func:`_code_stream`: the predicate is
+    evaluated once per dictionary slot or run — through the SAME pyarrow
+    kernel the row path uses (:func:`row_match_mask`), so the semantics
+    (type casts, null handling, string collation) cannot drift — and
+    mapped onto rows through the code stream. A block no slot or no row
+    matches returns before a single value materializes, and a matching
+    block takes ONLY the selected rows out of the dictionary (operating on
+    compressed data, Abadi et al., "Integrating Compression and Execution
+    in Column-Oriented Database Systems", SIGMOD 2006). Every other codec
+    decodes and masks — identical result, no shortcut.
     """
     out = _match_column_impl(meta_json, payload, values, lo, hi, True)
     return out
@@ -933,140 +916,30 @@ def _match_column_impl(meta_json: str, payload: bytes, values, lo, hi,
         )
         return _match_column_impl(meta["inner"], raw, values, lo, hi,
                                   want_selected)
-
-    dense = None  # match over the dense (non-null) value stream
-    selected = None  # pre-gathered selected rows (fast paths that can)
-    vmask = None
-    kind = meta["kind"]
-
-    if kind in ("int", "str"):
-        from xml2arrow_spark.codecs.base import INT_DTYPES, split_sections
-
+    stream = None
+    if meta["kind"] in ("int", "str"):
         vmask, vpayload = _unpack_validity(meta, payload)
-
-        if kind == "int":
-            vm = meta["values_meta"]
-            pa_type = _PA_INT[meta["dtype"]]
-            if vm["codec"] == "dict":
-                np_dtype = INT_DTYPES[vm["dtype"]]
-                parts = split_sections(vm, vpayload)
-                uniq = _for_unpack(parts["dict"], vm["card"], vm["uref"], vm["uwidth"])
-                dmask = row_match_mask(
-                    pa.array(uniq.astype(np_dtype), type=pa_type), values, lo, hi
-                )
-                if dmask is None:
-                    return None
-                dmatch = dmask.to_numpy(zero_copy_only=False)
-                idx = bitpack.unpack_uint(parts["indices"], vm["n"], vm["iwidth"])
-                dense = dmatch[idx]
-                if not dense.any():
-                    return None
-                if want_selected:
-                    selected = pa.array(
-                        uniq[idx[dense]].astype(np_dtype), type=pa_type
-                    )
-            elif vm["codec"] == "rle":
-                np_dtype = INT_DTYPES[vm["dtype"]]
-                parts = split_sections(vm, vpayload)
-                k = vm["n_runs"]
-                run_values = _for_unpack(
-                    parts["run_values"], k, vm["vref"], vm["vwidth"]
-                )
-                rmask = row_match_mask(
-                    pa.array(run_values.astype(np_dtype), type=pa_type), values, lo, hi
-                )
-                if rmask is None:
-                    return None
-                rmatch = rmask.to_numpy(zero_copy_only=False)
-                run_lengths = _for_unpack(
-                    parts["run_lengths"], k, vm["lref"], vm["lwidth"]
-                )
-                dense = np.repeat(rmatch, run_lengths)
-                if not dense.any():
-                    return None
-                if want_selected:
-                    # matching rows in row order == matching runs in run order
-                    selected = pa.array(
-                        np.repeat(run_values[rmatch], run_lengths[rmatch]).astype(
-                            np_dtype
-                        ),
-                        type=pa_type,
-                    )
-            elif vm["codec"] == "pdict" and vm["n"]:
-                np_dtype = INT_DTYPES[vm["dtype"]]
-                parts = split_sections(vm, vpayload)
-                # same ref-in-np_dtype arithmetic as decode_pdict
-                dict_vals = _for_unpack(
-                    parts["dict"], vm["n_dict"], vm["ref"], vm["w_exc"], np_dtype
-                )
-                dmask = row_match_mask(
-                    pa.array(dict_vals, type=pa_type), values, lo, hi
-                )
-                emask = None
-                if vm["n_exc"]:
-                    exc_vals = _for_unpack(
-                        parts["exceptions"], vm["n_exc"], vm["ref"],
-                        vm["w_exc"], np_dtype,
-                    )
-                    emask = row_match_mask(
-                        pa.array(exc_vals, type=pa_type), values, lo, hi
-                    )
-                if dmask is None and emask is None:
-                    # neither the dictionary nor the exception stream holds
-                    # a match: skip before the code stream is even unpacked
-                    return None
-                codes = bitpack.unpack_uint(parts["codes"], vm["n"], vm["w"])
-                escape = (1 << vm["w"]) - 1
-                dense = np.zeros(vm["n"], dtype=bool)
-                nonesc = codes != escape
-                if dmask is not None:
-                    dmatch = dmask.to_numpy(zero_copy_only=False)
-                    dense[nonesc] = dmatch[codes[nonesc]]
-                if emask is not None:
-                    dense[~nonesc] = emask.to_numpy(zero_copy_only=False)
-                if not dense.any():
-                    return None
-                # selected rows materialize via the decode fallback below
-        elif kind == "str":
-            sm = meta["str_meta"]
-            if sm["codec"] == "dict_str":
-                from xml2arrow_spark.codecs.strings import decode_plain_str
-
-                parts = split_sections(sm, vpayload)
-                dict_sd = decode_plain_str(sm["dict_meta"], parts["dict"])
-                large = meta.get("large", False)
-                dmask = row_match_mask(
-                    strdata_to_arrow(dict_sd, large=large), values, lo, hi
-                )
-                if dmask is None:
-                    return None
-                dmatch = dmask.to_numpy(zero_copy_only=False)
-                idx = bitpack.unpack_uint(parts["indices"], sm["n"], sm["iwidth"])
-                dense = dmatch[idx]
-                if not dense.any():
-                    return None
-                if want_selected:
-                    selected = strdata_to_arrow(
-                        _gather_strdata(dict_sd, idx[dense]), large=large
-                    )
-
-    if dense is None:
-        # no codec shortcut: decode + mask (the original path)
+        stream = _code_stream(meta, vpayload)
+    if stream is None:  # no code stream: decode + mask
         arr = decode_column(meta_json, payload)
         mask = row_match_mask(arr, values, lo, hi)
         if mask is None:
             return None
         return mask, (arr.filter(mask) if want_selected else None)
 
+    dictionary, idx = stream
+    dmask = row_match_mask(dictionary, values, lo, hi)
+    if dmask is None:
+        return None
+    dense = dmask.to_numpy(zero_copy_only=False)[idx]
+    if not dense.any():
+        return None
     if vmask is None:
         full = dense
     else:
         full = np.zeros(meta["n"], dtype=bool)
         full[vmask] = dense
-    mask = pa.array(full)
-    if want_selected and selected is None:
-        selected = decode_column(meta_json, payload).filter(mask)
-    return mask, selected
+    return pa.array(full), (dictionary.take(idx[dense]) if want_selected else None)
 
 
 def _validity_buffer(mask: np.ndarray | None):

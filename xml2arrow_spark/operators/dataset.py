@@ -50,7 +50,7 @@ from xml2arrow_spark.operators.encode import (  # noqa: F401 (resolve_manifest_p
     _STAT_FIELDS,
     _STATS_PA_SCHEMA,
     _ZONE_SUFFIXES,
-    decode_column,
+    apply_row_filters,
     resolve_manifest_parquet,
     zone_col,
 )
@@ -409,26 +409,22 @@ def _resolve_conjuncts(by_name: dict, predicate, caller: str):
 
     ``predicate`` may also be an :class:`~xml2arrow_spark.operators
     .predicates.AnyOf` (``any_of(...)``) — a DISJUNCTION of such
-    conjunctions (DNF). The resolved form is then the flat conjunct list
-    across every disjunct with the disjunct spans attached
-    (:class:`~xml2arrow_spark.operators.predicates.DnfConjuncts`), so the
-    per-conjunct stats fetching at every call site is unchanged and only
-    the classifier/mask combiners see the OR structure."""
-    import math
+    conjunctions (DNF), flattened by the one flattener
+    :func:`~xml2arrow_spark.operators.predicates.dnf` into the flat
+    conjunct list with the disjunct spans attached, so the per-conjunct
+    stats fetching at every call site is unchanged and only the zone
+    classifier :func:`_classify_where` and the row evaluator
+    :func:`~xml2arrow_spark.operators.encode.apply_row_filters` (which
+    reads each resolved conjunct's ``(col, values, lo, hi)``) see the OR
+    structure."""
+    from xml2arrow_spark.operators.predicates import dnf
 
+    return dnf(predicate, lambda d: _resolve_conjunction(by_name, d, caller))
+
+
+def _resolve_conjunction(by_name: dict, predicate, caller: str):
+    """:func:`_resolve_conjuncts` of one conjunction (no ``any_of``)."""
     from xml2arrow_spark.operators.encode import normalize_zone_filters
-    from xml2arrow_spark.operators.predicates import AnyOf, DnfConjuncts
-
-    if isinstance(predicate, AnyOf):
-        flat: list[tuple] = []
-        groups: list[tuple[int, int]] = []
-        for d in predicate.disjuncts:
-            sub = _resolve_conjuncts(by_name, d, caller)
-            groups.append((len(flat), len(flat) + len(sub)))
-            flat.extend(sub)
-        if len(groups) == 1:  # any_of(x) IS x — no OR machinery
-            return flat
-        return DnfConjuncts(flat, groups)
 
     preds = normalize_zone_filters(predicate)
     if not preds:
@@ -570,58 +566,6 @@ def _classify_where(conj, stats, rows):
     return rows - stats[0][2] if len(conj) == 1 else None
 
 
-def _conj_boundary_mask(conj, pair_of):
-    """Evaluate a conjunction over one straddling block: ``pair_of(col)``
-    yields the filter column's (meta_json, payload). Int/string conjuncts
-    ride the codec-aware mask kernel (match_mask_column — dictionary/run
-    streams, values never materialize where the codec allows; IN-lists
-    evaluate once per distinct value / run through the same kernel); float
-    conjuncts decode and compare as float64. NULL/NaN rows fail, matching
-    SQL WHERE. Returns a numpy row mask, or None when no row matches (the
-    block contributes nothing).
-
-    Under a DNF predicate the row mask is the OR of the per-disjunct
-    conjunction masks (a row matches when any disjunct does; NULL/NaN
-    rows fail every disjunct, matching SQL WHERE on a DNF)."""
-    import pyarrow.compute as pc
-
-    from xml2arrow_spark.operators.encode import match_mask_column
-
-    groups = getattr(conj, "groups", None)
-    if groups is not None:
-        import numpy as np
-
-        out = None
-        for a, b in groups:
-            m = _conj_boundary_mask(list(conj[a:b]), pair_of)
-            if m is not None:
-                out = m if out is None else np.logical_or(out, m)
-        return out
-
-    mask = None
-    for col, values, lo, hi, cat in conj:
-        if cat == "d":
-            arr = pc.cast(decode_column(*pair_of(col)), pa.float64())
-            if values is not None:
-                m = pc.fill_null(pc.is_in(
-                    arr, value_set=pa.array(values, type=pa.float64())
-                ), False)
-            else:
-                m = None
-                if lo is not None:
-                    m = pc.greater_equal(arr, pa.scalar(lo))
-                if hi is not None:
-                    mh = pc.less_equal(arr, pa.scalar(hi))
-                    m = mh if m is None else pc.and_kleene(m, mh)
-        else:
-            m = match_mask_column(*pair_of(col), values, lo, hi)
-            if m is None:
-                return None
-        mask = m if mask is None else pc.and_kleene(mask, m)
-    out = pc.fill_null(mask, False).to_numpy(zero_copy_only=False)
-    return out if out.any() else None
-
-
 def _zones(conj, view, i):
     """Block ``i``'s zone triple per conjunct, read off a
     :class:`~xml2arrow_spark.operators.encode.BlockStats` view."""
@@ -641,7 +585,9 @@ def _fold_blocks_file(fpath, pq_mod, cols, conj, on_block, claim=None):
     which folds those ``rows`` from metadata alone and returns True, or
     returns False; every other block decodes: ``on_block(tally, pairs,
     mask)`` with one (meta, payload) pair per ``cols`` entry, ``mask``
-    the conjunction's row mask, None only when every row matches.
+    the conjunction's row mask from
+    :func:`~xml2arrow_spark.operators.encode.apply_row_filters` as a
+    numpy array, None only when every row matches.
     Returns ``(tally, [blocks, pruned, claimed, decoded])``; a decoded
     block in which no row matched counts as decoded."""
     view = BlockStats(fpath, pq_mod, cols + [c[0] for c in conj or ()])
@@ -661,9 +607,10 @@ def _fold_blocks_file(fpath, pq_mod, cols, conj, on_block, claim=None):
         kinds[3] += 1
         mask = None
         if rows != n:
-            mask = _conj_boundary_mask(conj, lambda c, i=i: view.payload(c, i))
-            if mask is None:
+            fr = apply_row_filters(conj, lambda c, i=i: view.payload(c, i), ())
+            if fr is None:
                 continue
+            mask = fr[0].to_numpy(zero_copy_only=False)
         on_block(tally, [view.payload(c, i) for c in cols], mask)
     return tally, kinds
 
@@ -1383,11 +1330,12 @@ def top_k(
                 break  # rank-ordered: every later block skips too
             mask = None
             if matched != view.n_rows(i):
-                mask = _conj_boundary_mask(
-                    conj, lambda c, view=view, i=i: view.payload(c, i)
+                fr = apply_row_filters(
+                    conj, lambda c, view=view, i=i: view.payload(c, i), ()
                 )
-                if mask is None:
+                if fr is None:
                     continue  # no row matched the predicate
+                mask = fr[0].to_numpy(zero_copy_only=False)
             vals, counts, _n_null = value_counts_column(
                 *view.payload(column, i), mask=mask
             )
@@ -1850,26 +1798,19 @@ def top_k_rows(
         ).where(F.lit(False))
     thr = tk[-1][0]  # the k-th ranked value (or the worst, when < k exist)
     rf = (column, thr, None) if descending else (column, None, thr)
-    row_filters = [rf]
-    zone_filters = [rf]
+    row_filters = zone_filters = [rf]
     if where is not None:
         from xml2arrow_spark.operators.encode import normalize_zone_filters
-        from xml2arrow_spark.operators.predicates import AnyOf, any_of as _any_of
+        from xml2arrow_spark.operators.predicates import AnyOf, conjoin
 
-        if isinstance(where, AnyOf):
-            # distribute the rank threshold into each disjunct:
-            # thr AND (D1 OR D2)  ==  (thr AND D1) OR (thr AND D2);
-            # the threshold range still zone-prunes on its own, the
-            # disjuncts' ranges cannot AND-prune so they stay row-level
-            row_filters = _any_of(*[
-                [rf] + ([d] if isinstance(d, tuple) else list(d))
-                for d in where.disjuncts
-            ])
-        else:
-            for pred in normalize_zone_filters(where):
-                row_filters.append(pred)
-                if len(pred) == 3:  # range conjuncts also prune blocks
-                    zone_filters.append(pred)
+        # thr AND where; the threshold range zone-prunes on its own, and
+        # so do a conjunction's range conjuncts (a disjunct's ranges
+        # cannot AND-prune, so they stay row-level)
+        row_filters = conjoin(rf, where)
+        if not isinstance(where, AnyOf):
+            zone_filters = [rf] + [
+                p for p in normalize_zone_filters(where) if len(p) == 3
+            ]
     return decode_dataset(
         spark, out_path,
         n_tasks=n_tasks,

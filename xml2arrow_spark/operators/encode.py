@@ -895,31 +895,19 @@ def normalize_zone_filters(zone_filter) -> list[tuple]:
     (``.groups``), and the pruning consumers keep a block when ANY
     disjunct could match it (ranges with at least one bound — no IN-list
     shape; use ``prune_blocks_any`` for points)."""
-    from xml2arrow_spark.operators.predicates import AnyOf, DnfConjuncts
+    from xml2arrow_spark.operators.predicates import AnyOf, dnf
 
-    if zone_filter is None:
-        return []
+    zfs = dnf(zone_filter, lambda spec: (
+        [] if spec is None else [spec] if isinstance(spec, tuple) else list(spec)
+    ))
     if isinstance(zone_filter, AnyOf):
-        flat: list[tuple] = []
-        groups: list[tuple[int, int]] = []
-        for d in zone_filter.disjuncts:
-            sub = normalize_zone_filters(d)
-            if not sub:
-                raise ValueError("any_of disjuncts must be non-empty")
-            for t in sub:
-                if len(t) != 3 or (t[1] is None and t[2] is None):
-                    raise ValueError(
-                        "zone-filter disjuncts must be (column, lo, hi) "
-                        f"ranges with at least one bound, got {t!r}"
-                    )
-            groups.append((len(flat), len(flat) + len(sub)))
-            flat.extend(sub)
-        if len(groups) == 1:  # any_of(x) IS x
-            return flat
-        return DnfConjuncts(flat, groups)
-    if isinstance(zone_filter, tuple):
-        return [zone_filter]
-    return list(zone_filter)
+        for t in zfs:
+            if len(t) != 3 or (t[1] is None and t[2] is None):
+                raise ValueError(
+                    "zone-filter disjuncts must be (column, lo, hi) "
+                    f"ranges with at least one bound, got {t!r}"
+                )
+    return zfs
 
 
 def prune_blocks(blocks_df, column: str, lo, hi):
@@ -1028,22 +1016,15 @@ def normalize_row_filters(row_filter) -> list[tuple]:
     conjunctions: the returned list is then the flat conjunct list with
     the disjunct spans attached (``.groups``), and
     :func:`apply_row_filters` ORs the per-disjunct masks."""
-    from xml2arrow_spark.operators.predicates import AnyOf, DnfConjuncts
+    from xml2arrow_spark.operators.predicates import dnf
 
+    return dnf(row_filter, _row_conjunction)
+
+
+def _row_conjunction(row_filter) -> list[tuple]:
+    """:func:`normalize_row_filters` of one conjunction (no ``any_of``)."""
     if row_filter is None:
         return []
-    if isinstance(row_filter, AnyOf):
-        flat: list[tuple] = []
-        groups: list[tuple[int, int]] = []
-        for d in row_filter.disjuncts:
-            sub = normalize_row_filters(d)
-            if not sub:
-                raise ValueError("any_of disjuncts must be non-empty")
-            groups.append((len(flat), len(flat) + len(sub)))
-            flat.extend(sub)
-        if len(groups) == 1:  # any_of(x) IS x
-            return flat
-        return DnfConjuncts(flat, groups)
     preds = (
         [row_filter] if isinstance(row_filter, tuple) else list(row_filter)
     )
@@ -1077,7 +1058,11 @@ def apply_row_filters(rfs, pair, out_names):
     maps at most one projected filter column to its pre-gathered rows
     (the single-conjunct fused fast path of
     :func:`~xml2arrow_spark.operators.blocks.match_decode_column`).
-    ``pair(col)`` yields a column's (meta_json, payload).
+    ``pair(col)`` yields a column's (meta_json, payload). Only each
+    conjunct's ``(col, values, lo, hi)`` is read, so the resolved
+    ``where=`` conjuncts of :mod:`~xml2arrow_spark.operators.dataset`
+    (which carry a value category after them) evaluate here as they are:
+    this is the one row evaluator of ``row_filter=`` and ``where=``.
 
     Under a DNF row filter (``rfs`` carries ``.groups``) the mask is the
     OR of the per-disjunct conjunction masks — a row survives when any
@@ -1102,14 +1087,14 @@ def apply_row_filters(rfs, pair, out_names):
             return None
         return mask, {}
     if len(rfs) == 1 and rfs[0][0] in out_names:
-        col, vv, lo, hi = rfs[0]
+        col, vv, lo, hi = rfs[0][:4]
         md = match_decode_column(*pair(col), vv, lo, hi)
         if md is None:
             return None
         mask, sel = md
         return mask, {col: sel}
     mask = None
-    for col, vv, lo, hi in rfs:
+    for col, vv, lo, hi, *_ in rfs:
         m = match_mask_column(*pair(col), vv, lo, hi)
         if m is None:
             return None

@@ -137,3 +137,39 @@ class DnfConjuncts(list):
 
 def _rebuild_dnf(items, groups):
     return DnfConjuncts(items, groups)
+
+
+def dnf(spec, conjunction):
+    """The one DNF flattener of ``where=``, ``row_filter=`` and
+    ``zone_filter=``: ``conjunction(c)`` validates one conjunction spec
+    and returns its conjunct list. A plain ``spec`` is one conjunction;
+    an :class:`AnyOf` becomes the flat conjunct list across its disjuncts
+    with their spans attached (:class:`DnfConjuncts`), and an ``any_of``
+    of a single disjunct IS that disjunct (a plain list, no OR
+    machinery)."""
+    if not isinstance(spec, AnyOf):
+        return conjunction(spec)
+    flat: list[tuple] = []
+    groups: list[tuple[int, int]] = []
+    for d in spec.disjuncts:
+        sub = conjunction(d)
+        if not sub:
+            raise ValueError("any_of disjuncts must be non-empty")
+        groups.append((len(flat), len(flat) + len(sub)))
+        flat.extend(sub)
+    if len(groups) == 1:
+        return flat
+    return DnfConjuncts(flat, groups)
+
+
+def conjoin(conjunct: tuple, spec):
+    """``conjunct AND spec`` as a predicate spec: a list for a plain
+    ``spec`` (one conjunct tuple or a list of them), and for an
+    :class:`AnyOf` the conjunct distributed into every disjunct —
+    ``c AND (D1 OR D2) == (c AND D1) OR (c AND D2)``."""
+    def conj(d):
+        return [conjunct] + ([d] if isinstance(d, tuple) else list(d))
+
+    if isinstance(spec, AnyOf):
+        return AnyOf([conj(d) for d in spec.disjuncts])
+    return conj(spec)

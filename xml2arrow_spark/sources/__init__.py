@@ -1,4 +1,4 @@
-"""Sources: deterministic synthetic token tables + testdata loaders."""
+"""Sources: deterministic synthetic token tables + parquet file planning."""
 
 from xml2arrow_spark.sources.tokens import (
     generate_tokens_arrow,
@@ -6,13 +6,11 @@ from xml2arrow_spark.sources.tokens import (
     tokenize_documents,
 )
 from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
-from xml2arrow_spark.sources.tables import load_tables
 
 __all__ = [
     "generate_tokens_arrow",
     "tokens_dataframe",
     "tokenize_documents",
-    "load_tables",
     "parquet_file_infos",
     "plan_parquet_tasks",
 ]

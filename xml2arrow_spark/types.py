@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 
 from xml2arrow_spark.errors import ManifestError
 
-__all__ = ["DTYPES", "spark_type_for", "arrow_type_for", "widened_struct"]
+__all__ = ["DTYPES", "spark_type_for", "widened_struct"]
 
 # reference DType -> (Spark SQL type, Arrow storage type actually used)
 DTYPES: dict[str, tuple[T.DataType, pa.DataType]] = {
@@ -63,16 +63,6 @@ def spark_type_for(dtype: str) -> T.DataType:
     """Widened Spark SQL type for a reference ``DType`` name."""
     try:
         return DTYPES[dtype][0]
-    except KeyError:
-        raise ManifestError(
-            f"unknown dtype {dtype!r}; reference types: {sorted(DTYPES)}"
-        ) from None
-
-
-def arrow_type_for(dtype: str) -> pa.DataType:
-    """Arrow storage type the engine actually uses for a reference DType."""
-    try:
-        return DTYPES[dtype][1]
     except KeyError:
         raise ManifestError(
             f"unknown dtype {dtype!r}; reference types: {sorted(DTYPES)}"

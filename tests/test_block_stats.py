@@ -219,6 +219,11 @@ _MISSING_SRC_OPS = {
     "decode_dataset_row_filter": lambda s, o: decode_dataset(
         s, o, columns=["id"], row_filter=("src", ["web"])
     ),
+    # every block of the file lacking src is pruned: the driver's file
+    # elimination must not drop the file silently
+    "decode_dataset_zone_pruned": lambda s, o: decode_dataset(
+        s, o, columns=["src"], zone_filter=("id", 0, 99)
+    ),
 }
 
 

@@ -21,7 +21,9 @@ import pytest
 from xml2arrow_spark.manifest import CodecManifest, ColumnPolicy
 from xml2arrow_spark.operators.blocks import encode_column, value_counts_column
 from xml2arrow_spark.operators.dataset import (
+    any_of,
     count_where,
+    decode_dataset,
     encode_parquet_dataset,
     group_aggs,
     group_count,
@@ -177,6 +179,58 @@ def test_group_bound_pre_pass_reads_no_payload(
             assert c != "<all>" and c != "cols"
             assert not c.endswith(("data", "__data", ".data")), c
     assert rows == _rows(group_count(spark, ds, ["k", "s"]))
+
+
+# decode_dataset's driver-side file elimination: the store's four files
+# each hold ten ids of one range (0-9, 10-19, 20-29, 30-39)
+def _decoded(spark, ds, zf, monkeypatch, agg=False):
+    """(the decode's rows under zone filter and row filter ``zf``, the
+    same with every file planned); aggregated when ``agg``."""
+    def rows():
+        df = decode_dataset(spark, ds, zone_filter=zf, row_filter=zf)
+        if agg:
+            df = df.selectExpr("count(*)", "sum(k)")
+        return _rows(df)
+
+    got = rows()
+    with monkeypatch.context() as m:
+        m.setattr(files, "DRIVER_FOLD_FILES", 0)
+        return got, rows()
+
+
+@pytest.mark.parametrize("layout", ["nested", "wide"])
+def test_one_file_decode_runs_one_job(spark, store, wide_store, layout,
+                                      monkeypatch):
+    """A zone filter inside one file plans one task, so the global
+    aggregate over it needs no Exchange: one job, run on collect."""
+    ds = store if layout == "nested" else wide_store
+    in_call, on_collect = _jobs(spark, lambda: decode_dataset(
+        spark, ds, zone_filter=("id", 12, 17), row_filter=("id", 12, 17)
+    ).selectExpr("count(*)", "sum(k)"))
+    assert in_call == [] and on_collect == 1
+    got, every_file = _decoded(spark, ds, ("id", 12, 17), monkeypatch, True)
+    assert got == every_file == [(6, 6)]
+
+
+@pytest.mark.parametrize("layout", ["nested", "wide"])
+def test_any_of_zone_filter_keeps_both_files(spark, store, wide_store, layout,
+                                             monkeypatch):
+    ds = store if layout == "nested" else wide_store
+    zf = any_of(("id", 3, 5), ("id", 31, 33))
+    got, every_file = _decoded(spark, ds, zf, monkeypatch)
+    assert got == every_file
+    assert sorted(r[0] for r in got) == [3, 4, 5, 31, 32, 33]
+
+
+@pytest.mark.parametrize("layout", ["nested", "wide"])
+def test_decode_pruning_every_file_is_empty(spark, store, wide_store, layout,
+                                            monkeypatch):
+    ds = store if layout == "nested" else wide_store
+    got, every_file = _decoded(spark, ds, ("id", 100, 200), monkeypatch)
+    assert got == every_file == []
+    df = decode_dataset(spark, ds, zone_filter=("id", 100, 200))
+    assert df.schema == decode_dataset(spark, ds).schema
+    assert df.count() == 0
 
 
 def test_local_walk_runs_no_pre_pass(store):

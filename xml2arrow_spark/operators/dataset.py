@@ -2163,7 +2163,14 @@ def decode_dataset(
     time, only for row groups holding a surviving block, so a row group
     whose every block is pruned (e.g. one merged input of a
     :func:`compact_dataset` file) reads no payload IO; on the nested
-    layout blocks are skipped after the struct read.
+    layout blocks are skipped after the struct read. Files are eliminated
+    on the driver first: over a listing of at most
+    :data:`~xml2arrow_spark.sources.files.DRIVER_FOLD_FILES` files, each
+    file's no-payload view (the stats of every column the task reads)
+    runs the same classifier, and only a file with a surviving block is
+    planned. A result held in one file is then one task, which Spark
+    plans with no Exchange under a global aggregate; with no zone filter,
+    or past the bound, every file is planned and the tasks judge alone.
 
     ``row_filter`` pushes row selection INSIDE the decode kernel, with
     :func:`~xml2arrow_spark.operators.encode.decode_table` semantics:
@@ -2187,7 +2194,12 @@ def decode_dataset(
         split_schema_ddl,
     )
     from xml2arrow_spark.operators.predicates import DnfConjuncts
-    from xml2arrow_spark.sources.files import map_tasks, plan_parquet_tasks
+    from xml2arrow_spark.sources.files import (
+        DRIVER_FOLD_FILES,
+        _plan_tasks,
+        map_tasks,
+        parquet_file_infos,
+    )
 
     _refuse_pending_tombstones(out_path)
     side = read_sidecar(out_path)
@@ -2215,18 +2227,29 @@ def decode_dataset(
     for c in read_names[len(out_names):] + zone_names:
         _column_type(by_name, c)
 
+    def kept(view, i):
+        return _classify_where(
+            zconj, _zones(zconj, view, i), view.n_rows(i)
+        ) != 0
+
     def decode_files(files) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         for _i, fpath in files:
             view = BlockStats(fpath, pq, read_names, zone_names)
-            keep = None
-            if zconj:
-                def keep(i, view=view):
-                    return _classify_where(
-                        zconj, _zones(zconj, view, i), view.n_rows(i)
-                    ) != 0
+            keep = (lambda i, view=view: kept(view, i)) if zconj else None
             yield from decode_blocks(view, out_names, rfs, keep)
 
-    bins = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
+    infos = parquet_file_infos(os.path.join(out_path, "blocks"))
+    pruned = set()
+    if zconj and len(infos) <= DRIVER_FOLD_FILES:
+        import pyarrow.parquet as pq
+
+        # the same no-payload view as the group-bound pre-pass, opened on
+        # every column the task reads, so a file lacking one still raises
+        for j, (fpath, _s) in enumerate(infos):
+            view = BlockStats(fpath, pq, [], read_names + zone_names)
+            if not any(kept(view, i) for i in range(len(view))):
+                pruned.add(j)
+    bins = _plan_tasks(spark, infos, n_tasks, skip=pruned)
     return map_tasks(spark, bins, decode_files, ddl)

@@ -148,8 +148,9 @@ def _plan_tasks(
     spark: SparkSession, infos, n_tasks: int | None, skip=frozenset()
 ) -> list[list[tuple[int, str]]]:
     """:func:`plan_parquet_tasks` over an already-listed ``infos``, leaving
-    out the ``file_idx`` values in ``skip`` (a resume's done units) before
-    the LPT; the files that remain keep their ``file_idx``."""
+    out the ``file_idx`` values in ``skip`` (a resume's done units, or the
+    files a zone filter eliminated) before the LPT; the files that remain
+    keep their ``file_idx``."""
     todo = [(i, p, s) for i, (p, s) in enumerate(infos) if i not in skip]
     if n_tasks is None:
         n_tasks = max(spark.sparkContext.defaultParallelism, 1)
@@ -233,12 +234,19 @@ def local_frame(spark: SparkSession, ddl: str, rows) -> DataFrame:
 # lost on CPU too (1,330 against 1,230 ms).
 DRIVER_FOLD_GROUPS = 1 << 13
 
-# The most blocks files whose groups the driver pre-pass bounds; a longer
-# listing combines in Spark without it. The pre-pass reads one file at a
-# time, at about 0.9 ms each on the same host (4 blocks per file), while
-# the driver fold saves a job stage: with the pre-pass, group_sum ran
-# 188 against 230 ms wall over 32 files, 315 against 226 over 128 and
-# 1,009 against 529 over 512.
+# The most blocks files a driver pre-pass over block metadata reads. It
+# caps both such pre-passes: the keyed folds' group bound (a longer
+# listing combines in Spark without it) and decode_dataset's file
+# elimination (a longer listing plans every file, and the tasks judge
+# their blocks alone). The group pre-pass reads one file at a time, at
+# about 0.9 ms each on the same host (4 blocks per file), while the
+# driver fold saves a job stage: with the pre-pass, group_sum ran 188
+# against 230 ms wall over 32 files, 315 against 226 over 128 and 1,009
+# against 529 over 512. The file elimination reads the stats of every
+# column the decode reads; at the bound, in its worst case (a zone filter
+# that prunes nothing; 64 files of 4 blocks and 4 columns), it cost 1.3
+# ms of driver CPU per file on the nested layout and 2.9 ms on the wide
+# one, whose stats are one parquet column per field.
 DRIVER_FOLD_FILES = 64
 
 

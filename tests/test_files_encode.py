@@ -147,6 +147,141 @@ def test_map_tasks_ships_a_long_unit_list_in_the_closure(spark):
     assert sorted(got) == list(range(20_000))
 
 
+def test_map_tasks_eager_runs_unit_i_alone_in_partition_i(spark):
+    """With ``schema=None`` the runner collects ``fn``'s plain items in
+    unit order, unit i alone in partition i, above local[4]'s
+    parallelism."""
+    def where(unit):
+        from pyspark import TaskContext
+
+        yield TaskContext.get().partitionId(), unit
+
+    units = [f"unit-{i}" for i in range(6)]
+    assert map_tasks(spark, units, where, None) == [
+        (p, f"unit-{p}") for p in range(6)
+    ]
+
+
+def test_map_tasks_eager_ships_a_long_unit_list_in_the_closure(spark):
+    """The eager mode ships the same >1 MB closure; every file comes back
+    exactly once."""
+    import pickle
+
+    infos = [(f"/data/{'d' * 80}/part-{i:06d}.parquet", 1000 + i % 7)
+             for i in range(20_000)]
+    bins = _plan_tasks(spark, infos, 4)
+    assert len(pickle.dumps(bins)) > 1 << 20
+
+    def file_ids(files):
+        yield from (i for i, _p in files)
+
+    got = map_tasks(spark, bins, file_ids, None)
+    assert sorted(got) == list(range(20_000))
+
+
+def test_map_tasks_eager_runs_nothing_for_no_units(spark):
+    def never(_unit):
+        raise AssertionError("ran a unit")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("eager-no-units", "eager-no-units")
+    try:
+        assert map_tasks(spark, [], never, None) == []
+        assert list(sc.statusTracker().getJobIdsForGroup("eager-no-units")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_map_tasks_eager_leaves_the_environment_as_it_was(spark):
+    """The eager RDD's workers run under the SQL runners' env (here
+    ``SPARK_SIMPLIFIED_TRACEBACK``, on by default), and the driver's
+    ``sparkContext.environment`` is the same dict, unchanged, after."""
+    def worker_env(_unit):
+        import os
+
+        yield os.environ.get("SPARK_SIMPLIFIED_TRACEBACK")
+
+    sc = spark.sparkContext
+    env, before = sc.environment, dict(sc.environment)
+    assert map_tasks(spark, [0, 1], worker_env, None) == ["1", "1"]
+    assert sc.environment is env and env == before
+    assert "SPARK_SIMPLIFIED_TRACEBACK" not in env
+
+
+_ONE_POOL_SCRIPT = """
+import os, sys
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from xml2arrow_spark.env import set_kernel_malloc_env
+
+set_kernel_malloc_env()
+from pyspark.sql import SparkSession
+
+from xml2arrow_spark.operators.dataset import (
+    count_where, decode_dataset, encode_parquet_dataset)
+
+base, confs = sys.argv[1], sys.argv[2:]
+b = (SparkSession.builder.master("local[2]")
+     .config("spark.ui.enabled", "false")
+     .config("spark.ui.showConsoleProgress", "false"))
+for kv in confs:
+    b = b.config(*kv.split("=", 1))
+spark = b.getOrCreate()
+src, out = os.path.join(base, "src"), os.path.join(base, "ds")
+os.makedirs(src)
+for j in range(2):
+    ids = np.arange(j * 10, j * 10 + 10, dtype=np.int64)
+    pq.write_table(pa.table({"id": ids}), os.path.join(src, f"p{j}.parquet"))
+encode_parquet_dataset(spark, src, out)  # eager
+assert len(decode_dataset(spark, out).collect()) == 20  # mapInArrow
+assert count_where(spark, out, ("id", 5, 14), local_bytes=0).collect()[0][0] == 10
+jvm = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+daemons = 0
+for pid in filter(str.isdigit, os.listdir("/proc")):
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            cmd = f.read()
+    except OSError:
+        continue
+    daemons += ppid == jvm and b"pyspark.daemon" in cmd
+print("DAEMONS", daemons)
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize("confs", [
+    [],
+    ["spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled=false"],
+    ["spark.sql.execution.pyspark.udf.hideTraceback.enabled=true"],
+])
+def test_eager_and_sql_jobs_share_one_worker_pool(tmp_path, confs):
+    """Spark keys its Python worker pools on the worker env: after an
+    eager encode, a collected ``decode_dataset`` (mapInArrow) and an
+    above-the-valve ``count_where`` (eager) in one fresh session, exactly
+    one ``pyspark.daemon`` runs under the JVM, whatever the SQL traceback
+    confs say. A second daemon is a second pool of workers, each with its
+    own import-time heap."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p))
+    out = subprocess.run(
+        [sys.executable, "-c", _ONE_POOL_SCRIPT, str(tmp_path), *confs],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("DAEMONS")]
+    assert lines, out.stderr[-3000:]
+    assert lines[-1] == "DAEMONS 1"
+
+
 def test_encode_resume_plans_only_the_files_left(spark, tmp_path, monkeypatch):
     """With units 0-4 of 8 done, a resume lists all eight files but plans
     only 5-7, each with its original file_idx and one per task at
@@ -237,7 +372,8 @@ def test_engine_builds_no_python_rdd():
     assert offenders == []
 
 
-_WORKER_APIS = {"mapInArrow", "mapInPandas", "applyInPandasWithState"}
+_WORKER_APIS = {"mapInArrow", "mapInPandas", "applyInPandasWithState",
+                "mapPartitions"}
 
 
 def _scope_nodes(scope):
@@ -266,12 +402,14 @@ def _calls_prologue_first(fn) -> bool:
 
 def test_every_worker_fn_calls_task_setup_first():
     """Lint: every function the engine hands to mapInArrow / mapInPandas /
-    applyInPandasWithState runs ``env.task_setup()`` before anything but
-    imports (pinned pyarrow pools, frozen import-time heap, no zip finder).
-    Every file job (the fused encoders, decode_dataset, compaction, the
-    block walk's fan-out, tokens_dataframe) shares ONE worker fn, the
-    runner sources/files.py::map_tasks; the exact site count makes a new
-    hand-rolled worker show up here."""
+    applyInPandasWithState / mapPartitions runs ``env.task_setup()``
+    before anything but imports (pinned pyarrow pools, frozen import-time
+    heap, no zip finder). Every file job (the fused encoders,
+    decode_dataset, compaction, the block walk's fan-out and partials,
+    tokens_dataframe) shares ONE worker fn, the runner
+    sources/files.py::map_tasks, in its lazy (mapInArrow) and eager
+    (mapPartitions) modes; the exact site count makes a new hand-rolled
+    worker show up here."""
     import xml2arrow_spark
 
     root = os.path.dirname(xml2arrow_spark.__file__)
@@ -302,16 +440,18 @@ def test_every_worker_fn_calls_task_setup_first():
                                   fn.name if fn is not None else None))
                     if fn is None or not _calls_prologue_first(fn):
                         offenders.append(where)
-    assert len(sites) == 20  # the lint really found the engine's worker fns
-    assert (os.path.join("sources", "files.py"), "run") in sites
+    assert len(sites) == 21  # the lint really found the engine's worker fns
+    assert sites.count((os.path.join("sources", "files.py"), "run")) == 2
     assert offenders == []
 
 
 def test_file_workers_get_units_only_from_map_tasks():
     """Lint: file workers get their units only from
     sources/files.py::map_tasks, the one place that calls ``range`` for
-    exact placement; no engine module builds a task table out of a SQL
-    literal (``from_json``/``unbase64`` of the units)."""
+    exact placement (``spark.range`` in its lazy mode,
+    ``sparkContext.range`` in its eager one); no engine module builds a
+    task table out of a SQL literal (``from_json``/``unbase64`` of the
+    units)."""
     import xml2arrow_spark
 
     root = os.path.dirname(xml2arrow_spark.__file__)
@@ -332,7 +472,7 @@ def test_file_workers_get_units_only_from_map_tasks():
                             and isinstance(call.func, ast.Attribute)
                             and call.func.attr == "range"):
                         ranges.append((rel, getattr(scope, "name", None)))
-    assert ranges == [(os.path.join("sources", "files.py"), "map_tasks")]
+    assert ranges == [(os.path.join("sources", "files.py"), "map_tasks")] * 2
     assert literals == []
 
 

@@ -28,8 +28,12 @@ The parts sum to the op's process-tree CPU. The kernel counts CPU in
 ticks (10 ms here), per thread and per process, so a part can read a tick
 off, and ``sched`` (the JVM's total less its live threads) can read
 slightly negative. ``jobs`` is the number of
-Spark jobs the op ran (a job group per op). Each figure is the median
-over the measured cycles, in ms, per op (``class/api``).
+Spark jobs the op ran (a job group per op), and ``daemons`` the number of
+``pyspark.daemon`` processes the JVM has running after it: Spark keeps one
+Python worker pool per worker env, so a job whose env differs from the
+others' (an RDD beside ``mapInArrow``) shows as a second daemon. Each
+figure is the median over the measured cycles, in ms, per op
+(``class/api``).
 
 With ``--compare``, each checkout runs in its own child process, in
 alternating order, ``--runs`` times; the markdown table gives the median
@@ -105,6 +109,24 @@ def snapshot(descendants) -> dict[str, int]:
     return out
 
 
+def daemons(descendants) -> int:
+    """The live ``pyspark.daemon`` processes below this one whose parent
+    is the JVM (their forked workers share the command line)."""
+    n = 0
+    for pid in descendants(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                if b"pyspark.daemon" not in f.read():
+                    continue
+            with open(f"/proc/{pid}/stat") as f:
+                ppid = f.read().rsplit(")", 1)[1].split()[1]
+            with open(f"/proc/{ppid}/comm") as f:
+                n += f.read().strip() == "java"
+        except OSError:
+            continue
+    return n
+
+
 def run_one(args) -> dict:
     """Set up the workload in this process and measure its ops, from the
     checkout's directory: PySpark starts its Python workers in the
@@ -150,6 +172,7 @@ def run_one(args) -> dict:
                 row = {p: (after[p] - before[p]) * 1e3 / CLK_TCK for p in PARTS}
                 row["total"] = sum(row[p] for p in PARTS)
                 row["jobs"] = jobs
+                row["daemons"] = daemons(descendants)
                 per = samples.setdefault(f"{op.cls}/{op.api}", {})
                 for key, v in row.items():
                     per.setdefault(key, []).append(v)
@@ -213,8 +236,9 @@ def compare(args) -> None:
             f"{args.cycles} measured cycles, median of {args.runs} runs per "
             f"checkout, alternating)",
             "",
-            "| op | checkout | total | " + " | ".join(PARTS) + " | jobs |",
-            "|---|---|---|" + "---|" * len(PARTS) + "---|",
+            "| op | checkout | total | " + " | ".join(PARTS)
+            + " | jobs | daemons |",
+            "|---|---|---|" + "---|" * len(PARTS) + "---|---|",
         ]
         for op in table[next(iter(table))]:
             for name in table:
@@ -222,7 +246,7 @@ def compare(args) -> None:
                 lines.append(
                     f"| {op} | {name} | {row['total']:.0f} | "
                     + " | ".join(f"{row[p]:.0f}" for p in PARTS)
-                    + f" | {row['jobs']:g} |"
+                    + f" | {row['jobs']:g} | {row['daemons']:g} |"
                 )
         with open(args.markdown, "a") as f:
             f.write("\n".join(lines) + "\n\n")

@@ -229,15 +229,11 @@ def encode_parquet_dataset(
             pa.Table.from_batches(rows, schema=plan.schema),
             out_file, compression="none",
         )
-        yield pa.RecordBatch.from_pylist(
-            [{"unit_id": file_idx, "src_file": fpath, "out_file": out_file,
-              **_file_totals(rows)}],
-            schema=METADATA_SCHEMA,
-        )
+        yield {"unit_id": file_idx, "src_file": fpath, "out_file": out_file,
+               **_file_totals(rows)}
 
-    meta = _encode_files(
-        spark, bins, plan, write_unit, METADATA_SCHEMA, presort, cluster
-    ).collect()
+    # eager: the manifest rows come back as dicts (sources/files.py::map_tasks)
+    meta = _encode_files(spark, bins, plan, write_unit, None, presort, cluster)
     if meta:
         # manifest append AFTER the encode action completed (commit
         # ordering); driver-side atomic append — see operators/metadata.py
@@ -248,7 +244,7 @@ def encode_parquet_dataset(
 
         append_rows(
             os.path.join(out_path, "manifest"),
-            [r.asDict() for r in meta],
+            meta,
             METADATA_SCHEMA,
             f"manifest-{uuid.uuid4().hex}.parquet",
         )
@@ -1921,7 +1917,7 @@ def compact_dataset(
     ]
     gen = (max(gens) + 1) if gens else 0
 
-    def merge(files) -> Iterator[pa.RecordBatch]:
+    def merge(files) -> Iterator[dict]:
         import pyarrow.parquet as pq
 
         from pyspark import TaskContext
@@ -1929,14 +1925,6 @@ def compact_dataset(
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         attempt = ctx.attemptNumber() if ctx is not None else 0
-        out_schema = pa.schema(
-            [
-                pa.field("out_file", pa.string()),
-                pa.field("n_src", pa.int32()),
-                pa.field("nbytes", pa.int64()),
-                pa.field("sources", pa.string()),
-            ]
-        )
         out_file = os.path.join(
             blocks_dir, f"compact-g{gen:04d}-{part_id:06d}.parquet"
         )
@@ -1984,27 +1972,20 @@ def compact_dataset(
                 os.remove(fpath)
             except FileNotFoundError:
                 pass  # a concurrent attempt already removed it
-        yield pa.RecordBatch.from_pydict(
-            {
-                "out_file": [out_file],
-                "n_src": [len(group)],
-                "nbytes": [nbytes],
-                "sources": [",".join(sorted(sources))],
-            },
-            schema=out_schema,
-        )
+        yield {"gen": gen, "out_file": out_file, "n_src": len(group),
+               "nbytes": nbytes, "sources": ",".join(sorted(sources))}
 
-    merged = map_tasks(
+    # eager: KB-scale log rows come back as dicts, never payload
+    rows = map_tasks(
         spark, plan_parquet_tasks(spark, blocks_dir, n_tasks=target_files),
-        merge, "out_file string, n_src int, nbytes long, sources string",
+        merge, None,
     )
-    rows = merged.collect()  # KB-scale metadata rows, never payload
     if rows:
         from xml2arrow_spark.operators.metadata import append_rows
 
         append_rows(
             os.path.join(out_path, "compact_log"),
-            [{"gen": gen, **r.asDict()} for r in rows],
+            rows,
             pa.schema(
                 [
                     pa.field("gen", pa.int32()),
@@ -2166,11 +2147,12 @@ def decode_dataset(
     layout blocks are skipped after the struct read. Files are eliminated
     on the driver first: over a listing of at most
     :data:`~xml2arrow_spark.sources.files.DRIVER_FOLD_FILES` files, each
-    file's no-payload view (the stats of every column the task reads)
-    runs the same classifier, and only a file with a surviving block is
-    planned. A result held in one file is then one task, which Spark
-    plans with no Exchange under a global aggregate; with no zone filter,
-    or past the bound, every file is planned and the tasks judge alone.
+    file's no-payload view (the zone columns' stats; a file lacking a
+    column the task reads raises) runs the same classifier, and only a
+    file with a surviving block is planned. A result held in one file is
+    then one task, which Spark plans with no Exchange under a global
+    aggregate; with no zone filter, or past the bound, every file is
+    planned and the tasks judge alone.
 
     ``row_filter`` pushes row selection INSIDE the decode kernel, with
     :func:`~xml2arrow_spark.operators.encode.decode_table` semantics:
@@ -2245,10 +2227,12 @@ def decode_dataset(
     if zconj and len(infos) <= DRIVER_FOLD_FILES:
         import pyarrow.parquet as pq
 
-        # the same no-payload view as the group-bound pre-pass, opened on
-        # every column the task reads, so a file lacking one still raises
+        # the same no-payload view as the group-bound pre-pass, with the
+        # stats of the zone columns only; a file lacking a column the task
+        # reads still raises (from the names the view has read)
         for j, (fpath, _s) in enumerate(infos):
-            view = BlockStats(fpath, pq, [], read_names + zone_names)
+            view = BlockStats(fpath, pq, [], zone_names)
+            view.require(read_names)
             if not any(kept(view, i) for i in range(len(view))):
                 pruned.add(j)
     bins = _plan_tasks(spark, infos, n_tasks, skip=pruned)

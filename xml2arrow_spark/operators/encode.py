@@ -381,7 +381,8 @@ class BlockStats:
     entry). A stat field the source does not hold reads as None (older
     blocks, ``zone_maps=False``, a table projected to its payload), as
     does any stat of a column outside ``stats``; a column the source or
-    any of its blocks lacks raises.
+    any of its blocks lacks raises, and :meth:`require` raises alike for
+    more columns without reading their stats.
 
     ``BlockStats(fpath, pq, cols, stats)`` opens one blocks file and reads
     it once up front: ``n_rows`` and ``cols`` on the nested layout;
@@ -445,11 +446,11 @@ class BlockStats:
         self._cache: dict = {}  # (col, field) -> per-block values or None
         self._starts = [0]  # first block of each payload row group
         opened = list(dict.fromkeys(cols + stats))
+        self._names, self._at = names, {}
         if "cols" not in names:
-            payload_columns(names, opened)  # raises on a column it lacks
             self._entries = None
             self._stats = tbl
-            self._at = dict.fromkeys(opened, range(self._n))
+            self.require(opened)
             if groups is None:
                 self._pay = {0: {
                     c: (_one_array(tbl.column(f"c_{c}__meta")),
@@ -464,11 +465,27 @@ class BlockStats:
         lists = _one_array(tbl.column("cols"))
         self._entries = lists.values  # every block's entries, flat
         self._fields: dict = {}  # field -> values over all entries
-        offs = lists.offsets.to_pylist()
-        ent_names = self._entries.field("name").to_pylist()
-        # per column: the index of each block's entry for it
-        self._at = {}
-        for c in opened:
+        self._offs = lists.offsets.to_pylist()
+        self._ent_names = self._entries.field("name").to_pylist()
+        self.require(opened)
+        self._pay = {0: {
+            c: (self._entries.field("meta"), self._entries.field("data"))
+            for c in cols
+        }}
+
+    def require(self, cols: list[str]) -> None:
+        """Raise, as opening does, for any of ``cols`` the source or one
+        of its blocks lacks, from the column or entry names already read:
+        no stat or payload of ``cols`` is read."""
+        for c in cols:
+            if c in self._at:
+                continue
+            if self._entries is None:
+                payload_columns(self._names, [c])
+                self._at[c] = range(self._n)
+                continue
+            # the index of each block's entry for c
+            offs, ent_names = self._offs, self._ent_names
             try:
                 self._at[c] = [
                     ent_names.index(c, offs[b], offs[b + 1])
@@ -476,10 +493,6 @@ class BlockStats:
                 ]
             except ValueError:
                 raise _lacks(c) from None
-        self._pay = {0: {
-            c: (self._entries.field("meta"), self._entries.field("data"))
-            for c in cols
-        }}
 
     def __len__(self) -> int:
         return self._n
@@ -720,7 +733,8 @@ def _fused_prologue(spark, path: str, manifest: CodecManifest | None,
     return file_schema, resolved, _plan_tasks(spark, infos, n_tasks, done)
 
 
-def _encode_files(spark, bins, plan: EncodePlan, finish, out_schema: pa.Schema,
+def _encode_files(spark, bins, plan: EncodePlan, finish,
+                  out_schema: pa.Schema | None,
                   presort: list[str] | None = None, cluster: str = "lex"):
     """The one fused file worker: each task opens its bin's files with
     pyarrow and streams parquet -> Arrow -> numpy kernels through
@@ -729,7 +743,9 @@ def _encode_files(spark, bins, plan: EncodePlan, finish, out_schema: pa.Schema,
     ``block_id = (file_idx << 20) | seq``. ``finish(file_idx, fpath,
     rows)`` turns one file's block rows into the batches (``out_schema``)
     the task ships. ``presort`` clusters each file's rows before blocking
-    (:func:`~xml2arrow_spark.operators.zorder.presort_table`)."""
+    (:func:`~xml2arrow_spark.operators.zorder.presort_table`). With
+    ``out_schema=None`` the job runs eagerly and returns the list of
+    ``finish``'s items (:func:`~xml2arrow_spark.sources.files.map_tasks`)."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     from xml2arrow_spark.sources.files import map_tasks
@@ -762,7 +778,8 @@ def _encode_files(spark, bins, plan: EncodePlan, finish, out_schema: pa.Schema,
                 file_idx, fpath, encode_blocks(plan, blocks, part_id, file_idx << 20)
             )
 
-    return map_tasks(spark, bins, encode_files, from_arrow_schema(out_schema))
+    schema = None if out_schema is None else from_arrow_schema(out_schema)
+    return map_tasks(spark, bins, encode_files, schema)
 
 
 def encode_parquet_tasks(spark, bins, manifest: CodecManifest):

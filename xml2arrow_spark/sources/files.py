@@ -18,8 +18,10 @@ function over file metadata; per-file state lives entirely in the task.
 Every file job runs through ONE runner, :func:`map_tasks`: the driver
 plans the units (LPT file bins, or any other per-task list), and
 ``spark.range(0, n, 1, n).mapInArrow`` runs unit i alone in partition i,
-with the unit list pickled in the worker closure. A file worker is only
-its per-unit body; the runner calls ``task_setup()`` for all of them.
+with the unit list pickled in the worker closure; a job whose results
+the driver only collects runs the same worker as one RDD stage (the
+runner's eager mode). A file worker is only its per-unit body; the
+runner calls ``task_setup()`` for all of them.
 
 Scale notes (1000-executor / 100 TB):
 
@@ -39,7 +41,6 @@ from __future__ import annotations
 
 import functools
 import os
-import pickle
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -54,17 +55,54 @@ __all__ = [
 ]
 
 
-def map_tasks(spark: SparkSession, units: list, fn, schema) -> DataFrame:
-    """The one file-task runner: a DataFrame (``schema``, a StructType or
-    a DDL string, parsed once per process) of every ``fn(unit)``'s record
-    batches, with ``units[i]`` run alone in Spark partition i by a worker
-    that calls ``task_setup()`` first. ``units`` (LPT file bins, token
-    slices) and ``fn`` travel pickled in the worker closure; PySpark
-    broadcasts a command over 1 MB, so a long unit list does not bloat
-    every task.
+# (conf, its default, the env var) of what Spark's SQL Python runners add
+# to the worker env: map_tasks' eager RDD adds the same to share their pool
+_SQL_WORKER_ENV = (
+    ("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "true",
+     "SPARK_SIMPLIFIED_TRACEBACK"),
+    ("spark.sql.execution.pyspark.udf.hideTraceback.enabled", "false",
+     "SPARK_HIDE_TRACEBACK"),
+)
 
-    ``spark.range(0, n, 1, n)`` pins id i to partition i, JVM-side, with
-    no Python RDD and no Generate. Shapes that look simpler are wrong:
+
+def map_tasks(
+    spark: SparkSession, units: list, fn, schema
+) -> DataFrame | list:
+    """The one file-task runner: every ``fn(unit)``'s items, with
+    ``units[i]`` run alone in Spark partition i by a worker that calls
+    ``task_setup()`` first. ``units`` (LPT file bins, token slices) and
+    ``fn`` travel pickled in the worker closure; PySpark broadcasts a
+    command over 1 MB, so a long unit list does not bloat every task.
+
+    Two modes, one worker body:
+
+    - **Lazy** (``schema`` a StructType or a DDL string, parsed once per
+      process): a DataFrame of ``fn``'s record batches,
+      ``spark.range(0, n, 1, n).mapInArrow(run, schema)``, for a caller
+      that goes on in Spark.
+    - **Eager** (``schema=None``): the list of ``fn``'s items (any
+      picklable objects), collected before this returns by one RDD stage,
+      ``sparkContext.range(0, n, 1, n).mapPartitions(run).collect()``,
+      for a caller that only collects. It skips Catalyst's plan, the
+      Arrow round trip and a schema for the results: on a 4-core host the
+      benchmark's ingest encode (``encode_parquet_dataset``) fell from
+      505 to 410 ms of process-tree CPU per op, and its query
+      ``count_where``/``group_sum`` above the valve from 305 to 220 ms
+      (medians of 10 alternating pairs; BENCH/OP_THREADS.md splits them
+      by thread).
+
+    **One worker pool.** Spark keys its Python worker pools on the
+    worker env, and its SQL runners add ``SPARK_SIMPLIFIED_TRACEBACK``
+    and ``SPARK_HIDE_TRACEBACK`` under their
+    ``spark.sql.execution.pyspark.udf.*Traceback.enabled`` confs. A plain
+    RDD lacks them, so every executor would fork a second
+    ``pyspark.daemon`` with its own workers (a prototype raised ingest
+    peak RSS from 1,784 to 2,387 MB that way). The eager mode builds its
+    RDD function under the env the SQL runners would use, and leaves
+    ``sparkContext.environment`` as it found it.
+
+    ``range(0, n, 1, n)`` pins id i to partition i, on either side. Shapes
+    that look simpler are wrong:
 
     - A per-op SQL literal (the units as base64 JSON, ``from_json`` and
       ``inline`` over ``range``) keeps the placement, but Catalyst parses,
@@ -72,28 +110,45 @@ def map_tasks(spark: SparkSession, units: list, fn, schema) -> DataFrame:
       compiling that driver-side code: 59 against 44 py4j commands for a
       ``decode_dataset`` plus count, 84 against 66 for a ``count_where``
       above the valve (4-core host, BENCH/OP_THREADS.md).
-    - ``createDataFrame`` over ``parallelize(rows, n)`` is a Python RDD:
-      every task then starts a SECOND Python worker session (for
-      PySpark's row conversion) before the real ``mapInArrow`` session,
-      ~0.26 s of worker CPU each.
+    - ``createDataFrame`` over ``parallelize(rows, n)`` is a Python RDD
+      under a DataFrame: every task then starts a SECOND Python worker
+      session (for PySpark's row conversion) before the real
+      ``mapInArrow`` session, ~0.26 s of worker CPU each.
     - ``createDataFrame(pyarrow.Table)`` plans as a LocalRelation, whose
       partition count is capped at ``defaultParallelism`` (8 rows landed
       2 per partition on 4 partitions).
     - Hash-repartitioning k unit ids into k partitions leaves ~1/e of
       them empty and stacks 2-3 units on others (measured: capped 4-core
       scaling at 1.2x)."""
-    def run(batches):
+    arrow = schema is not None
+
+    def run(ids):
         from xml2arrow_spark.env import task_setup
 
         task_setup()
-        for b in batches:
-            for i in b.column(0).to_pylist():
+        for b in ids:  # id batches (lazy) or the bare ids (eager)
+            for i in b.column(0).to_pylist() if arrow else (b,):
                 yield from fn(units[i])
 
-    if isinstance(schema, str):
-        schema = _arrow_schema(schema)[0]
     n = len(units)
-    return spark.range(0, n, 1, max(n, 1)).mapInArrow(run, schema)
+    if arrow:
+        if isinstance(schema, str):
+            schema = _arrow_schema(schema)[0]
+        return spark.range(0, n, 1, max(n, 1)).mapInArrow(run, schema)
+    if not n:
+        return []
+    sc = spark.sparkContext
+    env = sc.environment
+    sc.environment = {**env, **{
+        var: "1" for key, default, var in _SQL_WORKER_ENV
+        if spark.conf.get(key, default).lower() == "true"
+    }}
+    try:
+        rdd = sc.range(0, n, 1, n).mapPartitions(run)
+        rdd._jrdd  # the function pickles here, under the SQL runners' env
+    finally:
+        sc.environment = env
+    return rdd.collect()
 
 
 def parquet_file_infos(path: str) -> list[tuple[str, int]]:
@@ -242,11 +297,14 @@ DRIVER_FOLD_GROUPS = 1 << 13
 # about 0.9 ms each on the same host (4 blocks per file), while the
 # driver fold saves a job stage: with the pre-pass, group_sum ran 188
 # against 230 ms wall over 32 files, 315 against 226 over 128 and 1,009
-# against 529 over 512. The file elimination reads the stats of every
-# column the decode reads; at the bound, in its worst case (a zone filter
-# that prunes nothing; 64 files of 4 blocks and 4 columns), it cost 1.3
-# ms of driver CPU per file on the nested layout and 2.9 ms on the wide
-# one, whose stats are one parquet column per field.
+# against 529 over 512. The file elimination reads the stats of the zone
+# columns only, and of the other columns the decode reads only their
+# names; at the bound, in its worst case (a zone filter that prunes
+# nothing; 64 files of 4 blocks and 4 columns, decoding all 4), it cost
+# 0.9-1.2 ms of driver CPU per file on the nested layout, whose stat
+# leaves hold every column's entries, and 1.4 ms on the wide one, whose
+# stats are one parquet column per field (2.3-2.5 ms when it read the
+# stats of all 4 columns).
 DRIVER_FOLD_FILES = 64
 
 
@@ -266,8 +324,9 @@ class BlockWalk:
       more than the scan (the KB-metadata ground rule). ``local_bytes=0``
       forces the distributed path.
     - **Every file's partial, on either path** (:meth:`partials`): the
-      driver loop, or one fan-out job whose partials come back pickled —
-      so an op with a bounded partial per file has ONE driver fold.
+      driver loop, or one fan-out job that collects the partials as
+      Python objects — so an op with a bounded partial per file has ONE
+      driver fold.
     - **One bound for keyed partials** (:meth:`folds_on_driver`): a keyed
       fold's partials hold O(groups) per file, so above the valve they
       fold on the driver only when block metadata bounds their groups by
@@ -322,22 +381,26 @@ class BlockWalk:
         GIL, so threads only add contention.
 
         Otherwise ONE fan-out job, run before this returns: each file
-        ships its partial pickled as one ``p binary`` row and the driver
-        unpickles it, so the fold sees the same Python objects on both
-        paths and no op declares a partial schema. The rows arrive in
-        task order, not file order, so the fold must not depend on order.
-        Only for bounded partials (a keyed fold asks
-        :meth:`folds_on_driver` first); ``per_file`` and its result must
-        pickle."""
+        task hands its files' partials back as plain Python objects
+        through :func:`map_tasks`' eager mode (no Arrow rows, no schema),
+        so the fold sees the same objects on both paths and no op
+        declares a partial schema. The partials arrive in task order, not
+        file order, so the fold must not depend on order. Only for
+        bounded partials (a keyed fold asks :meth:`folds_on_driver`
+        first); ``per_file`` and its result must pickle."""
         import pyarrow.parquet as pq
 
         if self.local:
             return (per_file(fp, pq) for fp, _s in self.infos)
-        rows = self.fan_out(
-            spark, per_file, lambda part: [(pickle.dumps(part),)],
-            "p binary", n_tasks,
-        ).collect()
-        return [pickle.loads(r[0]) for r in rows]
+
+        def walk_files(files):
+            import pyarrow.parquet as pq
+
+            for _i, fpath in files:
+                yield per_file(fpath, pq)
+
+        return map_tasks(spark, _plan_tasks(spark, self.infos, n_tasks),
+                         walk_files, None)
 
     def fan_out(
         self, spark: SparkSession, per_file, to_rows, ddl: str,
@@ -346,9 +409,9 @@ class BlockWalk:
         """DataFrame (schema ``ddl``) of every file's partial: each file
         task runs ``per_file(path, pyarrow.parquet)`` on its files and
         ships ``to_rows(partial)`` — row tuples under ``ddl``; an empty
-        result ships nothing. The caller combines the rows in Spark, or
-        :meth:`partials` collects them. ``per_file`` and ``to_rows`` must
-        pickle."""
+        result ships nothing. The caller combines the rows in Spark (a
+        driver fold collects :meth:`partials` instead). ``per_file`` and
+        ``to_rows`` must pickle."""
         struct, schema = _arrow_schema(ddl)
 
         def walk_files(files):
